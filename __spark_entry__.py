@@ -178,21 +178,7 @@ def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 15k footprints ~ a few MB exploded: broadcast kills the probe-side
     # shuffle entirely (the shuffle path, default, is the 10^12-scale plan)
     return joins.pip_join(
-        pts, polys, WORLD_GRID, strategy="expr", broadcast_polygons=True
-    ).select("pt_id", "fp_id")
-
-
-def q_pip_join_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same join, vectorized numpy ray-cast in mapInPandas (Arrow batches)."""
-    pts = derived.points_meta(spark, sf_dir)
-    polys = derived.footprint_rings(spark, sf_dir).join(
-        derived.footprints_with_env(spark, sf_dir).select(
-            "fp_id", "minx", "miny", "maxx", "maxy"
-        ),
-        "fp_id",
-    )
-    return joins.pip_join(
-        pts, polys, WORLD_GRID, strategy="arrow", broadcast_polygons=True
+        pts, polys, WORLD_GRID, broadcast_polygons=True
     ).select("pt_id", "fp_id")
 
 
@@ -709,7 +695,7 @@ def _await_stream(spark: SparkSession, start_fn, state_partitions: int = 8):
 
 def _capped_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(image_id, pk) for pk <= 60 — the shared driver of every per-pk
-    media fixture (wav/gif/mp3/mp4/webm synth).  The filtered meta arrives
+    media fixture (wav/gif/mp4/webm synth).  The filtered meta arrives
     as ONE split; per-row codec work is CPU-bound, so spread rows across
     the cluster before entering Python (cheap metadata-only shuffle)."""
     meta = derived.images_meta(spark, sf_dir).select(
@@ -853,7 +839,7 @@ def q_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
         ch0 = rint(30000 x); odd pk adds ch1 = -ch0 // 3
 
     ADPCM is lossy (staircase quantizer), so the oracle is the frozen
-    single-process expectations table — the same pattern as mp3_audio."""
+    single-process expectations table (tools/build_adpcm_fixture.py)."""
     import numpy as np
     import pandas as pd
 
@@ -1450,34 +1436,6 @@ def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MPEG-audio frame walk (sources/codec_mp3.py): deterministic
-    CBR streams (n = 8+pk%9 frames, bitrate index 1+pk%14, sample-rate
-    index pk%3) -> exact frame count, byte total, duration, bitrate via
-    sync-walk + the spec's frame-length arithmetic."""
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-
-    meta = _capped_media_meta(spark, sf_dir)
-
-    def synth(batches):
-        from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_mp3
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pk = int(r.pk)
-                data = codec_mp3.build_mp3(
-                    8 + pk % 9, 1 + pk % 14, pk % 3, fill_seed=pk
-                )
-                rows.append((r.image_id, data, "mp3"))
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes", "fmt"])
-
-    audio = meta.mapInPandas(synth, schema="audio_id string, bytes binary, fmt string")
-    return MM.container_meta(audio, id_col="audio_id")
-
-
 def _synth_mjpeg_videos(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic Motion-JPEG corpus through the REAL writers: even pk
     -> mp4 with an ISO 'jpeg' video sample entry, odd pk -> webm with a
@@ -1628,178 +1586,6 @@ def q_flac_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rate = 8000 + (pk % 3) * 4000
                 rows.append(
                     (r.image_id, codec_flac.encode_flac(sig, rate), "flac")
-                )
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes", "fmt"])
-
-    audio = meta.mapInPandas(
-        synth, schema="audio_id string, bytes binary, fmt string"
-    )
-    return MM.audio_features(audio)
-
-
-def q_mp3_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MPEG-1 Layer I payload decode (sources/codec_mp3.py, from
-    scratch: computed near-PR pseudo-QMF filterbank, spec bit layout,
-    (2^nb-1)-level requantizer): deterministic multisine PCM encoded
-    through our Layer I encoder, decoded back by the engine into exact
-    integer features.  Layer I is lossy, so the oracle is the frozen
-    single-process expectations table (tools/build_mp3_fixture.py, the
-    multimodal_jpeg pattern); the codec's rate/distortion contract is
-    separately pinned by tests/test_mp3.py.  Signal spec (mirrored in
-    the fixture tool): rate = [32000,44100,48000][pk%3], bitrate_idx =
-    6+pk%8, n = 2000+(pk%7)*400, three pk-keyed sines; odd pk adds a
-    second channel reversed(ch0)//2."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-
-    meta = _capped_media_meta(spark, sf_dir)
-
-    def synth(batches):
-        from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_mp3
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pk = int(r.pk)
-                rate = [32000, 44100, 48000][pk % 3]
-                n = 2000 + (pk % 7) * 400
-                i = np.arange(n, dtype=np.float64)
-                f1 = 200 + 17 * (pk % 13)
-                f2 = 1100 + 37 * (pk % 11)
-                f3 = 3800 + 53 * (pk % 7)
-                x = (
-                    0.3 * np.sin(2 * np.pi * f1 / rate * i)
-                    + 0.25 * np.sin(2 * np.pi * f2 / rate * i + 1.0)
-                    + 0.2 * np.sin(2 * np.pi * f3 / rate * i + 2.0)
-                )
-                ch0 = np.rint(32767 * x).astype(np.int16)
-                sig = (
-                    np.stack([ch0, ch0[::-1] // 2], axis=1) if pk % 2 else ch0
-                )
-                rows.append(
-                    (
-                        r.image_id,
-                        codec_mp3.encode_mp3(sig, rate, 6 + pk % 8),
-                        "mp3",
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes", "fmt"])
-
-    audio = meta.mapInPandas(
-        synth, schema="audio_id string, bytes binary, fmt string"
-    )
-    return MM.audio_features(audio)
-
-
-def q_mp3_audio_l2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MPEG-1 Layer II payload decode (sources/codec_mp3.py, from
-    scratch: spec allocation Tables 3-B.2a/3-B.2b, Table 3-B.4
-    quantization classes with grouped 3/5/9-level codewords, scfsi
-    scalefactor coding, the same computed filterbank as Layer I): a
-    distinct multisine family encoded through our Layer II encoder and
-    decoded back by the engine into exact integer features.  The oracle
-    is the frozen single-process expectations table
-    (tools/build_mp3_fixture.py :: mp3_l2_signal, which also documents
-    the signal spec); the codec's rate/distortion contract is pinned by
-    tests/test_mp3.py.  48 kHz streams hit B.2a and >= 96 kbps/ch
-    44.1/32 kHz streams hit B.2b, so both transcribed tables are under
-    the gate."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-
-    meta = _capped_media_meta(spark, sf_dir)
-
-    def synth(batches):
-        from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_mp3
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pk = int(r.pk)
-                rate = [32000, 44100, 48000][pk % 3]
-                n = 3000 + (pk % 5) * 600
-                i = np.arange(n, dtype=np.float64)
-                f1 = 180 + 19 * (pk % 13)
-                f2 = 950 + 41 * (pk % 11)
-                f3 = 3400 + 59 * (pk % 7)
-                x = (
-                    0.3 * np.sin(2 * np.pi * f1 / rate * i)
-                    + 0.25 * np.sin(2 * np.pi * f2 / rate * i + 1.0)
-                    + 0.2 * np.sin(2 * np.pi * f3 / rate * i + 2.0)
-                )
-                ch0 = np.rint(32767 * x).astype(np.int16)
-                if pk % 2:
-                    sig, bi = np.stack([ch0, ch0[::-1] // 2], axis=1), 7 + pk % 8
-                else:
-                    sig, bi = ch0, 3 + pk % 8
-                rows.append(
-                    (
-                        r.image_id,
-                        codec_mp3.encode_mp3(sig, rate, bi, layer=2),
-                        "mp3",
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes", "fmt"])
-
-    audio = meta.mapInPandas(
-        synth, schema="audio_id string, bytes binary, fmt string"
-    )
-    return MM.audio_features(audio)
-
-
-def q_mp3_audio_l3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL MPEG-1 Layer III payload decode (sources/codec_mp3_l3.py,
-    from scratch: 17/32-byte side-info bit layout, part2 scalefactor
-    decode, Huffman big-values pairs + count1 quadruples, x^(4/3)
-    requantization, alias-reduction butterflies, 36-point IMDCT with
-    overlap-add, frequency inversion, the shared polyphase synthesis
-    filterbank).  Restricted profile documented in the module docstring
-    (long blocks, tables 0/1 + count1B, bit reservoir + scfsi scale-
-    factor sharing both live) — the last MPEG-1 audio layer, leaving
-    AAC as the only audio stub.  Oracle:
-    frozen single-process expectations
-    (tools/build_mp3_fixture.py :: mp3_l3_signal, which documents the
-    signal spec); rate/distortion pinned by tests/test_mp3.py."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-
-    meta = _capped_media_meta(spark, sf_dir)
-
-    def synth(batches):
-        from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_mp3
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pk = int(r.pk)
-                rate = [32000, 44100, 48000][pk % 3]
-                n = 2600 + (pk % 6) * 500
-                i = np.arange(n, dtype=np.float64)
-                f1 = 160 + 23 * (pk % 13)
-                f2 = 870 + 43 * (pk % 11)
-                f3 = 3100 + 61 * (pk % 7)
-                x = (
-                    0.3 * np.sin(2 * np.pi * f1 / rate * i)
-                    + 0.25 * np.sin(2 * np.pi * f2 / rate * i + 1.0)
-                    + 0.2 * np.sin(2 * np.pi * f3 / rate * i + 2.0)
-                )
-                ch0 = np.rint(32767 * x).astype(np.int16)
-                if pk % 2:
-                    sig = np.stack([ch0, ch0[::-1] // 2], axis=1)
-                else:
-                    sig = ch0
-                rows.append(
-                    (
-                        r.image_id,
-                        codec_mp3.encode_mp3(sig, rate, 13 + pk % 2, layer=3),
-                        "mp3",
-                    )
                 )
             yield pd.DataFrame(rows, columns=["audio_id", "bytes", "fmt"])
 
@@ -2279,10 +2065,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "video_frames": q_video_frames,
     "video_pixels": q_video_pixels,
     "video_audio": q_video_audio,
-    "mp3_meta": q_mp3_meta,
-    "mp3_audio": q_mp3_audio,
-    "mp3_audio_l2": q_mp3_audio_l2,
-    "mp3_audio_l3": q_mp3_audio_l3,
     "flac_audio": q_flac_audio,
     "multimodal_tiff_quarantine": q_multimodal_tiff_quarantine,
     # --- previously driver-evidenced, cheap metadata/text gates ----------- #
@@ -2326,7 +2108,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "bbox_join": q_bbox_join,
     "point_tile_assign": q_point_tile_assign,
     "pip_join": q_pip_join,
-    "pip_join_arrow": q_pip_join_arrow,
     "knn_join": q_knn_join,
     "training_tensors": q_training_tensors,
     "edt_weight_hist": q_edt_weight_hist,
@@ -2405,7 +2186,6 @@ SELECT
 FROM images_meta""",
         ),
         "pip_join": _PIP_SQL,
-        "pip_join_arrow": _PIP_SQL,
         "pipeline_polygons": _pipeline_polygons_sql(),
         "pipeline_watershed": _pipeline_watershed_sql(),
         "dice_jaccard": _dice_jaccard_sql(),
@@ -2491,13 +2271,9 @@ FROM read_parquet('{_REPROJECT_FIXTURE}')""",
         "gif_frames": _gif_frames_sql(),
         "video_meta": _video_meta_sql(),
         "video_frames": _video_frames_sql(),
-        "mp3_meta": _mp3_meta_sql(),
         "video_pixels": _video_pixels_sql(),
         "video_audio": _video_audio_sql(),
         "flac_audio": _flac_audio_sql(),
-        "mp3_audio": _mp3_audio_sql(),
-        "mp3_audio_l2": _mp3_audio_l2_sql(),
-        "mp3_audio_l3": _mp3_audio_l3_sql(),
         "stream_ingest_stats": _stream_ingest_stats_sql(),
         "stream_dedup": _stream_dedup_sql(),
         "stream_completion": _stream_completion_sql(),
@@ -2879,38 +2655,6 @@ SELECT video_id,
   CAST(sum((pk + 11 * k + j) % 256) AS BIGINT) AS payload_sum
 FROM bytes
 GROUP BY video_id, k, sz"""
-
-
-def _mp3_meta_sql() -> str:
-    """Closed-form twin of q_mp3_meta: MPEG1 Layer III bitrate/sample-rate
-    tables (ISO/IEC 11172-3) + the exact frame-length arithmetic
-    144 * bitrate / rate, padding 0."""
-    return """
-WITH meta AS (
-  SELECT concat('img_', lpad(CAST(p_partkey AS VARCHAR), 8, '0')) AS audio_id,
-         p_partkey AS pk
-  FROM part WHERE p_partkey <= 60
-),
-params AS (
-  SELECT audio_id,
-    8 + pk % 9 AS n,
-    list_extract(
-      [32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320],
-      CAST(1 + pk % 14 AS INT)) AS br,
-    list_extract([44100, 48000, 32000], CAST(1 + pk % 3 AS INT)) AS sr
-  FROM meta
-)
-SELECT audio_id,
-  'mp3' AS container,
-  'mp3' AS codec,
-  CAST(1 AS INT) AS n_streams,
-  CAST(0 AS INT) AS w,
-  CAST(0 AS INT) AS h,
-  CAST(n AS BIGINT) AS n_samples,
-  CAST(n * (144 * br * 1000 // sr) AS BIGINT) AS sum_sample_bytes,
-  CAST(n * 1152 * 1000 // sr AS BIGINT) AS duration_ms,
-  CAST(sr AS INT) AS sample_rate
-FROM params"""
 
 
 def _video_pixels_sql() -> str:
@@ -3521,10 +3265,7 @@ JOIN blob bl USING (image_id)"""
 _MM_THUMB_FIXTURE = "/root/repo/fixtures/multimodal_thumb_sf0_01.parquet"
 _MM_JPEG_FIXTURE = "/root/repo/fixtures/multimodal_jpeg_sf0_01.parquet"
 _MM_TIFF_JPEG_FIXTURE = "/root/repo/fixtures/multimodal_tiff_jpeg_sf0_01.parquet"
-_MP3_AUDIO_FIXTURE = "/root/repo/fixtures/mp3_audio_sf0_01.parquet"
 _AUDIO_ADPCM_FIXTURE = "/root/repo/fixtures/audio_adpcm_sf0_01.parquet"
-_MP3_AUDIO_L2_FIXTURE = "/root/repo/fixtures/mp3_audio_l2_sf0_01.parquet"
-_MP3_AUDIO_L3_FIXTURE = "/root/repo/fixtures/mp3_audio_l3_sf0_01.parquet"
 _REPROJECT_FIXTURE = "/root/repo/fixtures/reproject_extents_sf0_01.parquet"
 
 
@@ -3876,39 +3617,6 @@ def _audio_adpcm_sql() -> str:
 SELECT audio_id, n_samples, n_channels, sample_rate,
        duration_ms, sum_abs, zero_crossings
 FROM read_parquet('{_AUDIO_ADPCM_FIXTURE}')"""
-
-
-def _mp3_audio_sql() -> str:
-    """Twin of q_mp3_audio: lossy Layer I samples have no SQL form, so
-    the oracle is the complete expectations table from a single-process
-    run of the same synth -> encode -> decode -> feature chain
-    (tools/build_mp3_fixture.py) — no Spark machinery shared, so a
-    distributed-plumbing bug cannot cancel out."""
-    return f"""
-SELECT audio_id, n_samples, n_channels, sample_rate,
-       duration_ms, sum_abs, zero_crossings
-FROM read_parquet('{_MP3_AUDIO_FIXTURE}')"""
-
-
-def _mp3_audio_l2_sql() -> str:
-    """Twin of q_mp3_audio_l2: the Layer II expectations table frozen by
-    the same single-process fixture run (tools/build_mp3_fixture.py ::
-    mp3_l2_signal) — no Spark machinery shared with the gated query."""
-    return f"""
-SELECT audio_id, n_samples, n_channels, sample_rate,
-       duration_ms, sum_abs, zero_crossings
-FROM read_parquet('{_MP3_AUDIO_L2_FIXTURE}')"""
-
-
-def _mp3_audio_l3_sql() -> str:
-    """Twin of q_mp3_audio_l3: the Layer III expectations table frozen
-    by the same single-process fixture run (tools/build_mp3_fixture.py
-    :: mp3_l3_signal) — no Spark machinery shared with the gated
-    query."""
-    return f"""
-SELECT audio_id, n_samples, n_channels, sample_rate,
-       duration_ms, sum_abs, zero_crossings
-FROM read_parquet('{_MP3_AUDIO_L3_FIXTURE}')"""
 
 
 def _multimodal_features_sql() -> str:

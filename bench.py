@@ -131,92 +131,7 @@ def main() -> None:
     spark = make_spark(CPUS)
     spark.sparkContext.setLogLevel("ERROR")
 
-    bench_queries = [
-        # spatial / tiling core
-        "gen_tiles",
-        "point_tile_assign",
-        "pip_join",
-        "pip_join_arrow",
-        "bbox_join",
-        "knn_join",
-        "pipeline_polygons",
-        "pipeline_watershed",
-        "dice_jaccard",
-        # training-data ops (first-class per the build brief)
-        "exact_dedup",
-        "minhash_signature",
-        "lsh_pairs",
-        "ngram_jaccard",
-        "simhash",
-        "text_stats",
-        "fingerprint",
-        "ann_topk",
-        "ann_lsh_topk",
-        "ann_ivf_topk",
-        "embedding_near_dup",
-        "embedding_near_dup_lsh",
-        "multimodal_features",
-        "multimodal_jpeg",
-        "training_tensors",
-        # round-2 additions
-        "pyramid_tiles",
-        "edt_weight_hist",
-        "watershed_split",
-        "cc_distributed",
-        "multimodal_pixel_sums",
-        "lang_id",
-        "skeletonize_bars",
-        "audio_features",
-        "gif_frames",
-        # round-3 additions
-        "multimodal_webp",
-        "video_meta",
-        "video_frames",
-        "mp3_meta",
-        "video_pixels",
-        "video_audio",
-        "flac_audio",
-        # round-4 additions
-        "mp3_audio",
-        "mp3_audio_l2",
-        "stream_ingest_stats",
-        "stream_tiles",
-        "stream_dedup",
-        "stream_completion",
-        # round-4 continuation: decode with per-row quarantine policy
-        "multimodal_quarantine",
-        # round-4 continuation: native-format GeoTIFF ingest
-        "multimodal_tiff",
-        "geotiff_extents",
-        "geotiff_window",
-        "window_chips",
-        "box_chips",
-        # round-4 continuation: JPEG-compressed GeoTIFF (compression 7)
-        "multimodal_tiff_jpeg",
-        # round-4 continuation: image dedup + zonal analytics
-        "phash_compute",
-        "phash_near_dup",
-        "zonal_stats",
-        "zonal_stats_poly",
-        "phash_dedup_groups",
-        # round-4 continuation: Mapbox Vector Tile pyramid sink
-        "mvt_tiles",
-        "mvt_lines",
-        "mvt_points",
-        "skeleton_paths",
-        # round-5 additions
-        "mvt_pyramid",
-        "multimodal_tiff_quarantine",
-        "mp3_audio_l3",
-        "audio_g711",
-        "multimodal_png16",
-        "audio_adpcm",
-        "reproject_extents",
-        "mosaic_extent_wgs84",
-        "audio_float",
-        "multimodal_jpeg_prog",
-    ]
-    qs = E.queries()
+    qs = E.queries()  # every registered gate, in registry order
     rows: dict[str, int] = {}
     steal: dict[str, float] = {}
     # TWO FULL SWEEPS, min per query.  Back-to-back best-of-2 (round 2) both
@@ -225,13 +140,13 @@ def main() -> None:
     # so one burst can stain at most one sample.  Sweep 1 additionally pays
     # plan/codegen compile + Python worker spawn, so sweep 2 is the steady
     # state.  Per-sample steal fraction is recorded for the kept sample.
-    sweep: dict[str, list[tuple[float, float]]] = {q: [] for q in bench_queries}
+    sweep: dict[str, list[tuple[float, float]]] = {q: [] for q in qs}
     for _ in range(2):
-        for name in bench_queries:
+        for name in qs:
             n, dt, st = timed(lambda: qs[name](spark, SF_DIR).count())
             sweep[name].append((dt, st))
             rows[name] = n
-    for name in bench_queries:
+    for name in qs:
         dt, st = min(sweep[name])
         results[name] = round(dt, 3)
         steal[name] = st

@@ -1,6 +1,6 @@
 """Hostile-byte fuzz for the image/audio codecs.
 
-Round 3 hardened FLAC and round 4 hardened the mp4/webm/mp3 container
+Round 3 hardened FLAC and round 4 hardened the mp4/webm container
 parsers against malformed streams (tests/test_containers.py).  This file
 extends the same contract to every remaining decoder entry point: at
 100 TB ingest, truncated, bit-flipped, and adversarial payloads are

@@ -1,13 +1,11 @@
-"""Container-layer codecs: ISO BMFF (mp4), EBML/Matroska (webm), MPEG
-audio frame walk (mp3) — round-trips through our from-scratch writers,
-plus the Spark-side container_meta / frame_sample real paths."""
+"""Container-layer codecs: ISO BMFF (mp4), EBML/Matroska (webm) —
+round-trips through our from-scratch writers, plus the Spark-side container_meta / frame_sample real paths."""
 
 import struct
 
 import pytest
 
 from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import (
-    codec_mp3,
     container_mp4,
     container_webm,
 )
@@ -95,36 +93,6 @@ def test_webm_rejects_garbage():
         container_webm.probe_webm(b"\xff" + b"\x00" * 32)
 
 
-# ------------------------------------------------------------------ mp3
-
-@pytest.mark.parametrize("bi,si,n", [(1, 0, 1), (9, 0, 20), (14, 2, 7), (5, 1, 12)])
-def test_mp3_walk_exact(bi, si, n):
-    data = codec_mp3.build_mp3(n, bi, si, fill_seed=3)
-    info = codec_mp3.probe_mp3(data)
-    br = codec_mp3._BITRATES_V1[3][bi]
-    sr = codec_mp3._SAMPLE_RATES[3][si]
-    assert info.n_frames == n
-    assert info.bitrate_kbps == br and info.sample_rate == sr
-    assert info.total_bytes == n * (144 * br * 1000 // sr) == len(data)
-    assert info.duration_ms == n * 1152 * 1000 // sr
-    assert info.is_cbr
-
-
-def test_mp3_resync_over_garbage():
-    data = b"ID3junk\xff\x00garbage" + codec_mp3.build_mp3(4, 9, 0)
-    assert codec_mp3.probe_mp3(data).n_frames == 4
-
-
-def test_mp3_truncated_tail_frame_dropped():
-    data = codec_mp3.build_mp3(3, 9, 0)
-    assert codec_mp3.probe_mp3(data[:-10]).n_frames == 2
-
-
-def test_mp3_no_frames_raises():
-    with pytest.raises(ValueError):
-        codec_mp3.probe_mp3(b"\x00" * 100)
-
-
 # -------------------------------------------------------- spark plumbing
 
 def test_container_meta_mixed_formats(spark):
@@ -134,9 +102,8 @@ def test_container_meta_mixed_formats(spark):
     webm = container_webm.build_webm(
         [(k * 40, s) for k, s in enumerate(_samples(3, 5))], 60, 40, codec="V_VP9"
     )
-    mp3 = codec_mp3.build_mp3(6, 9, 0)
     df = spark.createDataFrame(
-        [("a", mp4, "mp4"), ("b", webm, "webm"), ("c", mp3, "mp3")],
+        [("a", mp4, "mp4"), ("b", webm, "webm")],
         "media_id string, bytes binary, fmt string",
     )
     out = {r["media_id"]: r for r in MM.container_meta(df).collect()}
@@ -144,8 +111,6 @@ def test_container_meta_mixed_formats(spark):
     assert out["a"]["w"] == 100 and out["a"]["duration_ms"] == 160
     assert out["b"]["codec"] == "V_VP9" and out["b"]["n_samples"] == 5
     assert out["b"]["duration_ms"] == 200
-    assert out["c"]["container"] == "mp3" and out["c"]["n_samples"] == 6
-    assert out["c"]["sample_rate"] == 44100
 
 
 def test_frame_sample_real_mp4_webm_payloads(spark):
@@ -343,7 +308,6 @@ def test_mp4_audio_only_probe_reports_zero_dims():
 # capability guard) cleanly — never hang, over-allocate, or leak
 # struct.error/IndexError.  (FLAC got the same hardening in round 3.)
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -360,10 +324,6 @@ def _fuzz_probe(fn, data, allowed=(ValueError,)):
 def test_fuzz_random_bytes_all_parsers(data):
     _fuzz_probe(container_mp4.probe_mp4, data)
     _fuzz_probe(container_webm.probe_webm, data)
-    _fuzz_probe(codec_mp3.probe_mp3, data)
-    _fuzz_probe(
-        codec_mp3.decode_mp3, data, (ValueError, NotImplementedError)
-    )
 
 
 def _valid_mp4() -> bytes:
@@ -376,30 +336,12 @@ def _valid_webm() -> bytes:
     )
 
 
-def _valid_mp3() -> bytes:
-    sig = np.rint(
-        8000 * np.sin(np.arange(2000) * 0.07)
-    ).astype(np.int16)
-    return codec_mp3.encode_mp3(sig, 32000, bitrate_idx=7)
-
-
-def _valid_mp3_l2() -> bytes:
-    # Layer II blob: hostile bytes must also walk the table-driven
-    # allocation/scfsi/grouped-codeword parse path cleanly
-    sig = np.rint(
-        8000 * np.sin(np.arange(2500) * 0.05)
-    ).astype(np.int16)
-    return codec_mp3.encode_mp3(sig, 48000, bitrate_idx=8, layer=2)
-
-
 @settings(max_examples=120, deadline=None)
 @given(st.data())
 def test_fuzz_truncations_of_valid_files(data):
     for blob, fns in (
         (_valid_mp4(), [container_mp4.probe_mp4]),
         (_valid_webm(), [container_webm.probe_webm]),
-        (_valid_mp3(), [codec_mp3.probe_mp3, codec_mp3.decode_mp3]),
-        (_valid_mp3_l2(), [codec_mp3.probe_mp3, codec_mp3.decode_mp3]),
     ):
         cut = data.draw(st.integers(min_value=0, max_value=len(blob) - 1))
         for fn in fns:
@@ -412,8 +354,6 @@ def test_fuzz_byte_flips_of_valid_files(data):
     for blob, fns in (
         (_valid_mp4(), [container_mp4.probe_mp4]),
         (_valid_webm(), [container_webm.probe_webm]),
-        (_valid_mp3(), [codec_mp3.probe_mp3, codec_mp3.decode_mp3]),
-        (_valid_mp3_l2(), [codec_mp3.probe_mp3, codec_mp3.decode_mp3]),
     ):
         mut = bytearray(blob)
         for _ in range(data.draw(st.integers(min_value=1, max_value=8))):

@@ -108,27 +108,19 @@ def test_multires_ladder_dims(spark):
         assert (r["rw"], r["rh"]) == src[r["image_id"]]
 
 
-def test_multimodal_stub_gate(spark):
+def test_decode_features_unknown_fmt(spark):
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
 
-    # mp4 remains a stub format (jpeg/webp decode is REAL now — codec_*.py)
+    # a fmt with no codec is an undecodable row: it fails by default and
+    # follows the row's on_error policy otherwise
     df = spark.createDataFrame(
         [("v1", b"\x00\x01", 4, 3, "mp4")],
         "image_id string, bytes binary, w int, h int, fmt string",
     )
-    with pytest.raises(Exception, match="NotImplementedError|decode"):
-        MM.decode_features(df, resize_to=2, stub_ok=False).collect()
-    out = MM.decode_features(df, resize_to=2, stub_ok=True).collect()
-    assert len(out) == 1 and out[0]["n_px"] == 12
+    with pytest.raises(Exception, match="unknown fmt"):
+        MM.decode_features(df, resize_to=2).collect()
+    assert MM.decode_features(df, resize_to=2, on_error="skip").collect() == []
+    (q,) = MM.decode_features(df, resize_to=2, on_error="quarantine").collect()
+    assert q["n_px"] is None and q["error"].startswith("ValueError: unknown fmt")
 
 
-def test_frame_sample_explodes(spark):
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-
-    vids = spark.createDataFrame(
-        [("v1", b"xx", 8, 6, 25), ("v2", b"yy", 4, 4, 5)],
-        "video_id string, bytes binary, w int, h int, n_frames int",
-    )
-    out = MM.frame_sample(vids, every_n=10).collect()
-    got = {(r["video_id"], r["frame_idx"]) for r in out}
-    assert got == {("v1", 0), ("v1", 10), ("v1", 20), ("v2", 0)}

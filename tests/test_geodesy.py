@@ -105,10 +105,32 @@ def test_zone_and_epsg_helpers():
         == [32631, 32707]
     with pytest.raises(ValueError):
         G.epsg_to_zone(np.array([4326]))
-    with pytest.raises(ValueError):
-        G.parse_epsg(np.array(["utm-33n"], dtype=object))
-    assert list(G.parse_epsg(np.array(["EPSG:32733"], dtype=object))) \
-        == [32733]
+    epsg, ok = G.parse_epsg(np.array(["EPSG:32733", "utm-33n"], dtype=object))
+    assert list(epsg) == [32733, -1] and list(ok) == [True, False]
+
+
+# malformed under the one EPSG rule (geodesy.parse_epsg)
+_EPSG_REJECTED = [
+    "EPSG:32633.0", "EPSG:3.2633e4", "EPSG:+32633", "EPSG: 32633",
+    "EPSG:032633",
+]
+
+
+def test_parse_epsg_one_rule():
+    good = ["EPSG:32633", "epsg:4326", "  EPSG:32718\t"]
+    epsg, ok = G.parse_epsg(good + _EPSG_REJECTED + [None, "utm-33n"])
+    assert list(epsg[:3]) == [32633, 4326, 32718] and ok[:3].all()
+    assert not ok[3:].any() and (epsg[3:] == -1).all()
+
+
+def test_geotiff_writer_uses_the_same_epsg_rule():
+    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_tiff as T
+
+    img = np.zeros((4, 4), np.uint8)
+    for crs in _EPSG_REJECTED:
+        gk = T._read_ifd(T.encode_tiff(img, geo=(5e5, 4.1e6, 0.5, -0.5, crs)))[0][34735][1]
+        keys = {gk[4 * k] for k in range(1, gk[3] + 1)}
+        assert 3072 not in keys and 2048 not in keys, crs
 
 
 def test_extent_densification_beats_corners():
@@ -214,6 +236,15 @@ def test_extents_on_error_policies(spark):
 
     skip = RP.extents_to_wgs84(df, on_error="skip").toPandas()
     assert list(skip["image_id"]) == ["good"]
+
+    # malformed EPSG spellings are flagged rows too, never a raise
+    lax = spark.createDataFrame(pd.DataFrame({
+        "image_id": [f"r{i}" for i in range(len(_EPSG_REJECTED))],
+        "minx": 400000.0, "miny": 5000000.0,
+        "maxx": 410000.0, "maxy": 5010000.0,
+        "crs": _EPSG_REJECTED,
+    }))
+    assert RP.extents_to_wgs84(lax, on_error="skip").count() == 0
 
     q = RP.extents_to_wgs84(df, on_error="quarantine").toPandas() \
         .set_index("image_id")

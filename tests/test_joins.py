@@ -62,12 +62,11 @@ def geo(spark):
     return pts, polys, pdf, gdf
 
 
-@pytest.mark.parametrize("strategy", ["expr", "arrow"])
-def test_pip_join_vs_bruteforce(spark, geo, strategy):
+def test_pip_join_vs_bruteforce(spark, geo):
     pts, polys, pdf, gdf = geo
     got = {
         (r["pt_id"], r["fp_id"])
-        for r in joins.pip_join(pdf, gdf, GRID, strategy=strategy).collect()
+        for r in joins.pip_join(pdf, gdf, GRID).collect()
     }
     exp = {
         (pid, fid)
@@ -102,14 +101,25 @@ def test_bbox_range_join_vs_bruteforce_and_exactly_once(spark, geo):
     assert set(pairs) == exp
 
 
-@pytest.mark.parametrize("k", [1, 3, 7])
-def test_knn_join_vs_bruteforce(spark, geo, k):
+# broadcast_centers=False runs the auto rule's build-side explode (points
+# outnumber centers); True forces the probe-side explode.
+@pytest.mark.parametrize(
+    "k, broadcast_centers",
+    [
+        pytest.param(k, bc, id=f"{k}-broadcast" if bc else str(k))
+        for k in (1, 3, 7)
+        for bc in (False, True)
+    ],
+)
+def test_knn_join_vs_bruteforce(spark, geo, k, broadcast_centers):
     pts, polys, pdf, gdf = geo
     centers = spark.createDataFrame(
         [(fid, (mnx + mxx) / 2, (mny + mxy) / 2) for fid, _, mnx, mny, mxx, mxy in polys],
         "fp_id string, cx double, cy double",
     )
-    got = joins.knn_join(pdf, centers, GRID, k=k, r0=1).collect()
+    got = joins.knn_join(
+        pdf, centers, GRID, k=k, r0=1, broadcast_centers=broadcast_centers
+    ).collect()
     by_pt = {}
     for r in got:
         by_pt.setdefault(r["pt_id"], []).append((r["rank"], r["fp_id"], r["dist2"]))
@@ -131,30 +141,6 @@ def test_knn_more_than_available(spark, geo):
     )
     got = joins.knn_join(pdf.limit(10), centers, GRID, k=5, r0=1)
     assert got.groupBy("pt_id").count().agg(F.max("count")).first()[0] == 2
-
-
-def test_knn_explode_side_identical_results(spark, geo):
-    """explode_side only moves the k-ring explode between join sides
-    (BENCH.md shuffle-volume study); the ranked result set must be
-    byte-identical for every setting, and unknown settings must raise."""
-    pts, polys, pdf, gdf = geo
-    centers = spark.createDataFrame(
-        [(fid, (mnx + mxx) / 2, (mny + mxy) / 2) for fid, _, mnx, mny, mxx, mxy in polys],
-        "fp_id string, cx double, cy double",
-    )
-    key = lambda r: (r["pt_id"], r["rank"], r["fp_id"], r["dist2"])
-    base = sorted(
-        joins.knn_join(pdf, centers, GRID, k=3, r0=1, explode_side="auto").collect(),
-        key=key,
-    )
-    for side in ("build", "probe"):
-        got = sorted(
-            joins.knn_join(pdf, centers, GRID, k=3, r0=1, explode_side=side).collect(),
-            key=key,
-        )
-        assert [key(r) for r in got] == [key(r) for r in base], side
-    with pytest.raises(ValueError):
-        joins.knn_join(pdf, centers, GRID, k=3, explode_side="left")
 
 
 def test_cellindex_properties(spark):

@@ -183,6 +183,20 @@ def test_audio_features_over_real_wav(spark):
     assert r["zero_crossings"] == 3
 
 
+@pytest.mark.parametrize("fmt", ["ogg", "mp3"])
+def test_audio_features_unknown_fmt_raises(spark, fmt):
+    import pandas as pd
+
+    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
+
+    df = spark.createDataFrame(
+        pd.DataFrame([("x", b"\x00" * 16, fmt)],
+                     columns=["audio_id", "bytes", "fmt"])
+    )
+    with pytest.raises(Exception, match="unsupported fmt"):
+        MM.audio_features(df).collect()
+
+
 # ---------------------------------------------------------------------- #
 # GIF codec (sources/codec_gif.py)
 # ---------------------------------------------------------------------- #

@@ -66,14 +66,14 @@ def test_pip_join_broadcast_engages(spark):
         "fp_id",
     )
     bcast = joins.pip_join(
-        pts, polys, WORLD_GRID, strategy="expr", broadcast_polygons=True
+        pts, polys, WORLD_GRID, broadcast_polygons=True
     )
     assert "BroadcastHashJoin" in plan(bcast)
     # the default path is the shuffle join (auto-broadcast only kicks in
     # because this fixture is tiny — disable it to see the scale plan)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        shuffle = joins.pip_join(pts, polys, WORLD_GRID, strategy="expr")
+        shuffle = joins.pip_join(pts, polys, WORLD_GRID)
         assert "hashpartitioning(cell_id" in plan(shuffle)
     finally:
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -195,6 +195,9 @@ def test_ann_ivf_no_assignment_shuffle(spark):
     # assignment is a projection, not an aggregation over the corpus
     assert "HashAggregate" not in p, p
     assert "max_by" not in p, p
+
+
+def test_video_pixels_two_python_stages(spark):
     """The media fixture pipeline is exactly two Python stages (synth,
     probe/decode) with no exchange between them — the encoded payloads
     flow straight from the synth stage into the decode stage."""

@@ -44,20 +44,33 @@ def test_tiling_invariants(size, t, ov):
 
 @settings(max_examples=25, deadline=None)
 @given(st.integers(min_value=0, max_value=10_000))
-def test_pip_raycast_vs_winding_bruteforce(seed):
-    """Random concave polygons + points: numpy ray-cast == scalar even-odd."""
+def test_pip_raycast_vs_winding_bruteforce(spark, seed):
+    """Random concave polygons + points: the engine's JVM-side ray-cast
+    (joins.ray_cast_inside) == scalar even-odd, all 50 points of one
+    example evaluated in a single DataFrame."""
+    from pyspark.sql import functions as F
+
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators.joins import (
-        _ray_cast_numpy,
+        ray_cast_inside,
     )
 
     rng = np.random.RandomState(seed)
     ang = np.sort(rng.uniform(0, 2 * np.pi, rng.randint(3, 9)))
     rad = rng.uniform(0.5, 3.0, len(ang))
-    ring = [[5 + r * np.cos(a), 5 + r * np.sin(a)] for a, r in zip(ang, rad)]
+    ring = [
+        [float(5 + r * np.cos(a)), float(5 + r * np.sin(a))]
+        for a, r in zip(ang, rad)
+    ]
     ring.append(ring[0])
     pts = rng.uniform(0, 10, size=(50, 2))
 
-    got = _ray_cast_numpy(pts[:, 0], pts[:, 1], [ring] * len(pts))
+    df = spark.createDataFrame(
+        [(i, float(x), float(y), ring) for i, (x, y) in enumerate(pts)],
+        "i int, px double, py double, ring array<array<double>>",
+    )
+    inside = ray_cast_inside(F.col("px"), F.col("py"), F.col("ring"))
+    rows = df.select("i", inside.alias("inside")).collect()
+    got = np.array([r["inside"] for r in sorted(rows, key=lambda r: r["i"])])
 
     def scalar(px, py):
         inside = False

@@ -24,7 +24,6 @@ class EngineConfig:
 
     # --- georeference (reference config.py:13-16) ---
     cell_size_m: float = 0.1      # 0.1 m ground cells
-    max_resolution_m: float = 1.0  # multi-res ladder top (generateMutilRes.py)
 
     # --- post-processing (reference config.py:29-34) ---
     simplify_tolerance_m: float = 0.7     # SimplifyPreserveTopology param
@@ -35,16 +34,7 @@ class EngineConfig:
     min_object_area_px: int = 9           # remove_small_objects(min_size=9)
 
     # --- ML dataflow (reference config.py:19-21,24) ---
-    num_image_channels: int = 3
-    num_label_channels: int = 1
     validation_split: float = 0.15
-    epochs: int = 30
-
-    # --- engine-only knobs (no reference analogue; scale policy §4.2) ---
-    cell_index_res: int = 9       # quadkey/Z-order resolution for spatial joins
-    shuffle_partitions: int = 32
-    broadcast_threshold_rows: int = 2_000_000
-    skew_salt_buckets: int = 8
 
     @property
     def step_px(self) -> int:

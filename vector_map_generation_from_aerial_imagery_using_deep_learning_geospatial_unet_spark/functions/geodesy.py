@@ -30,6 +30,7 @@ friendly, and the per-row cost is a handful of transcendental ops.
 from __future__ import annotations
 
 import numpy as np
+import pandas as pd
 
 # WGS84 ellipsoid
 A_WGS84 = 6378137.0
@@ -256,15 +257,21 @@ def zone_to_epsg(zone: np.ndarray, south: np.ndarray) -> np.ndarray:
     return np.where(np.asarray(south, dtype=bool), 32700 + z, 32600 + z)
 
 
-def parse_epsg(crs: "np.ndarray") -> np.ndarray:
-    """Vector of 'EPSG:32633'-style strings -> int codes (ValueError on
-    malformed input, same policy contract as epsg_to_zone)."""
-    out = np.empty(len(crs), dtype=np.int64)
-    for i, s in enumerate(crs):
-        if not isinstance(s, str) or not s.upper().startswith("EPSG:"):
-            raise ValueError(f"unsupported CRS string: {s!r}")
-        try:
-            out[i] = int(s[5:])
-        except ValueError:
-            raise ValueError(f"unsupported CRS string: {s!r}") from None
-    return out
+# The engine's one EPSG rule: "EPSG:" + 4-5 ASCII digits, case-insensitive,
+# outer whitespace stripped.  Signs, decimals, exponents, inner spaces and
+# 6-digit zero-padded codes are malformed.
+_EPSG_RE = r"(?i)^\s*EPSG:([0-9]{4,5})\s*$"
+
+
+def parse_epsg(crs) -> tuple[np.ndarray, np.ndarray]:
+    """Sequence of 'EPSG:32633'-style strings -> (epsg int64, ok bool).
+
+    Never raises: malformed or non-string entries get epsg=-1 / ok=False
+    so the caller's ``on_error`` policy decides.  Vectorized pandas
+    string ops — no per-row Python."""
+    s = pd.Series(np.asarray(crs, dtype=object)).astype("string")
+    digits = s.str.extract(_EPSG_RE, expand=False)
+    ok = digits.notna().to_numpy(dtype=bool)
+    epsg = np.full(len(s), -1, dtype=np.int64)
+    epsg[ok] = digits[ok].astype(np.int64).to_numpy()
+    return epsg, ok

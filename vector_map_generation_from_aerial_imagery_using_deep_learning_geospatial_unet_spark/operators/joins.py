@@ -8,10 +8,8 @@ three operators, all built on the cell equi-join prefilter from
 
 * :func:`bbox_range_join` — O5 semantics: bbox-overlap pairs.
 * :func:`pip_join`        — point-in-polygon, cell prefilter + ray-casting
-  refinement.  Two refine strategies: ``'expr'`` (higher-order column
-  functions — fully JVM-side, whole-stage codegen, zero Python) and
-  ``'arrow'`` (vectorized numpy ray-cast in ``mapInPandas``); they are
-  result-identical and tests pin that.
+  refinement (:func:`ray_cast_inside`: higher-order column functions —
+  fully JVM-side, whole-stage codegen, zero Python).
 * :func:`knn_join`        — exact k-nearest-neighbours via k-ring expansion
   with doubling radius; the per-round guarantee is the standard grid bound
   (kth-distance < ring_radius * cell_side ⇒ no closer candidate outside).
@@ -25,10 +23,7 @@ the probe side.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -129,77 +124,6 @@ def ray_cast_inside(px: Column, py: Column, ring: Column) -> Column:
     return crossings % 2 == 1
 
 
-def _ray_cast_numpy(px: np.ndarray, py: np.ndarray, rings: list) -> np.ndarray:
-    """Vectorized even-odd ray-cast over variable-length rings.
-
-    Flattens all candidate rings into edge arrays once per Arrow batch;
-    per-pair crossing counts via np.add.reduceat — no per-row Python in the
-    hot loop.
-    """
-    if len(px) == 0:
-        return np.zeros(0, dtype=bool)
-    counts = np.fromiter((len(r) - 1 for r in rings), dtype=np.int64, count=len(rings))
-    flat = np.concatenate(
-        [np.stack([np.asarray(v, dtype=np.float64) for v in r]) for r in rings]
-    )
-    starts = np.concatenate([[0], np.cumsum(counts + 1)[:-1]])
-    # edge endpoints: for ring j, vertices starts[j] .. starts[j]+counts[j]
-    edge_mask = np.ones(len(flat), dtype=bool)
-    edge_mask[starts + counts] = False  # drop last vertex of each ring as edge start
-    x1, y1 = flat[edge_mask, 0], flat[edge_mask, 1]
-    nxt = np.where(edge_mask)[0] + 1
-    x2, y2 = flat[nxt, 0], flat[nxt, 1]
-    pair_idx = np.repeat(np.arange(len(rings)), counts)
-    ppx, ppy = px[pair_idx], py[pair_idx]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        hit = ((y1 > ppy) != (y2 > ppy)) & (
-            ppx < (x2 - x1) * (ppy - y1) / (y2 - y1) + x1
-        )
-    crossings = np.bincount(pair_idx, weights=hit.astype(np.float64), minlength=len(rings))
-    return (crossings.astype(np.int64) % 2) == 1
-
-
-def _ray_cast_grouped(
-    px: np.ndarray, py: np.ndarray, codes: np.ndarray, uniq_rings: list
-) -> np.ndarray:
-    """Even-odd ray-cast where candidate i tests ring ``uniq_rings[codes[i]]``.
-
-    Candidates repeat the same polygons many times (one row per matching
-    cell pair), so each distinct ring is flattened to edge arrays exactly
-    once; the per-(candidate, edge) crossing test is then pure vectorized
-    gather — no per-candidate Python at all."""
-    if len(px) == 0:
-        return np.zeros(0, dtype=bool)
-    # rings arrive either pre-shaped (n, 2) float64 or as sequences of
-    # per-vertex pairs (object arrays need stack, not asarray)
-    edges = [
-        r if isinstance(r, np.ndarray) and r.ndim == 2
-        else np.stack(r).astype(np.float64)
-        for r in uniq_rings
-    ]
-    counts = np.array([len(e) - 1 for e in edges], dtype=np.int64)
-    flat = np.concatenate(edges)
-    # vertex index of each ring's first edge start inside `flat`
-    starts = np.concatenate([[0], np.cumsum(counts + 1)[:-1]])
-    ecnt = counts[codes]                       # edges per candidate
-    offs = starts[codes]
-    total = int(ecnt.sum())
-    base = np.cumsum(ecnt) - ecnt
-    pos = np.arange(total) - np.repeat(base, ecnt) + np.repeat(offs, ecnt)
-    cand_idx = np.repeat(np.arange(len(codes)), ecnt)
-    x1, y1 = flat[pos, 0], flat[pos, 1]
-    x2, y2 = flat[pos + 1, 0], flat[pos + 1, 1]
-    ppx, ppy = px[cand_idx], py[cand_idx]
-    with np.errstate(divide="ignore", invalid="ignore"):
-        hit = ((y1 > ppy) != (y2 > ppy)) & (
-            ppx < (x2 - x1) * (ppy - y1) / (y2 - y1) + x1
-        )
-    crossings = np.bincount(
-        cand_idx, weights=hit.astype(np.float64), minlength=len(codes)
-    )
-    return (crossings.astype(np.int64) % 2) == 1
-
-
 def _auto_salt(pts_with_cell: DataFrame, cap: int = 64) -> int:
     """Derive the salt factor from the probe side's cell histogram instead
     of operator tuning: the join key serializes when ONE cell exceeds a
@@ -235,7 +159,6 @@ def pip_join(
     pt_cols: tuple[str, str, str] = ("pt_id", "px", "py"),
     poly_id: str = "fp_id",
     ring_col: str = "ring",
-    strategy: str = "expr",
     salt: int | str | None = None,
     broadcast_polygons: bool = False,
 ) -> DataFrame:
@@ -272,49 +195,8 @@ def pip_join(
         cover = F.broadcast(cover)
 
     cand = pts.join(cover, keys).drop(*keys)
-
-    if strategy == "expr":
-        inside = ray_cast_inside(F.col(pxc), F.col(pyc), F.col(ring_col))
-        return cand.filter(inside).drop(ring_col)
-
-    if strategy == "arrow":
-        # spread before the Python refine: AQE byte-coalescing (shuffle
-        # path) or a single scan split (broadcast path over a small points
-        # file) would otherwise starve it of parallelism
-        cand = cand.repartition(
-            points.sparkSession.sparkContext.defaultParallelism * 2
-        )
-        # flatten JVM-side: Arrow->pandas of array<double> lands as one
-        # numpy array per row; nested array<array<double>> would cost a
-        # Python object per vertex
-        cand = cand.withColumn("__ring", F.flatten(F.col(ring_col))).drop(ring_col)
-        out_fields = [f for f in cand.schema.fields if f.name != "__ring"]
-        schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in out_fields)
-        out_cols = [f.name for f in out_fields]
-
-        def refine(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                # candidates repeat each polygon ~cells x points times:
-                # factorize so every distinct ring is flattened once
-                codes, _ = pd.factorize(pdf[poly_id])
-                first_idx = np.unique(codes, return_index=True)[1]
-                uniq_rings = [
-                    np.asarray(r, dtype=np.float64).reshape(-1, 2)
-                    for r in pdf["__ring"].to_numpy()[first_idx]
-                ]
-                mask = _ray_cast_grouped(
-                    pdf[pxc].to_numpy(np.float64),
-                    pdf[pyc].to_numpy(np.float64),
-                    codes,
-                    uniq_rings,
-                )
-                yield pdf.loc[mask, out_cols]
-
-        return cand.mapInPandas(refine, schema=schema)
-
-    raise ValueError(f"unknown strategy {strategy!r}")
+    inside = ray_cast_inside(F.col(pxc), F.col(pyc), F.col(ring_col))
+    return cand.filter(inside).drop(ring_col)
 
 
 # --------------------------------------------------------------------------- #
@@ -331,7 +213,6 @@ def knn_join(
     r0: int | None = None,
     broadcast_centers: bool = False,
     materialize: bool = True,
-    explode_side: str = "auto",
 ) -> DataFrame:
     """Exact kNN: for each point the k nearest centers, ranked.
 
@@ -345,17 +226,10 @@ def knn_join(
 
     ``broadcast_centers=True``: build-side broadcast of the center table
     (use when centers fit executor memory; the default shuffle join is the
-    scale path).
-
-    ``explode_side``: which side of the round's equi-join carries the
-    (2r+1)^2 k-ring explode — ``'auto'`` (default: the smaller side per
-    round), ``'build'`` (always the center side), ``'probe'`` (always the
-    point side — the pre-round-3 plan, kept as a measurement baseline for
-    the shuffle-volume evidence in BENCH.md).  The candidate SET and the
-    result are identical for every setting.
+    scale path).  Each round puts the (2r+1)^2 k-ring explode on the
+    smaller side of its equi-join (see the loop body); the candidate set
+    is the same either way.
     """
-    if explode_side not in ("auto", "build", "probe"):
-        raise ValueError(f"explode_side {explode_side!r}")
     pid, pxc, pyc = pt_cols
     cid, cxc, cyc = center_cols
     n_centers = centers.count()
@@ -397,12 +271,7 @@ def knn_join(
         # broadcast relation must stay n_centers rows — exploding before
         # the broadcast would ship n_centers*(2r+1)^2 rows to every
         # executor, quadratic in r as rounds double the radius.
-        explode_build = (
-            (n_remaining > n_centers)
-            if explode_side == "auto"
-            else explode_side == "build"
-        )
-        if explode_build and not broadcast_centers:
+        if n_remaining > n_centers and not broadcast_centers:
             build = cts.withColumn(
                 "cell_id", F.explode(grid.k_ring(F.col("c_cell"), r))
             ).drop("c_cell")

@@ -6,20 +6,20 @@ UDFs over ``mapInPandas``.
 The container has no image/audio libs, so: png/raw/jpeg/gif/webp decode is
 REAL (our codecs — baseline JFIF in ``sources/codec_jpeg.py``, GIF LZW in
 ``codec_gif.py``, WebP-lossless VP8L in ``codec_webp.py``, pure numpy).
-For mp3/mp4/webm the CONTAINER layer is real (exact probing + sample
+WAV (PCM, IEEE float, G.711, IMA ADPCM) and FLAC audio decode for real in
+``sources/codec_wav.py`` / ``codec_flac.py`` (:func:`audio_features`).
+For mp4/webm the CONTAINER layer is real (exact probing + sample
 extraction), and tracks whose codec we implement decode all the way to
 pixels/PCM: Motion-JPEG video (:func:`video_decode_frames`) and 'sowt'/
-'twos' PCM audio (:func:`audio_track_pcm`).  Only inter-frame video
-(H.264/VP9/AV1) and compressed audio (mp3/aac) PAYLOAD decode stays a
-clearly-marked stub that raises ``NotImplementedError`` unless
-``stub_ok=True``, in which case a deterministic fake (seeded by payload
-hash) stands in — the Spark-side plumbing (schema, partitioning, UDF
-signature, Arrow batch shape) is real and tested either way.
+'twos' PCM audio (:func:`audio_track_pcm`).  Inter-frame video
+(H.264/VP9/AV1) and compressed audio tracks (aac) raise
+``NotImplementedError`` — the capability boundary is per-track codec id.
+Any other ``fmt`` raises ``ValueError('unknown fmt ...')``; the row's
+``on_error`` policy handles both like any other undecodable payload.
 """
 
 from __future__ import annotations
 
-import hashlib
 import zlib
 from collections.abc import Iterator
 
@@ -32,14 +32,6 @@ from ..functions.kernels_resample import resize_bilinear
 from ..sources import codec
 
 REAL_FORMATS = {"png", "raw", "jpeg", "jpg", "gif", "webp", "tif", "tiff"}  # sources/codec_*.py
-# wav (PCM) decodes for real via sources/codec_wav.py (audio_features);
-# webp-lossless (VP8L) via sources/codec_webp.py.  mp3/mp4/webm PIXEL/PCM
-# decode stays stubbed (genuinely codec-library-bound DCT/entropy codecs),
-# but their CONTAINER layer is REAL: sources/container_mp4.py (ISO BMFF),
-# container_webm.py (EBML/Matroska), codec_mp3.py (MPEG frame walker) give
-# exact metadata probing and encoded-sample extraction — see
-# :func:`container_meta` and the mp4/webm branch of :func:`frame_sample`.
-STUB_FORMATS = {"mp3", "mp4", "webm"}
 
 # Per-row error policy (operators/_policy.py): 'fail' | 'skip' |
 # 'quarantine' — see that module's docstring for the full contract.
@@ -65,7 +57,7 @@ def quarantine_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def _decode_payload(data: bytes, fmt: str, w: int, h: int, stub_ok: bool) -> np.ndarray:
+def _decode_payload(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
     if fmt == "gif":  # still image = first frame (sources/codec_gif.py)
         from ..sources import codec_gif
 
@@ -73,22 +65,12 @@ def _decode_payload(data: bytes, fmt: str, w: int, h: int, stub_ok: bool) -> np.
         return frames[0][:, :, :3]
     if fmt in REAL_FORMATS:
         return codec.decode(bytes(data), fmt, w, h)
-    if fmt in STUB_FORMATS:
-        if not stub_ok:
-            raise NotImplementedError(
-                f"{fmt} decode requires an image/audio codec lib not present "
-                "in this container; pass stub_ok=True for the deterministic fake"
-            )
-        seed = int.from_bytes(hashlib.md5(bytes(data)).digest()[:4], "big")
-        rng = np.random.RandomState(seed)
-        return rng.randint(0, 256, size=(h, w, 3), dtype=np.uint8)
     raise ValueError(f"unknown fmt {fmt!r}")
 
 
 def decode_features(
     images: DataFrame,
     resize_to: int = 200,
-    stub_ok: bool = False,
     on_error: str = "fail",
 ) -> DataFrame:
     """images -> per-row decoded features: resized thumbnail stats +
@@ -108,7 +90,7 @@ def decode_features(
         schema += ", error string"
 
     def one(r):
-        arr = _decode_payload(r.bytes, r.fmt, int(r.w), int(r.h), stub_ok)
+        arr = _decode_payload(r.bytes, r.fmt, int(r.w), int(r.h))
         if arr.ndim == 2:
             arr = np.stack([arr] * 3, axis=-1)
         thumb = resize_bilinear(arr, resize_to, resize_to)
@@ -217,7 +199,7 @@ def audio_features(audio: DataFrame, on_error: str = "fail") -> DataFrame:
     REAL from-scratch decoders, so the gate covers the full
     encode -> shuffle -> decode path either way.  ``on_error``: see
     module policy."""
-    from ..sources import codec_flac, codec_mp3, codec_wav
+    from ..sources import codec_flac, codec_wav
 
     _check_on_error(on_error)
     has_fmt = "fmt" in audio.columns
@@ -236,8 +218,6 @@ def audio_features(audio: DataFrame, on_error: str = "fail") -> DataFrame:
         fmt = r.fmt if has_fmt else "wav"
         if fmt == "flac":
             s, rate = codec_flac.decode_flac(bytes(r.bytes))
-        elif fmt == "mp3":
-            s, rate = codec_mp3.decode_mp3(bytes(r.bytes))
         elif fmt == "wav":
             s, rate = codec_wav.decode_wav(bytes(r.bytes))
         else:
@@ -246,7 +226,7 @@ def audio_features(audio: DataFrame, on_error: str = "fail") -> DataFrame:
             # WAV decoder it silently fell into (round-3 ADVICE)
             raise NotImplementedError(
                 f"audio_features: unsupported fmt {fmt!r} "
-                "(supported: wav, flac, mp3)"
+                "(supported: wav, flac)"
             )
         if s.dtype.kind == "f":
             # IEEE-float WAV: deterministic int16-scale quantization so
@@ -285,18 +265,17 @@ def _video_track_webm(info):
 def container_meta(
     media: DataFrame, id_col: str = "media_id", on_error: str = "fail"
 ) -> DataFrame:
-    """REAL container-level metadata for mp3/mp4/webm payloads — the probe
+    """REAL container-level metadata for mp4/webm payloads — the probe
     an ingest pipeline runs on every media blob before any decode: exact
     stream/sample counts, encoded byte totals, duration, dimensions or
     sample rate — all from our from-scratch parsers (ISO BMFF box walk,
-    EBML element walk, MPEG frame walk).  One unified row per input:
+    EBML element walk).  One unified row per input:
 
         (id, container, codec, n_streams, w, h, n_samples,
          sum_sample_bytes, duration_ms, sample_rate)
 
     mp4: first video track supplies codec/w/h/samples; duration from mvhd.
-    webm: video TrackEntry + SimpleBlock walk.  mp3: frame walk (samples =
-    frames, bytes = exact frame lengths).  Unknown fmt raises — silent
+    webm: video TrackEntry + SimpleBlock walk.  Unknown fmt raises — silent
     skips would undercount a corpus audit (use ``on_error='quarantine'``
     to keep the undercount VISIBLE: the probe stage is where a 100-TB
     corpus audit should dead-letter its hostile blobs)."""
@@ -314,7 +293,7 @@ def container_meta(
         schema += ", error string"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..sources import codec_mp3, container_mp4, container_webm
+        from ..sources import container_mp4, container_webm
 
         def one(r):
             data, fmt = bytes(r.bytes), r.fmt
@@ -338,13 +317,6 @@ def container_meta(
                     sum(len(b.payload) for b in blocks),
                     info.duration_ms, vid.sample_rate,
                 )
-            if fmt == "mp3":
-                info = codec_mp3.probe_mp3(data)
-                return (
-                    mid, "mp3", "mp3", 1, 0, 0, info.n_frames,
-                    info.total_bytes, info.duration_ms,
-                    info.sample_rate,
-                )
             raise ValueError(f"container_meta: unsupported fmt {fmt!r}")
 
         for pdf in batches:
@@ -357,19 +329,18 @@ def container_meta(
 def frame_sample(
     videos: DataFrame,
     every_n: int = 10,
-    stub_ok: bool = True,
     on_error: str = "fail",
 ) -> DataFrame:
-    """Video/animation rows -> one row per sampled frame.
+    """Video/animation rows (``video_id, bytes, fmt``) -> one row per
+    sampled frame.
 
     ``fmt='gif'`` decodes for REAL (sources/codec_gif.py: full LZW +
     disposal compositing; frame_bytes = zlib'd decoded pixels).
     ``fmt='mp4'/'webm'`` extract the REAL encoded sample payloads at the
     container level (sources/container_mp4.py stsz/stsc/stco math,
     container_webm.py SimpleBlock walk; frame_bytes = the encoded codec
-    payload, NOT pixels — pixel decode stays codec-library-bound).  A
-    ``fmt`` column is optional; absent means the deterministic stub
-    (round-1 schema, keyed by payload+frame_idx).
+    payload, NOT pixels — :func:`video_decode_frames` decodes MJPEG).
+    Any other fmt raises ``ValueError('unknown fmt ...')``.
 
     ``on_error`` supports 'fail'/'skip' only: a multi-row-per-input
     extractor has no single quarantine row shape — dead-letter at the
@@ -377,13 +348,12 @@ def frame_sample(
     then frame-sample the surviving rows with 'skip' as a belt."""
     _check_on_error(on_error, allowed=("fail", "skip"))
     schema = "video_id string, frame_idx int, frame_bytes binary, w int, h int"
-    has_fmt = "fmt" in videos.columns
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..sources import codec_gif, container_mp4, container_webm
 
         def one(r) -> list:
-            fmt = getattr(r, "fmt", "") if has_fmt else ""
+            fmt = r.fmt
             out = []
             if fmt == "gif":
                 frames, _ = codec_gif.decode_gif(bytes(r.bytes))
@@ -418,18 +388,7 @@ def frame_sample(
                         )
                     )
                 return out
-            n_frames = int(r.n_frames)
-            for fi in range(0, n_frames, every_n):
-                seed = int.from_bytes(
-                    hashlib.md5(bytes(r.bytes) + fi.to_bytes(4, "big")).digest()[:4],
-                    "big",
-                )
-                rng = np.random.RandomState(seed)
-                frame = rng.randint(0, 256, size=(int(r.h), int(r.w), 3), dtype=np.uint8)
-                out.append(
-                    (r.video_id, fi, zlib.compress(frame.tobytes(), 1), int(r.w), int(r.h))
-                )
-            return out
+            raise ValueError(f"frame_sample: unknown fmt {fmt!r}")
 
         for pdf in batches:
             rows = []

@@ -47,23 +47,13 @@ from ..functions import geodesy as GEO
 from . import _policy
 
 
-def _epsg_vec(crs: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """Series of 'EPSG:32633' strings -> (epsg int64, ok bool) vectors,
-    never raising: bad rows get epsg=-1 / ok=False so the caller's
-    on_error policy decides.  Vectorized pandas string ops — no per-row
-    Python in the hot path."""
-    s = crs.astype("string")
-    has_prefix = (s.str.slice(0, 5).str.upper() == "EPSG:").fillna(False)
-    num = pd.to_numeric(s.str.slice(5), errors="coerce")
-    intish = num.notna() & (num == num.fillna(0).astype(np.int64))
-    epsg = np.where(
-        (has_prefix & intish).values,
-        num.fillna(-1).astype(np.int64).values,
-        -1,
-    )
+def _utm_epsg(crs: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """CRS strings -> (epsg, ok) where ok also requires a UTM/WGS84 code
+    (EPSG:326xx/327xx); never raises (see ``geodesy.parse_epsg``)."""
+    epsg, ok = GEO.parse_epsg(crs)
     north = (epsg >= 32601) & (epsg <= 32660)
     south = (epsg >= 32701) & (epsg <= 32760)
-    return epsg, north | south
+    return epsg, ok & (north | south)
 
 
 def _zone_south(epsg: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -110,7 +100,7 @@ def points_to_wgs84(
 
     @pandas_udf(_LL_STRUCT)
     def inv(xs: pd.Series, ys: pd.Series, cs: pd.Series) -> pd.DataFrame:
-        epsg, ok = _epsg_vec(cs)
+        epsg, ok = _utm_epsg(cs)
         if not bool(ok.all()):
             bad = cs.astype(object).values[~ok][:4]
             raise ValueError(f"unsupported CRS (want EPSG:326xx/327xx): {bad}")
@@ -206,7 +196,7 @@ def extents_to_wgs84(
             n = len(pdf)
             if n == 0:
                 continue
-            epsg, ok = _epsg_vec(pdf[crs])
+            epsg, ok = _utm_epsg(pdf[crs])
             if on_error == "fail" and not bool(ok.all()):
                 bad = pdf[crs].astype(object).values[~ok][:4]
                 raise ValueError(
@@ -257,18 +247,13 @@ def extents_to_wgs84(
                 )
                 out = pd.DataFrame({
                     id_col: out[id_col],
-                    "epsg": pd.array(
-                        np.where(ok, epsg, 0).astype(np.int32),
-                    ),
+                    "epsg": pd.Series(np.where(ok, epsg, None), dtype=object),
                     "lon_min": out["lon_min"].where(ok, None),
                     "lat_min": out["lat_min"].where(ok, None),
                     "lon_max": out["lon_max"].where(ok, None),
                     "lat_max": out["lat_max"].where(ok, None),
                     "error": err,
                 })
-                out["epsg"] = pd.Series(
-                    np.where(ok, epsg, None), dtype=object
-                )
             yield out
 
     return df.mapInPandas(run, schema=schema)

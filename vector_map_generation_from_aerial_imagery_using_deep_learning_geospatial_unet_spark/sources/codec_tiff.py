@@ -6,7 +6,7 @@ GDAL's GeoTIFF driver (``read_tif``/``write_tif``,
 geotransform + projection straight from those tags
 (/root/reference/src/io.py:55-63).  This module earns that capability
 from the public TIFF 6.0 + GeoTIFF 1.1 specs, same posture as the
-PNG/VP8L/FLAC codecs here:
+PNG/VP8L/JPEG codecs here:
 
 decode — classic AND BigTIFF layouts, both byte orders, strip AND tile
 organisation, compression 1 (none) / 5 (LZW, early-change) / 7
@@ -37,12 +37,12 @@ same as decode_png).
 
 from __future__ import annotations
 
-import re
 import struct
 import zlib
 
 import numpy as np
 
+from ..functions.geodesy import parse_epsg
 from ._hardening import malformed_guard
 from .codec_jpeg import decode_jpeg, encode_jpeg
 
@@ -69,12 +69,6 @@ _TAG_PIXEL_SCALE = 33550
 _TAG_TIEPOINT = 33922
 _TAG_GEO_KEYS = 34735
 _TAG_GEO_ASCII = 34737
-
-
-def _parse_epsg(crs: str) -> int | None:
-    """'EPSG:32643' -> 32643; anything else (WKT, free text) -> None."""
-    m = re.fullmatch(r"EPSG:(\d{4,5})", crs.strip(), re.IGNORECASE)
-    return int(m.group(1)) if m else None
 
 
 # --------------------------------------------------------------------- #
@@ -963,7 +957,8 @@ def _level_entries(
         # key directory: model type, pixel-is-area, citation, and — when
         # the crs string is a literal EPSG code — the real CRS key a
         # GeoTIFF reader resolves (2048 geographic / 3072 projected)
-        epsg = _parse_epsg(crs)
+        codes, ok = parse_epsg([crs])
+        epsg = int(codes[0]) if ok[0] else None
         geographic = epsg is not None and 4000 <= epsg <= 4999
         keys = [
             (1024, 0, 1, 2 if geographic else 1),

@@ -675,7 +675,7 @@ def decode_vp8l(payload: bytes) -> np.ndarray:
 @malformed_guard("webp")
 def decode_webp(data: bytes) -> np.ndarray:
     """Decode a WebP file (lossless/VP8L only — VP8 lossy is DCT-codec
-    territory, documented out of scope like mp3/mp4)."""
+    territory, documented out of scope)."""
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
         raise ValueError("not a RIFF/WEBP file")
     pos = 12
