@@ -73,6 +73,21 @@ def slice_tiles(
     )
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        # masks are mostly background: a constant window's payload depends
+        # only on its shape, dtype and value, so each one is encoded once
+        # per task (no ascontiguousarray: the png encoder's scanline
+        # filter already copies the strided view)
+        constant: dict[tuple, bytes] = {}
+
+        def encode_tile(win: np.ndarray) -> bytes:
+            if not win.size or (win != win[0, 0]).any():
+                return codec.encode(win, tile_fmt, level=1)
+            key = (win.shape, win.dtype.str, win[0, 0].tobytes())
+            blob = constant.get(key)
+            if blob is None:
+                blob = constant[key] = codec.encode(win, tile_fmt, level=1)
+            return blob
+
         for pdf in batches:
             # columnar accumulation: building a pandas frame from one list
             # of 14-field tuples costs more than the pixel work itself at
@@ -114,11 +129,7 @@ def slice_tiles(
                         cols["off_y"].append(off_y)
                         cols["tw"].append(tw)
                         cols["th"].append(th)
-                        cols["bytes"].append(
-                            codec.encode(
-                                np.ascontiguousarray(win), tile_fmt, level=1
-                            )
-                        )
+                        cols["bytes"].append(encode_tile(win))
                 cols["image_id"].extend([r.image_id] * n_tiles)
                 cols["w"].extend([w] * n_tiles)
                 cols["h"].extend([h] * n_tiles)

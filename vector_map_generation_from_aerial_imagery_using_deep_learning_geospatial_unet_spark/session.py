@@ -11,6 +11,19 @@ import os
 
 from pyspark.sql import SparkSession
 
+MIB = 1 << 20
+
+
+def default_driver_memory() -> str:
+    """Half of physical memory, capped at 16g: the driver heap of a local
+    session shares the host with its Python workers, and a heap larger
+    than RAM is only found out when the host starts swapping."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{min(phys // 2, 16 << 30) // MIB}m"
+
 
 def get_spark(
     app_name: str = "geospatial-unet-spark",
@@ -23,10 +36,12 @@ def get_spark(
     # unconditionally call .master(): that would override spark-submit's
     # --master and silently run cluster submissions single-node local.
     master = master or os.environ.get("SPARK_GRAFT_MASTER")
+    submitted = None
     if master is None:
         from pyspark import SparkConf
 
-        if not SparkConf().contains("spark.master"):
+        submitted = SparkConf().get("spark.master", None)
+        if submitted is None:
             master = "local[*]"
     shuffle_partitions = shuffle_partitions or int(
         os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
@@ -53,10 +68,20 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxBytesPerBatch", "134217728")
         # Pixel payloads are wide; keep scan splits moderate.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )
+    if (master or submitted).startswith("local"):
+        # Python workers fork from the engine's daemon, which stops every
+        # task from re-reading pyspark.zip's directory (see workerd.py).
+        # Local only: a cluster executor may get the engine from
+        # --py-files, which reach sys.path per task, after the daemon
+        # has started.
+        b = b.config("spark.python.daemon.module", f"{__package__}.workerd")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -69,8 +69,12 @@ class _BitReader:
 
     def read(self, n: int) -> int:
         acc, nbits, pos, data = self.acc, self.nbits, self.pos, self.data
+        if nbits + 8 * (len(data) - pos) < n:
+            # zero-padding instead would let a few bytes that declare
+            # 16383x16383 decode a 1 GiB plane out of nothing
+            raise ValueError("VP8L bitstream over-read")
         while nbits < n:
-            acc |= (data[pos] if pos < len(data) else 0) << nbits
+            acc |= data[pos] << nbits
             pos += 1
             nbits += 8
         v = acc & ((1 << n) - 1)
@@ -176,6 +180,9 @@ class _Huff:
         sym, ln = self.table[acc & self.mask]
         if sym < 0:
             raise ValueError("invalid prefix code in VP8L stream")
+        # the peek may run past the end; the code itself may not
+        if pos > len(data) and nbits - ln < 8 * (pos - len(data)):
+            raise ValueError("VP8L bitstream over-read")
         br.acc = acc >> ln
         br.nbits = nbits - ln
         br.pos = pos
@@ -370,6 +377,8 @@ def _literal_fast_path(br: _BitReader, n: int, group) -> np.ndarray | None:
     bytes_pp = 1 + sum(1 for k in kinds if k == 8)
     total = n * bytes_pp
     data = br.data
+    if br.nbits + 8 * (len(data) - br.pos) < 8 * total:
+        raise ValueError("truncated VP8L literal stream")
     # after table decodes the reader may hold >= 8 pending bits; whole
     # pending bytes ARE the next raw bytes (LSB-first), drain them first so
     # the vectorized shift-merge below runs with a sub-byte offset
@@ -380,8 +389,6 @@ def _literal_fast_path(br: _BitReader, n: int, group) -> np.ndarray | None:
         br.nbits -= 8
     rest = total - len(pre)
     k = br.nbits
-    if len(data) - br.pos < rest:
-        raise ValueError("truncated VP8L literal stream")
     if rest == 0:
         raw = np.array(pre, dtype=np.uint8)
     elif k == 0:
