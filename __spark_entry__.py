@@ -695,7 +695,7 @@ def _await_stream(spark: SparkSession, start_fn, state_partitions: int = 8):
 
 def _capped_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(image_id, pk) for pk <= 60 — the shared driver of every per-pk
-    media fixture (wav/gif/mp4/webm synth).  The filtered meta arrives
+    media fixture (wav/gif synth).  The filtered meta arrives
     as ONE split; per-row codec work is CPU-bound, so spread rows across
     the cluster before entering Python (cheap metadata-only shuffle)."""
     meta = derived.images_meta(spark, sf_dir).select(
@@ -1354,201 +1354,6 @@ def q_edt_weight_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DG.edt_weight_hist(labels)
 
 
-def _synth_videos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic mp4 (even pk) / webm (odd pk) corpus through the REAL
-    from-scratch container writers: n = 5+pk%6 samples, w = 160+pk%32,
-    h = 120+pk%16, sample k is 50+(pk*13+7k)%100 bytes with byte j =
-    (pk+11k+j)%256, timestamps 40 ms apart — every field closed-form for
-    the SQL twin."""
-    import pandas as pd
-
-    meta = _capped_media_meta(spark, sf_dir)
-
-    def synth(batches):
-        from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import container_mp4, container_webm
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pk = int(r.pk)
-                n, w, h = 5 + pk % 6, 160 + pk % 32, 120 + pk % 16
-                samples = [
-                    bytes(
-                        (pk + 11 * k + j) % 256
-                        for j in range(50 + (pk * 13 + 7 * k) % 100)
-                    )
-                    for k in range(n)
-                ]
-                if pk % 2 == 0:
-                    data = container_mp4.build_mp4(
-                        samples, w, h, codec="avc1", timescale=1000, sample_delta=40
-                    )
-                else:
-                    data = container_webm.build_webm(
-                        [(40 * k, s) for k, s in enumerate(samples)],
-                        w, h, codec="V_VP9",
-                    )
-                rows.append((r.image_id, data, "mp4" if pk % 2 == 0 else "webm"))
-            yield pd.DataFrame(rows, columns=["video_id", "bytes", "fmt"])
-
-    return meta.mapInPandas(synth, schema="video_id string, bytes binary, fmt string")
-
-
-def q_video_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video container probing (mixed mp4 + webm corpus): ISO BMFF
-    box walk / EBML element walk -> exact per-file stream metadata
-    (codec fourcc, dimensions, sample count, encoded byte total, duration)
-    — the metadata pass an ingest pipeline runs on every blob before any
-    codec decode.  Every output field is closed-form in pk."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-
-    return MM.container_meta(_synth_videos(spark, sf_dir), id_col="video_id")
-
-
-def q_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL container-level frame extraction: every 2nd encoded sample is
-    sliced out of the mp4 (stsz/stsc/stco offset math) or webm
-    (SimpleBlock walk) payload; the gate sums the extracted bytes, so a
-    single wrong offset anywhere in the sample tables breaks it."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-
-    sampled = MM.frame_sample(_synth_videos(spark, sf_dir), every_n=2)
-
-    def sums(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                buf = np.frombuffer(bytes(r.frame_bytes), dtype=np.uint8)
-                rows.append(
-                    (r.video_id, int(r.frame_idx), int(buf.size),
-                     int(buf.sum(dtype=np.int64)))
-                )
-            yield pd.DataFrame(
-                rows, columns=["video_id", "frame_idx", "frame_sz", "payload_sum"]
-            )
-
-    return sampled.mapInPandas(
-        sums,
-        schema="video_id string, frame_idx int, frame_sz int, payload_sum long",
-    )
-
-
-def _synth_mjpeg_videos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic Motion-JPEG corpus through the REAL writers: even pk
-    -> mp4 with an ISO 'jpeg' video sample entry, odd pk -> webm with a
-    Matroska 'V_MJPEG' track; every sample is a complete baseline-JFIF
-    image from our own encoder (quality 50, so DC quantization genuinely
-    bites).  Frames are grayscale planes of two 8px-aligned constant
-    vertical bands (cols [0,80) = va, [80,w) = vb) — per-block-constant
-    planes survive the lossy DCT as exactly one deterministic value per
-    band (DC-only blocks), which is what lets the oracle stay closed-form
-    through a REAL lossy codec.  w = 160+8*(pk%5), h = 120+8*(pk%3),
-    n = 4+pk%5, va = (pk*7+11*fi)%256, vb = (pk*13+17*fi+128)%256."""
-    import numpy as np
-    import pandas as pd
-
-    meta = _capped_media_meta(spark, sf_dir)
-
-    def synth(batches):
-        from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import (
-            codec_jpeg, container_mp4, container_webm,
-        )
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pk = int(r.pk)
-                w, h = 160 + 8 * (pk % 5), 120 + 8 * (pk % 3)
-                n = 4 + pk % 5
-                samples = []
-                for fi in range(n):
-                    frame = np.full(
-                        (h, w), (pk * 7 + 11 * fi) % 256, dtype=np.uint8
-                    )
-                    frame[:, 80:] = (pk * 13 + 17 * fi + 128) % 256
-                    samples.append(codec_jpeg.encode_jpeg(frame, quality=50))
-                if pk % 2 == 0:
-                    data = container_mp4.build_mp4(
-                        samples, w, h, codec="jpeg", timescale=1000,
-                        sample_delta=40,
-                    )
-                else:
-                    data = container_webm.build_webm(
-                        [(40 * k, s) for k, s in enumerate(samples)],
-                        w, h, codec="V_MJPEG",
-                    )
-                rows.append(
-                    (r.image_id, data, "mp4" if pk % 2 == 0 else "webm")
-                )
-            yield pd.DataFrame(rows, columns=["video_id", "bytes", "fmt"])
-
-    return meta.mapInPandas(
-        synth, schema="video_id string, bytes binary, fmt string"
-    )
-
-
-def q_video_pixels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL video PIXEL decode (mixed mp4 + webm Motion-JPEG corpus):
-    container probe -> encoded-sample extraction -> per-frame baseline-JFIF
-    decode -> exact per-frame pixel sums, all in one Arrow hop.  The gate
-    is exact THROUGH a lossy codec: per-8px-band-constant frames decode to
-    one deterministic value per band (DC-only quantization), tabulated by
-    the oracle from single-process 8x8 roundtrips."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-
-    return MM.video_decode_frames(
-        _synth_mjpeg_videos(spark, sf_dir), every_n=2, id_col="video_id"
-    )
-
-
-def q_video_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL PCM audio-track decode out of multi-trak MP4s: files carry a
-    video track plus a 'sowt' (16-bit LE PCM) audio track written FIRST in
-    moov (as real muxers do); the engine must pick the soun trak, walk its
-    own stsz/stsc/stco tables, and decode the PCM — every output an exact
-    integer with a pure-arithmetic SQL twin.  chunk k sample i:
-    s = ((pk*31 + k*7 + i*3) % 65536) - 32768."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-
-    meta = _capped_media_meta(spark, sf_dir)
-
-    def synth(batches):
-        from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import container_mp4
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pk = int(r.pk)
-                vid_samples = [
-                    bytes((pk + 3 * k + j) % 256 for j in range(40))
-                    for k in range(2)
-                ]
-                n_chunks = 3 + pk % 4
-                i = np.arange(256, dtype=np.int64)
-                chunks = []
-                for k in range(n_chunks):
-                    s = ((pk * 31 + k * 7 + i * 3) % 65536) - 32768
-                    chunks.append(s.astype("<i2").tobytes())
-                data = container_mp4.build_mp4(
-                    vid_samples, 64, 48, codec="avc1",
-                    audio_samples=chunks, audio_codec="sowt",
-                    audio_rate=8000 + (pk % 5) * 2000,
-                )
-                rows.append((r.image_id, data, "mp4"))
-            yield pd.DataFrame(rows, columns=["media_id", "bytes", "fmt"])
-
-    media = meta.mapInPandas(
-        synth, schema="media_id string, bytes binary, fmt string"
-    )
-    return MM.audio_track_pcm(media, id_col="media_id")
-
-
 def q_flac_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL lossless FLAC decode (sources/codec_flac.py, from scratch:
     fixed predictors + Rice coding + CRCs): deterministic int16 signals —
@@ -2062,9 +1867,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "stream_tiles": q_stream_tiles,
     "stream_dedup": q_stream_dedup,
     "stream_completion": q_stream_completion,
-    "video_frames": q_video_frames,
-    "video_pixels": q_video_pixels,
-    "video_audio": q_video_audio,
     "flac_audio": q_flac_audio,
     "multimodal_tiff_quarantine": q_multimodal_tiff_quarantine,
     # --- previously driver-evidenced, cheap metadata/text gates ----------- #
@@ -2090,7 +1892,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ann_ivf_topk": q_ann_ivf_topk,
     "embedding_near_dup": q_embedding_near_dup,
     "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
-    "video_meta": q_video_meta,
     "audio_features": q_audio_features,
     "gif_frames": q_gif_frames,
     "multimodal_features": q_multimodal_features,
@@ -2269,10 +2070,6 @@ SELECT min(lon_min_nd) AS lon_min_nd, min(lat_min_nd) AS lat_min_nd,
        count(*) AS n_images, count(DISTINCT epsg) AS n_zones
 FROM read_parquet('{_REPROJECT_FIXTURE}')""",
         "gif_frames": _gif_frames_sql(),
-        "video_meta": _video_meta_sql(),
-        "video_frames": _video_frames_sql(),
-        "video_pixels": _video_pixels_sql(),
-        "video_audio": _video_audio_sql(),
         "flac_audio": _flac_audio_sql(),
         "stream_ingest_stats": _stream_ingest_stats_sql(),
         "stream_dedup": _stream_dedup_sql(),
@@ -2592,160 +2389,6 @@ SELECT image_id, CAST(2 AS INT) AS n_regions, CAST(fg_px AS BIGINT) AS fg_px,
        round(fg_px * 1e-2, 2) AS area_m2
 FROM dumbbell WHERE pk <= 80"""
     )
-
-
-def _video_meta_sql() -> str:
-    """Closed-form twin of q_video_meta: every container field re-derived
-    from the pk arithmetic of _synth_videos (the Spark side must recover
-    them by PARSING the mp4/webm bytes it built)."""
-    return """
-WITH meta AS (
-  SELECT concat('img_', lpad(CAST(p_partkey AS VARCHAR), 8, '0')) AS video_id,
-         p_partkey AS pk
-  FROM part WHERE p_partkey <= 60
-),
-params AS (
-  SELECT video_id, pk, 5 + pk % 6 AS n, 160 + pk % 32 AS w, 120 + pk % 16 AS h
-  FROM meta
-),
-sizes AS (
-  SELECT video_id, pk, n, w, h, unnest(generate_series(0, n - 1)) AS k
-  FROM params
-)
-SELECT video_id,
-  CASE WHEN pk % 2 = 0 THEN 'mp4' ELSE 'webm' END AS container,
-  CASE WHEN pk % 2 = 0 THEN 'avc1' ELSE 'V_VP9' END AS codec,
-  CAST(1 AS INT) AS n_streams,
-  CAST(w AS INT) AS w,
-  CAST(h AS INT) AS h,
-  CAST(n AS BIGINT) AS n_samples,
-  CAST(sum(50 + (pk * 13 + 7 * k) % 100) AS BIGINT) AS sum_sample_bytes,
-  CAST(40 * n AS BIGINT) AS duration_ms,
-  CAST(0 AS INT) AS sample_rate
-FROM sizes
-GROUP BY video_id, pk, n, w, h"""
-
-
-def _video_frames_sql() -> str:
-    """Closed-form twin of q_video_frames: re-derive every sampled encoded
-    frame's size and byte-sum ((pk + 11k + j) % 256 filler) — the Spark
-    side must slice the identical bytes back out of the container."""
-    return """
-WITH meta AS (
-  SELECT concat('img_', lpad(CAST(p_partkey AS VARCHAR), 8, '0')) AS video_id,
-         p_partkey AS pk
-  FROM part WHERE p_partkey <= 60
-),
-params AS (
-  SELECT video_id, pk, 5 + pk % 6 AS n FROM meta
-),
-frames AS (
-  SELECT video_id, pk, unnest(generate_series(0, n - 1, 2)) AS k
-  FROM params
-),
-fb AS (
-  SELECT video_id, pk, k, 50 + (pk * 13 + 7 * k) % 100 AS sz FROM frames
-),
-bytes AS (
-  SELECT video_id, pk, k, sz, unnest(generate_series(0, sz - 1)) AS j FROM fb
-)
-SELECT video_id,
-  CAST(k AS INT) AS frame_idx,
-  CAST(sz AS INT) AS frame_sz,
-  CAST(sum((pk + 11 * k + j) % 256) AS BIGINT) AS payload_sum
-FROM bytes
-GROUP BY video_id, k, sz"""
-
-
-def _video_pixels_sql() -> str:
-    """Twin of q_video_pixels — exact through a REAL lossy codec.  Frames
-    are per-8px-band-constant, so every 8x8 block is constant and only its
-    DC coefficient survives quantization: the decoded plane is one
-    deterministic value per band, a pure function f(v) of the band value.
-    f is tabulated here by 256 single-process 8x8 encode/decode roundtrips
-    (no Spark machinery shared — a distributed-plumbing bug cannot cancel
-    out); geometry and band values are closed-form in pk."""
-    import numpy as np
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.codec_jpeg import (
-        decode_jpeg, encode_jpeg,
-    )
-
-    vals = ",".join(
-        "({}, {})".format(
-            v,
-            int(
-                decode_jpeg(
-                    encode_jpeg(np.full((8, 8), v, np.uint8), quality=50)
-                )[0, 0]
-            ),
-        )
-        for v in range(256)
-    )
-    return f"""
-WITH meta AS (
-  SELECT concat('img_', lpad(CAST(p_partkey AS VARCHAR), 8, '0')) AS video_id,
-         p_partkey AS pk
-  FROM part WHERE p_partkey <= 60
-),
-params AS (
-  SELECT video_id, pk, 160 + 8 * (pk % 5) AS w, 120 + 8 * (pk % 3) AS h,
-         4 + pk % 5 AS n
-  FROM meta
-),
-frames AS (
-  SELECT video_id, pk, w, h, unnest(generate_series(0, n - 1, 2)) AS fi
-  FROM params
-),
-ftab AS (SELECT * FROM (VALUES {vals}) t(v, fv))
-SELECT video_id,
-  CAST(fi AS INT) AS frame_idx,
-  CAST(w AS INT) AS fw,
-  CAST(h AS INT) AS fh,
-  CAST(w * h AS BIGINT) AS n_px,
-  CAST(80 * h * fa.fv + (w - 80) * h * fb.fv AS BIGINT) AS sum_px
-FROM frames
-JOIN ftab fa ON fa.v = (pk * 7 + 11 * fi) % 256
-JOIN ftab fb ON fb.v = (pk * 13 + 17 * fi + 128) % 256"""
-
-
-def _video_audio_sql() -> str:
-    """Pure-arithmetic twin of q_video_audio: re-derive every PCM sample
-    of the 'sowt' audio track with staged generate_series (chunk k, then
-    sample i — DuckDB zips sibling unnests, so the two levels must be
-    separate CTEs) and aggregate the same exact integers."""
-    return """
-WITH meta AS (
-  SELECT concat('img_', lpad(CAST(p_partkey AS VARCHAR), 8, '0')) AS media_id,
-         p_partkey AS pk
-  FROM part WHERE p_partkey <= 60
-),
-params AS (
-  SELECT media_id, pk, 3 + pk % 4 AS nc, 8000 + (pk % 5) * 2000 AS rate
-  FROM meta
-),
-ck AS (
-  SELECT media_id, pk, rate, unnest(generate_series(0, nc - 1)) AS k
-  FROM params
-),
-smp AS (
-  SELECT media_id, pk, rate, k, unnest(generate_series(0, 255)) AS i
-  FROM ck
-),
-vals AS (
-  SELECT media_id, rate,
-         ((pk * 31 + k * 7 + i * 3) % 65536) - 32768 AS s
-  FROM smp
-)
-SELECT media_id,
-  CAST(rate AS INT) AS sample_rate,
-  CAST(count(*) AS BIGINT) AS n_samples,
-  CAST(sum(s) AS BIGINT) AS sum_s,
-  CAST(min(s) AS INT) AS min_s,
-  CAST(max(s) AS INT) AS max_s,
-  CAST(sum(abs(s)) AS BIGINT) AS sum_abs
-FROM vals
-GROUP BY media_id, rate"""
 
 
 def _flac_audio_sql() -> str:
@@ -3374,9 +3017,11 @@ WITH polys AS (
 )
 SELECT CAST(3 AS INT) AS z, CAST(tx AS INT) AS tx, CAST(ty AS INT) AS ty,
        COUNT(*) AS n_features, COUNT(*) AS n_rings,
-       4*COUNT(*) AS n_vertices, SUM(pk) AS sum_id,
-       SUM(2*(qxl + qxr)) AS sum_qx, SUM(2*(qyt + qyb)) AS sum_qy,
-       SUM(2*(qxr - qxl)*(qyb - qyt)) AS sum_area2, SUM(value) AS sum_value
+       4*COUNT(*) AS n_vertices, CAST(SUM(pk) AS BIGINT) AS sum_id,
+       CAST(SUM(2*(qxl + qxr)) AS BIGINT) AS sum_qx,
+       CAST(SUM(2*(qyt + qyb)) AS BIGINT) AS sum_qy,
+       CAST(SUM(2*(qxr - qxl)*(qyb - qyt)) AS BIGINT) AS sum_area2,
+       CAST(SUM(value) AS BIGINT) AS sum_value
 FROM q WHERE qxr > qxl AND qyb > qyt
 GROUP BY tx, ty"""
 
@@ -3416,9 +3061,11 @@ WITH polys AS (
 )
 SELECT CAST(z AS INT) AS z, CAST(tx AS INT) AS tx, CAST(ty AS INT) AS ty,
        COUNT(*) AS n_features, COUNT(*) AS n_rings,
-       4*COUNT(*) AS n_vertices, SUM(pk) AS sum_id,
-       SUM(2*(qxl + qxr)) AS sum_qx, SUM(2*(qyt + qyb)) AS sum_qy,
-       SUM(2*(qxr - qxl)*(qyb - qyt)) AS sum_area2, SUM(value) AS sum_value
+       4*COUNT(*) AS n_vertices, CAST(SUM(pk) AS BIGINT) AS sum_id,
+       CAST(SUM(2*(qxl + qxr)) AS BIGINT) AS sum_qx,
+       CAST(SUM(2*(qyt + qyb)) AS BIGINT) AS sum_qy,
+       CAST(SUM(2*(qxr - qxl)*(qyb - qyt)) AS BIGINT) AS sum_area2,
+       CAST(SUM(value) AS BIGINT) AS sum_value
 FROM q WHERE qxr > qxl AND qyb > qyt
 GROUP BY z, tx, ty"""
 
@@ -3474,9 +3121,10 @@ WITH segs AS (
 )
 SELECT CAST(3 AS INT) AS z, CAST(tx AS INT) AS tx, CAST(ty AS INT) AS ty,
        COUNT(*) AS n_features, COUNT(*) AS n_rings,
-       2*COUNT(*) AS n_vertices, SUM(pk) AS sum_id,
-       SUM(q1x + q2x) AS sum_qx, SUM(q1y + q2y) AS sum_qy,
-       CAST(0 AS BIGINT) AS sum_area2, SUM(value) AS sum_value
+       2*COUNT(*) AS n_vertices, CAST(SUM(pk) AS BIGINT) AS sum_id,
+       CAST(SUM(q1x + q2x) AS BIGINT) AS sum_qx,
+       CAST(SUM(q1y + q2y) AS BIGINT) AS sum_qy,
+       CAST(0 AS BIGINT) AS sum_area2, CAST(SUM(value) AS BIGINT) AS sum_value
 FROM q
 WHERE (horiz AND q2x > q1x) OR (NOT horiz AND q2y > q1y)
 GROUP BY tx, ty"""
@@ -3712,8 +3360,8 @@ def _mvt_points_sql() -> str:
 )
 SELECT CAST(3 AS INT) AS z, CAST(tx AS INT) AS tx, CAST(ty AS INT) AS ty,
        COUNT(*) AS n_features, COUNT(*) AS n_rings,
-       COUNT(*) AS n_vertices, SUM(pt_id) AS sum_id,
-       SUM(qx) AS sum_qx, SUM(qy) AS sum_qy,
+       COUNT(*) AS n_vertices, CAST(SUM(pt_id) AS BIGINT) AS sum_id,
+       CAST(SUM(qx) AS BIGINT) AS sum_qx, CAST(SUM(qy) AS BIGINT) AS sum_qy,
        CAST(0 AS BIGINT) AS sum_area2, CAST(0 AS BIGINT) AS sum_value
 FROM qq GROUP BY tx, ty""",
     )

@@ -105,27 +105,6 @@ def test_audio_features_skip_and_quarantine(spark):
     assert quar["a-unsup"].error.startswith("NotImplementedError")
 
 
-def test_container_meta_quarantine(spark):
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import (
-        container_mp4,
-    )
-
-    samples = [bytes([i]) * 20 for i in range(5)]
-    good = container_mp4.build_mp4(samples, 32, 24, codec="avc1")
-    rows = [
-        ("m-ok", good, "mp4"),
-        ("m-bad", b"\x00\x00\x00\x08ftyp", "mp4"),
-        ("m-unk", b"x", "flv"),
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["media_id", "bytes", "fmt"])
-    )
-    out = {r.media_id: r for r in MM.container_meta(df, on_error="quarantine").collect()}
-    assert out["m-ok"].error is None and out["m-ok"].n_samples == 5
-    assert out["m-bad"].error is not None
-    assert out["m-unk"].error is not None
-
-
 def test_frame_sample_skip_drops_bad_video(spark):
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import (
         codec_gif,
@@ -136,12 +115,18 @@ def test_frame_sample_skip_drops_bad_video(spark):
     rows = [
         ("v-ok", codec_gif.encode_gif([fr, fr], pal), "gif"),
         ("v-bad", b"GIF89agarbage", "gif"),
+        # video is not supported: mp4/webm are unknown formats
+        ("v-mp4", b"\x00\x00\x00\x08ftyp", "mp4"),
+        ("v-webm", b"\x1a\x45\xdf\xa3", "webm"),
     ]
     df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["video_id", "bytes", "fmt"])
     )
     out = MM.frame_sample(df, every_n=1, on_error="skip").collect()
     assert {r.video_id for r in out} == {"v-ok"}
+    for vid in ("v-mp4", "v-webm"):
+        with pytest.raises(Exception, match="ValueError: frame_sample: unknown fmt"):
+            MM.frame_sample(df.filter(df.video_id == vid), on_error="fail").collect()
     with pytest.raises(ValueError, match="on_error"):
         MM.frame_sample(df, on_error="quarantine")
 

@@ -197,22 +197,6 @@ def test_ann_ivf_no_assignment_shuffle(spark):
     assert "max_by" not in p, p
 
 
-def test_video_pixels_two_python_stages(spark):
-    """The media fixture pipeline is exactly two Python stages (synth,
-    probe/decode) with no exchange between them — the encoded payloads
-    flow straight from the synth stage into the decode stage."""
-    import __spark_entry__ as E
-
-    df = E.q_video_pixels(spark, SF)
-    tree = plan(df).split("\n\n")[0]  # the indented operator tree
-    assert tree.count("MapInPandas") == 2
-    first = tree.index("MapInPandas")
-    second = tree.index("MapInPandas", first + 1)
-    assert "Exchange" not in tree[first:second]
-    # exactly the one deliberate spread shuffle below both Python stages
-    assert tree.count("Exchange") == 1
-
-
 def test_lsh_pairs_single_corpus_pass(spark):
     """LSH banding must NOT re-evaluate the signature aggregation per band
     per join side (the union-self-join shape cost 8 corpus passes): one

@@ -1,10 +1,15 @@
 """Local stand-in for the driver's correctness gate: run a queries() entry
-and its oracle_sql() twin at a given sf dir, compare rows / schema / values
-(columns sorted by name, rows sorted by all columns — like the driver's
-value-hash).  Usage:
+and its oracle_sql() twin at a given sf dir, compare rows / schema / dtype
+kinds / values (columns sorted by name, rows sorted by all columns, so
+row order does not matter).  Usage:
 
     python tools/compare_oracle.py sf_dir q1 [q2 ...]
     python tools/compare_oracle.py sf_dir all
+
+Dtypes are compared by kind, the rule perfbench's oracle check uses:
+integer widths may differ (DuckDB types ``generate_series`` BIGINT where
+the engine emits INT), but an integer read back as a float (an uncast
+DuckDB ``SUM``, typed HUGEINT) is a different kind and fails.
 """
 
 from __future__ import annotations
@@ -13,7 +18,6 @@ import os
 import sys
 
 import duckdb
-import numpy as np
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -30,6 +34,25 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return df
 
 
+def first_difference(s: pd.DataFrame, o: pd.DataFrame) -> str | None:
+    """None when every column of the canonical frames agrees in dtype kind
+    and value, else the first column that does not, with both dtypes."""
+    for c in s.columns:
+        if s[c].dtype.kind != o[c].dtype.kind:
+            return f"column {c}: dtype {s[c].dtype}, oracle {o[c].dtype}"
+        try:
+            pd.testing.assert_series_equal(
+                s[c], o[c], check_dtype=False, check_exact=True
+            )
+        except AssertionError as ex:
+            detail = "\n    ".join(str(ex).splitlines()[:6])
+            return (
+                f"column {c}: values differ (dtype {s[c].dtype}, oracle "
+                f"{o[c].dtype})\n    {detail}"
+            )
+    return None
+
+
 def main() -> None:
     sf_dir = sys.argv[1]
     names = sys.argv[2:]
@@ -41,7 +64,7 @@ def main() -> None:
     if names == ["all"]:
         names = [n for n in E.queries() if n in oracles]
 
-    spark = vm.get_spark(app_name="cmp", master="local[8]", shuffle_partitions=16)
+    spark = vm.get_spark(app_name="cmp", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TABLES:
@@ -61,25 +84,16 @@ def main() -> None:
         o = canon(con.execute(oracles[name]).df())
         ok_rows = len(s) == len(o)
         ok_schema = list(s.columns) == list(o.columns)
-        ok_vals = False
-        if ok_rows and ok_schema:
-            try:
-                pd.testing.assert_frame_equal(
-                    s, o, check_dtype=False, check_exact=True
-                )
-                ok_vals = True
-            except AssertionError as ex:
-                ok_vals = False
-                detail = str(ex).splitlines()[:6]
-        status = "PASS" if (ok_rows and ok_schema and ok_vals) else "FAIL"
+        diff = first_difference(s, o) if ok_rows and ok_schema else None
+        status = "PASS" if ok_rows and ok_schema and diff is None else "FAIL"
         print(
             f"{name}: {status} rows={len(s)}/{len(o)} "
             f"schema={'ok' if ok_schema else f'{list(s.columns)} vs {list(o.columns)}'}"
         )
         if status == "FAIL":
             failed.append(name)
-            if ok_rows and ok_schema:
-                print("  " + "\n  ".join(detail))
+            if diff is not None:
+                print(f"  {diff}")
             elif not ok_rows:
                 print(f"  spark-only sample:\n{s.head(3)}\n  oracle sample:\n{o.head(3)}")
     spark.stop()

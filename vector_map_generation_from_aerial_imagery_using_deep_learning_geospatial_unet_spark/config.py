@@ -20,7 +20,6 @@ class EngineConfig:
     tile_size: int = 200          # image_size / grid_size
     overlap_px: int = 10          # inference path (bf_grid.py:85-88)
     overlap_percent: float = 10.0  # training path (io.py:100-106)
-    batch: int = 32
 
     # --- georeference (reference config.py:13-16) ---
     cell_size_m: float = 0.1      # 0.1 m ground cells

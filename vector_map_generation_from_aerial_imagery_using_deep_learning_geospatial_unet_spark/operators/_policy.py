@@ -15,10 +15,9 @@ catch precisely those and let genuine operator bugs stay loud:
                     sink without a second decode pass.
 
 Single-row-per-input operators support all three; multi-row extractors
-(frame_sample, video_decode_frames, slice_tiles) support fail/skip only
-— they have no single quarantine row shape, so dead-letter at the probe
-stage (``container_meta(on_error='quarantine')`` /
-``pixel_sums(on_error='quarantine')``) and skip at the extract stage.
+(frame_sample, slice_tiles) support fail/skip only — they have no single
+quarantine row shape, so dead-letter at the probe stage
+(``pixel_sums(on_error='quarantine')``) and skip at the extract stage.
 """
 
 from __future__ import annotations

@@ -67,7 +67,8 @@ def training_tensors(
               w = 10/EDT + 1 with EDT==0 -> -99 (M5)
 
     Tensors travel as flattened array<float> columns; the Arrow batch IS the
-    training batch (maxRecordsPerBatch = config.batch upstream)."""
+    training batch (its size is Spark's
+    ``spark.sql.execution.arrow.maxRecordsPerBatch``)."""
     t = cfg.tile_size
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

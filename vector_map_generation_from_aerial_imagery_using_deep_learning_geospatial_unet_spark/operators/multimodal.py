@@ -1,21 +1,16 @@
-"""Multimodal binary-column operators (graft addition, first-class per the
-build brief): image/audio/video payloads as opaque ``binary`` columns with
-typed metadata; decode / feature-extract / resize / frame-sample as Arrow
-UDFs over ``mapInPandas``.
+"""Multimodal binary-column operators: image/audio/animation payloads as
+opaque ``binary`` columns with typed metadata; decode / feature-extract /
+resize / frame-sample as Arrow UDFs over ``mapInPandas``.
 
-The container has no image/audio libs, so: png/raw/jpeg/gif/webp decode is
-REAL (our codecs — baseline JFIF in ``sources/codec_jpeg.py``, GIF LZW in
-``codec_gif.py``, WebP-lossless VP8L in ``codec_webp.py``, pure numpy).
-WAV (PCM, IEEE float, G.711, IMA ADPCM) and FLAC audio decode for real in
+The engine uses no image/audio libraries: png/raw/jpeg/gif/webp/tiff decode
+with our own pure-numpy codecs (baseline JFIF in ``sources/codec_jpeg.py``,
+GIF LZW in ``codec_gif.py``, WebP-lossless VP8L in ``codec_webp.py``).  WAV
+(PCM, IEEE float, G.711, IMA ADPCM) and FLAC audio decode in
 ``sources/codec_wav.py`` / ``codec_flac.py`` (:func:`audio_features`).
-For mp4/webm the CONTAINER layer is real (exact probing + sample
-extraction), and tracks whose codec we implement decode all the way to
-pixels/PCM: Motion-JPEG video (:func:`video_decode_frames`) and 'sowt'/
-'twos' PCM audio (:func:`audio_track_pcm`).  Inter-frame video
-(H.264/VP9/AV1) and compressed audio tracks (aac) raise
-``NotImplementedError`` — the capability boundary is per-track codec id.
-Any other ``fmt`` raises ``ValueError('unknown fmt ...')``; the row's
-``on_error`` policy handles both like any other undecodable payload.
+:func:`frame_sample` splits animated GIFs into frames; video (mp4/webm) is
+not supported.  Any other ``fmt`` raises ``ValueError('unknown fmt ...')``
+(``NotImplementedError`` in :func:`audio_features`); the row's
+``on_error`` policy handles it like any other undecodable payload.
 """
 
 from __future__ import annotations
@@ -249,146 +244,43 @@ def audio_features(audio: DataFrame, on_error: str = "fail") -> DataFrame:
     return audio.mapInPandas(run, schema=schema)
 
 
-def _video_track_mp4(info):
-    """The first 'vide' handler track, else the first track at all —
-    the single place the video-track preference policy lives (audio-only
-    files fall back to their sole track, whose dims are 0 by the
-    handler-aware stsd parse, never garbage)."""
-    return next((t for t in info.tracks if t.handler == "vide"), info.tracks[0])
-
-
-def _video_track_webm(info):
-    """Matroska twin of :func:`_video_track_mp4` (track_type 1 = video)."""
-    return next((t for t in info.tracks if t.track_type == 1), info.tracks[0])
-
-
-def container_meta(
-    media: DataFrame, id_col: str = "media_id", on_error: str = "fail"
-) -> DataFrame:
-    """REAL container-level metadata for mp4/webm payloads — the probe
-    an ingest pipeline runs on every media blob before any decode: exact
-    stream/sample counts, encoded byte totals, duration, dimensions or
-    sample rate — all from our from-scratch parsers (ISO BMFF box walk,
-    EBML element walk).  One unified row per input:
-
-        (id, container, codec, n_streams, w, h, n_samples,
-         sum_sample_bytes, duration_ms, sample_rate)
-
-    mp4: first video track supplies codec/w/h/samples; duration from mvhd.
-    webm: video TrackEntry + SimpleBlock walk.  Unknown fmt raises — silent
-    skips would undercount a corpus audit (use ``on_error='quarantine'``
-    to keep the undercount VISIBLE: the probe stage is where a 100-TB
-    corpus audit should dead-letter its hostile blobs)."""
-    _check_on_error(on_error)
-    cols = [
-        id_col, "container", "codec", "n_streams", "w", "h",
-        "n_samples", "sum_sample_bytes", "duration_ms", "sample_rate",
-    ]
-    schema = (
-        f"{id_col} string, container string, codec string, n_streams int, "
-        "w int, h int, n_samples long, sum_sample_bytes long, "
-        "duration_ms long, sample_rate int"
-    )
-    if on_error == "quarantine":
-        schema += ", error string"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..sources import container_mp4, container_webm
-
-        def one(r):
-            data, fmt = bytes(r.bytes), r.fmt
-            mid = getattr(r, id_col)
-            if fmt == "mp4":
-                info = container_mp4.probe_mp4(data)
-                vid = _video_track_mp4(info)
-                return (
-                    mid, "mp4", vid.codec, len(info.tracks),
-                    vid.width, vid.height, vid.n_samples,
-                    sum(vid.sample_sizes), info.duration_ms,
-                    vid.sample_rate,
-                )
-            if fmt == "webm":
-                info = container_webm.probe_webm(data)
-                vid = _video_track_webm(info)
-                blocks = [b for b in info.blocks if b.track == vid.number]
-                return (
-                    mid, "webm", vid.codec, len(info.tracks),
-                    vid.width, vid.height, len(blocks),
-                    sum(len(b.payload) for b in blocks),
-                    info.duration_ms, vid.sample_rate,
-                )
-            raise ValueError(f"container_meta: unsupported fmt {fmt!r}")
-
-        for pdf in batches:
-            rows = _guarded_rows(pdf, one, id_col, 9, on_error)
-            yield _rows_frame(rows, cols, on_error)
-
-    return media.mapInPandas(run, schema=schema)
-
-
 def frame_sample(
     videos: DataFrame,
     every_n: int = 10,
     on_error: str = "fail",
 ) -> DataFrame:
-    """Video/animation rows (``video_id, bytes, fmt``) -> one row per
-    sampled frame.
+    """Animation rows (``video_id, bytes, fmt``) -> one row per sampled
+    frame.
 
     ``fmt='gif'`` decodes for REAL (sources/codec_gif.py: full LZW +
-    disposal compositing; frame_bytes = zlib'd decoded pixels).
-    ``fmt='mp4'/'webm'`` extract the REAL encoded sample payloads at the
-    container level (sources/container_mp4.py stsz/stsc/stco math,
-    container_webm.py SimpleBlock walk; frame_bytes = the encoded codec
-    payload, NOT pixels — :func:`video_decode_frames` decodes MJPEG).
-    Any other fmt raises ``ValueError('unknown fmt ...')``.
+    disposal compositing; frame_bytes = zlib'd decoded pixels).  Any other
+    fmt raises ``ValueError('unknown fmt ...')``.
 
     ``on_error`` supports 'fail'/'skip' only: a multi-row-per-input
-    extractor has no single quarantine row shape — dead-letter at the
-    probe stage instead (``container_meta(on_error='quarantine')``),
+    extractor has no single quarantine row shape — dead-letter at a
+    one-row-per-input stage instead (``pixel_sums(on_error='quarantine')``),
     then frame-sample the surviving rows with 'skip' as a belt."""
     _check_on_error(on_error, allowed=("fail", "skip"))
     schema = "video_id string, frame_idx int, frame_bytes binary, w int, h int"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..sources import codec_gif, container_mp4, container_webm
+        from ..sources import codec_gif
 
         def one(r) -> list:
-            fmt = r.fmt
+            if r.fmt != "gif":
+                raise ValueError(f"frame_sample: unknown fmt {r.fmt!r}")
+            frames, _ = codec_gif.decode_gif(bytes(r.bytes))
             out = []
-            if fmt == "gif":
-                frames, _ = codec_gif.decode_gif(bytes(r.bytes))
-                for fi in range(0, len(frames), every_n):
-                    fr = frames[fi][:, :, :3]
-                    out.append(
-                        (
-                            r.video_id, fi,
-                            zlib.compress(np.ascontiguousarray(fr).tobytes(), 1),
-                            fr.shape[1], fr.shape[0],
-                        )
+            for fi in range(0, len(frames), every_n):
+                fr = frames[fi][:, :, :3]
+                out.append(
+                    (
+                        r.video_id, fi,
+                        zlib.compress(np.ascontiguousarray(fr).tobytes(), 1),
+                        fr.shape[1], fr.shape[0],
                     )
-                return out
-            if fmt == "mp4":
-                info = container_mp4.probe_mp4(bytes(r.bytes))
-                vid = _video_track_mp4(info)
-                samples = container_mp4.extract_samples(bytes(r.bytes), vid)
-                for fi in range(0, len(samples), every_n):
-                    out.append(
-                        (r.video_id, fi, samples[fi], vid.width, vid.height)
-                    )
-                return out
-            if fmt == "webm":
-                info = container_webm.probe_webm(bytes(r.bytes))
-                vid = _video_track_webm(info)
-                blocks = [b for b in info.blocks if b.track == vid.number]
-                for fi in range(0, len(blocks), every_n):
-                    out.append(
-                        (
-                            r.video_id, fi, blocks[fi].payload,
-                            vid.width, vid.height,
-                        )
-                    )
-                return out
-            raise ValueError(f"frame_sample: unknown fmt {fmt!r}")
+                )
+            return out
 
         for pdf in batches:
             rows = []
@@ -403,159 +295,3 @@ def frame_sample(
             )
 
     return videos.mapInPandas(run, schema=schema)
-
-
-# Motion-JPEG track codec ids: 'jpeg'/'mjpa' are the ISO BMFF / QuickTime
-# sample-entry fourccs, 'V_MJPEG' the Matroska CodecID — each sample is a
-# complete baseline JFIF image, which sources/codec_jpeg.py decodes for
-# real.  The reference decodes any GDAL raster the same way
-# (/root/reference/src/io.py:41-63); MJPEG is the standard video codec
-# whose per-frame payload IS such a raster.
-MJPEG_CODECS = {"jpeg", "mjpa", "V_MJPEG"}
-
-
-def video_decode_frames(
-    videos: DataFrame,
-    every_n: int = 1,
-    id_col: str = "video_id",
-    on_error: str = "fail",
-) -> DataFrame:
-    """REAL video PIXEL decode for Motion-JPEG tracks, mp4 and webm.
-
-    One ``mapInPandas`` hop per row: container probe (ISO BMFF box walk /
-    EBML element walk) -> encoded-sample extraction (stsz/stsc/stco math /
-    SimpleBlock walk) -> per-sampled-frame baseline-JFIF decode
-    (sources/codec_jpeg.py) -> per-frame pixel statistics.  Keeping probe,
-    extract, and decode in a single hop means the (much larger) decoded
-    planes never cross the JVM<->Python pipe — only the stats row leaves.
-
-    Inter-frame codecs (H.264/VP9/AV1) raise ``NotImplementedError``: their
-    entropy decode is genuinely codec-library-bound; the honest capability
-    boundary is per-track codec id, not container format.
-
-    Output: (id, frame_idx, fw, fh, n_px, sum_px).
-
-    ``on_error`` supports 'fail'/'skip' (multi-row output — quarantine
-    belongs at the probe stage, see :func:`frame_sample`)."""
-    _check_on_error(on_error, allowed=("fail", "skip"))
-    schema = (
-        f"{id_col} string, frame_idx int, fw int, fh int, "
-        "n_px long, sum_px long"
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..sources import codec_jpeg, container_mp4, container_webm
-
-        def one(r) -> list:
-            data, mid = bytes(r.bytes), getattr(r, id_col)
-            if r.fmt == "mp4":
-                info = container_mp4.probe_mp4(data)
-                vid = _video_track_mp4(info)
-                codec_id = vid.codec
-                samples = container_mp4.extract_samples(data, vid)
-            elif r.fmt == "webm":
-                winfo = container_webm.probe_webm(data)
-                wvid = _video_track_webm(winfo)
-                codec_id = wvid.codec
-                samples = [
-                    b.payload for b in winfo.blocks if b.track == wvid.number
-                ]
-            else:
-                raise ValueError(
-                    f"video_decode_frames: unsupported container {r.fmt!r}"
-                )
-            if codec_id not in MJPEG_CODECS:
-                raise NotImplementedError(
-                    f"pixel decode for codec {codec_id!r} is "
-                    "codec-library-bound; only Motion-JPEG tracks "
-                    f"({sorted(MJPEG_CODECS)}) decode for real"
-                )
-            out = []
-            for fi in range(0, len(samples), every_n):
-                arr = codec_jpeg.decode_jpeg(samples[fi])
-                out.append(
-                    (
-                        mid, fi, arr.shape[1], arr.shape[0],
-                        int(arr.size), int(arr.sum(dtype=np.int64)),
-                    )
-                )
-            return out
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    rows.extend(one(r))
-                except _ROW_ERRORS:
-                    if on_error == "fail":
-                        raise
-            yield pd.DataFrame(
-                rows,
-                columns=[id_col, "frame_idx", "fw", "fh", "n_px", "sum_px"],
-            )
-
-    return videos.mapInPandas(run, schema=schema)
-
-
-# PCM audio-track sample-entry fourccs that decode for real: 'sowt' is
-# 16-bit little-endian PCM (QuickTime/ISO), 'twos' its big-endian twin.
-PCM_CODECS = {"sowt": "<i2", "twos": ">i2"}
-
-
-def audio_track_pcm(
-    media: DataFrame, id_col: str = "media_id", on_error: str = "fail"
-) -> DataFrame:
-    """REAL PCM audio-track decode out of MP4 containers.
-
-    Walks the moov for the first ``soun`` handler track (exercising
-    multi-trak files where audio precedes video, as real muxers write),
-    extracts its samples via the stsz/stsc/stco tables, decodes the PCM
-    payload ('sowt'/'twos' sample entries; compressed codecs like mp4a
-    raise — the honest capability boundary), and emits exact integer
-    features per file: (id, sample_rate, n_samples, sum_s, min_s, max_s,
-    sum_abs).  All-integer outputs make the gate byte-exact end-to-end.
-    ``on_error``: see module policy."""
-    _check_on_error(on_error)
-    cols = [
-        id_col, "sample_rate", "n_samples", "sum_s",
-        "min_s", "max_s", "sum_abs",
-    ]
-    schema = (
-        f"{id_col} string, sample_rate int, n_samples long, sum_s long, "
-        "min_s int, max_s int, sum_abs long"
-    )
-    if on_error == "quarantine":
-        schema += ", error string"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..sources import container_mp4
-
-        def one(r):
-            data, mid = bytes(r.bytes), getattr(r, id_col)
-            info = container_mp4.probe_mp4(data)
-            aud = next(
-                (t for t in info.tracks if t.handler == "soun"), None
-            )
-            if aud is None:
-                raise ValueError(f"audio_track_pcm: no soun track in {mid}")
-            if aud.codec not in PCM_CODECS:
-                raise NotImplementedError(
-                    f"audio decode for codec {aud.codec!r} is "
-                    "codec-library-bound; only PCM sample entries "
-                    f"({sorted(PCM_CODECS)}) decode for real"
-                )
-            pcm = b"".join(container_mp4.extract_samples(data, aud))
-            s = np.frombuffer(pcm, dtype=PCM_CODECS[aud.codec]).astype(
-                np.int64
-            )
-            return (
-                mid, aud.sample_rate, int(s.size),
-                int(s.sum()), int(s.min()), int(s.max()),
-                int(np.abs(s).sum()),
-            )
-
-        for pdf in batches:
-            rows = _guarded_rows(pdf, one, id_col, 6, on_error)
-            yield _rows_frame(rows, cols, on_error)
-
-    return media.mapInPandas(run, schema=schema)

@@ -1,9 +1,8 @@
 """Malformed-stream boundary shared by every codec entry point.
 
 At 100 TB ingest, truncated / bit-flipped / adversarial payloads are
-certain.  The decoder contract (tests/test_codec_fuzz.py and
-tests/test_containers.py) is that bad BYTES surface as exactly two
-exception types:
+certain.  The decoder contract (tests/test_codec_fuzz.py) is that bad
+BYTES surface as exactly two exception types:
 
 - ``ValueError``   — the stream is malformed, and
 - ``NotImplementedError`` — the stream is valid but uses a capability
