@@ -693,190 +693,6 @@ def _await_stream(spark: SparkSession, start_fn, state_partitions: int = 8):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def _capped_media_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(image_id, pk) for pk <= 60 — the shared driver of every per-pk
-    media fixture (wav/gif synth).  The filtered meta arrives
-    as ONE split; per-row codec work is CPU-bound, so spread rows across
-    the cluster before entering Python (cheap metadata-only shuffle)."""
-    meta = derived.images_meta(spark, sf_dir).select(
-        "image_id", F.substring("image_id", 5, 18).cast("long").alias("pk")
-    ).filter(F.col("pk") <= 60)
-    return meta.repartition(spark.sparkContext.defaultParallelism, "image_id")
-
-
-def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real audio path: deterministic sawtooth PCM WAVs (synthesized
-    per-pk, encoded through the real RIFF codec) -> integer features with
-    a closed-form SQL twin.  s[i] = ((i*a + b) % 65536) - 32768."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav
-
-    meta = _capped_media_meta(spark, sf_dir)
-
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pk = int(r.pk)
-                a, b = 3 + pk % 7, (pk * 97) % 65536
-                n = 4000 + (pk % 50) * 137
-                i = np.arange(n, dtype=np.int64)
-                s0 = (((i * a + b) % 65536) - 32768).astype(np.int16)
-                ch = 1 + pk % 2
-                s = np.stack([s0] * ch, axis=1)
-                rows.append((r.image_id, codec_wav.encode_wav(s, 16000), "wav"))
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes", "fmt"])
-
-    audio = meta.mapInPandas(
-        synth, schema="audio_id string, bytes binary, fmt string"
-    )
-    return MM.audio_features(audio)
-
-
-def q_audio_float(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IEEE-float WAV (audio_format 3, the studio/DAW interchange
-    layout, r5): the deterministic sawtooth family scaled to [-1, 1]
-    floats, encoded through the real float-WAV writer (32-bit on even
-    pk, 64-bit on odd), decoded back as float64 and quantized by
-    audio_features' rint(32767 x).  The quantization recovers the int16
-    sawtooth EXACTLY (float32 relative error x 32767 < 0.07 < 0.5,
-    pinned by tests/test_codec_wav_g711.py), so the oracle is the same
-    closed-form integer SQL as the PCM gate — no fixture."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav
-
-    meta = _capped_media_meta(spark, sf_dir)
-
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pk = int(r.pk)
-                a, b = 2 + pk % 9, (pk * 131) % 65536
-                n = 3500 + (pk % 45) * 119
-                i = np.arange(n, dtype=np.int64)
-                s0 = ((i * a + b) % 65536) - 32768
-                ch = 1 + pk % 2
-                f = np.stack([s0 / 32767.0] * ch, axis=1)
-                bits = 32 if pk % 2 == 0 else 64
-                if bits == 32:
-                    f = f.astype(np.float32)
-                rows.append(
-                    (
-                        r.image_id,
-                        codec_wav.encode_wav_float(f, 22050, bits=bits),
-                        "wav",
-                    )
-                )
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes", "fmt"])
-
-    audio = meta.mapInPandas(
-        synth, schema="audio_id string, bytes binary, fmt string"
-    )
-    return MM.audio_features(audio)
-
-
-def q_audio_g711(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Telephony + studio WAV layouts (r5): the same deterministic
-    sawtooth as q_audio_features, routed per-pk through G.711 mu-law
-    (pk%3==0), G.711 A-law (pk%3==1), or 24-bit PCM (pk%3==2, scaled
-    x201 into the 24-bit range).  The SQL twin re-derives every decoded
-    sample — the companding laws are closed-form segment quantizers, so
-    the oracle is exact integer arithmetic, no fixture."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav
-
-    meta = _capped_media_meta(spark, sf_dir)
-
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pk = int(r.pk)
-                a, b = 3 + pk % 7, (pk * 97) % 65536
-                n = 3000 + (pk % 40) * 101
-                i = np.arange(n, dtype=np.int64)
-                s0 = (((i * a + b) % 65536) - 32768).astype(np.int16)
-                ch = 1 + pk % 2
-                s = np.stack([s0] * ch, axis=1)
-                variant = pk % 3
-                if variant == 0:
-                    blob = codec_wav.encode_wav_g711(s, 8000, "mu")
-                elif variant == 1:
-                    blob = codec_wav.encode_wav_g711(s, 8000, "a")
-                else:
-                    blob = codec_wav.encode_wav24(
-                        s.astype(np.int32) * 201, 48000
-                    )
-                rows.append((r.image_id, blob, "wav"))
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes", "fmt"])
-
-    audio = meta.mapInPandas(
-        synth, schema="audio_id string, bytes binary, fmt string"
-    )
-    return MM.audio_features(audio)
-
-
-def q_audio_adpcm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IMA/DVI ADPCM WAV gate (r5, audio_format 0x11 — the classic 4:1
-    compressed-WAV layout): per-pk deterministic two-tone PCM encoded
-    through the from-scratch IMA quantizer (sources/codec_wav.py), decoded
-    back by the vectorized block decoder, reduced to audio_features ints.
-    Signal spec (mirrored verbatim by tools/build_adpcm_fixture.py):
-
-        rate = [8000, 22050, 44100][pk % 3];  n = 2500 + (pk % 6) * 500
-        x = 0.55 sin(2 pi f1 i / rate) + 0.3 sin(2 pi f2 i / rate + 0.7)
-        f1 = 150 + 29 (pk % 11);  f2 = 900 + 41 (pk % 9)
-        ch0 = rint(30000 x); odd pk adds ch1 = -ch0 // 3
-
-    ADPCM is lossy (staircase quantizer), so the oracle is the frozen
-    single-process expectations table (tools/build_adpcm_fixture.py)."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav
-
-    meta = _capped_media_meta(spark, sf_dir)
-
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pk = int(r.pk)
-                rate = [8000, 22050, 44100][pk % 3]
-                n = 2500 + (pk % 6) * 500
-                i = np.arange(n, dtype=np.float64)
-                f1 = 150 + 29 * (pk % 11)
-                f2 = 900 + 41 * (pk % 9)
-                x = 0.55 * np.sin(2 * np.pi * f1 / rate * i) + 0.3 * np.sin(
-                    2 * np.pi * f2 / rate * i + 0.7
-                )
-                ch0 = np.rint(30000 * x).astype(np.int16)
-                if pk % 2:
-                    sig = np.stack([ch0, (-ch0 // 3).astype(np.int16)], axis=1)
-                else:
-                    sig = ch0
-                rows.append(
-                    (r.image_id, codec_wav.encode_wav_adpcm(sig, rate), "wav")
-                )
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes", "fmt"])
-
-    audio = meta.mapInPandas(
-        synth, schema="audio_id string, bytes binary, fmt string"
-    )
-    return MM.audio_features(audio)
-
-
 def q_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real animation path: deterministic animated GIFs (encoded through
     the real LZW codec), frame-sampled every 2nd frame, per-frame exact
@@ -889,7 +705,15 @@ def q_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_gif
 
-    meta = _capped_media_meta(spark, sf_dir)
+    # pk <= 60.  The filtered meta arrives as ONE split; per-row codec work
+    # is CPU-bound, so spread rows across the cluster before entering
+    # Python (cheap metadata-only shuffle).
+    meta = (
+        derived.images_meta(spark, sf_dir)
+        .select("image_id", F.substring("image_id", 5, 18).cast("long").alias("pk"))
+        .filter(F.col("pk") <= 60)
+        .repartition(spark.sparkContext.defaultParallelism, "image_id")
+    )
 
     pal = np.stack(
         [
@@ -1354,52 +1178,6 @@ def q_edt_weight_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DG.edt_weight_hist(labels)
 
 
-def q_flac_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL lossless FLAC decode (sources/codec_flac.py, from scratch:
-    fixed predictors + Rice coding + CRCs): deterministic int16 signals —
-    a 256-sample constant head (CONSTANT subframes) then a sawtooth body
-    (FIXED-order residuals) — encoded through our encoder, decoded back by
-    the engine under test into exact integer features.  FLAC is lossless,
-    so the SQL twin re-derives every sample by pure arithmetic; even pk is
-    mono, odd pk adds a small second channel (independent stereo).
-    s0[i] = c for i < 256 else ((i*a + b) % 65536) - 32768;
-    s1[i] = ((i*3 + 7) % 256) - 128."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-
-    meta = _capped_media_meta(spark, sf_dir)
-
-    def synth(batches):
-        from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_flac
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pk = int(r.pk)
-                n = 3000 + (pk % 40) * 111
-                a, b = 5 + pk % 9, (pk * 131) % 65536
-                c = (pk * 77) % 65536 - 32768
-                i = np.arange(n, dtype=np.int64)
-                s0 = np.where(i < 256, c, ((i * a + b) % 65536) - 32768)
-                if pk % 2 == 0:
-                    sig = s0.astype(np.int16)
-                else:
-                    s1 = ((i * 3 + 7) % 256) - 128
-                    sig = np.stack([s0, s1], axis=1).astype(np.int16)
-                rate = 8000 + (pk % 3) * 4000
-                rows.append(
-                    (r.image_id, codec_flac.encode_flac(sig, rate), "flac")
-                )
-            yield pd.DataFrame(rows, columns=["audio_id", "bytes", "fmt"])
-
-    audio = meta.mapInPandas(
-        synth, schema="audio_id string, bytes binary, fmt string"
-    )
-    return MM.audio_features(audio)
-
-
 def q_stream_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL Structured Streaming path under an exact oracle: the images
     catalog lands as files, a readStream -> watermarked 5 s window ->
@@ -1848,11 +1626,8 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- never driver-sampled before round 5: run first ------------------- #
     "reproject_extents": q_reproject_extents,
     "mosaic_extent_wgs84": q_mosaic_extent_wgs84,
-    "audio_float": q_audio_float,
     "multimodal_jpeg_prog": q_multimodal_jpeg_prog,
     "multimodal_png16": q_multimodal_png16,
-    "audio_adpcm": q_audio_adpcm,
-    "audio_g711": q_audio_g711,
     "phash_compute": q_phash_compute,
     "phash_near_dup": q_phash_near_dup,
     "phash_dedup_groups": q_phash_dedup_groups,
@@ -1867,7 +1642,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "stream_tiles": q_stream_tiles,
     "stream_dedup": q_stream_dedup,
     "stream_completion": q_stream_completion,
-    "flac_audio": q_flac_audio,
     "multimodal_tiff_quarantine": q_multimodal_tiff_quarantine,
     # --- previously driver-evidenced, cheap metadata/text gates ----------- #
     "tile_counts": q_tile_counts,
@@ -1892,7 +1666,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "ann_ivf_topk": q_ann_ivf_topk,
     "embedding_near_dup": q_embedding_near_dup,
     "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
-    "audio_features": q_audio_features,
     "gif_frames": q_gif_frames,
     "multimodal_features": q_multimodal_features,
     "multimodal_jpeg": q_multimodal_jpeg,
@@ -2059,18 +1832,13 @@ WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.35""",
         # quantized coefficients -> identical pixels -> identical fixture
         "multimodal_jpeg_prog": _multimodal_jpeg_sql(),
         "cc_distributed": _cc_distributed_sql(),
-        "audio_features": _audio_features_sql(),
-        "audio_g711": _audio_g711_sql(),
-        "audio_adpcm": _audio_adpcm_sql(),
         "reproject_extents": _reproject_extents_sql(),
-        "audio_float": _audio_float_sql(),
         "mosaic_extent_wgs84": f"""
 SELECT min(lon_min_nd) AS lon_min_nd, min(lat_min_nd) AS lat_min_nd,
        max(lon_max_nd) AS lon_max_nd, max(lat_max_nd) AS lat_max_nd,
        count(*) AS n_images, count(DISTINCT epsg) AS n_zones
 FROM read_parquet('{_REPROJECT_FIXTURE}')""",
         "gif_frames": _gif_frames_sql(),
-        "flac_audio": _flac_audio_sql(),
         "stream_ingest_stats": _stream_ingest_stats_sql(),
         "stream_dedup": _stream_dedup_sql(),
         "stream_completion": _stream_completion_sql(),
@@ -2391,207 +2159,6 @@ FROM dumbbell WHERE pk <= 80"""
     )
 
 
-def _flac_audio_sql() -> str:
-    """Pure-arithmetic twin of q_flac_audio — FLAC is lossless, so every
-    decoded sample is re-derived exactly (constant head, sawtooth body,
-    optional second channel) and the integer features must match to the
-    bit; zero-crossings need the staged lag CTE (window-in-aggregate is
-    not legal SQL)."""
-    return """
-WITH meta AS (
-  SELECT concat('img_', lpad(CAST(p_partkey AS VARCHAR), 8, '0')) AS audio_id,
-         p_partkey AS pk
-  FROM part WHERE p_partkey <= 60
-),
-params AS (
-  SELECT audio_id, pk,
-    3000 + (pk % 40) * 111 AS n,
-    5 + pk % 9 AS a,
-    (pk * 131) % 65536 AS b,
-    (pk * 77) % 65536 - 32768 AS c,
-    8000 + (pk % 3) * 4000 AS rate,
-    CAST(1 + pk % 2 AS INT) AS nch
-  FROM meta
-),
-idx AS (
-  SELECT audio_id, a, b, c, rate, n, nch,
-         unnest(generate_series(0, n - 1)) AS i
-  FROM params
-),
-vals AS (
-  SELECT audio_id, rate, n, nch, i,
-    CASE WHEN i < 256 THEN c ELSE ((i * a + b) % 65536) - 32768 END AS s0,
-    ((i * 3 + 7) % 256) - 128 AS s1
-  FROM idx
-),
-lagd AS (
-  SELECT *, lag(s0) OVER (PARTITION BY audio_id ORDER BY i) AS p0 FROM vals
-)
-SELECT audio_id,
-  CAST(n AS BIGINT) AS n_samples,
-  CAST(nch AS INT) AS n_channels,
-  CAST(rate AS INT) AS sample_rate,
-  CAST(n * 1000 // rate AS BIGINT) AS duration_ms,
-  CAST(sum(abs(s0)) + CASE WHEN nch = 2 THEN sum(abs(s1)) ELSE 0 END
-       AS BIGINT) AS sum_abs,
-  CAST(sum(CASE WHEN p0 * s0 < 0 THEN 1 ELSE 0 END) AS BIGINT)
-    AS zero_crossings
-FROM lagd
-GROUP BY audio_id, n, nch, rate"""
-
-
-def _audio_features_sql() -> str:
-    """Closed-form twin of q_audio_features: re-derive every sawtooth
-    sample with generate_series and aggregate the same exact integers."""
-    return """
-WITH meta AS (
-  SELECT concat('img_', lpad(CAST(p_partkey AS VARCHAR), 8, '0')) AS audio_id,
-         p_partkey AS pk
-  FROM part WHERE p_partkey <= 60
-),
-params AS (
-  SELECT audio_id, pk,
-    3 + pk % 7 AS a, (pk * 97) % 65536 AS b,
-    4000 + (pk % 50) * 137 AS n,
-    CAST(1 + pk % 2 AS INT) AS ch
-  FROM meta
-),
-samples AS (
-  SELECT audio_id, a, b, n, ch, unnest(generate_series(0, n - 1)) AS i
-  FROM params
-),
-vals AS (
-  SELECT audio_id, n, ch, i,
-    ((i * a + b) % 65536) - 32768 AS s,
-    CASE WHEN i = 0 THEN NULL
-         ELSE (((i - 1) * a + b) % 65536) - 32768 END AS prev_s
-  FROM samples
-)
-SELECT audio_id,
-  CAST(n AS BIGINT) AS n_samples,
-  ch AS n_channels,
-  CAST(16000 AS INT) AS sample_rate,
-  CAST(n * 1000 // 16000 AS BIGINT) AS duration_ms,
-  CAST(ch * sum(abs(s)) AS BIGINT) AS sum_abs,
-  CAST(count(*) FILTER (WHERE prev_s * s < 0) AS BIGINT) AS zero_crossings
-FROM vals
-GROUP BY audio_id, n, ch"""
-
-
-def _audio_float_sql() -> str:
-    """Closed-form twin of q_audio_float: the float32/64 encode ->
-    decode -> rint(32767 x) chain recovers the int16 sawtooth exactly
-    (see the gate docstring), so the oracle re-derives the same
-    integers with generate_series — no fixture, no float in the SQL."""
-    return """
-WITH meta AS (
-  SELECT concat('img_', lpad(CAST(p_partkey AS VARCHAR), 8, '0')) AS audio_id,
-         p_partkey AS pk
-  FROM part WHERE p_partkey <= 60
-),
-params AS (
-  SELECT audio_id, pk,
-    2 + pk % 9 AS a, (pk * 131) % 65536 AS b,
-    3500 + (pk % 45) * 119 AS n,
-    CAST(1 + pk % 2 AS INT) AS ch
-  FROM meta
-),
-samples AS (
-  SELECT audio_id, a, b, n, ch, unnest(generate_series(0, n - 1)) AS i
-  FROM params
-),
-vals AS (
-  SELECT audio_id, n, ch, i,
-    ((i * a + b) % 65536) - 32768 AS s,
-    CASE WHEN i = 0 THEN NULL
-         ELSE (((i - 1) * a + b) % 65536) - 32768 END AS prev_s
-  FROM samples
-)
-SELECT audio_id,
-  CAST(n AS BIGINT) AS n_samples,
-  ch AS n_channels,
-  CAST(22050 AS INT) AS sample_rate,
-  CAST(n * 1000 // 22050 AS BIGINT) AS duration_ms,
-  CAST(ch * sum(abs(s)) AS BIGINT) AS sum_abs,
-  CAST(count(*) FILTER (WHERE prev_s * s < 0) AS BIGINT) AS zero_crossings
-FROM vals
-GROUP BY audio_id, n, ch"""
-
-
-def _audio_g711_sql() -> str:
-    """Closed-form twin of q_audio_g711: the G.711 companding laws are
-    segment quantizers (ITU-T G.711 / the Sun g711.c lattice), so every
-    decoded sample is exact integer arithmetic — mag -> segment ->
-    mantissa -> reconstruction, sign reapplied; the 24-bit variant is a
-    x201 scale.  lag() supplies the previous sample for the strict
-    zero-crossing count."""
-    return """
-WITH meta AS (
-  SELECT concat('img_', lpad(CAST(p_partkey AS VARCHAR), 8, '0')) AS audio_id,
-         p_partkey AS pk
-  FROM part WHERE p_partkey <= 60
-),
-params AS (
-  SELECT audio_id, pk,
-    3 + pk % 7 AS a, (pk * 97) % 65536 AS b,
-    3000 + (pk % 40) * 101 AS n,
-    CAST(1 + pk % 2 AS INT) AS ch,
-    pk % 3 AS variant
-  FROM meta
-),
-samples AS (
-  SELECT audio_id, a, b, n, ch, variant,
-         unnest(generate_series(0, n - 1)) AS i
-  FROM params
-),
-lin AS (
-  SELECT audio_id, n, ch, variant, i,
-    ((i * a + b) % 65536) - 32768 AS s
-  FROM samples
-),
-mags AS (
-  SELECT *, CASE WHEN variant = 0 THEN least(abs(s), 32635) + 132
-                 ELSE least(abs(s), 32767) END AS mag
-  FROM lin
-),
-segs AS (
-  SELECT *, CASE WHEN mag < 256 THEN 0 WHEN mag < 512 THEN 1
-                 WHEN mag < 1024 THEN 2 WHEN mag < 2048 THEN 3
-                 WHEN mag < 4096 THEN 4 WHEN mag < 8192 THEN 5
-                 WHEN mag < 16384 THEN 6 ELSE 7 END AS e
-  FROM mags
-),
-quant AS (
-  SELECT audio_id, n, ch, variant, i,
-    CASE
-      WHEN variant = 2 THEN s * 201
-      WHEN variant = 0 THEN
-        (CASE WHEN s < 0 THEN -1 ELSE 1 END)
-        * ((((mag >> (e + 3)) & 15) * 8 + 132) * (1 << e) - 132)
-      ELSE
-        (CASE WHEN s < 0 THEN -1 ELSE 1 END)
-        * (CASE WHEN e = 0 THEN (mag >> 4) * 16 + 8
-                ELSE (((mag >> (e + 3)) & 15) * 16 + 264) * (1 << (e - 1))
-           END)
-    END AS val
-  FROM segs
-),
-vals AS (
-  SELECT *, lag(val) OVER (PARTITION BY audio_id ORDER BY i) AS prev_val
-  FROM quant
-)
-SELECT audio_id,
-  CAST(n AS BIGINT) AS n_samples,
-  ch AS n_channels,
-  CAST(CASE WHEN variant = 2 THEN 48000 ELSE 8000 END AS INT) AS sample_rate,
-  CAST(n * 1000 // (CASE WHEN variant = 2 THEN 48000 ELSE 8000 END) AS BIGINT)
-    AS duration_ms,
-  CAST(ch * sum(abs(val)) AS BIGINT) AS sum_abs,
-  CAST(count(*) FILTER (WHERE prev_val * val < 0) AS BIGINT) AS zero_crossings
-FROM vals
-GROUP BY audio_id, n, ch, variant"""
-
-
 def _gif_frames_sql() -> str:
     """Closed-form twin of q_gif_frames: re-derive every sampled frame's
     pixels (idx = (y + 3x + pk + 7k) % 16) and sum the arithmetic palette
@@ -2908,7 +2475,6 @@ JOIN blob bl USING (image_id)"""
 _MM_THUMB_FIXTURE = "/root/repo/fixtures/multimodal_thumb_sf0_01.parquet"
 _MM_JPEG_FIXTURE = "/root/repo/fixtures/multimodal_jpeg_sf0_01.parquet"
 _MM_TIFF_JPEG_FIXTURE = "/root/repo/fixtures/multimodal_tiff_jpeg_sf0_01.parquet"
-_AUDIO_ADPCM_FIXTURE = "/root/repo/fixtures/audio_adpcm_sf0_01.parquet"
 _REPROJECT_FIXTURE = "/root/repo/fixtures/reproject_extents_sf0_01.parquet"
 
 
@@ -3253,18 +2819,6 @@ def _reproject_extents_sql() -> str:
     return f"""
 SELECT image_id, epsg, lon_min_nd, lat_min_nd, lon_max_nd, lat_max_nd
 FROM read_parquet('{_REPROJECT_FIXTURE}')"""
-
-
-def _audio_adpcm_sql() -> str:
-    """Twin of q_audio_adpcm: lossy IMA staircase samples have no SQL
-    form, so the oracle is the complete expectations table from a
-    single-process run of the same synth -> encode -> decode -> feature
-    chain (tools/build_adpcm_fixture.py) — no Spark machinery shared, so
-    a distributed-plumbing bug cannot cancel out."""
-    return f"""
-SELECT audio_id, n_samples, n_channels, sample_rate,
-       duration_ms, sum_abs, zero_crossings
-FROM read_parquet('{_AUDIO_ADPCM_FIXTURE}')"""
 
 
 def _multimodal_features_sql() -> str:

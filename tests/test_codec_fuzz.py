@@ -1,20 +1,16 @@
-"""Hostile-byte fuzz for the image/audio codecs.
+"""Hostile-byte fuzz for the image codecs.
 
-Round 3 hardened FLAC and round 4 hardened the mp4/webm container
-parsers against malformed streams (tests/test_containers.py).  This file
-extends the same contract to every remaining decoder entry point: at
-100 TB ingest, truncated, bit-flipped, and adversarial payloads are
-certain, and a decoder must fail CLEANLY — raise ValueError (or a
-NotImplementedError capability guard), never hang, never over-allocate,
-and never leak struct.error / IndexError / KeyError / zlib.error /
-ZeroDivisionError out of the parse: the two documented types are the
-contract that lets per-row error policy (on_error='skip'/'quarantine'
-in the ingest operators) distinguish "this row is bad" from "this
-operator is broken".
+Every decoder entry point gets truncated, bit-flipped and adversarial
+payloads, which any large ingest will meet.  A decoder must fail
+CLEANLY: raise ValueError (or a NotImplementedError capability guard),
+never hang, never over-allocate, and never leak struct.error /
+IndexError / KeyError / zlib.error / ZeroDivisionError out of the parse.
+The two documented types are the contract that lets per-row error
+policy (on_error='skip'/'quarantine' in the ingest operators) tell
+"this row is bad" from "this operator is broken".
 
-Reference analogue: the reference ingests any raster GDAL can open
-(/root/reference/src/io.py:41-63) and inherits GDAL's hardened error
-paths; from-scratch decoders must earn the same property explicitly.
+A GDAL-based pipeline inherits GDAL's hardened error paths; from-scratch
+decoders must earn the same property explicitly.
 """
 
 import numpy as np
@@ -24,11 +20,9 @@ from hypothesis import strategies as st
 
 from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import (
     codec,
-    codec_flac,
     codec_gif,
     codec_jpeg,
     codec_tiff,
-    codec_wav,
     codec_webp,
 )
 
@@ -48,7 +42,6 @@ def _probe(fn, data):
 _RNG = np.random.default_rng(7)
 _IMG_RGB = _RNG.integers(0, 256, (24, 17, 3), dtype=np.uint8)
 _IMG_GRAY = _RNG.integers(0, 256, (16, 21), dtype=np.uint8)
-_PCM = np.rint(9000 * np.sin(np.arange(3000) * 0.04)).astype(np.int16)
 
 _VALID = {
     "png": (codec.encode_png(_IMG_RGB), codec.decode_png),
@@ -71,9 +64,6 @@ _VALID = {
     ),
     "webp": (codec_webp.encode_webp(_IMG_RGB), codec_webp.decode_webp),
     "jpeg": (codec_jpeg.encode_jpeg(_IMG_RGB), codec_jpeg.decode_jpeg),
-    "wav": (codec_wav.encode_wav(_PCM, 8000), codec_wav.decode_wav),
-    "wav_adpcm": (codec_wav.encode_wav_adpcm(_PCM, 8000), codec_wav.decode_wav),
-    "flac": (codec_flac.encode_flac(_PCM, 8000), codec_flac.decode_flac),
     "tiff_deflate": (codec_tiff.encode_tiff(_IMG_RGB), codec_tiff.decode_tiff),
     "tiff_lzw": (
         codec_tiff.encode_tiff(_IMG_GRAY, compression="lzw"),
@@ -102,8 +92,6 @@ _MAGICS = [
     b"GIF89a",
     b"RIFF\x20\x00\x00\x00WEBP",
     b"\xff\xd8",
-    b"RIFF\x20\x00\x00\x00WAVE",
-    b"fLaC",
     b"II\x2a\x00",
     b"MM\x00\x2a",
     b"II+\x00\x08\x00\x00\x00",
@@ -115,8 +103,6 @@ _DECODERS = [
     codec_gif.decode_gif,
     codec_webp.decode_webp,
     codec_jpeg.decode_jpeg,
-    codec_wav.decode_wav,
-    codec_flac.decode_flac,
     codec_tiff.decode_tiff,
     codec_tiff.geotiff_geodata,
     lambda b: codec_tiff.decode_tiff_window(b, 0, 0, 4, 4),
@@ -237,21 +223,6 @@ def test_gif_lying_lzw_stream():
     for k in range(j + 1, min(j + 20, len(blob))):
         blob[k] = 0xFF
     _probe(codec_gif.decode_gif, bytes(blob))
-
-
-def test_wav_zero_channels_or_rate():
-    """fmt chunk with 0 channels / 0 bits-per-sample must not divide by
-    zero."""
-    blob = bytearray(_VALID["wav"][0])
-    i = blob.find(b"fmt ")
-    assert i > 0
-    payload = i + 8
-    blob[payload + 2 : payload + 4] = b"\x00\x00"  # channels = 0
-    _probe(codec_wav.decode_wav, bytes(blob))
-    blob2 = bytearray(_VALID["wav"][0])
-    payload = blob2.find(b"fmt ") + 8
-    blob2[payload + 14 : payload + 16] = b"\x00\x00"  # bits = 0
-    _probe(codec_wav.decode_wav, bytes(blob2))
 
 
 def test_webp_lying_vp8l_dims():

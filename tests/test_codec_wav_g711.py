@@ -1,4 +1,4 @@
-"""G.711 mu-law/A-law + 24-bit PCM WAV paths (sources/codec_wav.py).
+"""G.711 mu-law/A-law companding tables (sources/codec_wav.py).
 
 Reference semantics: the classic ITU-T G.711 tables (the Sun g711.c
 lattice every telephony stack reproduces).  Known-vector checks pin the
@@ -7,7 +7,6 @@ and decoder are exact inverses on all 256 code points.
 """
 
 import numpy as np
-import pytest
 
 from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav as W
 
@@ -63,262 +62,3 @@ def test_mulaw_monotonic():
     for table in (W.MULAW_TABLE, W.ALAW_TABLE):
         vals = np.sort(table.astype(np.int32))
         assert np.all(np.diff(vals) >= 0)
-
-
-@pytest.mark.parametrize("law,tag", [("mu", 7), ("a", 6)])
-def test_wav_g711_roundtrip(law, tag):
-    rng = np.random.default_rng(7)
-    s = rng.integers(-32768, 32768, size=(501, 2), dtype=np.int16)
-    blob = W.encode_wav_g711(s, 8000, law)
-    out, rate = W.decode_wav(blob)
-    assert rate == 8000 and out.shape == (501, 2)
-    table = W.MULAW_TABLE if law == "mu" else W.ALAW_TABLE
-    enc = W.linear_to_mulaw(s) if law == "mu" else W.linear_to_alaw(s)
-    assert np.array_equal(out, table[enc].reshape(501, 2))
-    # format tag round-trips through the header
-    import struct
-    assert struct.unpack("<H", blob[20:22])[0] == tag
-
-
-def test_wav24_roundtrip_exact():
-    rng = np.random.default_rng(11)
-    s = rng.integers(-(1 << 23), 1 << 23, size=(400, 3), dtype=np.int32)
-    out, rate = W.decode_wav(W.encode_wav24(s, 48000))
-    assert rate == 48000
-    assert np.array_equal(out, s)
-
-
-def test_wav24_range_guard():
-    with pytest.raises(ValueError):
-        W.encode_wav24(np.array([1 << 23], dtype=np.int32), 8000)
-
-
-def test_g711_bits_guard():
-    blob = bytearray(W.encode_wav_g711(np.zeros(8, dtype=np.int16), 8000, "mu"))
-    blob[34] = 16  # forge bits=16 on a G.711 stream
-    with pytest.raises(ValueError):
-        W.decode_wav(bytes(blob))
-
-
-def test_compressed_wav_still_stub():
-    """Format 3 (IEEE float) decodes for real since r5 — the remaining
-    non-PCM boundary is compressed-codec-in-WAV (e.g. MS ADPCM = 2,
-    MP3-in-WAV = 0x55), which must keep raising the capability guard."""
-    for tag in (2, 0x55):
-        blob = bytearray(W.encode_wav(np.zeros(8, dtype=np.int16), 8000))
-        blob[20] = tag
-        with pytest.raises(NotImplementedError):
-            W.decode_wav(bytes(blob))
-    # a type-flipped float header over int16-sized data must NOT decode
-    # as float garbage: 16 bits is not a float width
-    blob = bytearray(W.encode_wav(np.zeros(8, dtype=np.int16), 8000))
-    blob[20] = 3
-    with pytest.raises(ValueError, match="32/64-bit"):
-        W.decode_wav(bytes(blob))
-
-
-# --------------------------------------------------------------------------- #
-# IMA/DVI ADPCM (audio_format 0x11)
-# --------------------------------------------------------------------------- #
-
-def _ref_ima_decode(blob):
-    """Independently-written scalar IMA reference decoder (textbook
-    per-nibble loop, no numpy vectorization) — the vectorized block
-    decoder must match it bit-for-bit."""
-    import struct
-
-    STEPS = W._IMA_STEPS.tolist()
-    ADJ = [-1, -1, -1, -1, 2, 4, 6, 8]
-    assert blob[:4] == b"RIFF" and blob[8:12] == b"WAVE"
-    pos, fmt, data, fact = 12, None, None, None
-    while pos + 8 <= len(blob):
-        cid = blob[pos : pos + 4]
-        size = struct.unpack("<I", blob[pos + 4 : pos + 8])[0]
-        body = blob[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt = body
-        elif cid == b"data":
-            data = body
-        elif cid == b"fact":
-            fact = struct.unpack("<I", body[:4])[0]
-        pos += 8 + size + (size & 1)
-    af, ch, rate, _, ba, bits = struct.unpack("<HHIIHH", fmt[:16])
-    assert af == 0x11 and bits == 4
-    out = []
-    for b in range(len(data) // ba):
-        blk = data[b * ba : (b + 1) * ba]
-        chans, idxs = [], []
-        for c in range(ch):
-            p, i, _r = struct.unpack("<hBB", blk[4 * c : 4 * c + 4])
-            chans.append([p])
-            idxs.append(i)
-        body = blk[4 * ch :]
-        for w in range(len(body) // (4 * ch)):
-            for c in range(ch):
-                word = body[(w * ch + c) * 4 : (w * ch + c) * 4 + 4]
-                for byte in word:
-                    for nib in (byte & 0xF, byte >> 4):
-                        step = STEPS[idxs[c]]
-                        diff = step >> 3
-                        if nib & 1:
-                            diff += step >> 2
-                        if nib & 2:
-                            diff += step >> 1
-                        if nib & 4:
-                            diff += step
-                        p = chans[c][-1] + (-diff if nib & 8 else diff)
-                        chans[c].append(max(-32768, min(32767, p)))
-                        idxs[c] = max(0, min(88, idxs[c] + ADJ[nib & 7]))
-        for t in range(len(chans[0])):
-            out.append([chans[c][t] for c in range(ch)])
-    out = np.array(out, dtype=np.int16)
-    return (out[:fact] if fact is not None else out), rate
-
-
-@pytest.mark.parametrize("n,ch", [(3000, 1), (4567, 2), (1, 1), (1017, 1), (1018, 2), (300, 3)])
-def test_adpcm_matches_scalar_reference(n, ch):
-    t = np.arange(n)
-    sig = (8000 * np.sin(t * 0.05) + 3000 * np.sin(t * 0.013 + 1)).astype(np.int16)
-    s = np.stack([np.roll(sig, k * 7) for k in range(ch)], axis=1).astype(np.int16)
-    blob = W.encode_wav_adpcm(s if ch > 1 else s[:, 0], 8000)
-    dec, rate = W.decode_wav(blob)
-    ref, rr = _ref_ima_decode(blob)
-    assert rate == rr == 8000 and dec.shape == (n, ch)
-    np.testing.assert_array_equal(dec, ref)
-
-
-def test_adpcm_snr_and_block_heads_exact():
-    """First sample of every block is stored verbatim; overall SNR is in
-    the normal IMA band (>= 30 dB on band-limited audio)."""
-    n = 5000
-    t = np.arange(n)
-    s = (12000 * np.sin(t * 0.03) + 5000 * np.sin(t * 0.011 + 2)).astype(np.int16)
-    dec, _ = W.decode_wav(W.encode_wav_adpcm(s, 16000))
-    spb = 8 * 127 + 1
-    for b in range(0, n, spb):
-        assert dec[b, 0] == s[b]
-    err = (dec[:, 0].astype(np.float64) - s) ** 2
-    snr = 10 * np.log10((s.astype(np.float64) ** 2).mean() / err.mean())
-    assert snr >= 30, snr
-
-
-def test_adpcm_fact_truncates_padding():
-    s = np.arange(-500, 500, dtype=np.int16)  # 1000 samples, not block-aligned
-    dec, _ = W.decode_wav(W.encode_wav_adpcm(s, 8000))
-    assert dec.shape == (1000, 1)
-
-
-def test_adpcm_hostile_headers():
-    import struct
-
-    s = (1000 * np.sin(np.arange(2000) * 0.02)).astype(np.int16)
-    blob = bytearray(W.encode_wav_adpcm(s, 8000))
-    # step index byte of channel 0's first block header -> 200 (>88)
-    data_off = blob.find(b"data") + 8
-    blob[data_off + 2] = 200
-    with pytest.raises(ValueError, match="step index"):
-        W.decode_wav(bytes(blob))
-    # block_align not a multiple of 4*ch
-    blob2 = bytearray(W.encode_wav_adpcm(s, 8000))
-    fmt_off = blob2.find(b"fmt ") + 8
-    blob2[fmt_off + 12 : fmt_off + 14] = struct.pack("<H", 510)
-    with pytest.raises(ValueError, match="block_align"):
-        W.decode_wav(bytes(blob2))
-    # fact claiming more samples than the payload decodes to
-    blob3 = bytearray(W.encode_wav_adpcm(s, 8000))
-    fact_off = blob3.find(b"fact") + 8
-    blob3[fact_off : fact_off + 4] = struct.pack("<I", 10**6)
-    with pytest.raises(ValueError, match="fact count"):
-        W.decode_wav(bytes(blob3))
-
-
-def test_adpcm_stereo_channels_independent():
-    """A silent right channel stays silent regardless of the left."""
-    n = 2000
-    left = (9000 * np.sin(np.arange(n) * 0.04)).astype(np.int16)
-    s = np.stack([left, np.zeros(n, np.int16)], axis=1)
-    dec, _ = W.decode_wav(W.encode_wav_adpcm(s, 8000))
-    assert (dec[:, 1] == 0).all()
-    assert np.abs(dec[:, 0].astype(np.int32) - left).mean() < 200
-
-
-class TestFloatWav:
-    """IEEE-float WAV (audio_format 3): round trip, int16-scale
-    recoverability, fact truncation, hostile-stream guards."""
-
-    def test_round_trip_f32_f64(self):
-        import numpy as np
-        from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav as W
-
-        rng = np.random.default_rng(9)
-        for bits, dt in ((32, np.float32), (64, np.float64)):
-            s = rng.uniform(-1, 1, (777, 2)).astype(dt)
-            out, rate = W.decode_wav(W.encode_wav_float(s, 22050, bits=bits))
-            assert rate == 22050 and out.shape == (777, 2)
-            assert out.dtype == np.float64
-            assert np.array_equal(out, s.astype(np.float64))
-
-    def test_int16_scale_is_exactly_recoverable_through_f32(self):
-        """rint(32767 * f32(i/32767)) == i for every int16 value — the
-        fact the audio_float gate's closed-form oracle rests on."""
-        import numpy as np
-        from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav as W
-
-        i = np.arange(-32768, 32768, dtype=np.int64)
-        f = (i / 32767.0).astype(np.float32)
-        out, _ = W.decode_wav(W.encode_wav_float(f, 16000))
-        assert np.array_equal(np.rint(out[:, 0] * 32767.0).astype(np.int64), i)
-
-    def test_fact_truncation_and_mono_shape(self):
-        import numpy as np
-        from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav as W
-
-        s = np.linspace(-0.5, 0.5, 100).astype(np.float32)
-        blob = bytearray(W.encode_wav_float(s, 8000))
-        at = blob.index(b"fact") + 8
-        blob[at:at + 4] = (40).to_bytes(4, "little")  # fact says 40 frames
-        out, _ = W.decode_wav(bytes(blob))
-        assert out.shape == (40, 1)
-
-    def test_hostile_guards(self):
-        import numpy as np
-        import pytest
-        from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav as W
-
-        with pytest.raises(ValueError, match="non-finite"):
-            W.encode_wav_float(np.array([0.1, np.nan], dtype=np.float32), 8000)
-        with pytest.raises(ValueError, match="floats"):
-            W.encode_wav_float(np.array([1, 2], dtype=np.int16), 8000)
-        # forge NaN / huge values into an otherwise valid stream
-        good = W.encode_wav_float(np.zeros(8, dtype=np.float32), 8000)
-        forged = good[:-32] + np.full(8, np.inf, dtype="<f4").tobytes()
-        with pytest.raises(ValueError, match="non-finite|out-of-range"):
-            W.decode_wav(forged)
-        forged = good[:-32] + np.full(8, 1e6, dtype="<f4").tobytes()
-        with pytest.raises(ValueError, match="out-of-range|non-finite"):
-            W.decode_wav(forged)
-        # wrong bit depth for format 3
-        blob = bytearray(W.encode_wav_float(np.zeros(8, dtype=np.float32), 8000))
-        at = blob.index(b"fmt ") + 8
-        blob[at + 14:at + 16] = (16).to_bytes(2, "little")
-        with pytest.raises(ValueError, match="32/64-bit"):
-            W.decode_wav(bytes(blob))
-
-    def test_audio_features_quantizes_floats(self, spark):
-        import numpy as np
-        import pandas as pd
-        from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-        from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav as W
-
-        i = np.array([100, -200, 300, -400, 0, 32767], dtype=np.int64)
-        f = (i / 32767.0).astype(np.float32)
-        df = spark.createDataFrame(pd.DataFrame({
-            "audio_id": ["a"],
-            "bytes": [W.encode_wav_float(f, 16000)],
-            "fmt": ["wav"],
-        }))
-        r = MM.audio_features(df).collect()[0]
-        assert r.n_samples == 6 and r.n_channels == 1
-        assert r.sum_abs == int(np.abs(i).sum())
-        # strict crossings: the -400 -> 0 and 0 -> 32767 pairs do NOT count
-        assert r.zero_crossings == 3

@@ -116,88 +116,6 @@ def test_multimodal_features_over_real_jpeg(spark):
 
 
 # ---------------------------------------------------------------------- #
-# PCM WAV codec (sources/codec_wav.py)
-# ---------------------------------------------------------------------- #
-
-def test_wav_roundtrip_mono_stereo():
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav as W
-
-    rng = np.random.RandomState(5)
-    mono = rng.randint(-32768, 32767, size=2000, dtype=np.int16)
-    s, rate = W.decode_wav(W.encode_wav(mono, 8000))
-    assert rate == 8000 and s.shape == (2000, 1)
-    np.testing.assert_array_equal(s[:, 0], mono)
-
-    stereo = rng.randint(-32768, 32767, size=(500, 2), dtype=np.int16)
-    s2, rate2 = W.decode_wav(W.encode_wav(stereo, 44100))
-    assert rate2 == 44100 and s2.shape == (500, 2)
-    np.testing.assert_array_equal(s2, stereo)
-
-
-def test_wav_odd_chunk_alignment_and_extra_chunks():
-    """Decoder must skip unknown chunks and honor word alignment."""
-    import struct
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav as W
-
-    base = bytearray(W.encode_wav(np.arange(10, dtype=np.int16), 16000))
-    # splice an odd-sized LIST chunk between WAVE id and fmt
-    extra = b"LIST" + struct.pack("<I", 3) + b"abc" + b"\x00"  # pad to even
-    spliced = bytes(base[:12]) + extra + bytes(base[12:])
-    s, rate = W.decode_wav(spliced)
-    assert rate == 16000 and s.shape == (10, 1)
-
-
-def test_wav_rejects_non_pcm_and_garbage():
-    import struct
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav as W
-
-    enc = bytearray(W.encode_wav(np.zeros(4, dtype=np.int16), 16000))
-    fmt_at = bytes(enc).find(b"fmt ") + 8
-    enc[fmt_at : fmt_at + 2] = struct.pack("<H", 2)  # MS ADPCM
-    with pytest.raises(NotImplementedError):
-        W.decode_wav(bytes(enc))
-    # IEEE float decodes for real since r5, but 16-bit floats don't exist
-    enc[fmt_at : fmt_at + 2] = struct.pack("<H", 3)
-    with pytest.raises(ValueError):
-        W.decode_wav(bytes(enc))
-    with pytest.raises(ValueError):
-        W.decode_wav(b"nope")
-
-
-def test_audio_features_over_real_wav(spark):
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav as W
-
-    s = np.array([100, -50, 30, -30, 0, 10], dtype=np.int16)
-    df = spark.createDataFrame(
-        [("a1", W.encode_wav(s, 1000), "wav")],
-        "audio_id string, bytes binary, fmt string",
-    )
-    r = MM.audio_features(df).collect()[0]
-    assert r["n_samples"] == 6 and r["sample_rate"] == 1000
-    assert r["duration_ms"] == 6
-    assert r["sum_abs"] == 220
-    # strict sign products: (100,-50) (-50,30) (30,-30) (-30,0) (0,10) -> 3
-    assert r["zero_crossings"] == 3
-
-
-@pytest.mark.parametrize("fmt", ["ogg", "mp3"])
-def test_audio_features_unknown_fmt_raises(spark, fmt):
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-
-    df = spark.createDataFrame(
-        pd.DataFrame([("x", b"\x00" * 16, fmt)],
-                     columns=["audio_id", "bytes", "fmt"])
-    )
-    with pytest.raises(Exception, match="unsupported fmt"):
-        MM.audio_features(df).collect()
-
-
-# ---------------------------------------------------------------------- #
 # GIF codec (sources/codec_gif.py)
 # ---------------------------------------------------------------------- #
 
@@ -249,21 +167,3 @@ def test_frame_sample_real_gif_path(spark):
             zlib.decompress(bytes(r["frame_bytes"])), dtype=np.uint8
         ).reshape(6, 9, 3)
         assert (fr == fi * 30).all()
-
-
-def test_wav_8bit_pcm_is_unsigned_biased():
-    """8-bit PCM is unsigned with a 128 bias (WAV spec): decode must
-    return signed values so zero-crossings/abs features are meaningful."""
-    import struct
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_wav as W
-
-    # hand-build an 8-bit mono wav: samples 0, 128, 255 -> -128, 0, 127
-    data = bytes([0, 128, 255])
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 8000, 1, 8)
-    wav = b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data)) + b"WAVE"
-    wav += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    wav += b"data" + struct.pack("<I", len(data)) + data + b"\x00"  # pad
-    s, rate = W.decode_wav(wav)
-    assert rate == 8000
-    assert s[:, 0].tolist() == [-128, 0, 127]

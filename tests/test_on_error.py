@@ -18,7 +18,7 @@ from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_un
 )
 from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import (
     codec,
-    codec_wav,
+    codec_tiff,
 )
 
 pytestmark = pytest.mark.usefixtures("spark")
@@ -87,24 +87,6 @@ def test_decode_features_quarantine(spark):
     assert len(bad) == 2 and all(r.mean_r is None for r in bad)
 
 
-def test_audio_features_skip_and_quarantine(spark):
-    pcm = np.rint(500 * np.sin(np.arange(800) * 0.1)).astype(np.int16)
-    rows = [
-        ("a-ok", codec_wav.encode_wav(pcm, 8000), "wav"),
-        ("a-bad", b"RIFF\x00\x00\x00\x00WAVEgarbage", "wav"),
-        ("a-unsup", b"whatever", "ogg"),  # NotImplementedError path
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["audio_id", "bytes", "fmt"])
-    )
-    skip = MM.audio_features(df, on_error="skip").collect()
-    assert [r.audio_id for r in skip] == ["a-ok"]
-    quar = {r.audio_id: r for r in MM.audio_features(df, on_error="quarantine").collect()}
-    assert quar["a-ok"].error is None
-    assert quar["a-bad"].error.startswith("ValueError")
-    assert quar["a-unsup"].error.startswith("NotImplementedError")
-
-
 def test_frame_sample_skip_drops_bad_video(spark):
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import (
         codec_gif,
@@ -136,18 +118,36 @@ def test_bad_mode_rejected_eagerly(spark):
         MM.pixel_sums(_images_df(spark), on_error="ignore")
 
 
+def _palette_tiff() -> bytes:
+    """A valid 6x6 TIFF re-tagged as palette (PhotometricInterpretation
+    3), a layout the decoder rejects with NotImplementedError."""
+    import struct
+
+    blob = bytearray(
+        codec_tiff.encode_tiff(np.zeros((6, 6), np.uint8), compression="none")
+    )
+    ifd_off = struct.unpack("<I", blob[4:8])[0]
+    (n,) = struct.unpack("<H", blob[ifd_off : ifd_off + 2])
+    for i in range(n):
+        e = ifd_off + 2 + 12 * i
+        if struct.unpack("<H", blob[e : e + 2])[0] == 262:
+            blob[e + 8 : e + 10] = struct.pack("<H", 3)
+    return bytes(blob)
+
+
 def test_quarantine_stats_census(spark):
-    pcm = np.rint(500 * np.sin(np.arange(800) * 0.1)).astype(np.int16)
+    rng = np.random.default_rng(3)
+    arr = rng.integers(0, 256, (10, 8, 3), dtype=np.uint8)
     rows = [
-        ("a-ok", codec_wav.encode_wav(pcm, 8000), "wav"),
-        ("a-bad1", b"RIFF\x00\x00\x00\x00WAVEgarbage", "wav"),
-        ("a-bad2", b"RIFF\x00\x00\x00\x00WAVEgarbage2", "wav"),
-        ("a-unsup", b"whatever", "ogg"),
+        ("ok", codec.encode_png(arr), 8, 10, "png"),
+        ("bad-1", b"\x89PNG\r\n\x1a\ngarbage", 8, 10, "png"),
+        ("bad-2", b"\x89PNG\r\n\x1a\ngarbage2", 8, 10, "png"),
+        ("unsup", _palette_tiff(), 6, 6, "tiff"),  # NotImplementedError path
     ]
     df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["audio_id", "bytes", "fmt"])
+        pd.DataFrame(rows, columns=["image_id", "bytes", "w", "h", "fmt"])
     )
-    quar = MM.audio_features(df, on_error="quarantine")
+    quar = MM.pixel_sums(df, on_error="quarantine")
     census = {r.error_type: r.n for r in MM.quarantine_stats(quar).collect()}
     assert census == {"ValueError": 2, "NotImplementedError": 1}
 

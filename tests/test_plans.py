@@ -57,6 +57,20 @@ def test_slice_tiles_no_jvm_explode(spark):
     assert "MapInPandas" in p
 
 
+def test_grouped_stages_infer_eval_type_from_hints(spark):
+    """stitch_tiles and tiles_to_polygons type their grouped functions'
+    (key, pdf) parameters, so building either plan makes pyspark raise no
+    "Cannot infer the eval type" warning."""
+    import warnings
+
+    tiles = raster.slice_tiles(IMG.images_table(spark, SF, limit=5))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        raster.stitch_tiles(tiles)
+        raster.tiles_to_polygons(tiles)
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
+
+
 def test_pip_join_broadcast_engages(spark):
     pts = derived.points_meta(spark, SF)
     polys = derived.footprint_rings(spark, SF).join(

@@ -92,6 +92,24 @@ def test_get_spark_selects_daemon_module(spark, built_conf):
     assert "spark.python.daemon.module" not in conf
 
 
+def test_get_spark_keeps_stock_daemon_unless_engine_importable(
+    built_conf, monkeypatch, tmp_path
+):
+    """The daemon starts before --py-files reach sys.path: the engine's
+    daemon is chosen only for a local[...] master whose workers find the
+    package in their working directory or on PYTHONPATH."""
+    assert "spark.python.daemon.module" in built_conf(master="local")
+    assert "spark.python.daemon.module" not in built_conf(
+        master="local-cluster[2,1,1536]"
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(vm.__file__)))
+    monkeypatch.chdir(tmp_path)
+    monkeypatch.delenv("PYTHONPATH", raising=False)
+    assert "spark.python.daemon.module" not in built_conf()
+    monkeypatch.setenv("PYTHONPATH", repo)
+    assert "spark.python.daemon.module" in built_conf()
+
+
 def test_driver_memory_fits_host(built_conf, monkeypatch):
     monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
     phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")

@@ -1,16 +1,14 @@
-"""Multimodal binary-column operators: image/audio/animation payloads as
+"""Multimodal binary-column operators: image/animation payloads as
 opaque ``binary`` columns with typed metadata; decode / feature-extract /
 resize / frame-sample as Arrow UDFs over ``mapInPandas``.
 
-The engine uses no image/audio libraries: png/raw/jpeg/gif/webp/tiff decode
-with our own pure-numpy codecs (baseline JFIF in ``sources/codec_jpeg.py``,
-GIF LZW in ``codec_gif.py``, WebP-lossless VP8L in ``codec_webp.py``).  WAV
-(PCM, IEEE float, G.711, IMA ADPCM) and FLAC audio decode in
-``sources/codec_wav.py`` / ``codec_flac.py`` (:func:`audio_features`).
-:func:`frame_sample` splits animated GIFs into frames; video (mp4/webm) is
-not supported.  Any other ``fmt`` raises ``ValueError('unknown fmt ...')``
-(``NotImplementedError`` in :func:`audio_features`); the row's
-``on_error`` policy handles it like any other undecodable payload.
+The engine decodes image payloads only, with no image libraries:
+png/raw/jpeg/gif/webp/tiff decode with our own pure-numpy codecs (baseline
+JFIF in ``sources/codec_jpeg.py``, GIF LZW in ``codec_gif.py``,
+WebP-lossless VP8L in ``codec_webp.py``).  :func:`frame_sample` splits
+animated GIFs into frames; audio and video are not supported.  Any other
+``fmt`` raises ``ValueError('unknown fmt ...')``; the row's ``on_error``
+policy handles it like any other undecodable payload.
 """
 
 from __future__ import annotations
@@ -183,65 +181,6 @@ def elev_stats(images: DataFrame, on_error: str = "fail") -> DataFrame:
             yield _rows_frame(rows, cols, on_error)
 
     return images.mapInPandas(run, schema=schema)
-
-
-def audio_features(audio: DataFrame, on_error: str = "fail") -> DataFrame:
-    """Real audio path: per-row integer features — sample/channel counts,
-    duration, sum|s|, strict zero-crossings of channel 0 — all exact ints
-    so deterministic synth audio gets an exact SQL oracle.  An optional
-    ``fmt`` column selects the codec: 'flac' (sources/codec_flac.py,
-    lossless Rice/fixed-predictor decode) or PCM WAV (default) — both
-    REAL from-scratch decoders, so the gate covers the full
-    encode -> shuffle -> decode path either way.  ``on_error``: see
-    module policy."""
-    from ..sources import codec_flac, codec_wav
-
-    _check_on_error(on_error)
-    has_fmt = "fmt" in audio.columns
-    cols = [
-        "audio_id", "n_samples", "n_channels", "sample_rate",
-        "duration_ms", "sum_abs", "zero_crossings",
-    ]
-    schema = (
-        "audio_id string, n_samples long, n_channels int, sample_rate int, "
-        "duration_ms long, sum_abs long, zero_crossings long"
-    )
-    if on_error == "quarantine":
-        schema += ", error string"
-
-    def one(r):
-        fmt = r.fmt if has_fmt else "wav"
-        if fmt == "flac":
-            s, rate = codec_flac.decode_flac(bytes(r.bytes))
-        elif fmt == "wav":
-            s, rate = codec_wav.decode_wav(bytes(r.bytes))
-        else:
-            # explicit capability boundary: an unknown fmt must
-            # surface as such, not as a RIFF-magic error from the
-            # WAV decoder it silently fell into (round-3 ADVICE)
-            raise NotImplementedError(
-                f"audio_features: unsupported fmt {fmt!r} "
-                "(supported: wav, flac)"
-            )
-        if s.dtype.kind == "f":
-            # IEEE-float WAV: deterministic int16-scale quantization so
-            # the integer feature contract (and its SQL twin) holds;
-            # decode_wav guarantees finite samples with |x| <= 8
-            s = np.rint(s * 32767.0).astype(np.int64)
-        c0 = s[:, 0].astype(np.int64)
-        zc = int(((c0[:-1] * c0[1:]) < 0).sum())
-        return (
-            r.audio_id, int(s.shape[0]), int(s.shape[1]), int(rate),
-            int(s.shape[0]) * 1000 // int(rate),
-            int(np.abs(s.astype(np.int64)).sum()), zc,
-        )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = _guarded_rows(pdf, one, "audio_id", 6, on_error)
-            yield _rows_frame(rows, cols, on_error)
-
-    return audio.mapInPandas(run, schema=schema)
 
 
 def frame_sample(

@@ -590,7 +590,7 @@ def stitch_tiles(
     Default zlib level 1 (lossless): the stitched plane usually feeds the
     next pixel stage, not a durable sink — pass level=6 when persisting."""
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         canvas, w, h = _stitch_canvas(pdf, nodata=nodata)
         return pd.DataFrame(
             {
@@ -882,7 +882,7 @@ def tiles_to_polygons(
     ~16 MB Arrow round-trips per image, which dominates the unfused plan's
     wall time."""
 
-    def assemble(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         canvas, _, _ = _stitch_canvas(pdf)
         labels = _mask_to_labels(canvas, cfg, separation)
         rows = _polygon_rows(

@@ -8,6 +8,7 @@ shuffle partitions sized for the sandbox but overridable for a real cluster.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -23,6 +24,26 @@ def default_driver_memory() -> str:
     except (AttributeError, ValueError, OSError):
         return "16g"
     return f"{min(phys // 2, 16 << 30) // MIB}m"
+
+
+# ``local`` / ``local[N]`` / ``local[N,F]``, not ``local-cluster[...]``,
+# whose executors are separate JVMs.
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+
+
+def _daemon_can_import() -> bool:
+    """Whether a Python worker can import the engine when its daemon starts.
+
+    Spark starts the daemon before any task, so before ``--py-files`` or
+    ``addPyFile`` reach ``sys.path``.  A local worker runs in the driver's
+    working directory with the driver's ``PYTHONPATH``, so it can import
+    the engine only when the package was loaded from a plain directory
+    that is one of those."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if not os.path.isdir(os.path.join(root, __package__)):  # inside a zip
+        return False
+    paths = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep)]
+    return any(p and os.path.realpath(p) == os.path.realpath(root) for p in paths)
 
 
 def get_spark(
@@ -75,12 +96,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )
-    if (master or submitted).startswith("local"):
+    if _LOCAL_MASTER.fullmatch(master or submitted) and _daemon_can_import():
         # Python workers fork from the engine's daemon, which stops every
         # task from re-reading pyspark.zip's directory (see workerd.py).
-        # Local only: a cluster executor may get the engine from
-        # --py-files, which reach sys.path per task, after the daemon
-        # has started.
         b = b.config("spark.python.daemon.module", f"{__package__}.workerd")
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

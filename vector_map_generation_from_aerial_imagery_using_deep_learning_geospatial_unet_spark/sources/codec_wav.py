@@ -1,175 +1,21 @@
-"""Pure-stdlib PCM + G.711 + IMA ADPCM WAV (RIFF) codec — upgrades 'wav'
-from stub to real.
+"""ITU-T G.711 mu-law/A-law companding tables — the one piece of the
+retired WAV codec that is still here.
 
-Baseline containers deserve real decoders even without codec libraries:
-RIFF/WAVE with integer PCM is pure struct parsing, the two telephony
-companding laws (ITU-T G.711 mu-law = audio_format 7, A-law = 6) are
-closed-form 8-bit<->16-bit maps, and IMA/DVI ADPCM (audio_format 0x11)
-is an 89-step staircase recurrence over 4-bit nibbles.  Scope: PCM
-(audio_format 1) at 8/16/24/32-bit, IEEE float (audio_format 3) at
-32/64-bit — the studio/DAW interchange layout, returned as float64 and
-quantized deterministically by the feature layer — G.711 mu-law/A-law
-at 8-bit, IMA ADPCM at 4-bit, any channel count; compressed formats
-(MP3/AAC inside WAV) are rejected loudly and stay with the documented
-stubs in operators/multimodal.py.
+The engine decodes image payloads only: the WAV/FLAC readers,
+``audio_features`` and the audio gates are gone, and nothing in the
+package imports this module.  It keeps the closed-form 8-bit<->16-bit
+companding maps and their table tests (``tests/test_codec_wav_g711.py``)
+until the next change deletes both.
 """
 
 from __future__ import annotations
 
-import struct
-
 import numpy as np
 
-from ._hardening import malformed_guard
-
-_DTYPES = {8: np.uint8, 16: np.dtype("<i2"), 32: np.dtype("<i4")}
-
-# WAVE_FORMAT_* tags (RIFF spec / RFC 2361 registry)
-_FMT_PCM, _FMT_FLOAT, _FMT_ALAW, _FMT_MULAW, _FMT_IMA = 1, 3, 6, 7, 0x11
-
-# ---------------------------------------------------------------------------
-# IMA/DVI ADPCM (audio_format 0x11): 4-bit nibbles against the canonical
-# 89-entry step staircase (IMA ADPCM reference algorithm).  MS WAV block
-# layout: per block, a 4-byte header per channel (int16 predictor = the
-# block's FIRST output sample, uint8 step index, reserved), then the
-# nibble payload interleaved in 4-byte words per channel, low nibble
-# first.  samples_per_block = (block_align - 4*ch) * 2 / ch + 1.
-
-_IMA_STEPS = np.array(
-    [
-        7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31,
-        34, 37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130,
-        143, 157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408,
-        449, 494, 544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282,
-        1411, 1552, 1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327,
-        3660, 4026, 4428, 4871, 5358, 5894, 6484, 7132, 7845, 8630,
-        9493, 10442, 11487, 12635, 13899, 15289, 16818, 18500, 20350,
-        22385, 24623, 27086, 29794, 32767,
-    ],
-    dtype=np.int32,
-)
-_IMA_INDEX_ADJ = np.array([-1, -1, -1, -1, 2, 4, 6, 8], dtype=np.int32)
-
-
-def _ima_decode_blocks(raw: bytes, ch: int, block_align: int) -> np.ndarray:
-    """All full blocks -> (n, ch) int16.  The recurrence is sequential in
-    the sample index but independent across blocks and channels, so the
-    loop runs samples_per_block times with every step vectorized over
-    (n_blocks, ch) — the batch shape Arrow hands us anyway."""
-    if block_align < 8 * ch or block_align % (4 * ch):
-        raise ValueError(f"ima adpcm: bad block_align {block_align} for {ch} ch")
-    nb = len(raw) // block_align
-    if nb == 0:
-        raise ValueError("ima adpcm: no complete block")
-    blocks = np.frombuffer(raw[: nb * block_align], np.uint8).reshape(
-        nb, block_align
-    )
-    hdr = blocks[:, : 4 * ch].reshape(nb, ch, 4)
-    pred = (
-        (hdr[..., 0].astype(np.uint16) | (hdr[..., 1].astype(np.uint16) << 8))
-        .astype(np.int16)
-        .astype(np.int32)
-    )
-    idx = hdr[..., 2].astype(np.int32)
-    if (idx > 88).any():
-        raise ValueError("ima adpcm: step index out of range")
-    n_words = (block_align - 4 * ch) // (4 * ch)
-    body = blocks[:, 4 * ch :].reshape(nb, n_words, ch, 4)
-    nib = np.empty((nb, n_words, ch, 8), np.uint8)
-    nib[..., 0::2] = body & 0x0F
-    nib[..., 1::2] = body >> 4
-    spb = n_words * 8
-    nib = nib.transpose(0, 2, 1, 3).reshape(nb, ch, spb)
-    out = np.empty((nb, 1 + spb, ch), np.int16)
-    out[:, 0, :] = pred
-    cur, ci = pred, idx
-    for t in range(spb):
-        b = nib[:, :, t].astype(np.int32)
-        step = _IMA_STEPS[ci]
-        diff = (
-            (step >> 3)
-            + np.where(b & 1, step >> 2, 0)
-            + np.where(b & 2, step >> 1, 0)
-            + np.where(b & 4, step, 0)
-        )
-        cur = np.clip(np.where(b & 8, cur - diff, cur + diff), -32768, 32767)
-        ci = np.clip(ci + _IMA_INDEX_ADJ[b & 7], 0, 88)
-        out[:, 1 + t, :] = cur
-    return out.reshape(-1, ch)
-
-
-def encode_wav_adpcm(
-    samples: np.ndarray, rate: int, n_words: int = 127
-) -> bytes:
-    """int16 (n,) or (n, ch) -> IMA ADPCM WAV.  ``n_words``: payload
-    4-byte words per channel per block (samples_per_block = 8*n_words+1).
-    Each block's first sample is stored verbatim in the header; the step
-    index carries across blocks.  Writes the mandatory ``fact`` chunk so
-    the decoder can drop the final block's padding."""
-    if samples.dtype != np.int16:
-        raise ValueError(f"adpcm encoder is int16-only, got {samples.dtype}")
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    n, ch = samples.shape
-    if n == 0:
-        raise ValueError("adpcm encoder needs at least one sample")
-    spb = 8 * n_words + 1
-    block_align = 4 * ch + 4 * ch * n_words
-    # pad to whole blocks by holding the last sample
-    n_blocks = (n + spb - 1) // spb
-    padded = np.vstack([samples, np.repeat(samples[-1:], n_blocks * spb - n, 0)])
-    data = bytearray()
-    index = np.zeros(ch, dtype=np.int32)
-    for b in range(n_blocks):
-        blk = padded[b * spb : (b + 1) * spb].astype(np.int32)
-        pred = blk[0].copy()
-        for c in range(ch):
-            data += struct.pack("<hBB", int(pred[c]), int(index[c]), 0)
-        nibbles = np.empty((spb - 1, ch), np.uint8)
-        for t in range(1, spb):
-            step = _IMA_STEPS[index]
-            delta = blk[t] - pred
-            code = np.where(delta < 0, 8, 0)
-            mag = np.abs(delta)
-            diff = step >> 3
-            for bit, q in ((4, step), (2, step >> 1), (1, step >> 2)):
-                hit = mag >= q
-                code |= np.where(hit, bit, 0)
-                mag = np.where(hit, mag - q, mag)
-                diff += np.where(hit, q, 0)
-            pred = np.clip(
-                np.where(code & 8, pred - diff, pred + diff), -32768, 32767
-            )
-            index = np.clip(index + _IMA_INDEX_ADJ[code & 7], 0, 88)
-            nibbles[t - 1] = code.astype(np.uint8)
-        # pack: per channel, 4-byte words (8 nibbles, low first), interleaved
-        nw = nibbles.reshape(n_words, 8, ch).transpose(0, 2, 1)  # (w, ch, 8)
-        packed = (nw[..., 0::2] | (nw[..., 1::2] << 4)).astype(np.uint8)
-        data += packed.tobytes()
-    block = ch * 4 * (1 + n_words)
-    assert block == block_align and len(data) == n_blocks * block_align
-    fmt = struct.pack(
-        "<HHIIHHHH",
-        _FMT_IMA, ch, rate,
-        rate * block_align // spb,  # nominal avg byte rate
-        block_align, 4, 2, spb,
-    )
-    out = (
-        b"RIFF"
-        + struct.pack("<I", 4 + 8 + len(fmt) + 8 + 4 + 8 + len(data))
-        + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<II", 4, n)
-        + b"data" + struct.pack("<I", len(data)) + bytes(data)
-    )
-    return out
-
-# ---------------------------------------------------------------------------
-# ITU-T G.711 companding (both laws decode to the conventional 16-bit
-# lattice: mu-law magnitudes ((m*8+132)<<e)-132 up to 32124, A-law
-# (m*16+8) / ((m*16+264)<<(seg-1)) up to 32256).  Encoders are the exact
-# segment-quantizers whose decode inverts them — pure integer arithmetic,
-# so a DuckDB oracle can re-derive every decoded sample in SQL.
+# Both laws decode to the conventional 16-bit lattice: mu-law magnitudes
+# ((m*8+132)<<e)-132 up to 32124, A-law (m*16+8) / ((m*16+264)<<(seg-1))
+# up to 32256.  Encoders are the exact segment-quantizers whose decode
+# inverts them — pure integer arithmetic.
 
 # segment thresholds: index i covers magnitudes [2^(i+8) .. 2^(i+9)-1]
 _SEG_EDGES = np.array([256 << k for k in range(8)], dtype=np.int32)
@@ -218,170 +64,3 @@ def linear_to_alaw(samples: np.ndarray) -> np.ndarray:
     m = np.where(seg == 0, mag >> 4, (mag >> (seg + 3)) & 0x0F)
     byte = np.where(pos, 0x80, 0) | (seg << 4) | m
     return (byte ^ 0x55).astype(np.uint8)
-
-
-def _riff(fmt_tag: int, ch: int, rate: int, bits: int, data: bytes) -> bytes:
-    block = ch * (bits // 8)
-    fmt = struct.pack("<HHIIHH", fmt_tag, ch, rate, rate * block, block, bits)
-    out = b"RIFF" + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data)) + b"WAVE"
-    out += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    out += b"data" + struct.pack("<I", len(data)) + data
-    return out
-
-
-def encode_wav(samples: np.ndarray, rate: int) -> bytes:
-    """int16 (n,) mono or (n, ch) -> RIFF/WAVE PCM bytes."""
-    if samples.dtype != np.int16:
-        raise ValueError(f"wav encoder is int16-only, got {samples.dtype}")
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    data = np.ascontiguousarray(samples.astype("<i2")).tobytes()
-    return _riff(_FMT_PCM, samples.shape[1], rate, 16, data)
-
-
-def encode_wav24(samples: np.ndarray, rate: int) -> bytes:
-    """int32 values in [-2^23, 2^23) (n,) or (n, ch) -> 24-bit PCM WAV."""
-    s = np.asarray(samples)
-    if s.dtype.kind != "i":
-        raise ValueError(f"wav24 encoder wants signed ints, got {s.dtype}")
-    if s.min(initial=0) < -(1 << 23) or s.max(initial=0) >= (1 << 23):
-        raise ValueError("wav24 samples out of 24-bit range")
-    if s.ndim == 1:
-        s = s[:, None]
-    le32 = np.ascontiguousarray(s.astype("<i4")).view(np.uint8).reshape(-1, 4)
-    data = le32[:, :3].tobytes()  # little-endian: low 3 bytes
-    return _riff(_FMT_PCM, s.shape[1], rate, 24, data)
-
-
-def encode_wav_float(samples: np.ndarray, rate: int, bits: int = 32) -> bytes:
-    """float32/float64 (n,) or (n, ch) in nominal [-1, 1] -> IEEE-float
-    WAV (audio_format 3, the studio/DAW interchange layout).  The spec
-    requires a fact chunk (frame count) for non-PCM formats; one is
-    written so truncation-detecting readers get the truth."""
-    s = np.asarray(samples)
-    if s.dtype.kind != "f":
-        raise ValueError(f"float wav encoder wants floats, got {s.dtype}")
-    if bits not in (32, 64):
-        raise ValueError(f"float wav is 32- or 64-bit, got {bits}")
-    if s.size and not np.isfinite(s).all():
-        raise ValueError("float wav: non-finite samples")
-    if s.ndim == 1:
-        s = s[:, None]
-    data = np.ascontiguousarray(
-        s.astype("<f4" if bits == 32 else "<f8")
-    ).tobytes()
-    ch = s.shape[1]
-    block = ch * (bits // 8)
-    fmt = struct.pack(
-        "<HHIIHHH", _FMT_FLOAT, ch, rate, rate * block, block, bits, 0
-    )  # cbSize=0 extension field, standard for format 3
-    fact = struct.pack("<I", s.shape[0])
-    out = b"RIFF" + struct.pack(
-        "<I", 4 + 8 + len(fmt) + 8 + len(fact) + 8 + len(data)
-    ) + b"WAVE"
-    out += b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    out += b"fact" + struct.pack("<I", len(fact)) + fact
-    out += b"data" + struct.pack("<I", len(data)) + data
-    return out
-
-
-def encode_wav_g711(samples: np.ndarray, rate: int, law: str) -> bytes:
-    """int16 (n,) or (n, ch) -> 8-bit G.711 WAV ('mu' or 'a' law)."""
-    if samples.dtype != np.int16:
-        raise ValueError(f"g711 encoder is int16-only, got {samples.dtype}")
-    if samples.ndim == 1:
-        samples = samples[:, None]
-    if law == "mu":
-        data, tag = linear_to_mulaw(samples).tobytes(), _FMT_MULAW
-    elif law == "a":
-        data, tag = linear_to_alaw(samples).tobytes(), _FMT_ALAW
-    else:
-        raise ValueError(f"unknown companding law {law!r} (want 'mu' or 'a')")
-    return _riff(tag, samples.shape[1], rate, 8, data)
-
-
-@malformed_guard("wav")
-def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
-    """RIFF/WAVE bytes -> ((n, ch) array, sample_rate).  Integer dtypes
-    for PCM/G.711/ADPCM; float64 in nominal [-1, 1] for IEEE format 3
-    (callers quantize — audio_features uses rint(32767 x))."""
-    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a RIFF/WAVE stream")
-    pos = 12
-    fmt_chunk = raw = fact = None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        size = struct.unpack("<I", data[pos + 4 : pos + 8])[0]
-        body = data[pos + 8 : pos + 8 + size]
-        if cid == b"fmt ":
-            fmt_chunk = body
-        elif cid == b"data":
-            raw = body
-        elif cid == b"fact":
-            fact = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if fmt_chunk is None or raw is None:
-        raise ValueError("wav stream missing fmt/data chunk")
-    audio_format, ch, rate, _, block_align, bits = struct.unpack(
-        "<HHIIHH", fmt_chunk[:16]
-    )
-    if ch == 0 or rate == 0:
-        # zeroed header fields divide downstream (frames//ch, n/rate)
-        raise ValueError(f"wav: zero channels/rate (ch={ch}, rate={rate})")
-    if audio_format == _FMT_IMA:
-        if bits != 4:
-            raise ValueError(f"ima adpcm wav must be 4-bit, header says {bits}")
-        samples = _ima_decode_blocks(raw, ch, block_align)
-        if fact is not None and len(fact) >= 4:
-            (n_true,) = struct.unpack("<I", fact[:4])
-            if n_true > len(samples):
-                raise ValueError("wav: fact count exceeds decoded samples")
-            samples = samples[:n_true]
-        return samples, rate
-    if audio_format in (_FMT_MULAW, _FMT_ALAW):
-        if bits != 8:
-            raise ValueError(f"G.711 wav must be 8-bit, header says {bits}")
-        table = MULAW_TABLE if audio_format == _FMT_MULAW else ALAW_TABLE
-        samples = table[np.frombuffer(raw, dtype=np.uint8)]
-    elif audio_format == _FMT_FLOAT:
-        if bits not in (32, 64):
-            raise ValueError(f"float wav must be 32/64-bit, header says {bits}")
-        step = bits // 8
-        nb = len(raw) - len(raw) % step
-        samples = np.frombuffer(
-            raw[:nb], dtype="<f4" if bits == 32 else "<f8"
-        ).astype(np.float64)
-        # hostile-stream guard: NaN/inf and absurd magnitudes would turn
-        # the downstream int feature math into UB — malformed by contract
-        if samples.size and (
-            not np.isfinite(samples).all() or np.abs(samples).max() > 8.0
-        ):
-            raise ValueError("float wav: non-finite or out-of-range samples")
-        samples = samples[: (len(samples) // ch) * ch].reshape(-1, ch)
-        if fact is not None and len(fact) >= 4:
-            (n_true,) = struct.unpack("<I", fact[:4])
-            if n_true > len(samples):
-                raise ValueError("wav: fact count exceeds decoded samples")
-            samples = samples[:n_true]
-        return samples, rate
-    elif audio_format != 1:
-        raise NotImplementedError(
-            f"non-PCM wav (format {audio_format}) unsupported — stub territory"
-        )
-    elif bits == 24:
-        # 3-byte little-endian signed: widen to int32 with sign extension
-        n3 = len(raw) - len(raw) % 3
-        b = np.frombuffer(raw[:n3], dtype=np.uint8).reshape(-1, 3)
-        wide = np.zeros((b.shape[0], 4), dtype=np.uint8)
-        wide[:, 1:] = b  # low byte into bits 8..31, then arithmetic >> 8
-        samples = wide.view("<i4").ravel() >> 8
-    elif bits not in _DTYPES:
-        raise NotImplementedError(f"{bits}-bit PCM unsupported")
-    else:
-        samples = np.frombuffer(raw, dtype=_DTYPES[bits])
-        if bits == 8:
-            # 8-bit PCM is UNSIGNED, biased at 128 (WAV spec) — convert to
-            # signed so zero-crossing/abs features mean what they say
-            samples = samples.astype(np.int16) - 128
-    samples = samples[: (len(samples) // ch) * ch].reshape(-1, ch)
-    return samples, rate

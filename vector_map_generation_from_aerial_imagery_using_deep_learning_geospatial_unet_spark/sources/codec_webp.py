@@ -12,7 +12,7 @@ incl. sub-byte pixel bundling) applied in reverse bitstream order.
 
 The encoder is fixture-grade but emits a fully spec-valid stream: no
 transforms, no cache, literal-only, fixed 8-bit codes for used channels
-and 1-symbol simple codes for constant ones.  Like the GIF/JPEG/WAV
+and 1-symbol simple codes for constant ones.  Like the GIF/JPEG
 codecs, constant tables here (distance map, code-length order) are
 mandated by the public spec, not copied code.
 
