@@ -3,13 +3,14 @@
 ``entry(spark)`` — flagship pipeline smoke at sf0.001.
 ``queries()`` / ``oracle_sql()`` — per-operator correctness pairs; every
 SQL-checkable query derives its geo inputs with pure arithmetic from the
-pre-registered tables (part/customer/events/...), so the DuckDB oracle
+pre-registered ``DRIVER_TABLES``, so the DuckDB oracle
 computes the identical result analytically.  See SURVEY.md §2 for the
 operator inventory these cover.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,9 +23,16 @@ from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_un
 
 CFG = vm.DEFAULT_CONFIG
 
+# The driver tables the gates and oracles read, one parquet each under the
+# sf dir; tools/compare_oracle.py registers the same tuple as DuckDB views.
+DRIVER_TABLES = ("part", "customer", "events")
+
+# Frozen oracle expectations, read from the checkout this module lives in.
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
+
 
 def _register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in ("part", "customer", "events"):
+    for t in DRIVER_TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
 
 
@@ -300,7 +308,7 @@ def q_dice_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------- #
-# text / dedup / similarity / pyramid suite
+# skeleton / pyramid suite
 # ---------------------------------------------------------------------- #
 
 def _skeleton_px_counts(sk: DataFrame) -> DataFrame:
@@ -346,140 +354,6 @@ def q_skeletonize_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="bars", limit=60)
     return _skeleton_px_counts(raster.skeletonize_stage(imgs, CFG))
-
-
-def q_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import text as T
-
-    return T.exact_dedup(T.corpus(spark, sf_dir))
-
-
-def q_minhash_signature(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import text as T
-
-    return T.minhash_signature(T.corpus(spark, sf_dir))
-
-
-def q_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import text as T
-
-    return T.lsh_candidate_pairs(T.minhash_signature(T.corpus(spark, sf_dir)))
-
-
-def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import text as T
-
-    c = T.corpus(spark, sf_dir)
-    pairs = T.lsh_candidate_pairs(T.minhash_signature(c))
-    return T.ngram_jaccard_pairs(c, pairs)
-
-
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import text as T
-
-    return T.simhash32(T.corpus(spark, sf_dir))
-
-
-def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import text as T
-
-    return T.text_stats(T.corpus(spark, sf_dir))
-
-
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import text as T
-
-    return T.fingerprint(T.corpus(spark, sf_dir))
-
-
-def q_lang_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import text as T
-
-    return T.lang_stats(T.corpus(spark, sf_dir))
-
-
-def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID n-gram heuristic (build-brief operator): deterministic
-    integer scoring, exact SQL twin; discrimination on real multilingual
-    snippets is pinned in tests/test_text_ops.py."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import text as T
-
-    return T.lang_id(T.corpus(spark, sf_dir))
-
-
-def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries_df = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    return S.ann_bruteforce_topk(queries_df, emb.select("vec_id", "embedding"), k=10).select(
-        "qid", "rank", "vec_id"
-    )
-
-
-def q_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed ANN (scale path) — deterministic hyperplanes make the
-    bucketing SQL-expressible: exact oracle (_ann_lsh_sql); recall vs brute
-    force additionally pinned in pytest."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries_df = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    # 16 probe-exploded queries: broadcast them so the corpus is scored
-    # straight off its scan (the bucket equi-join stays the scale default)
-    return S.ann_lsh_topk(
-        queries_df, emb.select("vec_id", "embedding"), k=10, dim=64,
-        broadcast_queries=True,
-    ).select("qid", "rank", "vec_id")
-
-
-def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF inverted-list ANN (scale path #2), exact-gated (round-3): the
-    deterministic Lloyd quantizer (6-decimal-rounded components, so the
-    result is reproducible across runs/parallelism) is frozen to
-    ``fixtures/ivf_centroids_sf0_01.parquet`` by tools/build_ivf_fixture.py;
-    the DuckDB oracle re-derives list assignment, probe selection and the
-    final ranking from that side table in pure SQL.  Recall vs brute force
-    additionally pinned in pytest."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries_df = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    return S.ann_ivf_topk(
-        queries_df, emb.select("vec_id", "embedding"), k=10,
-        n_centroids=16, nprobe=4,
-    ).select("qid", "rank", "vec_id")
-
-
-def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
-        F.col("vec_id") < 1000
-    )
-    # synthetic embeddings are near-orthogonal (max pairwise cos ~0.51);
-    # 0.35 marks the top ~0.1% most-similar pairs as "near-dups"
-    return S.embedding_near_dup_pairs(emb, threshold=0.35).select("id_a", "id_b")
-
-
-def q_embedding_near_dup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucket-pruned near-dup (scale path) — deterministic buckets give
-    it an exact oracle (_near_dup_lsh_sql); subset+recall vs the exact pair
-    set additionally pinned in pytest."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import similarity as S
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
-        F.col("vec_id") < 1000
-    )
-    return S.embedding_near_dup_pairs_lsh(emb, threshold=0.35, dim=64).select(
-        "id_a", "id_b"
-    )
 
 
 def q_pyramid_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1643,7 +1517,7 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "stream_dedup": q_stream_dedup,
     "stream_completion": q_stream_completion,
     "multimodal_tiff_quarantine": q_multimodal_tiff_quarantine,
-    # --- previously driver-evidenced, cheap metadata/text gates ----------- #
+    # --- previously driver-evidenced, cheap metadata gates ---------------- #
     "tile_counts": q_tile_counts,
     "gen_tiles": q_gen_tiles,
     "gen_tiles_overlap20": q_gen_tiles_overlap20,
@@ -1652,20 +1526,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "pyramid_meta": q_pyramid_meta,
     "pyramid_tiles": q_pyramid_tiles,
     "multires_meta": q_multires_meta,
-    "exact_dedup": q_exact_dedup,
-    "minhash_signature": q_minhash_signature,
-    "lsh_pairs": q_lsh_pairs,
-    "ngram_jaccard": q_ngram_jaccard,
-    "simhash": q_simhash,
-    "text_stats": q_text_stats,
-    "fingerprint": q_fingerprint,
-    "lang_stats": q_lang_stats,
-    "lang_id": q_lang_id,
-    "ann_topk": q_ann_topk,
-    "ann_lsh_topk": q_ann_lsh_topk,
-    "ann_ivf_topk": q_ann_ivf_topk,
-    "embedding_near_dup": q_embedding_near_dup,
-    "embedding_near_dup_lsh": q_embedding_near_dup_lsh,
     "gif_frames": q_gif_frames,
     "multimodal_features": q_multimodal_features,
     "multimodal_jpeg": q_multimodal_jpeg,
@@ -1764,26 +1624,6 @@ FROM images_meta""",
         "pipeline_watershed": _pipeline_watershed_sql(),
         "dice_jaccard": _dice_jaccard_sql(),
         "training_tensors": _training_tensors_sql(),
-        "exact_dedup": "WITH " + T.EXACT_DEDUP_SQL,
-        "minhash_signature": "WITH " + T.minhash_signature_sql(),
-        "lsh_pairs": "WITH " + T.lsh_candidate_pairs_sql(),
-        "ngram_jaccard": _ngram_jaccard_sql(),
-        "simhash": "WITH " + T.simhash32_sql(),
-        "text_stats": "WITH " + T.TEXT_STATS_SQL,
-        "fingerprint": "WITH " + T.fingerprint_sql(),
-        "lang_stats": "WITH " + T.LANG_STATS_SQL,
-        "lang_id": "WITH " + T.lang_id_sql(),
-        "ann_topk": """
-WITH q AS (SELECT vec_id AS qid, embedding AS qvec FROM embeddings WHERE vec_id < 16),
-cand AS (
-  SELECT q.qid, e.vec_id,
-    row_number() OVER (
-      PARTITION BY q.qid
-      ORDER BY list_cosine_similarity(q.qvec, e.embedding) DESC, e.vec_id
-    ) AS rank
-  FROM q CROSS JOIN embeddings e
-)
-SELECT qid, CAST(rank AS INT) AS rank, vec_id FROM cand WHERE rank <= 10""",
         "pyramid_meta": derived.with_ctes(
             derived.IMAGES_META_SQL,
             _pyramid_sql(5),
@@ -1801,16 +1641,6 @@ SELECT qid, CAST(rank AS INT) AS rank, vec_id FROM cand WHERE rank <= 10""",
             _multires_sql(),
             body="SELECT image_id, res_idx, resolution, rw, rh FROM multires",
         ),
-        "embedding_near_dup": """
-WITH e AS (SELECT * FROM embeddings WHERE vec_id < 1000)
-SELECT a.vec_id AS id_a, b.vec_id AS id_b
-FROM e a JOIN e b ON a.vec_id < b.vec_id
-WHERE list_cosine_similarity(a.embedding, b.embedding) >= 0.35""",
-        # the LSH hyperplanes are deterministic arithmetic -> the bucket ids
-        # are SQL-expressible and both LSH paths get exact oracles
-        "ann_lsh_topk": _ann_lsh_sql(),
-        "embedding_near_dup_lsh": _near_dup_lsh_sql(),
-        "ann_ivf_topk": _ann_ivf_sql(),
         "edt_weight_hist": _edt_weight_hist_sql(),
         "watershed_split": _watershed_split_sql(),
         "skeletonize_bars": _skeletonize_bars_sql(),
@@ -1901,9 +1731,6 @@ WHERE p.px > t.tminx AND p.px < t.tmaxx
     }
 
 
-from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import text as T
-
-
 def _pyramid_sql(levels: int) -> str:
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators.pyramid import pyramid_meta_sql
 
@@ -1914,124 +1741,6 @@ def _multires_sql() -> str:
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators.pyramid import multires_meta_sql
 
     return multires_meta_sql()
-
-
-def _ann_lsh_sql() -> str:
-    """DuckDB twin of q_ann_lsh_topk: same deterministic hyperplane buckets
-    (inlined as literals), same multiprobe masks, same rank/tie-break."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import similarity as S
-
-    b = S.lsh_bucket_sql("embedding", 64)
-    return f"""
-WITH cb AS (
-  SELECT vec_id, embedding, {b} AS bucket FROM embeddings
-),
-q AS (
-  SELECT vec_id AS qid, embedding AS qvec, bucket AS bucket0
-  FROM cb WHERE vec_id < 16
-),
-qp AS (
-  SELECT qid, qvec, xor(bucket0, m) AS bucket
-  FROM q, (SELECT unnest({S.probe_masks_sql(1)}) AS m)
-),
-cand AS (
-  SELECT DISTINCT qp.qid, qp.qvec, cb.vec_id, cb.embedding
-  FROM qp JOIN cb USING (bucket)
-),
-ranked AS (
-  SELECT qid, vec_id,
-    row_number() OVER (
-      PARTITION BY qid
-      ORDER BY list_cosine_similarity(qvec, embedding) DESC, vec_id
-    ) AS rank
-  FROM cand
-)
-SELECT qid, CAST(rank AS INT) AS rank, vec_id FROM ranked WHERE rank <= 10"""
-
-
-_IVF_FIXTURE = "/root/repo/fixtures/ivf_centroids_sf0_01.parquet"
-
-
-def _ann_ivf_sql() -> str:
-    """DuckDB twin of q_ann_ivf_topk over the frozen quantizer
-    (tools/build_ivf_fixture.py): nearest-centroid list assignment
-    (tie -> smallest cent_id, matching the engine's max_by struct), nprobe=4
-    probe lists per query, exact cosine rank within the probed lists.
-    Pinned to the sf0.01 corpus the driver's correctness gate runs on."""
-    return f"""
-WITH cents AS (
-  SELECT cent_id, cvec FROM read_parquet('{_IVF_FIXTURE}')
-),
-lists AS (
-  SELECT vec_id, embedding, cent_id FROM (
-    SELECT e.vec_id, e.embedding, c.cent_id,
-      row_number() OVER (PARTITION BY e.vec_id
-        ORDER BY list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), c.cvec) DESC,
-                 c.cent_id) AS rn
-    FROM embeddings e CROSS JOIN cents c
-  ) WHERE rn = 1
-),
-probes AS (
-  SELECT qid, qvec, cent_id FROM (
-    SELECT q.vec_id AS qid, q.embedding AS qvec, c.cent_id,
-      row_number() OVER (PARTITION BY q.vec_id
-        ORDER BY list_cosine_similarity(CAST(q.embedding AS DOUBLE[]), c.cvec) DESC,
-                 c.cent_id) AS rn
-    FROM embeddings q CROSS JOIN cents c WHERE q.vec_id < 16
-  ) WHERE rn <= 4
-),
-cand AS (
-  SELECT p.qid, l.vec_id,
-    row_number() OVER (PARTITION BY p.qid
-      ORDER BY list_cosine_similarity(p.qvec, l.embedding) DESC, l.vec_id) AS rank
-  FROM probes p JOIN lists l USING (cent_id)
-)
-SELECT qid, CAST(rank AS INT) AS rank, vec_id FROM cand WHERE rank <= 10"""
-
-
-def _near_dup_lsh_sql() -> str:
-    """DuckDB twin of q_embedding_near_dup_lsh: bucket-or-multiprobe
-    candidate pairs, then the exact cosine threshold."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import similarity as S
-
-    b = S.lsh_bucket_sql("embedding", 64)
-    return f"""
-WITH e AS (
-  SELECT vec_id, embedding, {b} AS bucket0
-  FROM embeddings WHERE vec_id < 1000
-),
-a AS (
-  SELECT vec_id AS id_a, embedding AS vec_a, xor(bucket0, m) AS bucket
-  FROM e, (SELECT unnest({S.probe_masks_sql(1)}) AS m)
-),
-b AS (
-  SELECT vec_id AS id_b, embedding AS vec_b, bucket0 AS bucket FROM e
-),
-cand AS (
-  SELECT DISTINCT id_a, id_b, vec_a, vec_b
-  FROM a JOIN b USING (bucket) WHERE id_a < id_b
-)
-SELECT id_a, id_b FROM cand
-WHERE list_cosine_similarity(vec_a, vec_b) >= 0.35"""
-
-
-def _ngram_jaccard_sql() -> str:
-    """LSH candidate pairs + exact shingle-set Jaccard."""
-    return (
-        "WITH "
-        + T._lsh_ctes()
-        + """,
-sh_list AS (
-  SELECT cid, list_distinct(list(substr(text, CAST(g AS INT), 5))) AS sh
-  FROM sh0 GROUP BY cid
-)
-SELECT p.cid_a, p.cid_b,
-  CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-    / len(list_distinct(list_concat(a.sh, b.sh))) AS jaccard
-FROM pairs p
-JOIN sh_list a ON a.cid = p.cid_a
-JOIN sh_list b ON b.cid = p.cid_b"""
-    )
 
 
 def _pipeline_polygons_sql() -> str:
@@ -2472,13 +2181,13 @@ JOIN blob bl USING (image_id)"""
     )
 
 
-_MM_THUMB_FIXTURE = "/root/repo/fixtures/multimodal_thumb_sf0_01.parquet"
-_MM_JPEG_FIXTURE = "/root/repo/fixtures/multimodal_jpeg_sf0_01.parquet"
-_MM_TIFF_JPEG_FIXTURE = "/root/repo/fixtures/multimodal_tiff_jpeg_sf0_01.parquet"
-_REPROJECT_FIXTURE = "/root/repo/fixtures/reproject_extents_sf0_01.parquet"
+_MM_THUMB_FIXTURE = f"{FIXTURES}/multimodal_thumb_sf0_01.parquet"
+_MM_JPEG_FIXTURE = f"{FIXTURES}/multimodal_jpeg_sf0_01.parquet"
+_MM_TIFF_JPEG_FIXTURE = f"{FIXTURES}/multimodal_tiff_jpeg_sf0_01.parquet"
+_REPROJECT_FIXTURE = f"{FIXTURES}/reproject_extents_sf0_01.parquet"
 
 
-_SKELETON_FIXTURE = "/root/repo/fixtures/skeleton_sf0_01.parquet"
+_SKELETON_FIXTURE = f"{FIXTURES}/skeleton_sf0_01.parquet"
 
 
 def _skeletonize_sql() -> str:
@@ -2491,7 +2200,7 @@ SELECT image_id, skeleton_px
 FROM read_parquet('{_SKELETON_FIXTURE}')"""
 
 
-_PHASH_FIXTURE = "/root/repo/fixtures/phash_sf0_01.parquet"
+_PHASH_FIXTURE = f"{FIXTURES}/phash_sf0_01.parquet"
 
 
 def _phash_compute_sql() -> str:

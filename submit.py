@@ -1,10 +1,10 @@
 """spark-submit entry point (north_rule: "ships as spark-submit --py-files
 modules and runs at N and 4N executors").
 
-Package the engine and run the flagship raster->vector pipeline on any
-cluster:
+Package the engine (from the repo root) and run the flagship raster->vector
+pipeline on any cluster:
 
-    cd /root/repo && zip -qr /tmp/engine.zip \
+    zip -qr /tmp/engine.zip \
         vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark
     spark-submit --master <cluster> --py-files /tmp/engine.zip submit.py \
         --images /data/images_parquet --output /data/out \

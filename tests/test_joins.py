@@ -77,16 +77,6 @@ def test_pip_join_vs_bruteforce(spark, geo):
     assert got == exp and len(exp) > 20
 
 
-def test_pip_join_salted_matches(spark, geo):
-    _, _, pdf, gdf = geo
-    plain = {(r["pt_id"], r["fp_id"]) for r in joins.pip_join(pdf, gdf, GRID).collect()}
-    salted = {
-        (r["pt_id"], r["fp_id"])
-        for r in joins.pip_join(pdf, gdf, GRID, salt=4, broadcast_polygons=True).collect()
-    }
-    assert plain == salted
-
-
 def test_bbox_range_join_vs_bruteforce_and_exactly_once(spark, geo):
     _, polys, _, gdf = geo
     left = gdf.select("fp_id", "minx", "miny", "maxx", "maxy")
@@ -186,29 +176,3 @@ def test_cell_parent_chains_resolutions(spark):
     assert (r["c1"] % _IY_SHIFT) == (r["c0"] % _IY_SHIFT) // 2
     assert (r["c2"] % _IY_SHIFT) == (r["c1"] % _IY_SHIFT) // 2
 
-
-def test_pip_join_auto_salt_matches_and_detects_skew(spark, geo):
-    """salt='auto' derives the factor from the cell histogram: a hot cell
-    triggers salting (>1), the result stays identical to unsalted."""
-    pts, polys, pdf, gdf = geo
-    # pathological probe skew: pile 2000 extra points into one cell
-    hot = [(f"h{i:04d}", 3.1, 3.1) for i in range(2000)]
-    skewed = pdf.unionByName(
-        spark.createDataFrame(hot, "pt_id string, px double, py double")
-    )
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.functions.cellindex import with_cell
-
-    assert joins._auto_salt(with_cell(skewed, GRID, "px", "py")) > 1
-    assert joins._auto_salt(with_cell(pdf, GRID, "px", "py")) == 1
-
-    plain = {
-        (r["pt_id"], r["fp_id"])
-        for r in joins.pip_join(skewed, gdf, GRID, broadcast_polygons=True).collect()
-    }
-    auto = {
-        (r["pt_id"], r["fp_id"])
-        for r in joins.pip_join(
-            skewed, gdf, GRID, salt="auto", broadcast_polygons=True
-        ).collect()
-    }
-    assert plain == auto

@@ -131,133 +131,13 @@ def test_pyramid_tiles_single_codegen_no_shuffle(spark):
     assert "Exchange" not in p
 
 
-def test_lang_id_stays_jvm_side_map_only(spark):
-    """Language-ID must be a map-side JVM operator: no Python eval nodes,
-    no exchanges — it streams off the scan at any corpus scale."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import text as T
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet").select(
-        F.col("doc_id").alias("cid"), "text"
-    )
-    p = plan(T.lang_id(docs))
-    assert "Exchange" not in p
-    for node in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas"):
-        assert node not in p
-
-
-def test_near_dup_block_triangle_no_cartesian(spark):
-    """The exact near-dup plan must be the block-triangle shape: a
-    broadcast of the tiny block-pair relation, ONE aggregate-side exchange
-    into the applyInPandas groups, and no BroadcastNestedLoopJoin /
-    CartesianProduct anywhere (the O(n^2) work happens as BLAS inside the
-    groups, not as a join)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import similarity as SIM
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet").select(
-        F.col("vec_id"), F.col("embedding")
-    )
-    p = plan(SIM.embedding_near_dup_pairs(emb, 0.9))
-    assert "CartesianProduct" not in p
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "FlatMapGroupsInPandas" in p
-    assert "BroadcastExchange" in p  # the B(B+1)/2 block-pair relation
-
-
-def test_ann_lsh_topk_single_exchange_for_both_windows(spark):
-    """Probe-dedup and top-k rank must share one clustering: after the
-    explicit repartition on qid, neither window adds its own Exchange
-    (hashpartitioning(qid) satisfies the (qid, cid) window distribution)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import similarity as SIM
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qs = emb.limit(4).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    p = plan(SIM.ann_lsh_topk(qs, emb, k=5, dim=64))
-    # exchanges: scan-side shuffles for the bucket equi-join + exactly ONE
-    # hashpartitioning(qid) for both windows — counting the window side:
-    assert p.count("hashpartitioning(qid") == 1
-    # both windows present, back to back, no exchange between them
-    w1 = p.index("Window")
-    w2 = p.index("Window", w1 + 1)
-    assert "Exchange" not in p[w1:w2]
-
-
-def test_ann_ivf_no_assignment_shuffle(spark):
-    """IVF folds the literal quantizer into scan-side projections: list
-    assignment and probe selection add NO join and NO exchange of their
-    own — the plan's only joins/exchanges serve the candidate equi-join
-    and the final per-query rank window.  (The previous formulation paid
-    a corpus x centroids BroadcastHashJoin plus a full-corpus
-    HashAggregate exchange before any candidate was scored.)"""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import similarity as SIM
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    qs = emb.limit(4).select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    import re
-
-    p = plan(SIM.ann_ivf_topk(qs, emb, k=5, n_centroids=4, nprobe=2))
-    # exactly one join in the whole plan: probes x lists on cent_id
-    # (formatted mode prints each op once in the tree and once in the
-    # numbered detail section — count the numbered entries)
-    joins_total = len(re.findall(
-        r"\(\d+\) (?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)", p
-    ))
-    assert joins_total == 1, p
-    # assignment is a projection, not an aggregation over the corpus
-    assert "HashAggregate" not in p, p
-    assert "max_by" not in p, p
-
-
-def test_lsh_pairs_single_corpus_pass(spark):
-    """LSH banding must NOT re-evaluate the signature aggregation per band
-    per join side (the union-self-join shape cost 8 corpus passes): one
-    sig lineage, band structs exploded from it, pairs enumerated inside
-    the (band, bkey) buckets.  Pinned: one FileScan of the documents
-    table, no join operator at all."""
-    import re
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import text as T
-
-    c = spark.read.parquet(f"{SF}/documents.parquet").selectExpr(
-        "doc_id AS cid", "text"
-    )
-    p = plan(T.lsh_candidate_pairs(T.minhash_signature(c)))
-    assert len(re.findall(r"\(\d+\) Scan parquet", p)) == 1, p
-    assert not re.findall(
-        r"\(\d+\) (?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)", p
-    ), p
-
-
-def test_exact_dedup_one_pass_one_exchange(spark):
-    """Group stats ride a window, not a groupBy + join-back: one scan of
-    the corpus, one exchange, no join."""
-    import re
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import text as T
-
-    c = spark.read.parquet(f"{SF}/documents.parquet").selectExpr(
-        "doc_id AS cid", "text"
-    )
-    p = plan(T.exact_dedup(c))
-    assert len(re.findall(r"\(\d+\) Scan parquet", p)) == 1, p
-    assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, p
-    assert not re.findall(
-        r"\(\d+\) (?:BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin)", p
-    ), p
-
-
 def test_geotiff_extents_single_pass_one_exchange(spark):
     """S3 tag round-trip gate: one parquet scan, exactly the one pinned
     repartition (CPU spread for the Python encode stage), no joins or
     aggregates — the GeoTIFF write+read never shuffles data it doesn't
     have to."""
     import re
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
 
     p = plan(E.q_geotiff_extents(spark, SF))
@@ -298,9 +178,7 @@ def test_read_windows_never_broadcasts_blobs(spark):
     count, which the SMJ reuses (ENSURE_REQUIREMENTS adds none on that
     side)."""
     import re
-    import sys
 
-    sys.path.insert(0, "/root/repo")
     import __spark_entry__ as E
 
     p = plan(E.q_window_chips(spark, SF))

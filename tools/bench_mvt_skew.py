@@ -1,9 +1,10 @@
 """Pathological-skew study for the MVT tile-keyed groupBy (BENCH.md §skew).
 
 The vector-tile sink's per-tile assembly is ONE applyInPandas group per
-(tx, ty) key.  Unlike the PIP join (where salting/AQE split a hot cell's
-JOIN work), a hot TILE cannot be split without breaking tile semantics:
-every feature of a tile must meet in one task to produce one blob.  This
+(tx, ty) key.  Unlike the PIP join (where AQE skew-join splitting divides
+a hot cell's JOIN work), a hot TILE cannot be split without breaking tile
+semantics: every feature of a tile must meet in one task to produce one
+blob.  This
 tool measures the worst case — N small rects ALL inside one z=3 tile —
 against a uniform layout of the same N, and the two real mitigations:
 
@@ -17,10 +18,11 @@ Run: python tools/bench_mvt_skew.py  (local[32], ~2 min, prints a table).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

@@ -9,7 +9,9 @@ row order does not matter).  Usage:
 Dtypes are compared by kind, the rule perfbench's oracle check uses:
 integer widths may differ (DuckDB types ``generate_series`` BIGINT where
 the engine emits INT), but an integer read back as a float (an uncast
-DuckDB ``SUM``, typed HUGEINT) is a different kind and fails.
+DuckDB ``SUM``, typed HUGEINT) is a different kind and fails.  A name
+that is not a gate fails before Spark starts.  The exit status is non-zero
+on any FAIL.
 """
 
 from __future__ import annotations
@@ -21,11 +23,6 @@ import duckdb
 import pandas as pd
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents "
-    "embeddings"
-).split()
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -62,24 +59,25 @@ def main() -> None:
 
     oracles = E.oracle_sql()
     if names == ["all"]:
-        names = [n for n in E.queries() if n in oracles]
+        names = list(E.QUERIES)
+    unknown = [n for n in names if n not in oracles]
+    if unknown:
+        for name in unknown:
+            print(f"{name}: FAIL not a gate")
+        sys.exit(1)
 
     spark = vm.get_spark(app_name="cmp", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.execute(
-                f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
+    for t in E.DRIVER_TABLES:
+        con.execute(
+            f"CREATE OR REPLACE VIEW {t} AS "
+            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
 
     qs = E.queries()
     failed = []
     for name in names:
-        if name not in oracles:
-            print(f"{name}: NO ORACLE (rows-only)")
-            continue
         s = canon(qs[name](spark, sf_dir).toPandas())
         o = canon(con.execute(oracles[name]).df())
         ok_rows = len(s) == len(o)

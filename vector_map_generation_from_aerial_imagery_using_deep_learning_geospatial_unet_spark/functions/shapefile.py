@@ -10,7 +10,7 @@ downstream GIS tooling can read the engine's output directly.
 Scope: shape type 5 (Polygon), 2-D, dBASE III numeric attributes.  One
 shapefile is one ordinary file triple (.shp/.shx/.dbf) — inherently a
 single-writer format, so the sink in ``operators/sinks.py`` streams rows
-through the driver with ``toLocalIterator`` and documents parquet as the
+through the driver with ``toLocalIterator``; parquet is the documented
 scale path.
 """
 

@@ -1,8 +1,7 @@
 """Generic distributed connected components + dedup-keep-one.
 
-Every near-dup detector in this engine emits PAIRS — pHash Hamming
-(operators/imagehash.py), MinHash-LSH (text.py), embedding cosine
-(similarity.py) — but a dedup pipeline needs GROUPS: transitive
+The engine's near-dup detector, pHash Hamming (operators/imagehash.py),
+emits PAIRS, but a dedup pipeline needs GROUPS: transitive
 closures of the pair relation, one canonical survivor each.  This
 module closes that gap with a pure-DataFrame connected-components
 operator (edge list in, (id, component) out) and the keep-one filter

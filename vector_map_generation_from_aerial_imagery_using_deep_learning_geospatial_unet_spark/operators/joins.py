@@ -14,11 +14,8 @@ three operators, all built on the cell equi-join prefilter from
   with doubling radius; the per-round guarantee is the standard grid bound
   (kth-distance < ring_radius * cell_side ⇒ no closer candidate outside).
 
-Skew policy (densely built-up cells): AQE skew-join splitting is on at the
-session level; ``pip_join(salt=...)`` additionally spreads a hot build cell
-over ``salt`` buckets by replicating the polygon side (broadcast-style
-salting), which keeps the equi-join key uniform without a second shuffle of
-the probe side.
+Skew policy (densely built-up cells): AQE skew-join splitting, on at the
+session level, splits a hot cell's join work.
 """
 
 from __future__ import annotations
@@ -124,34 +121,6 @@ def ray_cast_inside(px: Column, py: Column, ring: Column) -> Column:
     return crossings % 2 == 1
 
 
-def _auto_salt(pts_with_cell: DataFrame, cap: int = 64) -> int:
-    """Derive the salt factor from the probe side's cell histogram instead
-    of operator tuning: the join key serializes when ONE cell exceeds a
-    task-sized share of the probe rows, so
-    ``salt = ceil(max_cell / target)`` with
-    ``target = max(total / (2 x parallelism), 1000)``, clamped to [1, cap].
-
-    Capacity-based, not mean-relative: a mean-relative rule ("hottest cell
-    / 8x mean") reads a SINGLE nonempty cell holding every row as perfectly
-    uniform — exactly the densely-built-up worst case the north_rule calls
-    out.  The 1000-row floor keeps tiny datasets from salting (one task
-    handles them regardless).  One bounded pre-pass (groupBy(cell).count ->
-    2-value agg) whose partial aggregation is map-side — at any scale it
-    streams the scan once and reduces to one row."""
-    row = (
-        pts_with_cell.groupBy("cell_id")
-        .count()
-        .agg(F.max("count").alias("mx"), F.sum("count").alias("total"))
-        .collect()[0]
-    )
-    if not row["mx"]:
-        return 1
-    par = pts_with_cell.sparkSession.sparkContext.defaultParallelism
-    target = max(float(row["total"]) / (2.0 * par), 1000.0)
-    salt = int(-(-float(row["mx"]) // target))  # ceil
-    return min(max(salt, 1), cap)
-
-
 def pip_join(
     points: DataFrame,
     polygons: DataFrame,
@@ -159,7 +128,6 @@ def pip_join(
     pt_cols: tuple[str, str, str] = ("pt_id", "px", "py"),
     poly_id: str = "fp_id",
     ring_col: str = "ring",
-    salt: int | str | None = None,
     broadcast_polygons: bool = False,
 ) -> DataFrame:
     """(point, polygon) containment pairs.
@@ -169,32 +137,16 @@ def pip_join(
     their single cell, equi-join (each true pair meets in exactly one cell —
     the point's — so no dedup pass is needed).  Refine: ray-cast.
     """
-    pid, pxc, pyc = pt_cols
+    _, pxc, pyc = pt_cols
     pts = with_cell(points, grid, pxc, pyc)
     cover = explode_cover(
         polygons.select(poly_id, ring_col, "minx", "miny", "maxx", "maxy"), grid
     ).drop("minx", "miny", "maxx", "maxy")
 
-    if salt == "auto":
-        # statistics-driven: measure the cell histogram, no manual tuning
-        salt = _auto_salt(pts)
-        if salt <= 1:
-            salt = None
-    if salt:
-        # replicate the (small) polygon side over salt buckets; points pick a
-        # deterministic bucket -> hot cells fan out without a probe-side shuffle
-        cover = cover.withColumn(
-            "salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-        )
-        pts = pts.withColumn("salt", F.pmod(F.xxhash64(F.col(pid)), salt))
-        keys = ["cell_id", "salt"]
-    else:
-        keys = ["cell_id"]
-
     if broadcast_polygons:
         cover = F.broadcast(cover)
 
-    cand = pts.join(cover, keys).drop(*keys)
+    cand = pts.join(cover, "cell_id").drop("cell_id")
     inside = ray_cast_inside(F.col(pxc), F.col(pyc), F.col(ring_col))
     return cand.filter(inside).drop(ring_col)
 

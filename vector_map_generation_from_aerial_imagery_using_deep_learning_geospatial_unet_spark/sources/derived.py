@@ -1,7 +1,7 @@
 """Deterministic geo-table derivations from the driver's parquet tables.
 
 The driver's DuckDB oracle can only see the pre-registered views
-(region..embeddings), so every SQL-checkable geo query derives its
+(part, customer, events), so every SQL-checkable geo query derives its
 ``images`` / ``footprints`` / ``points`` inputs with *pure integer/decimal
 arithmetic* from those tables.  Each derivation exists twice — as a Spark
 DataFrame builder and as a DuckDB SQL CTE string — and the two are kept

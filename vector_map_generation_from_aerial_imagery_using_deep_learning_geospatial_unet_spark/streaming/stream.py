@@ -72,8 +72,7 @@ def stream_dedup_images(
     available_now: bool = True,
 ):
     """Streaming exact-dedup on ``phash``: only the first arrival of each
-    perceptual hash passes through (the streaming twin of
-    ``operators.text.exact_dedup``).
+    perceptual hash passes through.
 
     ``dropDuplicatesWithinWatermark`` keeps per-key state only for the
     watermark horizon, so state is bounded at any ingest rate — the
