@@ -183,21 +183,16 @@ def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "fp_id",
     )
-    # 15k footprints ~ a few MB exploded: broadcast kills the probe-side
-    # shuffle entirely (the shuffle path, default, is the 10^12-scale plan)
-    return joins.pip_join(
-        pts, polys, WORLD_GRID, broadcast_polygons=True
-    ).select("pt_id", "fp_id")
+    return joins.pip_join(pts, polys, WORLD_GRID).select("pt_id", "fp_id")
 
 
 def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 5-NN building lookup via k-ring expansion."""
+    """Exact 5-NN building lookup: a cell-ring bound, then an exact refine."""
     pts = derived.points_meta(spark, sf_dir)
     centers = derived.footprints_meta(spark, sf_dir).select("fp_id", "cx", "cy")
-    # 15k centers: broadcast build side (shuffle join stays the scale path)
-    return joins.knn_join(
-        pts, centers, WORLD_GRID, k=5, broadcast_centers=True
-    ).select("pt_id", "fp_id", "rank")
+    return joins.knn_join(pts, centers, WORLD_GRID, k=5).select(
+        "pt_id", "fp_id", "rank"
+    )
 
 
 def q_bbox_join(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -91,25 +91,14 @@ def test_bbox_range_join_vs_bruteforce_and_exactly_once(spark, geo):
     assert set(pairs) == exp
 
 
-# broadcast_centers=False runs the auto rule's build-side explode (points
-# outnumber centers); True forces the probe-side explode.
-@pytest.mark.parametrize(
-    "k, broadcast_centers",
-    [
-        pytest.param(k, bc, id=f"{k}-broadcast" if bc else str(k))
-        for k in (1, 3, 7)
-        for bc in (False, True)
-    ],
-)
-def test_knn_join_vs_bruteforce(spark, geo, k, broadcast_centers):
+@pytest.mark.parametrize("k", [1, 3, 7])
+def test_knn_join_vs_bruteforce(spark, geo, k):
     pts, polys, pdf, gdf = geo
     centers = spark.createDataFrame(
         [(fid, (mnx + mxx) / 2, (mny + mxy) / 2) for fid, _, mnx, mny, mxx, mxy in polys],
         "fp_id string, cx double, cy double",
     )
-    got = joins.knn_join(
-        pdf, centers, GRID, k=k, r0=1, broadcast_centers=broadcast_centers
-    ).collect()
+    got = joins.knn_join(pdf, centers, GRID, k=k).collect()
     by_pt = {}
     for r in got:
         by_pt.setdefault(r["pt_id"], []).append((r["rank"], r["fp_id"], r["dist2"]))
@@ -129,8 +118,97 @@ def test_knn_more_than_available(spark, geo):
     centers = pdf.sparkSession.createDataFrame(
         [("c1", 10.0, 10.0), ("c2", 90.0, 90.0)], "fp_id string, cx double, cy double"
     )
-    got = joins.knn_join(pdf.limit(10), centers, GRID, k=5, r0=1)
+    got = joins.knn_join(pdf.limit(10), centers, GRID, k=5)
     assert got.groupBy("pt_id").count().agg(F.max("count")).first()[0] == 2
+
+
+def _knn_layout(name, rng):
+    """(points, centers, k) of one layout that stresses the ring bound or
+    the refine box; coordinates on GRID's [0, 100) domain, cells of 6.25."""
+    pts = rng.uniform(0, 100, size=(150, 2))
+    edges = np.array([
+        (0.0, 0.0), (0.0, 100.0), (100.0, 0.0), (100.0, 100.0), (50.0, 0.0),
+        (6.25, 6.25), (12.5, 43.75), (25.0, 25.0), (93.75, 50.0), (62.5, 100.0),
+    ])
+    if name == "one_cell":  # every center in cell (8, 8)
+        return pts, rng.uniform(50.0, 56.25, size=(30, 2)), 4
+    if name == "far_corner":  # points at (0, 0) need a ring over the domain
+        return np.vstack([pts, edges]), rng.uniform(95.0, 100.0, size=(8, 2)), 3
+    if name == "duplicates":  # 4 centers per spot: rank ties break on id
+        spots = np.array([(30.0, 40.0), (36.25, 40.0), (60.0, 12.5)])
+        return np.vstack([pts, edges]), np.repeat(spots, 4, axis=0), 5
+    if name == "cell_edges":
+        # centers on cell corners; points share a center's row or column,
+        # so the k-th neighbour often sits exactly on the refine box's edge
+        lattice = np.array([(6.25 * i, 6.25 * j) for i in range(0, 17, 4) for j in range(0, 17, 3)])
+        rows = np.column_stack([rng.uniform(0, 100, 80), rng.choice(lattice[:, 1], 80)])
+        cols = np.column_stack([rng.choice(lattice[:, 0], 40), rng.uniform(0, 100, 40)])
+        return np.vstack([edges, rows, cols]), lattice, 2
+    if name == "k_over_n":
+        return pts, rng.uniform(0, 100, size=(3, 2)), 7
+    assert name == "no_centers"
+    return pts, np.zeros((0, 2)), 3
+
+
+@pytest.mark.parametrize(
+    "layout",
+    ["one_cell", "far_corner", "duplicates", "cell_edges", "k_over_n", "no_centers"],
+)
+def test_knn_join_adversarial_layouts(spark, layout):
+    """Exact against a NumPy brute force: same centers, same dist2 bits, same
+    ranks (ties ordered by center id)."""
+    pts, cts, k = _knn_layout(layout, np.random.RandomState(17))
+    # ids in shuffled order, so the tie-break is not the input order
+    cids = [f"c{i:03d}" for i in np.random.RandomState(3).permutation(len(cts))]
+    pdf = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(pts)],
+        "pt_id long, px double, py double",
+    )
+    cdf = spark.createDataFrame(
+        [(c, float(x), float(y)) for c, (x, y) in zip(cids, cts)],
+        "fp_id string, cx double, cy double",
+    )
+    out = joins.knn_join(pdf, cdf, GRID, k=k)
+    assert out.columns == ["pt_id", "px", "py", "fp_id", "dist2", "rank"]
+    got = sorted((r["pt_id"], r["rank"], r["fp_id"], r["dist2"]) for r in out.collect())
+
+    exp = []
+    for i, (px, py) in enumerate(pts):
+        d2 = (px - cts[:, 0]) * (px - cts[:, 0]) + (py - cts[:, 1]) * (py - cts[:, 1])
+        order = sorted(range(len(cts)), key=lambda j: (d2[j], cids[j]))[:k]
+        exp += [(i, r + 1, cids[j], float(d2[j])) for r, j in enumerate(order)]
+    assert got == sorted(exp)
+    assert len(got) == len(pts) * min(k, len(cts))
+
+
+def _ring_radii_bruteforce(counts, k):
+    n = counts.shape[0]
+    out = np.zeros_like(counts)
+    for iy in range(n):
+        for ix in range(n):
+            out[iy, ix] = next(
+                r for r in range(n)
+                if counts[max(iy - r, 0):iy + r + 1, max(ix - r, 0):ix + r + 1].sum() >= k
+            )
+    return out
+
+
+@pytest.mark.parametrize("n", [1, 2, 5, 16])
+def test_ring_radii_vs_bruteforce(n):
+    """Spark-free: the summed-area search finds, per cell, the smallest
+    clamped Chebyshev ring holding k centers."""
+    rng = np.random.RandomState(n)
+    grids = [
+        rng.poisson(0.7, size=(n, n)),
+        np.zeros((n, n), np.int64),
+        np.pad(np.array([[9]]), ((n - 1, 0), (n - 1, 0))),  # one far corner
+    ]
+    for counts in grids:
+        total = int(counts.sum())
+        for k in sorted({0, min(1, total), min(2, total), total // 2, total}):
+            got = joins.ring_radii(counts, k)
+            assert got.shape == (n, n)
+            assert (got == _ring_radii_bruteforce(counts, k)).all(), (counts, k)
 
 
 def test_cellindex_properties(spark):

@@ -257,70 +257,3 @@ def test_clear_stage_then_fresh_run(spark, tmp):
     assert M.completed_units(spark, tmp, "s").count() == 0
     n2 = M.run_resumable(imgs, stage, "s", tmp).count()
     assert n2 == n1
-
-
-def test_clear_stage_migrates_legacy_unpartitioned_manifest(spark, tmp):
-    """A round-1 manifest (stage as a DATA column, files at the root) must
-    not be silently no-opped: clear_stage migrates it to the partitioned
-    layout and actually forgets the stage."""
-    legacy_rows = [
-        ("a", "img_1", 5, 1, 0, "r1", "done", 1.0),
-        ("a", "img_2", 3, 2, 0, "r1", "done", 1.0),
-        ("b", "img_1", 7, 3, 0, "r1", "done", 1.0),
-    ]
-    df = spark.createDataFrame(
-        legacy_rows,
-        "stage string, image_id string, rows long, checksum long, "
-        "partition_id int, run_id string, status string, wall_sec double",
-    ).withColumn("ts", F.current_timestamp())
-    # legacy layout: UNPARTITIONED write -> parquet files at manifest root
-    df.write.parquet(M.manifest_path(tmp))
-
-    M.clear_stage(spark, tmp, "a")
-    m = spark.read.parquet(M.manifest_path(tmp))
-    stages = {r["stage"] for r in m.select("stage").distinct().collect()}
-    assert stages == {"b"}
-    assert M.completed_units(spark, tmp, "a").count() == 0
-    assert M.completed_units(spark, tmp, "b").count() == 1
-    # migrated to the partitioned layout: stage=b subdir exists
-    import os
-
-    assert os.path.isdir(f"{M.manifest_path(tmp)}/stage=b")
-
-
-def test_resume_against_legacy_manifest_keeps_done_rows(spark, tmp):
-    """ADVICE r2 (high): appending stage=<s>/ dirs next to legacy root-level
-    parquet files made partition discovery silently read only the
-    partitioned rows — completed units flipped back to pending and their
-    prior output became invisible orphans.  Every manifest entry point now
-    migrates the legacy layout first, so resuming a round-1 manifest must
-    (a) not re-run the done units and (b) keep their output visible."""
-    imgs = images_meta(spark, SF).filter(F.col("w") % 7 == 0).limit(6)
-    calls = []
-
-    def stage(pending):
-        calls.append(pending.count())
-        return gen_tiles(pending, with_geo=False).select(
-            "image_id", "tile_id", "tiy", "tix"
-        )
-
-    # first run writes a partitioned manifest; rewrite it as the legacy
-    # (unpartitioned, stage-as-data-column) round-1 layout in place
-    n1 = M.run_resumable(imgs, stage, "s", tmp).count()
-    assert calls[-1] > 0 and n1 > 0
-    legacy = spark.read.parquet(M.manifest_path(tmp)).collect()
-    shutil.rmtree(M.manifest_path(tmp))
-    spark.createDataFrame(legacy).write.parquet(M.manifest_path(tmp))
-
-    # resume: every unit is already done -> zero pending, output unchanged
-    out2 = M.run_resumable(imgs, stage, "s", tmp)
-    assert calls[-1] == 0
-    assert out2.count() == n1
-    # and the manifest is now fully partitioned (no root-level data files)
-    import os
-
-    root_files = [
-        f for f in os.listdir(M.manifest_path(tmp)) if f.endswith(".parquet")
-    ]
-    assert root_files == []
-    assert M.completed_units(spark, tmp, "s").count() == 6

@@ -1,8 +1,9 @@
 """Physical-plan shape tests — the scale properties SURVEY.md §4 promises,
 machine-checked: predicate pushdown to the scan, column pruning, single
-whole-stage-codegen spans for metadata operators, broadcast engagement, no
-JVM-side explode in the pixel path (Arrow byte amplification), and the
-exactly-once spatial join needing no distinct."""
+whole-stage-codegen spans for metadata operators, the cell-keyed shuffle
+join, the kNN join's one job and lazy plan, no JVM-side explode in the pixel
+path (Arrow byte amplification), and the exactly-once spatial join needing
+no distinct."""
 
 from pyspark.sql import functions as F
 
@@ -71,7 +72,9 @@ def test_grouped_stages_infer_eval_type_from_hints(spark):
     assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
 
 
-def test_pip_join_broadcast_engages(spark):
+def test_pip_join_scale_plan_shuffles_on_cell(spark):
+    """With auto-broadcast off (this fixture is tiny), the PIP prefilter is
+    a shuffle join hash-partitioned on the cell key: the scale plan."""
     pts = derived.points_meta(spark, SF)
     polys = derived.footprint_rings(spark, SF).join(
         derived.footprints_with_env(spark, SF).select(
@@ -79,12 +82,6 @@ def test_pip_join_broadcast_engages(spark):
         ),
         "fp_id",
     )
-    bcast = joins.pip_join(
-        pts, polys, WORLD_GRID, broadcast_polygons=True
-    )
-    assert "BroadcastHashJoin" in plan(bcast)
-    # the default path is the shuffle join (auto-broadcast only kicks in
-    # because this fixture is tiny — disable it to see the scale plan)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         shuffle = joins.pip_join(pts, polys, WORLD_GRID)
@@ -108,15 +105,25 @@ def test_bbox_join_exactly_once_no_distinct(spark):
     assert "Deduplicate" not in p and "Distinct" not in p
 
 
-def test_knn_broadcast_engages(spark):
+def test_knn_join_one_job_lazy_plan(spark):
+    """Calling knn_join runs one job (the center count per cell) and returns
+    a lazy plan: no cached or checkpointed relation, two cell equi-joins."""
+    import re
+
     pts = derived.points_meta(spark, SF)
     centers = derived.footprints_meta(spark, SF).select("fp_id", "cx", "cy")
-    # materialize=False keeps the logical plan visible (the default eagerly
-    # localCheckpoints, which truncates lineage to a block scan)
-    out = joins.knn_join(
-        pts, centers, WORLD_GRID, k=3, broadcast_centers=True, materialize=False
-    )
-    assert "BroadcastHashJoin" in plan(out, mode="simple")
+    sc = spark.sparkContext
+    sc.setJobGroup("knn_join_call", "knn_join call")
+    try:
+        out = joins.knn_join(pts, centers, WORLD_GRID, k=3)
+        assert len(sc.statusTracker().getJobIdsForGroup("knn_join_call")) == 1
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    p = plan(out, mode="extended")
+    for cached in ("InMemoryRelation", "InMemoryTableScan", "LogicalRDD", "ExistingRDD"):
+        assert cached not in p
+    optimized = out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"Join Inner, .*\(cell_id#\d+L = cell_id#\d+L\)", optimized)) == 2
 
 
 def test_pyramid_tiles_single_codegen_no_shuffle(spark):

@@ -96,9 +96,9 @@ class CellGrid:
             )
         )
 
-    def k_ring(self, cell: Column, k: int) -> Column:
+    def k_ring(self, cell: Column, k: int | Column) -> Column:
         """array<bigint> of cells within Chebyshev distance k (grid_disk),
-        clamped at domain borders."""
+        clamped at domain borders; ``k`` may be a per-row column."""
         ix = cell % _IY_SHIFT
         iy = F.floor(cell / _IY_SHIFT) % (1 << 26)
         lo, hi = F.lit(0), F.lit(self.n - 1)

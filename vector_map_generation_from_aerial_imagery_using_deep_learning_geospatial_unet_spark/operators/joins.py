@@ -10,9 +10,9 @@ three operators, all built on the cell equi-join prefilter from
 * :func:`pip_join`        — point-in-polygon, cell prefilter + ray-casting
   refinement (:func:`ray_cast_inside`: higher-order column functions —
   fully JVM-side, whole-stage codegen, zero Python).
-* :func:`knn_join`        — exact k-nearest-neighbours via k-ring expansion
-  with doubling radius; the per-round guarantee is the standard grid bound
-  (kth-distance < ring_radius * cell_side ⇒ no closer candidate outside).
+* :func:`knn_join`        — exact k-nearest-neighbours in one lazy plan: a
+  cell-ring join bounds each point's k-th distance (rings sized from one
+  center count per cell), a box join over that bound refines exactly.
 
 Skew policy (densely built-up cells): AQE skew-join splitting, on at the
 session level, splits a hot cell's join work.
@@ -21,6 +21,7 @@ session level, splits a hot cell's join work.
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -128,24 +129,20 @@ def pip_join(
     pt_cols: tuple[str, str, str] = ("pt_id", "px", "py"),
     poly_id: str = "fp_id",
     ring_col: str = "ring",
-    broadcast_polygons: bool = False,
 ) -> DataFrame:
     """(point, polygon) containment pairs.
 
     ``polygons`` needs ``poly_id, ring_col, minx, miny, maxx, maxy``.
     Prefilter: polygon side exploded to covering cells, points hashed to
     their single cell, equi-join (each true pair meets in exactly one cell —
-    the point's — so no dedup pass is needed).  Refine: ray-cast.
+    the point's — so no dedup pass is needed).  Refine: ray-cast.  AQE
+    broadcasts the cover when it is small.
     """
     _, pxc, pyc = pt_cols
     pts = with_cell(points, grid, pxc, pyc)
     cover = explode_cover(
         polygons.select(poly_id, ring_col, "minx", "miny", "maxx", "maxy"), grid
     ).drop("minx", "miny", "maxx", "maxy")
-
-    if broadcast_polygons:
-        cover = F.broadcast(cover)
-
     cand = pts.join(cover, "cell_id").drop("cell_id")
     inside = ray_cast_inside(F.col(pxc), F.col(pyc), F.col(ring_col))
     return cand.filter(inside).drop(ring_col)
@@ -155,6 +152,28 @@ def pip_join(
 # kNN join
 # --------------------------------------------------------------------------- #
 
+def ring_radii(counts: np.ndarray, k: int) -> np.ndarray:
+    """Per cell of an (n, n) center-count grid, the smallest Chebyshev ring
+    radius whose cells (clamped at the domain border) hold at least ``k``
+    centers.  A summed-area table gives each ring's count in O(1), and ring
+    counts only grow with the radius, so a binary search over all cells at
+    once takes log2(n) passes.  Needs ``k <= counts.sum()``: radius n-1
+    covers the whole domain from any cell."""
+    n = counts.shape[0]
+    sat = np.zeros((n + 1, n + 1), np.int64)
+    sat[1:, 1:] = counts.cumsum(0).cumsum(1)
+    iy, ix = np.indices((n, n))
+    lo, hi = np.zeros((n, n), np.int64), np.full((n, n), n - 1, np.int64)
+    while (lo < hi).any():
+        mid = (lo + hi) // 2
+        y0, y1 = np.maximum(iy - mid, 0), np.minimum(iy + mid + 1, n)
+        x0, x1 = np.maximum(ix - mid, 0), np.minimum(ix + mid + 1, n)
+        held = sat[y1, x1] - sat[y0, x1] - sat[y1, x0] + sat[y0, x0]
+        hi = np.where(held >= k, mid, hi)
+        lo = np.where(held >= k, lo, mid + 1)
+    return lo
+
+
 def knn_join(
     points: DataFrame,
     centers: DataFrame,
@@ -162,133 +181,75 @@ def knn_join(
     k: int,
     pt_cols: tuple[str, str, str] = ("pt_id", "px", "py"),
     center_cols: tuple[str, str, str] = ("fp_id", "cx", "cy"),
-    r0: int | None = None,
-    broadcast_centers: bool = False,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact kNN: for each point the k nearest centers, ranked.
 
-    Output: (pt_id, px, py, fp_id, dist2, rank).  Deterministic tie-break on
-    center id.  Distributed k-ring expansion with doubling radius: each round
-    is one equi-join; points whose kth candidate is provably inside the ring
-    bound retire, the (shrinking) remainder goes another round.  Round count
-    is <= log2(grid.n) — a bounded driver loop, never a per-row loop.
-    Each round's top-k is persisted so the loop-carried lineage (probe,
-    anti-join, final union) never recomputes a candidate join.
+    Output: (pt_id, px, py, fp_id, dist2, rank), ``min(k, #centers)`` rows
+    per point, ties broken on center id.  The call runs one job, the
+    center count per cell, and returns one lazy plan of two cell
+    equi-joins (filter and refine):
 
-    ``broadcast_centers=True``: build-side broadcast of the center table
-    (use when centers fit executor memory; the default shuffle join is the
-    scale path).  Each round puts the (2r+1)^2 k-ring explode on the
-    smaller side of its equi-join (see the loop body); the candidate set
-    is the same either way.
+    1. *Upper bound.*  :func:`ring_radii` gives every cell the smallest
+       ring that holds ``k`` centers; each point joins the centers of its
+       cell's ring, and its k-th candidate distance ``d`` bounds its k-th
+       neighbour's.
+    2. *Exact refine.*  Each point joins the centers of the cells its
+       ``(px-d, py-d, px+d, py+d)`` box covers, keeps ``dist2 <= d^2`` and
+       ranks them.  Every center that close lies in the box, so the ranking
+       sees all of them.
     """
     pid, pxc, pyc = pt_cols
     cid, cxc, cyc = center_cols
-    n_centers = centers.count()
-    k_eff = min(k, n_centers)
-    if r0 is None:
-        # density-based initial radius: the ring (2r+1)^2 cells should hold
-        # ~2k centers in expectation so most points retire in round one
-        density = max(n_centers / float(grid.n * grid.n), 1e-9)
-        r0 = max(1, int(np.ceil(((2.0 * k_eff / density) ** 0.5 - 1.0) / 2.0)))
+    # one task holds every center, so the count needs no exchange (and AQE
+    # no second job); centers are the small side
+    hist = (
+        centers.coalesce(1)
+        .groupBy(grid.iy_of(F.col(cyc)).alias("iy"), grid.ix_of(F.col(cxc)).alias("ix"))
+        .count()
+        .toArrow()
+    )
+    counts = np.zeros((grid.n, grid.n), np.int64)
+    counts[hist["iy"].to_numpy(), hist["ix"].to_numpy()] = hist["count"].to_numpy()
+    k_eff = min(k, int(counts.sum()))
+    iy, ix = np.indices((grid.n, grid.n))
+    # an Arrow table plans as a LocalRelation: no Python worker scans it
+    radii = points.sparkSession.createDataFrame(
+        pa.table({"iy": iy.ravel(), "ix": ix.ravel(),
+                  "radius": ring_radii(counts, k_eff).ravel()})
+    ).select(grid.pack(F.col("ix"), F.col("iy")).alias("p_cell"), "radius")
 
-    cts = with_cell(centers, grid, cxc, cyc, out="c_cell").select(
-        cid, cxc, cyc, "c_cell"
+    cts = with_cell(centers, grid, cxc, cyc).select(cid, cxc, cyc, "cell_id")
+    pts = with_cell(points, grid, pxc, pyc, out="p_cell").select(pid, pxc, pyc, "p_cell")
+    dx, dy = F.col(pxc) - F.col(cxc), F.col(pyc) - F.col(cyc)
+    dist2 = (dx * dx + dy * dy).alias("dist2")
+
+    ring = pts.join(F.broadcast(radii), "p_cell").select(
+        pid, pxc, pyc,
+        F.explode(grid.k_ring(F.col("p_cell"), F.col("radius"))).alias("cell_id"),
     )
-    remaining = with_cell(points, grid, pxc, pyc, out="p_cell").select(
-        pid, pxc, pyc, "p_cell"
+    bound = (
+        ring.join(cts, "cell_id")
+        .groupBy(pid, pxc, pyc)
+        .agg(F.element_at(F.sort_array(F.collect_list(dist2)), k_eff).alias("d2"))
     )
-    results: list[DataFrame] = []
-    cached: list[DataFrame] = []
-    r = r0
-    # One up-front count of the probe side (a single cheap job — at scale
-    # it is a parquet-footer sum next to the candidate joins below) lets
-    # every round put the (2r+1)^2 ring explode on the genuinely smaller
-    # side; a round-number heuristic would invert the optimization for
-    # centers-heavy inputs.
-    n_remaining = points.count()
-    while True:
-        full_cover = r >= grid.n  # ring covers the whole domain -> exact
-        # The cell k-ring is symmetric (Chebyshev on the lattice), so the
-        # explode can go on EITHER side of the equi-join; put it on the
-        # smaller one.  Round one in the canonical kNN-join shape: points
-        # outnumber centers, so replicate each center over its ring —
-        # 15k x ring instead of 10^5..10^9 x ring rows.  Later rounds the
-        # un-retired remainder has usually shrunk below the center count
-        # and the explode flips to the point side.  Candidate SET is
-        # identical either way, and each (point, center) pair still
-        # matches exactly once (a point has one cell; the center's ring
-        # cells are distinct).
-        # broadcast_centers pins the explode to the PROBE side: the
-        # broadcast relation must stay n_centers rows — exploding before
-        # the broadcast would ship n_centers*(2r+1)^2 rows to every
-        # executor, quadratic in r as rounds double the radius.
-        if n_remaining > n_centers and not broadcast_centers:
-            build = cts.withColumn(
-                "cell_id", F.explode(grid.k_ring(F.col("c_cell"), r))
-            ).drop("c_cell")
-            cand = remaining.join(
-                build, F.col("p_cell") == F.col("cell_id")
-            ).drop("cell_id")
-        else:
-            build = cts.withColumnRenamed("c_cell", "cell_id")
-            if broadcast_centers:
-                build = F.broadcast(build)
-            cand = (
-                remaining.withColumn(
-                    "cell_id", F.explode(grid.k_ring(F.col("p_cell"), r))
-                )
-                .join(build, "cell_id")
-                .drop("cell_id")
-            )
-        dx, dy = F.col(pxc) - F.col(cxc), F.col(pyc) - F.col(cyc)
-        cand = cand.withColumn("dist2", dx * dx + dy * dy).drop(cxc, cyc)
-        # candidates meet a point once per shared ring cell is impossible:
-        # each center lives in exactly one cell, ring cells are distinct.
-        w = Window.partitionBy(pid).orderBy("dist2", cid)
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k_eff)
-            .persist()
-        )
-        cached.append(topk)
-        bound = (r * grid.side) ** 2
-        per_pt = topk.groupBy(pid).agg(
-            F.count("*").alias("_cnt"), F.max("dist2").alias("_kth")
-        )
-        done_pred = (F.col("_cnt") == k_eff) & (
-            F.lit(full_cover) | (F.col("_kth") < bound)
-        )
-        done_pts = per_pt.filter(done_pred).select(pid)
-        results.append(topk.join(done_pts, pid, "semi"))
-        remaining = remaining.join(done_pts, pid, "anti")
-        if full_cover:
-            break
-        # the probe also warms topk's cache, so the anti-join and the final
-        # union read cached rows instead of re-running the candidate join
-        # (the count doubles as next round's explode-side input)
-        n_remaining = remaining.count()
-        if n_remaining == 0:
-            break
-        r *= 2
-    out = results[0]
-    for df in results[1:]:
-        out = out.unionByName(df)
-    out = out.drop("p_cell")
-    if not materialize:
-        # PLAN-INSPECTION path: the round caches stay registered (they have
-        # never been computed, so nothing is pinned until an action runs).
-        # Executing this plan is NOT the intended use — the loop-carried
-        # lineage references each round's topk along multiple branches, so
-        # an uncached execution re-runs candidate joins up to exponentially
-        # in the round count.  Callers who execute it own the caches.
-        return out
-    # localCheckpoint (eager) materializes the (small) result AND truncates
-    # the loop-carried lineage, so caller actions re-read blocks instead of
-    # re-running the candidate joins.  Unlike a bare persist() handed to the
-    # caller, checkpoint blocks are released when the DataFrame is dropped —
-    # no session-lifetime executor-storage pin per knn_join call.
-    out = out.localCheckpoint(eager=True)
-    for df in cached:
-        df.unpersist()  # release every round's candidate cache
-    return out
+    # the 1e-9 pad keeps a center on a cell edge inside the box under
+    # rounding; the dist2 filter drops what the pad adds
+    d = F.sqrt(F.col("d2")) * (1.0 + 1e-9)
+    px, py = F.col(pxc), F.col(pyc)
+    box = bound.select(
+        pid, pxc, pyc, "d2",
+        F.explode(grid.polyfill_bbox(px - d, py - d, px + d, py + d)).alias("cell_id"),
+    )
+    near = (
+        box.join(cts, "cell_id")
+        .select(pid, pxc, pyc, cid, dist2, "d2")
+        .filter(F.col("dist2") <= F.col("d2"))
+    )
+    w = Window.partitionBy(pid).orderBy("dist2", cid)
+    out = (
+        near.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k_eff)
+        .select(pid, pxc, pyc, cid, "dist2", "rank")
+    )
+    # no centers (or k = 0): the output columns, no rows
+    return out if k_eff else out.limit(0)

@@ -3,8 +3,10 @@
 The driver's DuckDB oracle can only see the pre-registered views
 (part, customer, events), so every SQL-checkable geo query derives its
 ``images`` / ``footprints`` / ``points`` inputs with *pure integer/decimal
-arithmetic* from those tables.  Each derivation exists twice — as a Spark
-DataFrame builder and as a DuckDB SQL CTE string — and the two are kept
+arithmetic* from those tables.  Each DataFrame function reads only its
+table's key column, with a declared schema, so no read runs a
+schema-inference job.  Each derivation exists twice — as a Spark
+DataFrame function and as a DuckDB SQL CTE string — and the two are kept
 adjacent in this module so drift is visible; tests assert they agree.
 
 Fractional offsets (.125 / .25 / .375 — exact binary fractions) are added so
@@ -37,7 +39,7 @@ def images_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image catalog: sizes hit tile-count edge cases (w=200 exactly-one-tile
     up to 2000 px); origins tile a 50x50 grid of 210 m cells so spatial joins
     have realistic density and wrap-around stacking creates skew cells."""
-    p = spark.read.parquet(f"{sf_dir}/part.parquet")
+    p = spark.read.schema("p_partkey BIGINT").parquet(f"{sf_dir}/part.parquet")
     pk = F.col("p_partkey")
     return p.select(
         F.concat(F.lit("img_"), F.lpad(pk.cast("string"), 8, "0")).alias("image_id"),
@@ -66,7 +68,7 @@ images_meta AS (
 # --------------------------------------------------------------------------- #
 
 def footprints_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
+    c = spark.read.schema("c_custkey BIGINT").parquet(f"{sf_dir}/customer.parquet")
     ck = F.col("c_custkey")
     return c.select(
         F.concat(F.lit("fp_"), F.lpad(ck.cast("string"), 8, "0")).alias("fp_id"),
@@ -150,7 +152,7 @@ def rings_from_meta(fp: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------- #
 
 def points_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = spark.read.parquet(f"{sf_dir}/events.parquet")
+    e = spark.read.schema("event_id BIGINT").parquet(f"{sf_dir}/events.parquet")
     eid = F.col("event_id")
     return e.select(
         eid.alias("pt_id"),

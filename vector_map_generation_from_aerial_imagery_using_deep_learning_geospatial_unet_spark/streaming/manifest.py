@@ -65,7 +65,6 @@ def record_stage(
     function cannot observe it — the stage executes inside the caller's
     output write, not here); recorded per manifest row as the stage total.
     """
-    _migrate_legacy(result.sparkSession, root)
     cols = checksum_cols or [c for c in result.columns if c != key]
     per_key = (
         result.withColumn("_pid", F.spark_partition_id())
@@ -116,66 +115,10 @@ def _xor_agg(col):
     )
 
 
-def _legacy_parts(spark: SparkSession, root: str):
-    """(fs, mroot, legacy_files, has_partitioned) for the manifest dir, or
-    None when the manifest doesn't exist.  'Legacy' = parquet data files at
-    the manifest ROOT (pre-stage-partitioning layout, stage as a data
-    column).  A metadata-only listStatus — O(#stages + #legacy files)."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    mroot = jvm.org.apache.hadoop.fs.Path(manifest_path(root))
-    fs = mroot.getFileSystem(hconf)
-    if not fs.exists(mroot):
-        return None
-    legacy_files, has_partitioned = [], False
-    for st in fs.listStatus(mroot):
-        name = st.getPath().getName()
-        if st.isFile() and name.endswith(".parquet"):
-            legacy_files.append(str(st.getPath()))
-        elif st.isDirectory() and name.startswith("stage="):
-            has_partitioned = True
-    return fs, mroot, legacy_files, has_partitioned
-
-
-def _migrate_legacy(spark: SparkSession, root: str) -> None:
-    """Normalize a pre-partitioning manifest to the stage-partitioned layout
-    BEFORE any partitioned read or append touches it.
-
-    Why at every entry point (not just :func:`clear_stage`): appending
-    ``stage=<s>/`` dirs next to legacy root-level parquet files makes Spark's
-    partition discovery silently read ONLY the partitioned rows — every
-    pre-existing 'done' row vanishes, completed units flip back to pending,
-    and their output rows become invisible orphans (run_id no longer
-    recorded).  So both :func:`record_stage` (the append path) and
-    :func:`_read_manifest` (every read path) call this first.
-
-    Handles the already-mixed layout too (legacy files AND stage= dirs):
-    reads each part explicitly and unions, since a root-level read would
-    drop the legacy rows.  Crash safety: write-tmp / delete-old / rename —
-    the worst crash window leaves no manifest (everything pending →
-    recompute), never silent data loss."""
-    parts = _legacy_parts(spark, root)
-    if parts is None:
-        return
-    fs, mroot, legacy_files, has_partitioned = parts
-    if not legacy_files:
-        return
-    jvm = spark._jvm
-    m = spark.read.parquet(*legacy_files)
-    if has_partitioned:
-        part = spark.read.parquet(manifest_path(root)).select(*m.columns)
-        m = m.unionByName(part)
-    tmp = manifest_path(root) + ".migrating"
-    m.write.mode("overwrite").partitionBy("stage").parquet(tmp)
-    fs.delete(mroot, True)
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), mroot)
-
-
 def _read_manifest(spark: SparkSession, root: str) -> DataFrame | None:
     """None only when the manifest genuinely doesn't exist yet; any other
     read failure (corruption, permissions) propagates — silently treating
     it as 'nothing done' would duplicate every completed unit's output."""
-    _migrate_legacy(spark, root)
     try:
         return spark.read.parquet(manifest_path(root))
     except AnalysisException as ex:
@@ -240,12 +183,8 @@ def clear_stage(spark: SparkSession, root: str, stage: str) -> None:
 
     Scale + crash safety: the manifest is partitioned by ``stage``, so the
     rows are forgotten by deleting the single ``manifest/stage=<name>/``
-    subdirectory — a metadata-only filesystem op, no manifest row ever
-    reaches the driver.  A pre-partitioning (legacy) manifest — parquet
-    files at the manifest root with ``stage`` as a data column — is first
-    normalized by :func:`_migrate_legacy` (as at every other entry point;
-    a mixed layout is NOT safe to leave behind — partition discovery would
-    silently drop the legacy rows).  Order matters: manifest first, output
+    subdirectory — a metadata-only filesystem op that collects no
+    manifest row.  Order matters: manifest first, output
     second.  A crash between the two leaves output rows with NO manifest
     entry — the units read as pending and are simply re-run (their stale
     rows stay invisible because :func:`stage_output` only shows rows whose
@@ -257,7 +196,6 @@ def clear_stage(spark: SparkSession, root: str, stage: str) -> None:
     def _path(s):
         return jvm.org.apache.hadoop.fs.Path(s)
 
-    _migrate_legacy(spark, root)
     mp = _path(manifest_path(root) + f"/stage={stage}")
     mp.getFileSystem(hconf).delete(mp, True)
     p = _path(f"{root.rstrip('/')}/{stage}")
