@@ -178,61 +178,49 @@ def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cell-indexed point-in-polygon join, JVM-side ray-cast refine."""
     pts = derived.points_meta(spark, sf_dir)
     polys = derived.footprint_rings(spark, sf_dir).join(
-        derived.footprints_with_env(spark, sf_dir).select(
+        derived.footprints_with_env(spark, sf_dir).selectExpr(
             "fp_id", "minx", "miny", "maxx", "maxy"
         ),
         "fp_id",
     )
-    return joins.pip_join(pts, polys, WORLD_GRID).select("pt_id", "fp_id")
+    return joins.pip_join(pts, polys, WORLD_GRID).selectExpr("pt_id", "fp_id")
 
 
 def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 5-NN building lookup: a cell-ring bound, then an exact refine."""
     pts = derived.points_meta(spark, sf_dir)
-    centers = derived.footprints_meta(spark, sf_dir).select("fp_id", "cx", "cy")
-    return joins.knn_join(pts, centers, WORLD_GRID, k=5).select(
-        "pt_id", "fp_id", "rank"
+    centers = derived.footprints_meta(spark, sf_dir).selectExpr("fp_id", "cx", "cy")
+    return joins.knn_join(pts, centers, WORLD_GRID, k=5).selectExpr(
+        "pt_id", "fp_id", "`rank`"
     )
 
 
 def q_bbox_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O5 spatial range query: tile footprints x building envelopes."""
-    tiles = grid.gen_tiles(derived.images_meta(spark, sf_dir), CFG).select(
-        "tile_id",
-        F.col("tminx").alias("minx"),
-        F.col("tminy").alias("miny"),
-        F.col("tmaxx").alias("maxx"),
-        F.col("tmaxy").alias("maxy"),
+    tiles = grid.gen_tiles(derived.images_meta(spark, sf_dir), CFG).selectExpr(
+        "tile_id", "tminx AS minx", "tminy AS miny", "tmaxx AS maxx", "tmaxy AS maxy"
     )
-    fps = derived.footprints_with_env(spark, sf_dir).select(
+    fps = derived.footprints_with_env(spark, sf_dir).selectExpr(
         "fp_id", "minx", "miny", "maxx", "maxy"
     )
-    return joins.bbox_range_join(tiles, fps, WORLD_GRID).select(
-        F.col("l_tile_id").alias("tile_id"), F.col("r_fp_id").alias("fp_id")
+    return joins.bbox_range_join(tiles, fps, WORLD_GRID).selectExpr(
+        "l_tile_id AS tile_id", "r_fp_id AS fp_id"
     )
 
 
 def q_point_tile_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-star headline: assign every point to the tile(s) containing it
     (overlap strips -> up to 4 tiles)."""
-    pts = derived.points_meta(spark, sf_dir).select(
-        "pt_id",
-        F.col("px").alias("minx"),
-        F.col("py").alias("miny"),
-        F.col("px").alias("maxx"),
-        F.col("py").alias("maxy"),
+    pts = derived.points_meta(spark, sf_dir).selectExpr(
+        "pt_id", "px AS minx", "py AS miny", "px AS maxx", "py AS maxy"
     )
-    tiles = grid.gen_tiles(derived.images_meta(spark, sf_dir), CFG).select(
-        "tile_id",
-        F.col("tminx").alias("minx"),
-        F.col("tminy").alias("miny"),
-        F.col("tmaxx").alias("maxx"),
-        F.col("tmaxy").alias("maxy"),
+    tiles = grid.gen_tiles(derived.images_meta(spark, sf_dir), CFG).selectExpr(
+        "tile_id", "tminx AS minx", "tminy AS miny", "tmaxx AS maxx", "tmaxy AS maxy"
     )
     # points are the small side here (100k ids+coords); broadcasting them
     # lets the exploded tile grid stream shuffle-free off its scan
-    return joins.bbox_range_join(pts, tiles, WORLD_GRID, broadcast="left").select(
-        F.col("l_pt_id").alias("pt_id"), F.col("r_tile_id").alias("tile_id")
+    return joins.bbox_range_join(pts, tiles, WORLD_GRID, broadcast="left").selectExpr(
+        "l_pt_id AS pt_id", "r_tile_id AS tile_id"
     )
 
 

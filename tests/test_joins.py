@@ -4,7 +4,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.functions.cellindex import CellGrid
+from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.functions.cellindex import _IY_SHIFT, _RES_SHIFT, CellGrid, sql_double
 from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import joins
 
 GRID = CellGrid(x0=0.0, y0=0.0, size=100.0, res=4)  # 16x16 cells of 6.25
@@ -218,11 +218,11 @@ def test_cellindex_properties(spark):
          enumerate(np.random.RandomState(5).uniform(0, 100, size=(50, 2)))],
         "i long, x double, y double",
     )
-    out = df.select(
+    out = df.selectExpr(
         "x", "y",
-        g.cell_of(F.col("x"), F.col("y")).alias("cell"),
-        g.k_ring(g.cell_of(F.col("x"), F.col("y")), 1).alias("ring"),
-        g.polyfill_bbox(F.col("x"), F.col("y"), F.col("x") + 10.0, F.col("y") + 10.0).alias("cover"),
+        f"{g.cell_of('x', 'y')} AS cell",
+        f"{g.k_ring(g.cell_of('x', 'y'), 1)} AS ring",
+        f"{g.polyfill_bbox('x', 'y', 'x + 10.0D', 'y + 10.0D')} AS cover",
     ).collect()
     for r in out:
         assert r["cell"] in r["ring"]
@@ -234,18 +234,16 @@ def test_cellindex_properties(spark):
 def test_cell_parent_chains_resolutions(spark):
     """parent() derives res from the cell id (h3 cell_to_parent semantics):
     chaining yields genuine coarser ids, not re-stamped res-1 collisions."""
-    from pyspark.sql import functions as F
-
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.functions.cellindex import (
         CellGrid, _IY_SHIFT, _RES_SHIFT,
     )
 
     g = CellGrid(x0=0.0, y0=0.0, size=1024.0, res=6)
     df = spark.createDataFrame([(513.0, 257.0)], "x double, y double")
-    c = df.select(
-        g.cell_of(F.col("x"), F.col("y")).alias("c0")
-    ).withColumn("c1", g.parent(F.col("c0"))).withColumn(
-        "c2", g.parent(F.col("c1"))
+    c = df.selectExpr(
+        f"{g.cell_of('x', 'y')} AS c0"
+    ).selectExpr("*", f"{g.parent('c0')} AS c1").selectExpr(
+        "*", f"{g.parent('c1')} AS c2"
     )
     r = c.first()
     for lvl, cell in enumerate([r["c0"], r["c1"], r["c2"]]):
@@ -254,3 +252,154 @@ def test_cell_parent_chains_resolutions(spark):
     assert (r["c1"] % _IY_SHIFT) == (r["c0"] % _IY_SHIFT) // 2
     assert (r["c2"] % _IY_SHIFT) == (r["c1"] % _IY_SHIFT) // 2
 
+
+
+# --------------------------------------------------------------------------- #
+# SQL-text builders: lambda capture and double literals
+# --------------------------------------------------------------------------- #
+
+def _index(g, v, v0=0.0):
+    """Cell index of coordinate ``v`` on an axis starting at ``v0``."""
+    return np.minimum(np.maximum(np.floor((v - v0) / g.side), 0), g.n - 1).astype(np.int64)
+
+
+def _pack(g, ix, iy):
+    return g.res * _RES_SHIFT + iy * _IY_SHIFT + ix
+
+
+def _cells(g, ix0, iy0, ix1, iy1):
+    return [int(_pack(g, ix, iy)) for iy in range(iy0, iy1 + 1) for ix in range(ix0, ix1 + 1)]
+
+
+@pytest.mark.parametrize("names", [
+    ("i", "x", "y", "acc", "_i", "_acc", "_gx", "_gy"),
+    ("_gy", "_gx", "_acc", "_i", "x", "y", "i", "acc"),
+    ("acc", "_gy", "_gx", "y", "_acc", "x", "_i", "i"),
+    ("x", "_acc", "_i", "_gx", "acc", "_gy", "y", "i"),
+])
+def test_builders_ignore_lambda_capture(spark, geo, names):
+    """pip, bbox and kNN joins, k_ring and polyfill_bbox on inputs whose
+    coordinate, id and ring columns carry the names a SQL lambda variable
+    would shadow (each name once per case): each still equals its NumPy
+    brute force."""
+    pts, polys, pdf, gdf = geo
+    pid, px, py, fid, ring, cid, cx, cy = names
+    points = pdf.toDF(pid, px, py)
+
+    polygons = gdf.toDF(fid, ring, "minx", "miny", "maxx", "maxy")
+    got = {(r[0], r[1]) for r in joins.pip_join(
+        points, polygons, GRID, pt_cols=(pid, px, py), poly_id=fid, ring_col=ring
+    ).select(pid, fid).collect()}
+    exp = {(p, f) for p, x, y in pts for f, rg, *_ in polys if scalar_point_in_poly(x, y, rg)}
+    assert got == exp
+
+    boxes = gdf.select("fp_id", "minx", "miny", "maxx", "maxy")
+    out = joins.bbox_range_join(
+        boxes.withColumnRenamed("fp_id", pid), boxes.withColumnRenamed("fp_id", fid),
+        GRID, lprefix=px, rprefix=py,
+    ).select(px + pid, py + fid).collect()
+    assert {(r[0], r[1]) for r in out} == {
+        (a[0], b[0]) for a in polys for b in polys
+        if a[2] < b[4] and a[4] > b[2] and a[3] < b[5] and a[5] > b[3]
+    }
+
+    cent = {f: ((mnx + mxx) / 2, (mny + mxy) / 2) for f, _, mnx, mny, mxx, mxy in polys}
+    centers = spark.createDataFrame(
+        [(f, x, y) for f, (x, y) in cent.items()], f"`{cid}` string, `{cx}` double, `{cy}` double"
+    )
+    knn = joins.knn_join(
+        points.where(f"`{pid}` < 'q0060'"), centers, GRID, k=3,
+        pt_cols=(pid, px, py), center_cols=(cid, cx, cy),
+    )
+    got = sorted(tuple(r) for r in knn.select(pid, "rank", cid).collect())
+    exp = []
+    for p, x, y in pts[:60]:
+        near = sorted(((a - x) * (a - x) + (b - y) * (b - y), f) for f, (a, b) in cent.items())
+        exp += [(p, r + 1, f) for r, (_, f) in enumerate(near[:3])]
+    assert got == sorted(exp)
+
+    # a point in (pid, px), the far corner of its box in (py, fid), the
+    # k_ring radius in ring
+    xy = np.random.RandomState(2).uniform(0, 90, size=(40, 2))
+    df = spark.createDataFrame(
+        [(float(x), float(y), float(x + 9.0), float(y + 9.0), i % 3)
+         for i, (x, y) in enumerate(xy)],
+        ", ".join(f"`{n}` {t}" for n, t in zip(names, ["double"] * 4 + ["int"])),
+    )
+    q = [f"`{n}`" for n in names[:5]]
+    rows = df.selectExpr(
+        *q,
+        f"{GRID.k_ring(GRID.cell_of(q[0], q[1]), q[4])} AS _ring",
+        f"{GRID.polyfill_bbox(*q[:4])} AS _cover",
+    ).collect()
+    hi = GRID.n - 1
+    for r in rows:
+        (ix, iy, jx, jy), k = (_index(GRID, r[i]) for i in range(4)), r[4]
+        assert r["_ring"] == _cells(
+            GRID, max(ix - k, 0), max(iy - k, 0), min(ix + k, hi), min(iy + k, hi)
+        )
+        assert r["_cover"] == _cells(GRID, ix, iy, jx, jy)
+
+
+def test_sql_double_round_trips():
+    """Spark-free: every finite double renders as a DOUBLE literal that
+    parses back to the same value; inf and nan have no literal."""
+
+    for x in (0.1, -0.1, 1e-09, 1e16, 1.0 + 1e-9, 0.0, -0.0, 164.0625):
+        text = sql_double(x)
+        assert text.strip("()").endswith("D")
+        back = float(text.strip("()")[:-1])
+        assert back == x and np.signbit(back) == np.signbit(x)
+    assert sql_double(1.0 + 1e-9) != sql_double(1.0)
+    for bad in (float("inf"), float("-inf"), float("nan")):
+        with pytest.raises(ValueError):
+            sql_double(bad)
+
+
+def test_sql_double_literals_stay_double(spark):
+    """Spark parses each literal to the same double, and the derived
+    tables and the tile grid type their coordinates double, not decimal."""
+    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators.grid import gen_tiles
+    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import derived
+
+    xs = (0.1, -0.1, 1e-09, 1e16, 1.0 + 1e-9, 2.0 - 0.25)
+    row = spark.range(1).selectExpr(
+        *[f"{sql_double(x)} AS v{i}" for i, x in enumerate(xs)],
+        f"1.0D - {sql_double(-0.1)} AS minus_neg",
+    )
+    assert {t for _, t in row.dtypes} == {"double"}
+    got = row.first()
+    assert list(got)[:-1] == list(xs) and got["minus_neg"] == 1.0 - -0.1
+
+    from conftest import SF_TINY as sf
+
+    want = {
+        derived.points_meta(spark, sf): ("px", "py"),
+        derived.footprints_meta(spark, sf): ("cx", "cy", "a", "b", "theta_deg"),
+        derived.footprints_with_env(spark, sf): ("minx", "miny", "maxx", "maxy"),
+        derived.images_meta(spark, sf): ("ulx", "uly"),
+        gen_tiles(derived.images_meta(spark, sf)): ("tminx", "tminy", "tmaxx", "tmaxy"),
+    }
+    for df, cols in want.items():
+        types = dict(df.dtypes)
+        assert {c: types[c] for c in cols} == {c: "double" for c in cols}
+    assert dict(gen_tiles(derived.images_meta(spark, sf)).dtypes)["gt"] == "array<double>"
+    ring_t = dict(derived.footprint_rings(spark, sf).dtypes)["ring"]
+    assert ring_t == "array<array<double>>"
+
+
+def test_cell_of_on_edges_and_border(spark):
+    """Points exactly on cell edges and on (and past) the domain border get
+    the NumPy closed form min(max(floor((x - x0) / side), 0), n - 1)."""
+    g = CellGrid(x0=-50.0, y0=12.5, size=100.0, res=4)  # side 6.25
+    edges = g.x0 + g.side * np.arange(-1, g.n + 2)
+    vals = np.concatenate([edges, edges + 1e-9, edges - 1e-9, [g.x0 + g.size, -1e9, 1e9]])
+    xs = vals
+    ys = np.roll(vals, 5) - g.x0 + g.y0
+    df = spark.createDataFrame(
+        [(i, float(x), float(y)) for i, (x, y) in enumerate(zip(xs, ys))],
+        "i long, x double, y double",
+    )
+    got = dict(df.selectExpr("i", f"{g.cell_of('x', 'y')} AS cell").collect())
+    exp = _pack(g, _index(g, xs, g.x0), _index(g, ys, g.y0))
+    assert [got[i] for i in range(len(xs))] == [int(e) for e in exp]

@@ -50,6 +50,24 @@ def test_run_resumable_skips_completed(spark, tmp):
     assert got == exp
 
 
+def test_manifest_reads_start_no_job(spark, tmp):
+    """completed_units and resume_filter read the manifest with its declared
+    schema: building either starts no Spark job (no schema inference)."""
+    imgs = images_meta(spark, SF).limit(4)
+    M.run_resumable(imgs, lambda df: df.select("image_id", "w"), "s", tmp)
+    sc = spark.sparkContext
+    try:
+        for group, build in (
+            ("manifest_completed", lambda: M.completed_units(spark, tmp, "s")),
+            ("manifest_resume", lambda: M.resume_filter(imgs, spark, tmp, "s")),
+        ):
+            sc.setJobGroup(group, group)
+            build()
+            assert sc.statusTracker().getJobIdsForGroup(group) == [], group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
 def test_resume_mid_grid_after_partial_run(spark, tmp):
     imgs = images_meta(spark, SF)
     half = imgs.filter(F.col("image_id") < "img_00000100")

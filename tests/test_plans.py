@@ -2,9 +2,12 @@
 machine-checked: predicate pushdown to the scan, column pruning, single
 whole-stage-codegen spans for metadata operators, the cell-keyed shuffle
 join, the kNN join's one job and lazy plan, no JVM-side explode in the pixel
-path (Arrow byte amplification), and the exactly-once spatial join needing
-no distinct."""
+path (Arrow byte amplification), the exactly-once spatial join needing
+no distinct, and the driver->JVM round trips a join gate's plan costs."""
 
+import threading
+
+import pytest
 from pyspark.sql import functions as F
 
 from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.functions.cellindex import WORLD_GRID
@@ -124,6 +127,34 @@ def test_knn_join_one_job_lazy_plan(spark):
         assert cached not in p
     optimized = out._jdf.queryExecution().optimizedPlan().toString()
     assert len(re.findall(r"Join Inner, .*\(cell_id#\d+L = cell_id#\d+L\)", optimized)) == 2
+
+
+@pytest.mark.parametrize("gate", ["pip_join", "point_tile_assign", "bbox_join", "knn_join"])
+def test_join_gate_plan_build_round_trips(spark, gate, monkeypatch):
+    """Building a join gate's plan takes at most 400 py4j round trips (one
+    blocking driver->JVM call each): its expressions reach the JVM as SQL
+    text, one parse per DataFrame step, not one call per Column node.
+    Node-by-node Column building took 2,300-3,600 on this input."""
+    import __spark_entry__ as E
+
+    client = spark.sparkContext._gateway._gateway_client
+    conn = client._get_connection()
+    client._give_back_connection(conn)
+    send = type(conn).send_command
+    builder = threading.get_ident()
+    calls = []
+
+    def counting(self, command, *args, **kwargs):
+        # py4j frees JVM references of collected proxies from its own
+        # thread; only the building thread's calls are the plan's cost
+        if threading.get_ident() == builder:
+            calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    monkeypatch.setattr(type(conn), "send_command", counting)
+    getattr(E, f"q_{gate}")(spark, SF)
+    monkeypatch.undo()
+    assert 0 < len(calls) <= 400, len(calls)
 
 
 def test_pyramid_tiles_single_codegen_no_shuffle(spark):

@@ -48,8 +48,6 @@ def test_pip_raycast_vs_winding_bruteforce(spark, seed):
     """Random concave polygons + points: the engine's JVM-side ray-cast
     (joins.ray_cast_inside) == scalar even-odd, all 50 points of one
     example evaluated in a single DataFrame."""
-    from pyspark.sql import functions as F
-
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators.joins import (
         ray_cast_inside,
     )
@@ -68,8 +66,8 @@ def test_pip_raycast_vs_winding_bruteforce(spark, seed):
         [(i, float(x), float(y), ring) for i, (x, y) in enumerate(pts)],
         "i int, px double, py double, ring array<array<double>>",
     )
-    inside = ray_cast_inside(F.col("px"), F.col("py"), F.col("ring"))
-    rows = df.select("i", inside.alias("inside")).collect()
+    inside = ray_cast_inside("px", "py", "ring")
+    rows = df.selectExpr("i", f"{inside} AS inside").collect()
     got = np.array([r["inside"] for r in sorted(rows, key=lambda r: r["i"])])
 
     def scalar(px, py):

@@ -13,21 +13,51 @@ power-of-two quadtree grid over a declared domain — a documented deviation
 * ``polyfill_bbox(...)``  — covering cells of a bbox (h3: polygon_to_cells)
 * ``k_ring(cell, k)``     — Chebyshev ring expansion (h3: grid_disk)
 
-Everything is pure column arithmetic (floor/least/greatest/explode) so the
-index is JVM-side, codegen-friendly, and identically expressible in the
-DuckDB oracle SQL.  Cell id packing: ``res * 2^52 + iy * 2^26 + ix`` —
-single BIGINT, parent = arithmetic shift of (ix, iy).
+Every builder takes Spark SQL expression text (a column name is one) and
+returns SQL text: floor/least/greatest/sequence arithmetic that the caller
+hands to one ``selectExpr``/``F.expr`` per DataFrame step, so the JVM parses
+each step once instead of taking one py4j round trip per expression node.
+The index stays JVM-side and codegen-friendly.  Two hazards of the text
+form are handled here: every Python float goes through :func:`sql_double`
+(a bare ``0.25`` is a DECIMAL in Spark SQL), and lambda variables get names
+no argument text contains (:func:`fresh_var`), because inside a lambda body a
+lambda variable shadows a column of the same name.  The DuckDB oracle keeps
+its own text (:meth:`CellGrid.cell_sql`), so it stays an independent check.
+Cell id packing: ``res * 2^52 + iy * 2^26 + ix`` — single BIGINT, parent =
+arithmetic shift of (ix, iy).
 """
 
 from __future__ import annotations
 
+import math
 from dataclasses import dataclass
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
 
 _IY_SHIFT = 1 << 26
 _RES_SHIFT = 1 << 52
+
+
+def sql_double(x: float) -> str:
+    """``x`` as a Spark SQL DOUBLE literal that parses back to the same
+    double (``repr`` round-trips exactly; the ``D`` suffix keeps it out of
+    DECIMAL).  Negative values are parenthesized, so ``a - {lit}`` never
+    reads as a ``--`` comment."""
+    x = float(x)
+    if not math.isfinite(x):
+        raise ValueError(f"no SQL literal for {x!r}")
+    return f"({x!r}D)" if math.copysign(1.0, x) < 0 else f"{x!r}D"
+
+
+def quote(name: str) -> str:
+    """A column name as SQL text (backtick-quoted)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def fresh_var(name: str, *texts: str) -> str:
+    """A lambda variable name that none of ``texts`` (the argument text the
+    lambda body quotes) contains, so it cannot shadow one of their columns."""
+    while any(name in t for t in texts):
+        name += "_"
+    return name
 
 
 @dataclass(frozen=True)
@@ -47,68 +77,65 @@ class CellGrid:
     def side(self) -> float:
         return self.size / self.n
 
-    # -- column expressions ------------------------------------------------
-    def ix_of(self, x: Column) -> Column:
-        return F.least(
-            F.greatest(F.floor((x - self.x0) / self.side), F.lit(0)),
-            F.lit(self.n - 1),
-        ).cast("long")
+    # -- SQL expression text ---------------------------------------------------
+    def _index(self, v: str, v0: float) -> str:
+        return (
+            f"CAST(least(greatest(floor((({v}) - {sql_double(v0)}) / "
+            f"{sql_double(self.side)}), 0), {self.n - 1}) AS BIGINT)"
+        )
 
-    def iy_of(self, y: Column) -> Column:
-        return F.least(
-            F.greatest(F.floor((y - self.y0) / self.side), F.lit(0)),
-            F.lit(self.n - 1),
-        ).cast("long")
+    def ix_of(self, x: str) -> str:
+        return self._index(x, self.x0)
 
-    def pack(self, ix: Column, iy: Column) -> Column:
-        return (F.lit(self.res) * _RES_SHIFT + iy * _IY_SHIFT + ix).cast("long")
+    def iy_of(self, y: str) -> str:
+        return self._index(y, self.y0)
 
-    def cell_of(self, x: Column, y: Column) -> Column:
+    def pack(self, ix: str, iy: str) -> str:
+        return f"CAST({self.res} * {_RES_SHIFT} + ({iy}) * {_IY_SHIFT} + ({ix}) AS BIGINT)"
+
+    def cell_of(self, x: str, y: str) -> str:
         return self.pack(self.ix_of(x), self.iy_of(y))
 
-    def parent(self, cell: Column) -> Column:
+    def parent(self, cell: str) -> str:
         """Containing cell one resolution up.  Like h3's cell_to_parent,
         the resolution comes from the CELL id, not from this grid — so
         ``parent(parent(c))`` yields a genuine res-2 id instead of
         stamping res-1 twice and colliding with unrelated cells."""
-        ix = cell % _IY_SHIFT
-        iy = F.floor(cell / _IY_SHIFT) % (1 << 26)
-        res = F.floor(cell / _RES_SHIFT)
+        ix = f"({cell}) % {_IY_SHIFT}"
+        iy = f"floor(({cell}) / {_IY_SHIFT}) % {1 << 26}"
+        res = f"floor(({cell}) / {_RES_SHIFT})"
         return (
-            (res - 1) * _RES_SHIFT
-            + F.floor(iy / 2) * _IY_SHIFT
-            + F.floor(ix / 2)
-        ).cast("long")
-
-    def polyfill_bbox(
-        self, minx: Column, miny: Column, maxx: Column, maxy: Column
-    ) -> Column:
-        """array<bigint> of all cells intersecting the bbox (the STRtree-style
-        prefilter side: explode this, equi-join on cell)."""
-        ix0, ix1 = self.ix_of(minx), self.ix_of(maxx)
-        iy0, iy1 = self.iy_of(miny), self.iy_of(maxy)
-        return F.flatten(
-            F.transform(
-                F.sequence(iy0, iy1),
-                lambda iy: F.transform(
-                    F.sequence(ix0, ix1), lambda ix: self.pack(ix, iy)
-                ),
-            )
+            f"CAST(({res} - 1) * {_RES_SHIFT} + floor(({iy}) / 2) * {_IY_SHIFT}"
+            f" + floor(({ix}) / 2) AS BIGINT)"
         )
 
-    def k_ring(self, cell: Column, k: int | Column) -> Column:
+    def _cells(self, ix0: str, iy0: str, ix1: str, iy1: str, *args: str) -> str:
+        """array<bigint> of the cells (ix0..ix1) x (iy0..iy1); ``args`` is
+        the caller's argument text, which the lambda names must avoid."""
+        gx, gy = fresh_var("_gx", *args), fresh_var("_gy", *args)
+        return (
+            f"flatten(transform(sequence({iy0}, {iy1}), {gy} -> "
+            f"transform(sequence({ix0}, {ix1}), {gx} -> {self.pack(gx, gy)})))"
+        )
+
+    def polyfill_bbox(self, minx: str, miny: str, maxx: str, maxy: str) -> str:
+        """array<bigint> of all cells intersecting the bbox (the STRtree-style
+        prefilter side: explode this, equi-join on cell)."""
+        return self._cells(
+            self.ix_of(minx), self.iy_of(miny), self.ix_of(maxx), self.iy_of(maxy),
+            minx, miny, maxx, maxy,
+        )
+
+    def k_ring(self, cell: str, k: int | str) -> str:
         """array<bigint> of cells within Chebyshev distance k (grid_disk),
-        clamped at domain borders; ``k`` may be a per-row column."""
-        ix = cell % _IY_SHIFT
-        iy = F.floor(cell / _IY_SHIFT) % (1 << 26)
-        lo, hi = F.lit(0), F.lit(self.n - 1)
-        ix0, ix1 = F.greatest(ix - k, lo), F.least(ix + k, hi)
-        iy0, iy1 = F.greatest(iy - k, lo), F.least(iy + k, hi)
-        return F.flatten(
-            F.transform(
-                F.sequence(iy0, iy1),
-                lambda y: F.transform(F.sequence(ix0, ix1), lambda x: self.pack(x, y)),
-            )
+        clamped at domain borders; ``k`` may be per-row SQL text."""
+        ix = f"({cell}) % {_IY_SHIFT}"
+        iy = f"floor(({cell}) / {_IY_SHIFT}) % {1 << 26}"
+        hi = self.n - 1
+        return self._cells(
+            f"greatest({ix} - ({k}), 0)", f"greatest({iy} - ({k}), 0)",
+            f"least({ix} + ({k}), {hi})", f"least({iy} + ({k}), {hi})",
+            cell, str(k),
         )
 
     # -- DuckDB oracle twins -------------------------------------------------
@@ -122,22 +149,3 @@ class CellGrid:
 # default grid for the derived synthetic world (sources/derived.py): 10500 m
 # domain, res 6 -> 64x64 cells of ~164 m, sized to the max footprint envelope
 WORLD_GRID = CellGrid(x0=0.0, y0=0.0, size=10500.0, res=6)
-
-
-def with_cell(df: DataFrame, grid: CellGrid, x: str, y: str, out: str = "cell_id") -> DataFrame:
-    return df.withColumn(out, grid.cell_of(F.col(x), F.col(y)))
-
-
-def explode_cover(
-    df: DataFrame, grid: CellGrid, out: str = "cell_id"
-) -> DataFrame:
-    """Explode a bbox'd DataFrame (minx..maxy columns) to one row per
-    covering cell — the build side of the cell equi-join."""
-    return df.withColumn(
-        out,
-        F.explode(
-            grid.polyfill_bbox(
-                F.col("minx"), F.col("miny"), F.col("maxx"), F.col("maxy")
-            )
-        ),
-    )

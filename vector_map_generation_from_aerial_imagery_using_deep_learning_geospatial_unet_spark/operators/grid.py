@@ -13,7 +13,8 @@ Reference semantics pinned exactly:
   (/root/reference/src/bf_gridding.py:519-529).
 
 Spark-first: the whole operator is ``explode(sequence(...))`` twice plus
-column arithmetic — zero UDFs, fully inside whole-stage codegen, and Catalyst
+column arithmetic, written as SQL text (one ``selectExpr`` per step, parsed
+in one JVM call) — zero UDFs, fully inside whole-stage codegen, and Catalyst
 can push image-level filters below the explode.  The reference fans out one
 *subprocess per file* (/root/reference/src/bf_grid.py:31-36); here fan-out is
 ordinary task parallelism over scan partitions, so it scales with executors
@@ -22,19 +23,17 @@ instead of local cores.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..config import DEFAULT_CONFIG, EngineConfig
+from ..functions.cellindex import sql_double
 
 
-def tile_counts(size: Column, tile: int, overlap: int) -> Column:
-    """O1 closed form; int-div ceil identical to the reference expression."""
+def tile_counts(size: str, tile: int, overlap: int) -> str:
+    """O1 closed form as SQL text over ``size`` (SQL text); int-div ceil
+    identical to the reference expression."""
     step = tile - overlap
-    return (
-        F.lit(1)
-        + F.floor((F.greatest(size - tile, F.lit(0)) + (step - 1)) / step)
-    ).cast("int")
+    return f"CAST(1 + floor((greatest(({size}) - {tile}, 0) + {step - 1}) / {step}) AS INT)"
 
 
 def with_tile_counts(
@@ -42,11 +41,10 @@ def with_tile_counts(
 ) -> DataFrame:
     """images(+w,h) -> + (nx, ny) tile-grid cardinality columns."""
     ov = cfg.overlap_px if overlap is None else overlap
-    return images.withColumns(
-        {
-            "nx": tile_counts(F.col("w"), cfg.tile_size, ov),
-            "ny": tile_counts(F.col("h"), cfg.tile_size, ov),
-        }
+    return images.selectExpr(
+        "*",
+        f"{tile_counts('w', cfg.tile_size, ov)} AS nx",
+        f"{tile_counts('h', cfg.tile_size, ov)} AS ny",
     )
 
 
@@ -61,7 +59,8 @@ def gen_tiles(
     Input needs columns ``image_id, w, h`` (+ ``ulx, uly`` when
     ``with_geo``).  Output: one row per tile with 1-based (tiy, tix), pixel
     window (off_x, off_y, tw, th), reference-format ``tile_id`` and (opt) the
-    shifted geotransform + geo bbox.
+    shifted geotransform + geo bbox.  Each step appends its columns with one
+    ``selectExpr`` of SQL text.
     """
     t = cfg.tile_size
     ov = cfg.overlap_px if overlap is None else overlap
@@ -71,40 +70,30 @@ def gen_tiles(
     # y-then-x emission order is carried by (tiy, tix) columns, not row order:
     # Spark output order is undefined under shuffle; all consumers that need
     # the reference's emission order sort by (tiy, tix) explicitly.
-    df = df.withColumn("tiy", F.explode(F.sequence(F.lit(1), F.col("ny"))))
-    df = df.withColumn("tix", F.explode(F.sequence(F.lit(1), F.col("nx"))))
+    df = df.selectExpr("*", "explode(sequence(1, ny)) AS tiy")
+    df = df.selectExpr("*", "explode(sequence(1, nx)) AS tix")
 
-    off_x = (F.col("tix") - 1) * step
-    off_y = (F.col("tiy") - 1) * step
-    digits = F.length(F.greatest(F.col("nx"), F.col("ny")).cast("string"))
-
-    df = df.withColumns(
-        {
-            "off_x": off_x.cast("int"),
-            "off_y": off_y.cast("int"),
-            "tw": F.least(F.lit(t), F.col("w") - off_x).cast("int"),
-            "th": F.least(F.lit(t), F.col("h") - off_y).cast("int"),
-            "tile_id": F.concat(
-                F.col("image_id"),
-                F.lit("_"),
-                F.lpad(F.col("tiy").cast("string"), digits, "0"),
-                F.lit("_"),
-                F.lpad(F.col("tix").cast("string"), digits, "0"),
-            ),
-        }
+    off_x, off_y = f"(tix - 1) * {step}", f"(tiy - 1) * {step}"
+    digits = "length(CAST(greatest(nx, ny) AS STRING))"
+    df = df.selectExpr(
+        "*",
+        f"CAST({off_x} AS INT) AS off_x",
+        f"CAST({off_y} AS INT) AS off_y",
+        f"CAST(least({t}, w - {off_x}) AS INT) AS tw",
+        f"CAST(least({t}, h - {off_y}) AS INT) AS th",
+        f"concat(image_id, '_', lpad(CAST(tiy AS STRING), {digits}, '0'),"
+        f" '_', lpad(CAST(tix AS STRING), {digits}, '0')) AS tile_id",
     )
     if with_geo:
-        sx, sy = cfg.cell_size_m, -cfg.cell_size_m
-        gx0 = F.col("ulx") + F.col("off_x") * sx
-        gy0 = F.col("uly") + F.col("off_y") * sy
-        df = df.withColumns(
-            {
-                "gt": F.array(gx0, F.lit(sx), F.lit(0.0), gy0, F.lit(0.0), F.lit(sy)),
-                "tminx": gx0,
-                "tmaxx": gx0 + F.col("tw") * sx,
-                "tmaxy": gy0,
-                "tminy": gy0 + F.col("th") * sy,
-            }
+        sx, sy = sql_double(cfg.cell_size_m), sql_double(-cfg.cell_size_m)
+        gx0, gy0 = f"ulx + off_x * {sx}", f"uly + off_y * {sy}"
+        df = df.selectExpr(
+            "*",
+            f"array({gx0}, {sx}, 0.0D, {gy0}, 0.0D, {sy}) AS gt",
+            f"{gx0} AS tminx",
+            f"{gx0} + tw * {sx} AS tmaxx",
+            f"{gy0} AS tmaxy",
+            f"{gy0} + th * {sy} AS tminy",
         )
     return df
 
@@ -113,14 +102,9 @@ def image_extents(images: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> Data
     """O4/O6: per-image footprint bbox from (ulx, uly, w, h) — pure projection
     (``getTileIndexFromFiles``/``mosaic_info``,
     /root/reference/src/bf_gridding.py:304-332,130-175)."""
-    sx, sy = cfg.cell_size_m, -cfg.cell_size_m
-    return images.withColumns(
-        {
-            "minx": F.col("ulx"),
-            "maxx": F.col("ulx") + F.col("w") * sx,
-            "maxy": F.col("uly"),
-            "miny": F.col("uly") + F.col("h") * sy,
-        }
+    sx, sy = sql_double(cfg.cell_size_m), sql_double(-cfg.cell_size_m)
+    return images.selectExpr(
+        "*", "ulx AS minx", f"ulx + w * {sx} AS maxx", "uly AS maxy", f"uly + h * {sy} AS miny"
     )
 
 

@@ -8,7 +8,7 @@ three operators, all built on the cell equi-join prefilter from
 
 * :func:`bbox_range_join` — O5 semantics: bbox-overlap pairs.
 * :func:`pip_join`        — point-in-polygon, cell prefilter + ray-casting
-  refinement (:func:`ray_cast_inside`: higher-order column functions —
+  refinement (:func:`ray_cast_inside`: a higher-order SQL function —
   fully JVM-side, whole-stage codegen, zero Python).
 * :func:`knn_join`        — exact k-nearest-neighbours in one lazy plan: a
   cell-ring join bounds each point's k-th distance (rings sized from one
@@ -22,11 +22,10 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from ..functions.cellindex import CellGrid, explode_cover, with_cell
+from ..functions.cellindex import CellGrid, fresh_var, quote, sql_double
 
 __all__ = ["bbox_range_join", "pip_join", "knn_join", "ray_cast_inside"]
 
@@ -59,22 +58,15 @@ def bbox_range_join(
     """
 
     def prep(df: DataFrame, p: str) -> DataFrame:
-        out = df.select([F.col(c).alias(p + c) for c in df.columns])
-        out = out.withColumns(
-            {
-                p + "ix0": grid.ix_of(F.col(p + "minx")),
-                p + "iy0": grid.iy_of(F.col(p + "miny")),
-            }
+        minx, miny, maxx, maxy = (quote(p + c) for c in ("minx", "miny", "maxx", "maxy"))
+        out = df.selectExpr(*[f"{quote(c)} AS {quote(p + c)}" for c in df.columns])
+        out = out.selectExpr(
+            "*",
+            f"{grid.ix_of(minx)} AS {quote(p + 'ix0')}",
+            f"{grid.iy_of(miny)} AS {quote(p + 'iy0')}",
         )
-        return out.withColumn(
-            "cell_id",
-            F.explode(
-                grid.polyfill_bbox(
-                    F.col(p + "minx"), F.col(p + "miny"),
-                    F.col(p + "maxx"), F.col(p + "maxy"),
-                )
-            ),
-        )
+        cover = grid.polyfill_bbox(minx, miny, maxx, maxy)
+        return out.selectExpr("*", f"explode({cover}) AS cell_id")
 
     lc, rc = prep(left, lprefix), prep(right, rprefix)
     if broadcast == "left":
@@ -82,17 +74,16 @@ def bbox_range_join(
     elif broadcast == "right":
         rc = F.broadcast(rc)
     joined = lc.join(rc, "cell_id")
+    names = ("minx", "miny", "maxx", "maxy", "ix0", "iy0")
+    lq, rq = ({c: quote(p + c) for c in names} for p in (lprefix, rprefix))
     overlap = (
-        (F.col(lprefix + "minx") < F.col(rprefix + "maxx"))
-        & (F.col(lprefix + "maxx") > F.col(rprefix + "minx"))
-        & (F.col(lprefix + "miny") < F.col(rprefix + "maxy"))
-        & (F.col(lprefix + "maxy") > F.col(rprefix + "miny"))
+        f"{lq['minx']} < {rq['maxx']} AND {lq['maxx']} > {rq['minx']}"
+        f" AND {lq['miny']} < {rq['maxy']} AND {lq['maxy']} > {rq['miny']}"
     )
     dedup_cell = grid.pack(
-        F.greatest(F.col(lprefix + "ix0"), F.col(rprefix + "ix0")),
-        F.greatest(F.col(lprefix + "iy0"), F.col(rprefix + "iy0")),
+        f"greatest({lq['ix0']}, {rq['ix0']})", f"greatest({lq['iy0']}, {rq['iy0']})"
     )
-    return joined.filter(overlap & (F.col("cell_id") == dedup_cell)).drop(
+    return joined.filter(f"{overlap} AND cell_id = {dedup_cell}").drop(
         "cell_id", lprefix + "ix0", lprefix + "iy0", rprefix + "ix0", rprefix + "iy0"
     )
 
@@ -101,25 +92,25 @@ def bbox_range_join(
 # point-in-polygon join
 # --------------------------------------------------------------------------- #
 
-def ray_cast_inside(px: Column, py: Column, ring: Column) -> Column:
-    """Even-odd ray-cast as a pure column expression (higher-order fns).
+def ray_cast_inside(px: str, py: str, ring: str) -> str:
+    """Even-odd ray-cast as SQL text (a higher-order ``aggregate``).
 
     PNPOLY crossing test per edge; stays inside whole-stage codegen — no
     Python, no extra shuffle.  Ring is a closed array<array<double>>.
     """
-    def cross(acc: Column, i: Column) -> Column:
-        x1, y1 = ring[i][0], ring[i][1]
-        x2, y2 = ring[i + 1][0], ring[i + 1][1]
-        hit = ((y1 > py) != (y2 > py)) & (
-            px < (x2 - x1) * (py - y1) / (y2 - y1) + x1
-        )
-        return acc + F.when(hit, 1).otherwise(0)
-
-    n_edges = F.size(ring) - 2  # closed ring: edges = len-1, last idx len-2
-    crossings = F.aggregate(
-        F.sequence(F.lit(0), n_edges), F.lit(0), cross
+    acc, i = fresh_var("_acc", px, py, ring), fresh_var("_i", px, py, ring)
+    x1, y1 = f"({ring})[{i}][0]", f"({ring})[{i}][1]"
+    x2, y2 = f"({ring})[{i} + 1][0]", f"({ring})[{i} + 1][1]"
+    px, py = f"({px})", f"({py})"
+    hit = (
+        f"({y1} > {py}) != ({y2} > {py})"
+        f" AND {px} < ({x2} - {x1}) * ({py} - {y1}) / ({y2} - {y1}) + {x1}"
     )
-    return crossings % 2 == 1
+    # closed ring: edges = len-1, last idx len-2
+    return (
+        f"aggregate(sequence(0, size({ring}) - 2), 0,"
+        f" ({acc}, {i}) -> {acc} + CASE WHEN {hit} THEN 1 ELSE 0 END) % 2 = 1"
+    )
 
 
 def pip_join(
@@ -139,13 +130,14 @@ def pip_join(
     broadcasts the cover when it is small.
     """
     _, pxc, pyc = pt_cols
-    pts = with_cell(points, grid, pxc, pyc)
-    cover = explode_cover(
-        polygons.select(poly_id, ring_col, "minx", "miny", "maxx", "maxy"), grid
-    ).drop("minx", "miny", "maxx", "maxy")
+    px, py = quote(pxc), quote(pyc)
+    pts = points.selectExpr("*", f"{grid.cell_of(px, py)} AS cell_id")
+    cells = grid.polyfill_bbox(*map(quote, ("minx", "miny", "maxx", "maxy")))
+    cover = polygons.selectExpr(
+        quote(poly_id), quote(ring_col), f"explode({cells}) AS cell_id"
+    )
     cand = pts.join(cover, "cell_id").drop("cell_id")
-    inside = ray_cast_inside(F.col(pxc), F.col(pyc), F.col(ring_col))
-    return cand.filter(inside).drop(ring_col)
+    return cand.filter(ray_cast_inside(px, py, quote(ring_col))).drop(ring_col)
 
 
 # --------------------------------------------------------------------------- #
@@ -200,11 +192,12 @@ def knn_join(
     """
     pid, pxc, pyc = pt_cols
     cid, cxc, cyc = center_cols
+    px, py, cx, cy = quote(pxc), quote(pyc), quote(cxc), quote(cyc)
     # one task holds every center, so the count needs no exchange (and AQE
     # no second job); centers are the small side
     hist = (
         centers.coalesce(1)
-        .groupBy(grid.iy_of(F.col(cyc)).alias("iy"), grid.ix_of(F.col(cxc)).alias("ix"))
+        .groupBy(F.expr(f"{grid.iy_of(cy)} AS iy"), F.expr(f"{grid.ix_of(cx)} AS ix"))
         .count()
         .toArrow()
     )
@@ -216,40 +209,33 @@ def knn_join(
     radii = points.sparkSession.createDataFrame(
         pa.table({"iy": iy.ravel(), "ix": ix.ravel(),
                   "radius": ring_radii(counts, k_eff).ravel()})
-    ).select(grid.pack(F.col("ix"), F.col("iy")).alias("p_cell"), "radius")
+    ).selectExpr(f"{grid.pack('ix', 'iy')} AS p_cell", "radius")
 
-    cts = with_cell(centers, grid, cxc, cyc).select(cid, cxc, cyc, "cell_id")
-    pts = with_cell(points, grid, pxc, pyc, out="p_cell").select(pid, pxc, pyc, "p_cell")
-    dx, dy = F.col(pxc) - F.col(cxc), F.col(pyc) - F.col(cyc)
-    dist2 = (dx * dx + dy * dy).alias("dist2")
+    cts = centers.selectExpr(quote(cid), cx, cy, f"{grid.cell_of(cx, cy)} AS cell_id")
+    pts = points.selectExpr(quote(pid), px, py, f"{grid.cell_of(px, py)} AS p_cell")
+    dist2 = f"({px} - {cx}) * ({px} - {cx}) + ({py} - {cy}) * ({py} - {cy})"
 
-    ring = pts.join(F.broadcast(radii), "p_cell").select(
-        pid, pxc, pyc,
-        F.explode(grid.k_ring(F.col("p_cell"), F.col("radius"))).alias("cell_id"),
+    ring = pts.join(F.broadcast(radii), "p_cell").selectExpr(
+        quote(pid), px, py, f"explode({grid.k_ring('p_cell', 'radius')}) AS cell_id"
     )
     bound = (
         ring.join(cts, "cell_id")
         .groupBy(pid, pxc, pyc)
-        .agg(F.element_at(F.sort_array(F.collect_list(dist2)), k_eff).alias("d2"))
+        .agg(F.expr(f"element_at(sort_array(collect_list({dist2})), {k_eff}) AS d2"))
     )
     # the 1e-9 pad keeps a center on a cell edge inside the box under
     # rounding; the dist2 filter drops what the pad adds
-    d = F.sqrt(F.col("d2")) * (1.0 + 1e-9)
-    px, py = F.col(pxc), F.col(pyc)
-    box = bound.select(
-        pid, pxc, pyc, "d2",
-        F.explode(grid.polyfill_bbox(px - d, py - d, px + d, py + d)).alias("cell_id"),
-    )
+    d = f"sqrt(d2) * {sql_double(1.0 + 1e-9)}"
+    cover = grid.polyfill_bbox(f"{px} - {d}", f"{py} - {d}", f"{px} + {d}", f"{py} + {d}")
+    box = bound.selectExpr(quote(pid), px, py, "d2", f"explode({cover}) AS cell_id")
     near = (
         box.join(cts, "cell_id")
-        .select(pid, pxc, pyc, cid, dist2, "d2")
-        .filter(F.col("dist2") <= F.col("d2"))
+        .selectExpr(quote(pid), px, py, quote(cid), f"{dist2} AS dist2", "d2")
+        .filter("dist2 <= d2")
     )
-    w = Window.partitionBy(pid).orderBy("dist2", cid)
-    out = (
-        near.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k_eff)
-        .select(pid, pxc, pyc, cid, "dist2", "rank")
+    rank = f"row_number() OVER (PARTITION BY {quote(pid)} ORDER BY dist2, {quote(cid)})"
+    out = near.selectExpr(quote(pid), px, py, quote(cid), "dist2", f"{rank} AS `rank`").filter(
+        f"`rank` <= {k_eff}"
     )
     # no centers (or k = 0): the output columns, no rows
     return out if k_eff else out.limit(0)

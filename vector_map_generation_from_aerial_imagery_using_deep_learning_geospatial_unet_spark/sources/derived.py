@@ -6,7 +6,10 @@ The driver's DuckDB oracle can only see the pre-registered views
 arithmetic* from those tables.  Each DataFrame function reads only its
 table's key column, with a declared schema, so no read runs a
 schema-inference job.  Each derivation exists twice — as a Spark
-DataFrame function and as a DuckDB SQL CTE string — and the two are kept
+DataFrame function (one ``selectExpr`` of Spark SQL text, parsed in one JVM
+call; fractional constants carry the ``D`` suffix, since a bare ``0.25`` is
+a DECIMAL in Spark SQL) and as a DuckDB SQL CTE string, written
+separately so the oracle stays an independent check.  The two are kept
 adjacent in this module so drift is visible; tests assert they agree.
 
 Fractional offsets (.125 / .25 / .375 — exact binary fractions) are added so
@@ -22,7 +25,8 @@ scaleY (/root/reference/src/bf_gridding.py:43-71), image footprints as in
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ..functions.cellindex import sql_double
 
 # world is a 10500 m x 10500 m window; images sit on a 210 m grid
 WORLD = 10500
@@ -40,13 +44,12 @@ def images_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     up to 2000 px); origins tile a 50x50 grid of 210 m cells so spatial joins
     have realistic density and wrap-around stacking creates skew cells."""
     p = spark.read.schema("p_partkey BIGINT").parquet(f"{sf_dir}/part.parquet")
-    pk = F.col("p_partkey")
-    return p.select(
-        F.concat(F.lit("img_"), F.lpad(pk.cast("string"), 8, "0")).alias("image_id"),
-        (F.lit(200) + (pk * 37) % 1801).cast("int").alias("w"),
-        (F.lit(200) + (pk * 53) % 1801).cast("int").alias("h"),
-        ((pk % 50) * GRID).alias("ulx"),
-        ((F.floor(pk / 50) % 50) * GRID + 200.0).alias("uly"),
+    return p.selectExpr(
+        "concat('img_', lpad(CAST(p_partkey AS STRING), 8, '0')) AS image_id",
+        "CAST(200 + (p_partkey * 37) % 1801 AS INT) AS w",
+        "CAST(200 + (p_partkey * 53) % 1801 AS INT) AS h",
+        f"(p_partkey % 50) * {sql_double(GRID)} AS ulx",
+        f"(floor(p_partkey / 50) % 50) * {sql_double(GRID)} + 200.0D AS uly",
     )
 
 
@@ -69,14 +72,13 @@ images_meta AS (
 
 def footprints_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = spark.read.schema("c_custkey BIGINT").parquet(f"{sf_dir}/customer.parquet")
-    ck = F.col("c_custkey")
-    return c.select(
-        F.concat(F.lit("fp_"), F.lpad(ck.cast("string"), 8, "0")).alias("fp_id"),
-        ((ck * 97) % WORLD + 0.125).alias("cx"),
-        ((ck * 89) % WORLD + 0.125).alias("cy"),
-        ((ck % 40) + 5.375).alias("a"),
-        ((ck % 30) + 5.375).alias("b"),
-        ((ck % 12) * 15.0).alias("theta_deg"),
+    return c.selectExpr(
+        "concat('fp_', lpad(CAST(c_custkey AS STRING), 8, '0')) AS fp_id",
+        f"(c_custkey * 97) % {WORLD} + 0.125D AS cx",
+        f"(c_custkey * 89) % {WORLD} + 0.125D AS cy",
+        "(c_custkey % 40) + 5.375D AS a",
+        "(c_custkey % 30) + 5.375D AS b",
+        "(c_custkey % 12) * 15.0D AS theta_deg",
     )
 
 
@@ -101,15 +103,14 @@ def footprints_with_env(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def env_from_meta(fp: DataFrame) -> DataFrame:
-    th = F.radians(F.col("theta_deg"))
-    ex = F.col("a") * F.abs(F.cos(th)) + F.col("b") * F.abs(F.sin(th))
-    ey = F.col("a") * F.abs(F.sin(th)) + F.col("b") * F.abs(F.cos(th))
-    return fp.select(
+    cos, sin = "abs(cos(radians(theta_deg)))", "abs(sin(radians(theta_deg)))"
+    ex, ey = f"a * {cos} + b * {sin}", f"a * {sin} + b * {cos}"
+    return fp.selectExpr(
         "*",
-        (F.col("cx") - ex).alias("minx"),
-        (F.col("cx") + ex).alias("maxx"),
-        (F.col("cy") - ey).alias("miny"),
-        (F.col("cy") + ey).alias("maxy"),
+        f"cx - ({ex}) AS minx",
+        f"cx + ({ex}) AS maxx",
+        f"cy - ({ey}) AS miny",
+        f"cy + ({ey}) AS maxy",
     )
 
 
@@ -132,19 +133,17 @@ def footprint_rings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def rings_from_meta(fp: DataFrame) -> DataFrame:
-    th = F.radians(F.col("theta_deg"))
-    ct, st = F.cos(th), F.sin(th)
-    a, b, cx, cy = F.col("a"), F.col("b"), F.col("cx"), F.col("cy")
+    ct, st = "cos(radians(theta_deg))", "sin(radians(theta_deg))"
 
-    def corner(su: int, sv: int):
+    def corner(su: int, sv: int) -> str:
         # local (u,v) -> world: (cx + u*cos - v*sin, cy + u*sin + v*cos)
-        u, v = a * su, b * sv
-        return F.array(cx + u * ct - v * st, cy + u * st + v * ct)
+        u, v = f"(a * {su})", f"(b * {sv})"
+        return f"array(cx + {u} * {ct} - {v} * {st}, cy + {u} * {st} + {v} * {ct})"
 
-    ring = F.array(
-        corner(-1, -1), corner(1, -1), corner(1, 1), corner(-1, 1), corner(-1, -1)
+    corners = (corner(-1, -1), corner(1, -1), corner(1, 1), corner(-1, 1), corner(-1, -1))
+    return fp.selectExpr(
+        "fp_id", "cx", "cy", "a", "b", "theta_deg", f"array({', '.join(corners)}) AS ring"
     )
-    return fp.select("fp_id", "cx", "cy", "a", "b", "theta_deg", ring.alias("ring"))
 
 
 # --------------------------------------------------------------------------- #
@@ -153,11 +152,10 @@ def rings_from_meta(fp: DataFrame) -> DataFrame:
 
 def points_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spark.read.schema("event_id BIGINT").parquet(f"{sf_dir}/events.parquet")
-    eid = F.col("event_id")
-    return e.select(
-        eid.alias("pt_id"),
-        ((eid * 131) % WORLD + 0.25).alias("px"),
-        ((eid * 173) % WORLD + 0.25).alias("py"),
+    return e.selectExpr(
+        "event_id AS pt_id",
+        f"(event_id * 131) % {WORLD} + 0.25D AS px",
+        f"(event_id * 173) % {WORLD} + 0.25D AS py",
     )
 
 

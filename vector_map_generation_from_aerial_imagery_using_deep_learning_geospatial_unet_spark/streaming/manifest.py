@@ -40,6 +40,13 @@ from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 
+# the columns record_stage writes, ``stage`` (the partition column) last
+MANIFEST_SCHEMA = (
+    "image_id string, rows long, checksum long, partition_id int, run_id string, "
+    "status string, wall_sec double, ts timestamp, stage string"
+)
+
+
 def manifest_path(root: str) -> str:
     return root.rstrip("/") + "/manifest"
 
@@ -118,18 +125,14 @@ def _xor_agg(col):
 def _read_manifest(spark: SparkSession, root: str) -> DataFrame | None:
     """None only when the manifest genuinely doesn't exist yet; any other
     read failure (corruption, permissions) propagates — silently treating
-    it as 'nothing done' would duplicate every completed unit's output."""
+    it as 'nothing done' would duplicate every completed unit's output.
+    The declared schema means the read runs no schema-inference job, and a
+    manifest whose stage partitions were all cleared reads as empty."""
     try:
-        return spark.read.parquet(manifest_path(root))
+        return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path(root))
     except AnalysisException as ex:
         msg = str(ex)
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "Path does not exist" in msg
-            # dir exists but every stage partition was cleared -> nothing done
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-            or "Unable to infer schema" in msg
-        ):
+        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
             return None
         raise
 
@@ -167,7 +170,15 @@ def stage_output(
     """The stage's VISIBLE output: rows whose (unit, run_id) is recorded in
     the manifest.  Orphan rows from a crash between output append and
     manifest append carry an unrecorded run_id and are filtered out."""
-    out = spark.read.parquet(f"{root.rstrip('/')}/{stage}")
+    return _visible(spark.read.parquet(_output_path(root, stage)), spark, root, stage, key)
+
+
+def _output_path(root: str, stage: str) -> str:
+    return f"{root.rstrip('/')}/{stage}"
+
+
+def _visible(out: DataFrame, spark: SparkSession, root: str, stage: str, key: str) -> DataFrame:
+    """``out`` (the stage's output rows) restricted to recorded (unit, run_id)."""
     done = completed_units(spark, root, stage).select(
         F.col("image_id").alias(key), F.col("run_id").alias("_run_id")
     )
@@ -218,15 +229,13 @@ def run_resumable(
     run_id = uuid.uuid4().hex
     pending = resume_filter(inputs, spark, root, stage, key=key)
     out = stage_fn(pending).withColumn("_run_id", F.lit(run_id))
-    out_path = f"{root.rstrip('/')}/{stage}"
+    out_path = _output_path(root, stage)
     t0 = time.time()
     out.write.mode("append").parquet(out_path)
     wall = time.time() - t0
-    fresh = (
-        spark.read.parquet(out_path)
-        .filter(F.col("_run_id") == run_id)
-        .drop("_run_id")
-    )
+    # re-read with the schema just written: no schema-inference job
+    written = spark.read.schema(out.schema).parquet(out_path)
+    fresh = written.filter(F.col("_run_id") == run_id).drop("_run_id")
     record_stage(
         fresh,
         stage,
@@ -237,4 +246,4 @@ def run_resumable(
         run_id=run_id,
         wall_sec=wall,
     )
-    return stage_output(spark, root, stage, key=key).drop("_run_id")
+    return _visible(written, spark, root, stage, key)

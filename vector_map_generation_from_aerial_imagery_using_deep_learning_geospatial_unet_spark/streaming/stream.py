@@ -158,8 +158,10 @@ def stream_image_completion(
     )
     src = src.withColumn(
         "expected",
-        tile_counts(F.col("w"), cfg.tile_size, cfg.overlap_px)
-        * tile_counts(F.col("h"), cfg.tile_size, cfg.overlap_px),
+        F.expr(
+            f"{tile_counts('w', cfg.tile_size, cfg.overlap_px)}"
+            f" * {tile_counts('h', cfg.tile_size, cfg.overlap_px)}"
+        ),
     )
 
     def track(key, pdfs, state: GroupState):
@@ -254,10 +256,10 @@ def stream_ingest_stats(
         .agg(
             F.count("*").alias("images"),
             F.sum(F.col("w").cast("long") * F.col("h")).alias("pixels"),
-            F.sum(
-                tile_counts(F.col("w"), cfg.tile_size, cfg.overlap_px).cast("long")
-                * tile_counts(F.col("h"), cfg.tile_size, cfg.overlap_px)
-            ).alias("tiles"),
+            F.expr(
+                f"sum(CAST({tile_counts('w', cfg.tile_size, cfg.overlap_px)} AS BIGINT)"
+                f" * {tile_counts('h', cfg.tile_size, cfg.overlap_px)}) AS tiles"
+            ),
         )
         .select(
             F.col("window.start").alias("win_start"),
