@@ -276,6 +276,8 @@ def _cells(g, ix0, iy0, ix1, iy1):
     ("_gy", "_gx", "_acc", "_i", "x", "y", "i", "acc"),
     ("acc", "_gy", "_gx", "y", "_acc", "x", "_i", "i"),
     ("x", "_acc", "_i", "_gx", "acc", "_gy", "y", "i"),
+    # Spark resolves names case-insensitively by default
+    ("_GY", "_GX", "_ACC", "_I", "X", "Y", "I", "ACC"),
 ])
 def test_builders_ignore_lambda_capture(spark, geo, names):
     """pip, bbox and kNN joins, k_ring and polyfill_bbox on inputs whose

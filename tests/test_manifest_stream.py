@@ -68,6 +68,24 @@ def test_manifest_reads_start_no_job(spark, tmp):
         sc.setLocalProperty("spark.jobGroup.id", None)
 
 
+def test_cleared_manifest_plans_like_a_fresh_root(spark, tmp):
+    """A manifest whose stage partitions were all cleared reads as 'nothing
+    done', like a missing one: the resume join drops out of the optimized
+    plan, so the stage sees the same plan on a fresh and on a cleared root."""
+    imgs = images_meta(spark, SF).limit(4)
+
+    def joins():
+        plan = M.resume_filter(imgs, spark, tmp, "s")._jdf.queryExecution().optimizedPlan()
+        return plan.toString().count("Join")
+
+    assert joins() == 0
+    M.run_resumable(imgs, lambda df: df.select("image_id", "w"), "s", tmp)
+    assert joins() == 1
+    M.clear_stage(spark, tmp, "s")
+    assert joins() == 0
+    assert M.completed_units(spark, tmp, "s").count() == 0
+
+
 def test_resume_mid_grid_after_partial_run(spark, tmp):
     imgs = images_meta(spark, SF)
     half = imgs.filter(F.col("image_id") < "img_00000100")

@@ -54,8 +54,10 @@ def quote(name: str) -> str:
 
 def fresh_var(name: str, *texts: str) -> str:
     """A lambda variable name that none of ``texts`` (the argument text the
-    lambda body quotes) contains, so it cannot shadow one of their columns."""
-    while any(name in t for t in texts):
+    lambda body quotes) contains, so it cannot shadow one of their columns.
+    The check ignores case, as Spark resolves names under its default
+    ``spark.sql.caseSensitive=false``."""
+    while any(name.lower() in t.lower() for t in texts):
         name += "_"
     return name
 

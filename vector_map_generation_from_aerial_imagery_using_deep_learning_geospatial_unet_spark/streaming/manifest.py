@@ -123,18 +123,21 @@ def _xor_agg(col):
 
 
 def _read_manifest(spark: SparkSession, root: str) -> DataFrame | None:
-    """None only when the manifest genuinely doesn't exist yet; any other
-    read failure (corruption, permissions) propagates — silently treating
-    it as 'nothing done' would duplicate every completed unit's output.
-    The declared schema means the read runs no schema-inference job, and a
-    manifest whose stage partitions were all cleared reads as empty."""
+    """None when no manifest row exists on disk: the directory is missing, or
+    every stage partition was cleared.  Any other read failure (corruption,
+    permissions) propagates — silently treating it as 'nothing done' would
+    duplicate every completed unit's output.  The declared schema means the
+    read runs no schema-inference job.  An empty manifest is None, not an
+    empty scan, so a cleared root plans like a root never written."""
     try:
-        return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path(root))
+        m = spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path(root))
     except AnalysisException as ex:
         msg = str(ex)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
             return None
         raise
+    # the JVM array's length is one py4j call, however many files it lists
+    return m if len(m._jdf.inputFiles()) else None
 
 
 def completed_units(spark: SparkSession, root: str, stage: str) -> DataFrame:
@@ -142,7 +145,11 @@ def completed_units(spark: SparkSession, root: str, stage: str) -> DataFrame:
     that completed them); empty DF if the manifest doesn't exist yet."""
     m = _read_manifest(spark, root)
     if m is None:
-        return spark.createDataFrame([], "image_id string, run_id string")
+        # an empty range, not an empty createDataFrame (an RDD scan the
+        # optimizer cannot see into): a join against it is optimized away
+        return spark.range(0).selectExpr(
+            "CAST(NULL AS STRING) AS image_id", "CAST(NULL AS STRING) AS run_id"
+        )
     return (
         m.filter((F.col("stage") == stage) & (F.col("status") == "done"))
         .select("image_id", "run_id")
@@ -164,27 +171,6 @@ def resume_filter(
     return inputs.join(done, key, "left_anti")
 
 
-def stage_output(
-    spark: SparkSession, root: str, stage: str, key: str = "image_id"
-) -> DataFrame:
-    """The stage's VISIBLE output: rows whose (unit, run_id) is recorded in
-    the manifest.  Orphan rows from a crash between output append and
-    manifest append carry an unrecorded run_id and are filtered out."""
-    return _visible(spark.read.parquet(_output_path(root, stage)), spark, root, stage, key)
-
-
-def _output_path(root: str, stage: str) -> str:
-    return f"{root.rstrip('/')}/{stage}"
-
-
-def _visible(out: DataFrame, spark: SparkSession, root: str, stage: str, key: str) -> DataFrame:
-    """``out`` (the stage's output rows) restricted to recorded (unit, run_id)."""
-    done = completed_units(spark, root, stage).select(
-        F.col("image_id").alias(key), F.col("run_id").alias("_run_id")
-    )
-    return out.join(done, [key, "_run_id"], "left_semi").drop("_run_id")
-
-
 def clear_stage(spark: SparkSession, root: str, stage: str) -> None:
     """Forget a stage entirely: drop its manifest rows, THEN its output
     directory.  The fresh-run ('overwrite') path of
@@ -198,8 +184,8 @@ def clear_stage(spark: SparkSession, root: str, stage: str) -> None:
     manifest row.  Order matters: manifest first, output
     second.  A crash between the two leaves output rows with NO manifest
     entry — the units read as pending and are simply re-run (their stale
-    rows stay invisible because :func:`stage_output` only shows rows whose
-    (unit, run_id) is recorded).  The reverse order would leave 'done'
+    rows stay invisible because :func:`run_resumable` only returns rows
+    whose (unit, run_id) is recorded).  The reverse order would leave 'done'
     manifest rows pointing at deleted data: permanently missing output."""
     jvm = spark._jvm
     hconf = spark._jsc.hadoopConfiguration()
@@ -229,7 +215,7 @@ def run_resumable(
     run_id = uuid.uuid4().hex
     pending = resume_filter(inputs, spark, root, stage, key=key)
     out = stage_fn(pending).withColumn("_run_id", F.lit(run_id))
-    out_path = _output_path(root, stage)
+    out_path = f"{root.rstrip('/')}/{stage}"
     t0 = time.time()
     out.write.mode("append").parquet(out_path)
     wall = time.time() - t0
@@ -246,4 +232,9 @@ def run_resumable(
         run_id=run_id,
         wall_sec=wall,
     )
-    return _visible(written, spark, root, stage, key)
+    # visible = rows whose (unit, run_id) is recorded; orphans from a crash
+    # between the output append and the manifest append are filtered out
+    done = completed_units(spark, root, stage).select(
+        F.col("image_id").alias(key), F.col("run_id").alias("_run_id")
+    )
+    return written.join(done, [key, "_run_id"], "left_semi").drop("_run_id")
