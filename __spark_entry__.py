@@ -177,12 +177,7 @@ def q_mosaic_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pip_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cell-indexed point-in-polygon join, JVM-side ray-cast refine."""
     pts = derived.points_meta(spark, sf_dir)
-    polys = derived.footprint_rings(spark, sf_dir).join(
-        derived.footprints_with_env(spark, sf_dir).selectExpr(
-            "fp_id", "minx", "miny", "maxx", "maxy"
-        ),
-        "fp_id",
-    )
+    polys = derived.env_from_meta(derived.footprint_rings(spark, sf_dir))
     return joins.pip_join(pts, polys, WORLD_GRID).selectExpr("pt_id", "fp_id")
 
 
@@ -382,59 +377,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_features(imgs, resize_to=64)
 
 
-def q_multimodal_jpeg_prog(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PROGRESSIVE JPEG (SOF2) multimodal path (r5,
-    sources/codec_jpeg_prog.py — full spectral selection + successive
-    approximation, the default large-photo mode of web export
-    pipelines; reference analogue: GDAL decode-anything ingest,
-    /root/reference/src/io.py:41-63).  Same diagonal-tile transcode as
-    q_multimodal_jpeg but through the progressive encoder's 9-scan
-    script; decode routes via the SOF2 dispatch in codec_jpeg.
-
-    Oracle: REUSES q_multimodal_jpeg's frozen fixture verbatim — a
-    progressive stream carries exactly the baseline encoding's
-    quantized coefficients, so decoded pixels (and therefore every
-    feature) must match the baseline gate BIT-FOR-BIT.  The scan
-    protocol itself is additionally pinned by tests/test_jpeg_prog.py's
-    identity property over random/structured/subsampled images."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec, codec_jpeg_prog, images as IMG
-
-    imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="rgb", limit=8)
-    t, step = CFG.tile_size, CFG.tile_size - CFG.overlap_px
-
-    def transcode(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = codec.decode(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
-                nx = 1 + max(int(r.w) - t + step - 1, 0) // step
-                ny = 1 + max(int(r.h) - t + step - 1, 0) // step
-                for i in range(min(nx, ny)):
-                    ox, oy = i * step, i * step
-                    tile = arr[oy : oy + t, ox : ox + t]
-                    rows.append(
-                        (
-                            f"{r.image_id}_{i + 1}_{i + 1}",
-                            codec_jpeg_prog.encode_jpeg_progressive(
-                                np.ascontiguousarray(tile), quality=95
-                            ),
-                            tile.shape[1], tile.shape[0], "jpeg",
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "w", "h", "fmt"]
-            )
-
-    jpeg_tiles = imgs.mapInPandas(
-        transcode, schema="image_id string, bytes binary, w int, h int, fmt string"
-    )
-    return MM.decode_features(jpeg_tiles, resize_to=64)
-
-
 def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real-JPEG multimodal path, exact-gated (round-3) against the
     single-process expectations fixture (tools/build_multimodal_fixture.py;
@@ -550,78 +492,6 @@ def _await_stream(spark: SparkSession, start_fn, state_partitions: int = 8):
         spark.conf.set("spark.sql.shuffle.partitions", old)
 
 
-def q_gif_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real animation path: deterministic animated GIFs (encoded through
-    the real LZW codec), frame-sampled every 2nd frame, per-frame exact
-    channel sums.  idx[y][x] = (y + 3x + pk + 7*frame) % 16 over a 16-color
-    arithmetic palette — the SQL twin re-derives every pixel."""
-    import numpy as np
-    import pandas as pd
-    import zlib as _z
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_gif
-
-    # pk <= 60.  The filtered meta arrives as ONE split; per-row codec work
-    # is CPU-bound, so spread rows across the cluster before entering
-    # Python (cheap metadata-only shuffle).
-    meta = (
-        derived.images_meta(spark, sf_dir)
-        .select("image_id", F.substring("image_id", 5, 18).cast("long").alias("pk"))
-        .filter(F.col("pk") <= 60)
-        .repartition(spark.sparkContext.defaultParallelism, "image_id")
-    )
-
-    pal = np.stack(
-        [
-            (np.arange(16) * 17) % 256,
-            (np.arange(16) * 29) % 256,
-            (np.arange(16) * 41) % 256,
-        ],
-        axis=1,
-    ).astype(np.uint8)
-
-    def synth(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                pk = int(r.pk)
-                h, w = 40 + pk % 7, 50 + pk % 11
-                n = 6 + pk % 5
-                y, x = np.mgrid[0:h, 0:w]
-                frames = [
-                    ((y + 3 * x + pk + 7 * k) % 16).astype(np.uint8)
-                    for k in range(n)
-                ]
-                rows.append((r.image_id, codec_gif.encode_gif(frames, pal), "gif"))
-            yield pd.DataFrame(rows, columns=["video_id", "bytes", "fmt"])
-
-    gifs = meta.mapInPandas(
-        synth, schema="video_id string, bytes binary, fmt string"
-    )
-    sampled = MM.frame_sample(gifs, every_n=2)
-
-    def sums(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                fr = np.frombuffer(
-                    _z.decompress(bytes(r.frame_bytes)), dtype=np.uint8
-                ).reshape(int(r.h), int(r.w), 3)
-                s = fr.reshape(-1, 3).sum(axis=0, dtype=np.int64)
-                rows.append(
-                    (r.video_id, int(r.frame_idx), int(s[0]), int(s[1]), int(s[2]))
-                )
-            yield pd.DataFrame(
-                rows, columns=["video_id", "frame_idx", "sum_r", "sum_g", "sum_b"]
-            )
-
-    return sampled.mapInPandas(
-        sums,
-        schema="video_id string, frame_idx int, sum_r long, sum_g long, sum_b long",
-    )
-
-
 def q_cc_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed cross-tile connected components (the unbounded-mosaic
     scale path, operators/cc_global.py): per-tile labels -> seam
@@ -645,19 +515,6 @@ def q_multimodal_pixel_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
 
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="rgb", limit=80)
-    return MM.pixel_sums(imgs)
-
-
-def q_multimodal_webp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WebP-lossless decode gate: the same exact per-image channel-sum
-    oracle as ``multimodal_pixel_sums``, but the payloads are VP8L streams
-    from the from-scratch codec (sources/codec_webp.py) — lossless, so the
-    closed-form sums hold bit-exactly through RIFF framing, prefix-code
-    decode, and the literal fast path."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
-    imgs = IMG.images_table(spark, sf_dir, fmt="webp", kind="rgb", limit=60)
     return MM.pixel_sums(imgs)
 
 
@@ -1483,7 +1340,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     # --- never driver-sampled before round 5: run first ------------------- #
     "reproject_extents": q_reproject_extents,
     "mosaic_extent_wgs84": q_mosaic_extent_wgs84,
-    "multimodal_jpeg_prog": q_multimodal_jpeg_prog,
     "multimodal_png16": q_multimodal_png16,
     "phash_compute": q_phash_compute,
     "phash_near_dup": q_phash_near_dup,
@@ -1509,11 +1365,9 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "pyramid_meta": q_pyramid_meta,
     "pyramid_tiles": q_pyramid_tiles,
     "multires_meta": q_multires_meta,
-    "gif_frames": q_gif_frames,
     "multimodal_features": q_multimodal_features,
     "multimodal_jpeg": q_multimodal_jpeg,
     "multimodal_pixel_sums": q_multimodal_pixel_sums,
-    "multimodal_webp": q_multimodal_webp,
     "multimodal_tiff": q_multimodal_tiff,
     "multimodal_tiff_jpeg": q_multimodal_tiff_jpeg,
     "multimodal_quarantine": q_multimodal_quarantine,
@@ -1631,7 +1485,6 @@ FROM images_meta""",
         "multimodal_pixel_sums": _multimodal_pixel_sums_sql(),
         "multimodal_png16": _multimodal_png16_sql(),
         "multimodal_quarantine": _multimodal_quarantine_sql(),
-        "multimodal_webp": _multimodal_webp_sql(),
         "multimodal_tiff": _multimodal_tiff_sql(),
         "multimodal_tiff_quarantine": _multimodal_tiff_quarantine_sql(),
         "multimodal_tiff_jpeg": _multimodal_tiff_jpeg_sql(),
@@ -1641,9 +1494,6 @@ FROM images_meta""",
         "box_chips": _geotiff_window_sql(limit=30),
         "multimodal_features": _multimodal_features_sql(),
         "multimodal_jpeg": _multimodal_jpeg_sql(),
-        # the progressive stream carries the baseline encoding's exact
-        # quantized coefficients -> identical pixels -> identical fixture
-        "multimodal_jpeg_prog": _multimodal_jpeg_sql(),
         "cc_distributed": _cc_distributed_sql(),
         "reproject_extents": _reproject_extents_sql(),
         "mosaic_extent_wgs84": f"""
@@ -1651,7 +1501,6 @@ SELECT min(lon_min_nd) AS lon_min_nd, min(lat_min_nd) AS lat_min_nd,
        max(lon_max_nd) AS lon_max_nd, max(lat_max_nd) AS lat_max_nd,
        count(*) AS n_images, count(DISTINCT epsg) AS n_zones
 FROM read_parquet('{_REPROJECT_FIXTURE}')""",
-        "gif_frames": _gif_frames_sql(),
         "stream_ingest_stats": _stream_ingest_stats_sql(),
         "stream_dedup": _stream_dedup_sql(),
         "stream_completion": _stream_completion_sql(),
@@ -1851,36 +1700,6 @@ FROM dumbbell WHERE pk <= 80"""
     )
 
 
-def _gif_frames_sql() -> str:
-    """Closed-form twin of q_gif_frames: re-derive every sampled frame's
-    pixels (idx = (y + 3x + pk + 7k) % 16) and sum the arithmetic palette
-    channels."""
-    return """
-WITH meta AS (
-  SELECT concat('img_', lpad(CAST(p_partkey AS VARCHAR), 8, '0')) AS video_id,
-         p_partkey AS pk
-  FROM part WHERE p_partkey <= 60
-),
-params AS (
-  SELECT video_id, pk,
-    40 + pk % 7 AS h, 50 + pk % 11 AS w, 6 + pk % 5 AS n
-  FROM meta
-),
-ks AS (
-  SELECT *, unnest(generate_series(0, n - 1, 2)) AS k FROM params
-),
-ys AS (SELECT *, unnest(generate_series(0, h - 1)) AS y FROM ks),
-px AS (SELECT *, unnest(generate_series(0, w - 1)) AS x FROM ys),
-vals AS (
-  SELECT video_id, k, (y + 3 * x + pk + 7 * k) % 16 AS idx FROM px
-)
-SELECT video_id, CAST(k AS INT) AS frame_idx,
-  CAST(sum((idx * 17) % 256) AS BIGINT) AS sum_r,
-  CAST(sum((idx * 29) % 256) AS BIGINT) AS sum_g,
-  CAST(sum((idx * 41) % 256) AS BIGINT) AS sum_b
-FROM vals GROUP BY video_id, k"""
-
-
 def _cc_distributed_sql() -> str:
     """Closed-form twin of q_cc_distributed: every synthetic blob is one
     4-connected region of exactly rw*rh pixels (blobs are >=2 px apart)."""
@@ -1966,24 +1785,6 @@ blob AS (
   WHERE r.pk <= {limit}
   GROUP BY r.image_id
 )"""
-    )
-
-
-def _multimodal_webp_sql() -> str:
-    """Closed-form twin of q_multimodal_webp — identical arithmetic to
-    _multimodal_pixel_sums_sql (lossless codec => same sums), limit 60."""
-    return (
-        _rgb_sums_ctes(60)
-        + """
-SELECT i.image_id,
-  CAST(i.w * i.h AS BIGINT) AS n_px,
-  40 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 180 * bl.a - bl.b AS sum_r,
-  57 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 153 * bl.a - bl.b AS sum_g,
-  71 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 129 * bl.a - bl.b AS sum_b
-FROM imgs i
-JOIN rowsums rs USING (image_id)
-JOIN colsums cs USING (image_id)
-JOIN blob bl USING (image_id)"""
     )
 
 

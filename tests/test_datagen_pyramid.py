@@ -112,15 +112,23 @@ def test_decode_features_unknown_fmt(spark):
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
 
     # a fmt with no codec is an undecodable row: it fails by default and
-    # follows the row's on_error policy otherwise
+    # follows the row's on_error policy otherwise (gif and webp have no
+    # codec either)
     df = spark.createDataFrame(
-        [("v1", b"\x00\x01", 4, 3, "mp4")],
+        [
+            ("v1", b"\x00\x01", 4, 3, "mp4"),
+            ("g1", b"GIF89a\x04\x00\x03\x00", 4, 3, "gif"),
+            ("w1", b"RIFF\x0c\x00\x00\x00WEBPVP8L", 4, 3, "webp"),
+        ],
         "image_id string, bytes binary, w int, h int, fmt string",
     )
-    with pytest.raises(Exception, match="unknown fmt"):
-        MM.decode_features(df, resize_to=2).collect()
+    for fmt in ("mp4", "gif", "webp"):
+        with pytest.raises(Exception, match="unknown fmt"):
+            MM.decode_features(df.filter(df.fmt == fmt), resize_to=2).collect()
     assert MM.decode_features(df, resize_to=2, on_error="skip").collect() == []
-    (q,) = MM.decode_features(df, resize_to=2, on_error="quarantine").collect()
-    assert q["n_px"] is None and q["error"].startswith("ValueError: unknown fmt")
+    qs = MM.decode_features(df, resize_to=2, on_error="quarantine").collect()
+    assert sorted(q["image_id"] for q in qs) == ["g1", "v1", "w1"]
+    for q in qs:
+        assert q["n_px"] is None and q["error"].startswith("ValueError: unknown fmt")
 
 

@@ -87,32 +87,6 @@ def test_decode_features_quarantine(spark):
     assert len(bad) == 2 and all(r.mean_r is None for r in bad)
 
 
-def test_frame_sample_skip_drops_bad_video(spark):
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import (
-        codec_gif,
-    )
-
-    pal = np.arange(256 * 3, dtype=np.uint8).reshape(256, 3)
-    fr = np.zeros((6, 7), dtype=np.uint8)
-    rows = [
-        ("v-ok", codec_gif.encode_gif([fr, fr], pal), "gif"),
-        ("v-bad", b"GIF89agarbage", "gif"),
-        # video is not supported: mp4/webm are unknown formats
-        ("v-mp4", b"\x00\x00\x00\x08ftyp", "mp4"),
-        ("v-webm", b"\x1a\x45\xdf\xa3", "webm"),
-    ]
-    df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["video_id", "bytes", "fmt"])
-    )
-    out = MM.frame_sample(df, every_n=1, on_error="skip").collect()
-    assert {r.video_id for r in out} == {"v-ok"}
-    for vid in ("v-mp4", "v-webm"):
-        with pytest.raises(Exception, match="ValueError: frame_sample: unknown fmt"):
-            MM.frame_sample(df.filter(df.video_id == vid), on_error="fail").collect()
-    with pytest.raises(ValueError, match="on_error"):
-        MM.frame_sample(df, on_error="quarantine")
-
-
 def test_bad_mode_rejected_eagerly(spark):
     with pytest.raises(ValueError, match="on_error"):
         MM.pixel_sums(_images_df(spark), on_error="ignore")

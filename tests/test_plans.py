@@ -79,12 +79,7 @@ def test_pip_join_scale_plan_shuffles_on_cell(spark):
     """With auto-broadcast off (this fixture is tiny), the PIP prefilter is
     a shuffle join hash-partitioned on the cell key: the scale plan."""
     pts = derived.points_meta(spark, SF)
-    polys = derived.footprint_rings(spark, SF).join(
-        derived.footprints_with_env(spark, SF).select(
-            "fp_id", "minx", "miny", "maxx", "maxy"
-        ),
-        "fp_id",
-    )
+    polys = derived.env_from_meta(derived.footprint_rings(spark, SF))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
         shuffle = joins.pip_join(pts, polys, WORLD_GRID)

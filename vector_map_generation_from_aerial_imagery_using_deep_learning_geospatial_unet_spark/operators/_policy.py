@@ -14,9 +14,9 @@ catch precisely those and let genuine operator bugs stay loud:
                     error — filter on it to route rows to a dead-letter
                     sink without a second decode pass.
 
-Single-row-per-input operators support all three; multi-row extractors
-(frame_sample, slice_tiles) support fail/skip only — they have no single
-quarantine row shape, so dead-letter at the probe stage
+Single-row-per-input operators support all three; the multi-row extractor
+``slice_tiles`` supports fail/skip only — it has no single quarantine row
+shape, so dead-letter at the probe stage
 (``pixel_sums(on_error='quarantine')``) and skip at the extract stage.
 """
 

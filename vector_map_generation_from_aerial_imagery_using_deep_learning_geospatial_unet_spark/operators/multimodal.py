@@ -1,19 +1,17 @@
-"""Multimodal binary-column operators: image/animation payloads as
-opaque ``binary`` columns with typed metadata; decode / feature-extract /
-resize / frame-sample as Arrow UDFs over ``mapInPandas``.
+"""Multimodal binary-column operators: image payloads as opaque
+``binary`` columns with typed metadata; decode / feature-extract / resize
+as Arrow UDFs over ``mapInPandas``.
 
 The engine decodes image payloads only, with no image libraries:
-png/raw/jpeg/gif/webp/tiff decode with our own pure-numpy codecs (baseline
-JFIF in ``sources/codec_jpeg.py``, GIF LZW in ``codec_gif.py``,
-WebP-lossless VP8L in ``codec_webp.py``).  :func:`frame_sample` splits
-animated GIFs into frames; audio and video are not supported.  Any other
-``fmt`` raises ``ValueError('unknown fmt ...')``; the row's ``on_error``
-policy handles it like any other undecodable payload.
+png/raw/jpeg/tiff decode through :func:`sources.codec.decode` and our own
+pure-numpy codecs (baseline JFIF in ``sources/codec_jpeg.py``, TIFF and
+GeoTIFF in ``codec_tiff.py``).  Any other ``fmt`` raises
+``ValueError('unknown fmt ...')``; the row's ``on_error`` policy handles
+it like any other undecodable payload.
 """
 
 from __future__ import annotations
 
-import zlib
 from collections.abc import Iterator
 
 import numpy as np
@@ -24,12 +22,9 @@ from pyspark.sql import functions as F
 from ..functions.kernels_resample import resize_bilinear
 from ..sources import codec
 
-REAL_FORMATS = {"png", "raw", "jpeg", "jpg", "gif", "webp", "tif", "tiff"}  # sources/codec_*.py
-
 # Per-row error policy (operators/_policy.py): 'fail' | 'skip' |
 # 'quarantine' — see that module's docstring for the full contract.
 from ._policy import (
-    ROW_ERRORS as _ROW_ERRORS,
     check_on_error as _check_on_error,
     guarded_rows as _guarded_rows,
     rows_frame as _rows_frame,
@@ -48,17 +43,6 @@ def quarantine_stats(df: DataFrame) -> DataFrame:
         )
         .agg(F.count("*").alias("n"))
     )
-
-
-def _decode_payload(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
-    if fmt == "gif":  # still image = first frame (sources/codec_gif.py)
-        from ..sources import codec_gif
-
-        frames, _ = codec_gif.decode_gif(bytes(data))
-        return frames[0][:, :, :3]
-    if fmt in REAL_FORMATS:
-        return codec.decode(bytes(data), fmt, w, h)
-    raise ValueError(f"unknown fmt {fmt!r}")
 
 
 def decode_features(
@@ -83,7 +67,7 @@ def decode_features(
         schema += ", error string"
 
     def one(r):
-        arr = _decode_payload(r.bytes, r.fmt, int(r.w), int(r.h))
+        arr = codec.decode(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
         if arr.ndim == 2:
             arr = np.stack([arr] * 3, axis=-1)
         thumb = resize_bilinear(arr, resize_to, resize_to)
@@ -181,56 +165,3 @@ def elev_stats(images: DataFrame, on_error: str = "fail") -> DataFrame:
             yield _rows_frame(rows, cols, on_error)
 
     return images.mapInPandas(run, schema=schema)
-
-
-def frame_sample(
-    videos: DataFrame,
-    every_n: int = 10,
-    on_error: str = "fail",
-) -> DataFrame:
-    """Animation rows (``video_id, bytes, fmt``) -> one row per sampled
-    frame.
-
-    ``fmt='gif'`` decodes for REAL (sources/codec_gif.py: full LZW +
-    disposal compositing; frame_bytes = zlib'd decoded pixels).  Any other
-    fmt raises ``ValueError('unknown fmt ...')``.
-
-    ``on_error`` supports 'fail'/'skip' only: a multi-row-per-input
-    extractor has no single quarantine row shape — dead-letter at a
-    one-row-per-input stage instead (``pixel_sums(on_error='quarantine')``),
-    then frame-sample the surviving rows with 'skip' as a belt."""
-    _check_on_error(on_error, allowed=("fail", "skip"))
-    schema = "video_id string, frame_idx int, frame_bytes binary, w int, h int"
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..sources import codec_gif
-
-        def one(r) -> list:
-            if r.fmt != "gif":
-                raise ValueError(f"frame_sample: unknown fmt {r.fmt!r}")
-            frames, _ = codec_gif.decode_gif(bytes(r.bytes))
-            out = []
-            for fi in range(0, len(frames), every_n):
-                fr = frames[fi][:, :, :3]
-                out.append(
-                    (
-                        r.video_id, fi,
-                        zlib.compress(np.ascontiguousarray(fr).tobytes(), 1),
-                        fr.shape[1], fr.shape[0],
-                    )
-                )
-            return out
-
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    rows.extend(one(r))
-                except _ROW_ERRORS:
-                    if on_error == "fail":
-                        raise
-            yield pd.DataFrame(
-                rows, columns=["video_id", "frame_idx", "frame_bytes", "w", "h"]
-            )
-
-    return videos.mapInPandas(run, schema=schema)

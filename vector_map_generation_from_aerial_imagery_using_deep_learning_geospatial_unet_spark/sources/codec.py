@@ -288,10 +288,6 @@ def decode(data: bytes, fmt: str, w: int, h: int) -> np.ndarray:
         from . import codec_jpeg
 
         arr = codec_jpeg.decode_jpeg(bytes(data))
-    elif fmt == "webp":
-        from . import codec_webp
-
-        arr = codec_webp.decode_webp(bytes(data))
     elif fmt in ("tif", "tiff"):
         from . import codec_tiff
 
@@ -314,10 +310,6 @@ def encode(arr: np.ndarray, fmt: str, level: int = 6) -> bytes:
         # level rides the png signature; jpeg quality pinned at 95 (lossy;
         # PSNR >= 40 dB contract, BASELINE.json input_hint)
         return codec_jpeg.encode_jpeg(arr, quality=95)
-    if fmt == "webp":
-        from . import codec_webp
-
-        return codec_webp.encode_webp(arr)
     if fmt in ("tif", "tiff"):
         from . import codec_tiff
 

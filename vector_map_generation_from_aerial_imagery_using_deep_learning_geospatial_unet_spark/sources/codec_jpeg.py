@@ -12,8 +12,8 @@ web-data jpeg payloads get a from-scratch ITU T.81 *baseline* implementation:
 * decoder — any baseline JFIF stream this encoder can emit plus the common
   general cases: multiple DQT/DHT segments, arbitrary sampling factors
   (chroma upsampled nearest), restart markers, grayscale or 3-component
-  YCbCr.  Progressive (SOF2) and arithmetic coding are explicitly
-  rejected — those remain the documented stub in operators/multimodal.py.
+  YCbCr.  Progressive (SOF2), lossless, hierarchical and arithmetic
+  coding are rejected with ``NotImplementedError``.
 
 Intended scale of use: tile-sized payloads (the engine's unit of pixel work
 is the 200x200 tile, O2/O3) — entropy coding is sequential by nature, so the
@@ -501,11 +501,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 comps.append(
                     {"id": cid, "sh": sf >> 4, "sv": sf & 0x0F, "tq": tq}
                 )
-        elif marker == 0xC2:  # SOF2: progressive — real since r5
-            from . import codec_jpeg_prog
-
-            return codec_jpeg_prog.decode_jpeg_progressive(data)
-        elif marker in (0xC1, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
+        elif marker in (0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB):
             raise NotImplementedError(
                 f"non-baseline jpeg (SOF marker 0x{marker:02X}) unsupported"
             )
@@ -577,10 +573,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
 
 
 def _reconstruct(comps, qtables, h, w, hmax, vmax) -> np.ndarray:
-    """Shared dequant + IDCT + upsample tail: identical for baseline and
-    progressive streams (the scans only change HOW ``coef`` was filled),
-    which is what makes the progressive==baseline bit-identity contract
-    of codec_jpeg_prog testable."""
+    """Dequant + IDCT + upsample tail over the entropy-decoded ``coef``
+    of every component, cropped to (h, w)."""
     planes = []
     for c in comps:
         q = qtables[c["tq"]]
