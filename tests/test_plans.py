@@ -222,35 +222,6 @@ def test_read_windows_never_broadcasts_blobs(spark):
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 3, p
 
 
-def test_mvt_single_exchange_python_only_in_assembly(spark):
-    """Vector-tile sink: envelope + tile-range explode stay JVM-side in
-    one pre-shuffle span; the only Exchange is the (tx, ty) groupBy that
-    co-locates each tile's features, and the only Python stage is the
-    per-tile FlatMapGroupsInPandas assembly."""
-    from pyspark.sql import functions as F
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import vectortiles as VT
-
-    polys = spark.range(100).select(
-        F.col("id").alias("polygon_id"),
-        F.array(
-            F.array(F.col("id") * 1.0, F.lit(0.0)),
-            F.array(F.col("id") * 1.0 + 5.0, F.lit(0.0)),
-            F.array(F.col("id") * 1.0 + 5.0, F.lit(5.0)),
-            F.array(F.col("id") * 1.0, F.lit(5.0)),
-        ).alias("ring"),
-        (F.col("id") % 3).alias("value"),
-    )
-    tiles = VT.polygons_to_mvt(polys, (0.0, 0.0, 128.0, 128.0), zoom=2)
-    p = plan(tiles)
-    import re
-
-    assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, p
-    assert "hashpartitioning(tx" in p
-    assert len(re.findall(r"\(\d+\) FlatMapGroupsInPandas", p)) == 1
-    assert "BatchEvalPython" not in p and "ArrowEvalPython" not in p
-
-
 def test_reproject_is_pure_map_no_exchange(spark):
     """Reprojection must stream off the scan: extents_to_wgs84 and
     points_to_wgs84 add NO Exchange — at 100 TB the CRS normalization

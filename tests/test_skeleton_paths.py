@@ -1,14 +1,12 @@
 """Skeleton vectorization: chain tracing, collinear merge, and the full
-roads story (mask -> P2 skeleton -> centerline paths -> MVT lines)."""
+roads story (mask -> P2 skeleton -> world-coordinate centerline paths)."""
 
 import numpy as np
 
-from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.functions import mvt as M
 from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.functions.kernels_vector import (
     _collinear_merge,
     trace_skeleton_paths,
 )
-from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import vectortiles as VT
 
 
 def test_straight_run_two_endpoints():
@@ -81,9 +79,9 @@ def test_collinear_merge_exact():
 
 
 def test_roads_story_end_to_end(spark):
-    """Bar mask -> skeletonize_stage -> skeleton_paths -> lines_to_mvt:
-    the centerline survives as a type-2 MVT feature whose decoded
-    quantized endpoints match the known medial run."""
+    """Bar mask -> skeletonize_stage -> skeleton_paths: the bar's medial
+    run, pixel (12, 32) to pixel (36, 32), leaves as one 2-vertex path
+    whose endpoints are those pixels' centers in world coordinates."""
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.config import DEFAULT_CONFIG as CFG
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import raster
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec
@@ -92,36 +90,21 @@ def test_roads_story_end_to_end(spark):
     mask = np.zeros((h, w), np.uint8)
     mask[30:35, 10:40] = 255  # bar: bh=5, bw=30 -> 25-px centerline
     png = codec.encode_png(mask)
+    cell = CFG.cell_size_m
+    ulx, uly = 0.0, float(h) * cell
     imgs = spark.createDataFrame(
-        [("img0", png, "png", w, h, 0.0, float(h) * CFG.cell_size_m)],
+        [("img0", png, "png", w, h, ulx, uly)],
         "image_id string, bytes binary, fmt string, w int, h int, "
         "ulx double, uly double",
     )
     paths = raster.skeleton_paths(raster.skeletonize_stage(imgs, CFG), CFG)
-    rows = paths.collect()
-    assert len(rows) == 1 and rows[0].n_px == 25 and rows[0].n_vertices == 2
-    lines = paths.select(
-        paths.path_id.cast("long").alias("line_id"),
-        "path",
-        paths.n_px.cast("long").alias("value"),
-    )
-    world = float(h) * CFG.cell_size_m
-    tiles = VT.lines_to_mvt(lines, (0.0, 0.0, world, world), zoom=0)
-    stats = VT.mvt_tile_stats(tiles).collect()
-    assert len(stats) == 1
-    s = stats[0]
-    assert s.n_features == 1 and s.n_rings == 1 and s.n_vertices == 2
-    assert s.sum_area2 == 0 and s.sum_value == 25
-    # decoded endpoints: x spans the medial run's pixel centers
-    blob = tiles.collect()[0].mvt
-    (feat,) = M.decode_tile(bytes(blob))[0]["features"]
-    xs = sorted(feat["rings"][0][:, 0].tolist())
-    scale = 4096 / world
-    px0, px1 = rows[0].path[0], rows[0].path[-1]
-    exp = sorted(
-        int(np.floor(p[0] * scale)) for p in (px0, px1)
-    )
-    assert xs == exp
+    (row,) = paths.collect()
+    assert row.n_px == 25 and row.n_vertices == 2
+    # the operator's own pixel-center expression, so equality is exact
+    assert row.path == [
+        [ulx + (12 + 0.5) * cell, uly - (32 + 0.5) * cell],
+        [ulx + (36 + 0.5) * cell, uly - (32 + 0.5) * cell],
+    ]
 
 
 def test_skeleton_paths_cycle_counts_distinct_pixels(spark):

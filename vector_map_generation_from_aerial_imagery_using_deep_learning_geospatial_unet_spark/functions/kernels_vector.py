@@ -356,7 +356,7 @@ def trace_skeleton_paths(
     The reference stops at the skeleton raster
     (/root/reference/src/postprocess.py:193-217) and writes it out as
     pixels; tracing it into vector centerlines is what a road layer
-    needs before simplify/export (S8/MVT LINESTRING)."""
+    needs before simplify/export (S8)."""
     rr, cc = np.nonzero(skel)
     pts = set(zip(rr.tolist(), cc.tolist()))
     if not pts:

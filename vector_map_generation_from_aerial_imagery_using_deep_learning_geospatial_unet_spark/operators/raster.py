@@ -658,9 +658,9 @@ def skeleton_paths(
     8-connected chain tracing (kernels_vector.trace_skeleton_paths),
     exact collinear merge, pixel centers -> geo via the per-image
     origin.  One Arrow hop per image; output rows (image_id, path_id,
-    n_px, n_vertices, path) feed simplify (P5), vector sinks (S8), and
-    ``vectortiles.lines_to_mvt``.  Path enumeration is deterministic
-    (nodes visited in sorted pixel order)."""
+    n_px, n_vertices, path) feed simplify (P5) and the vector sinks
+    (S8).  Path enumeration is deterministic (nodes visited in sorted
+    pixel order)."""
     cell = cfg.cell_size_m
     schema = (
         "image_id string, path_id int, n_px long, n_vertices int, "
