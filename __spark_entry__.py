@@ -473,25 +473,6 @@ def q_multimodal_tiff_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return MM.decode_features(tiles, resize_to=64)
 
 
-def _await_stream(spark: SparkSession, start_fn, state_partitions: int = 8):
-    """Run an availableNow stateful stream to completion with a bounded
-    state-partition count.  The state store spawns one task per shuffle
-    partition per microbatch, and at gate-scale state (a few thousand
-    keys) those tasks are pure overhead: 64 -> 8 partitions measured
-    4.7 -> 2.1 s warm on stream_ingest_stats at sf0.1.  The partition
-    count is pinned by the query's FIRST run into its checkpoint — a
-    deployment sizes it to state volume, exactly like
-    spark.sql.shuffle.partitions for batch — so it must stay set until
-    the run completes (restoring right after start() would race the
-    stream thread's planning)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        start_fn().awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-
-
 def q_cc_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed cross-tile connected components (the unbounded-mosaic
     scale path, operators/cc_global.py): per-tile labels -> seam
@@ -892,65 +873,6 @@ def q_edt_weight_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return DG.edt_weight_hist(labels)
 
 
-def q_stream_ingest_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL Structured Streaming path under an exact oracle: the images
-    catalog lands as files, a readStream -> watermarked 5 s window ->
-    append-mode parquet sink runs to completion (availableNow), and the
-    gate returns the sunk windows.  Event time is deterministic —
-    base + (pk*7 % 97) seconds — so append-mode semantics are exact SQL:
-    every window with win_end <= max event time has been flushed by the
-    final watermark, the tail window stays pending (the documented
-    append-mode contract, streaming/stream.py).  Windows are reported as
-    offsets from the base timestamp so session/oracle timezones cancel."""
-    import tempfile
-
-    from pyspark.sql.types import (
-        IntegerType, StringType, StructField, StructType, TimestampType,
-    )
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.streaming.stream import stream_ingest_stats
-
-    base = "2026-01-01 00:00:00"
-    meta = derived.images_meta(spark, sf_dir).select(
-        "image_id", "w", "h",
-        F.substring("image_id", 5, 18).cast("long").alias("pk"),
-    )
-    stamped = meta.select(
-        "image_id", "w", "h",
-        (
-            F.to_timestamp(F.lit(base))
-            + F.make_interval(secs=((F.col("pk") * 7) % 97).cast("double"))
-        ).alias("event_ts"),
-    )
-    tmp = tempfile.mkdtemp(prefix="stream_gate_")
-    src, out, cp = f"{tmp}/src", f"{tmp}/out", f"{tmp}/cp"
-    # >= 2 source files so the stream sees multiple microbatches, the
-    # shape that actually exercises watermark advancement
-    stamped.repartition(8).write.parquet(src)
-    sch = StructType(
-        [
-            StructField("image_id", StringType()),
-            StructField("w", IntegerType()),
-            StructField("h", IntegerType()),
-            StructField("event_ts", TimestampType()),
-        ]
-    )
-    _await_stream(
-        spark,
-        lambda: stream_ingest_stats(
-            spark, src, out, cp,
-            window="5 seconds", watermark="0 seconds",
-            event_time_col="event_ts", schema=sch,
-        ),
-    )
-    res = spark.read.parquet(out)
-    base_s = F.unix_timestamp(F.to_timestamp(F.lit(base)))
-    return res.select(
-        (F.unix_timestamp("win_start") - base_s).alias("win_off_s"),
-        "images", "pixels", "tiles",
-    )
-
-
 def q_stream_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of q_gen_tiles under the SAME exact oracle: the
     images catalog streams in (readStream over parquet files), gen_tiles
@@ -983,81 +905,6 @@ def q_stream_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming exact-dedup under an exact oracle: the images catalog
-    streams in with a deterministic synthetic phash (pk % 251, NULL on
-    every 10th pk), dropDuplicatesWithinWatermark keeps the first
-    arrival per hash, null-phash rows bypass dedup
-    (streaming/stream.py stream_dedup_images).  WHICH duplicate
-    survives is scheduler-dependent, so the gate compares the
-    deterministic projection: one row per distinct surviving phash with
-    its row count (1 for every hash, #nulls for the NULL group)."""
-    import tempfile
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.streaming.stream import stream_dedup_images
-
-    meta = derived.images_meta(spark, sf_dir).select(
-        "image_id",
-        F.lit(None).cast("binary").alias("bytes"),
-        "w", "h",
-        F.lit("png").alias("fmt"),
-        F.lit(None).cast("string").alias("caption"),
-        F.substring("image_id", 5, 18).cast("long").alias("pk"),
-        "ulx", "uly",
-        F.lit("EPSG:32643").alias("crs"),
-    ).withColumn(
-        "phash",
-        F.when(F.col("pk") % 10 == 0, F.lit(None).cast("long")).otherwise(
-            (F.col("pk") % 251).cast("long")
-        ),
-    ).drop("pk").select(  # IMAGES_SCHEMA column order
-        "image_id", "bytes", "w", "h", "fmt", "caption", "phash", "ulx",
-        "uly", "crs",
-    )
-    tmp = tempfile.mkdtemp(prefix="stream_dedup_gate_")
-    src, out, cp = f"{tmp}/src", f"{tmp}/out", f"{tmp}/cp"
-    meta.repartition(8).write.parquet(src)
-    _await_stream(spark, lambda: stream_dedup_images(spark, src, out, cp))
-    return (
-        spark.read.parquet(out)
-        .groupBy("phash")
-        .agg(F.count("*").cast("long").alias("n"))
-    )
-
-
-def q_stream_completion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator (applyInPandasWithState) under
-    an exact oracle: the full tile grid streams in out of order across
-    microbatches, per-image state counts tiles seen, and one
-    (image_id, n_tiles, complete=true) row is emitted the moment the
-    image's grid is complete (streaming/stream.py
-    stream_image_completion; availableNow runs under NoTimeout — the
-    non-termination this gate originally caught is documented there).
-    The backlog is complete, so exactly one row per image emerges with
-    n_tiles = nx*ny — the same closed-form grid arithmetic as the
-    gen_tiles oracle."""
-    import tempfile
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.streaming.stream import stream_image_completion
-
-    # pk cap: the gate's cost is stateful-shuffle bound, not insight
-    # bound — 500 images (~19k tiles) still split across microbatches
-    # and accumulate state across them at every SF
-    imgs = derived.images_meta(spark, sf_dir).filter(
-        F.substring("image_id", 5, 18).cast("long") <= 500
-    )
-    tiles = grid.gen_tiles(imgs, CFG, with_geo=False).select(
-        "image_id", "tile_id", "tiy", "tix", "w", "h"
-    )
-    tmp = tempfile.mkdtemp(prefix="stream_completion_gate_")
-    src, out, cp = f"{tmp}/src", f"{tmp}/out", f"{tmp}/cp"
-    # many files -> several microbatches (maxFilesPerTrigger=4), so most
-    # images genuinely accumulate state across batches before completing
-    tiles.repartition(16).write.parquet(src)
-    _await_stream(spark, lambda: stream_image_completion(spark, src, out, cp, CFG))
-    return spark.read.parquet(out).select("image_id", "n_tiles", "complete")
-
-
 _PHASH_PK_CAP = 60  # matches tools/build_phash_fixture.py
 
 
@@ -1066,7 +913,7 @@ def q_phash_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed from decoded pixels (gray -> 32x32 -> DCT-II -> 8x8 median
     threshold), Arrow-batched end-to-end.  Oracle: frozen expectations
     from a SINGLE-PROCESS run of the same public kernel
-    (tools/build_phash_fixture.py) — the IVF-centroid/skeleton fixture
+    (tools/build_phash_fixture.py) — the skeleton/reproject fixture
     pattern; kernel-level correctness is pinned by
     tests/test_imagehash.py."""
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import imagehash as IH
@@ -1076,65 +923,6 @@ def q_phash_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, sf_dir, fmt="png", kind="rgb", limit=_PHASH_PK_CAP
     )
     return IH.phash64(imgs).select("image_id", "phash")
-
-
-def _planted_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic near-dup-planted hash table, expressible identically
-    in DuckDB (see _phash_near_dup_sql): groups of 4 consecutive pks
-    share a 62-bit LCG base; members 0/1 carry it verbatim (exact dups),
-    member 2 flips 1 bit, member 3 flips 2 — every in-group pair sits at
-    Hamming <= 2, cross-group pairs at ~31."""
-    meta = derived.images_meta(spark, sf_dir).withColumn(
-        "pk", F.substring("image_id", 5, 18).cast("long")
-    )
-    g = F.floor(F.col("pk") / 4).cast("long")
-    base = ((g * 1103515245 + 12345) % 1073741824) * F.lit(4294967296).cast(
-        "long"
-    ) + (g * 69069 + 1) % 1073741824
-    m = F.col("pk") % 4
-    mask = (
-        F.when(m == 2, 1).when(m == 3, 3).otherwise(0).cast("long")
-    )
-    return meta.select(
-        "image_id", base.bitwiseXOR(mask).cast("long").alias("phash")
-    )
-
-
-def q_phash_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """operators/imagehash.hamming_near_dup gate: all image pairs within
-    Hamming 3 over a planted 64-bit hash column, found by the pigeonhole
-    band multi-index (4 x 16-bit bands over DISTINCT hashes, equi-join,
-    bit_count verify).  The DuckDB oracle brute-forces ALL pairs with
-    xor+bit_count — a fully independent algorithm, so it checks the
-    banding's completeness, not just its self-consistency."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import imagehash as IH
-
-    return IH.hamming_near_dup(
-        _planted_phash(spark, sf_dir), "image_id", "phash", max_hamming=3
-    )
-
-
-def q_phash_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """operators/graph.connected_components gate — the full dedup chain:
-    planted hashes -> Hamming pair generation (banded multi-index) ->
-    transitive closure (min-label propagation + pointer jumping) ->
-    per-group rollup (component = min image_id, member count).  The
-    oracle needs no graph algorithm at all: the plant makes every group
-    of 4 consecutive pks one clique (pairwise Hamming <= 2) with no
-    cross-group edge at Hamming <= 3 (verified by the brute-force
-    phash_near_dup oracle emitting exactly the in-group pairs), so
-    groups close as GROUP BY floor(pk/4)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import graph as G
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import imagehash as IH
-
-    planted = _planted_phash(spark, sf_dir)
-    pairs = IH.hamming_near_dup(planted, "image_id", "phash", max_hamming=3)
-    comps = G.connected_components(
-        pairs, vertices=planted.select("image_id"), id_col="image_id"
-    )
-    return comps.groupBy("component").agg(
-        F.count("*").cast("long").alias("n_members")
-    )
 
 
 _ZONAL_PK_CAP = 120
@@ -1240,15 +1028,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "mosaic_extent_wgs84": q_mosaic_extent_wgs84,
     "multimodal_png16": q_multimodal_png16,
     "phash_compute": q_phash_compute,
-    "phash_near_dup": q_phash_near_dup,
-    "phash_dedup_groups": q_phash_dedup_groups,
     "zonal_stats": q_zonal_stats,
     "zonal_stats_poly": q_zonal_stats_poly,
     "skeleton_paths": q_skeleton_paths,
-    "stream_ingest_stats": q_stream_ingest_stats,
     "stream_tiles": q_stream_tiles,
-    "stream_dedup": q_stream_dedup,
-    "stream_completion": q_stream_completion,
     "multimodal_tiff_quarantine": q_multimodal_tiff_quarantine,
     # --- previously driver-evidenced, cheap metadata gates ---------------- #
     "tile_counts": q_tile_counts,
@@ -1395,16 +1178,11 @@ SELECT min(lon_min_nd) AS lon_min_nd, min(lat_min_nd) AS lat_min_nd,
        max(lon_max_nd) AS lon_max_nd, max(lat_max_nd) AS lat_max_nd,
        count(*) AS n_images, count(DISTINCT epsg) AS n_zones
 FROM read_parquet('{_REPROJECT_FIXTURE}')""",
-        "stream_ingest_stats": _stream_ingest_stats_sql(),
-        "stream_dedup": _stream_dedup_sql(),
-        "stream_completion": _stream_completion_sql(),
         "phash_compute": _phash_compute_sql(),
-        "phash_near_dup": _phash_near_dup_sql(),
         "zonal_stats": _zonal_stats_sql(),
         # margin-aligned rect 4-gons: center-inside set == snapped window,
         # so the polygon path shares the rect path's integer oracle
         "zonal_stats_poly": _zonal_stats_sql(),
-        "phash_dedup_groups": _phash_dedup_groups_sql(),
         "skeleton_paths": _skeleton_paths_sql(),
         # the streamed grid must equal the batch grid bit-for-bit, so the
         # streaming gate reuses gen_tiles' exact closed-form oracle
@@ -1886,48 +1664,6 @@ SELECT image_id, phash
 FROM read_parquet('{_PHASH_FIXTURE}')"""
 
 
-def _phash_near_dup_sql() -> str:
-    """Twin of q_phash_near_dup — BRUTE FORCE: every pair, xor +
-    bit_count, no banding, so the oracle shares no algorithm with the
-    operator (quadratic is fine at the sf0.01 gate size)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import IMAGES_META_PK_SQL
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + """
-, planted AS (
-  SELECT image_id,
-    xor(
-      ((CAST(FLOOR(pk / 4) AS BIGINT) * 1103515245 + 12345) % 1073741824)
-        * CAST(4294967296 AS BIGINT)
-        + (CAST(FLOOR(pk / 4) AS BIGINT) * 69069 + 1) % 1073741824,
-      CAST(CASE pk % 4 WHEN 2 THEN 1 WHEN 3 THEN 3 ELSE 0 END AS BIGINT)
-    ) AS phash
-  FROM images_meta_pk
-)
-SELECT a.image_id AS id_a, b.image_id AS id_b,
-       CAST(bit_count(xor(a.phash, b.phash)) AS INT) AS hamming
-FROM planted a JOIN planted b ON a.image_id < b.image_id
-WHERE bit_count(xor(a.phash, b.phash)) <= 3"""
-    )
-
-
-def _phash_dedup_groups_sql() -> str:
-    """Twin of q_phash_dedup_groups: the planted components ARE the
-    pk-groups of 4 (see q docstring), so the transitive closure reduces
-    to a GROUP BY — no graph traversal in the oracle."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import IMAGES_META_PK_SQL
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + """
-SELECT min(image_id) AS component, CAST(count(*) AS BIGINT) AS n_members
-FROM images_meta_pk GROUP BY CAST(FLOOR(pk / 4) AS BIGINT)"""
-    )
-
-
 def _zonal_stats_sql() -> str:
     """Twin of q_zonal_stats — pure integer arithmetic: zone (c, s)
     intersects image pk iff pk % 50 = c (images never cross the 210 m
@@ -1973,72 +1709,6 @@ SELECT concat('z_', CAST(c AS VARCHAR), '_', CAST(s AS VARCHAR)) AS zone_id,
        CAST(SUM(fg) AS BIGINT)         AS fg_px,
        CAST(SUM(fg) * 255 AS BIGINT)   AS sum_val
 FROM wfg GROUP BY c, s"""
-    )
-
-
-def _stream_dedup_sql() -> str:
-    """Twin of q_stream_dedup: dedup of a complete backlog is DISTINCT —
-    one row per non-null phash (n=1) plus the NULL group carrying every
-    null-phash input row."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import IMAGES_META_PK_SQL
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + """
-SELECT phash, CAST(count(*) AS BIGINT) AS n FROM (
-  SELECT DISTINCT pk % 251 AS phash FROM images_meta_pk WHERE pk % 10 <> 0
-  UNION ALL
-  SELECT CAST(NULL AS BIGINT) AS phash FROM images_meta_pk WHERE pk % 10 = 0
-) GROUP BY phash"""
-    )
-
-
-def _stream_completion_sql() -> str:
-    """Twin of q_stream_completion: a complete backlog completes every
-    image exactly once with n_tiles = nx*ny (the gen_tiles grid
-    arithmetic, shared with the other tile oracles)."""
-    t, step = CFG.tile_size, CFG.tile_size - CFG.overlap_px
-    nx = f"(1 + FLOOR((greatest(w - {t}, 0) + {step - 1}) / {step}))"
-    ny = f"(1 + FLOOR((greatest(h - {t}, 0) + {step - 1}) / {step}))"
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import IMAGES_META_PK_SQL
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + f"""
-SELECT image_id, CAST({nx} * {ny} AS BIGINT) AS n_tiles, TRUE AS complete
-FROM images_meta_pk WHERE pk <= 500"""
-    )
-
-
-def _stream_ingest_stats_sql() -> str:
-    """Closed-form twin of q_stream_ingest_stats: deterministic event
-    times (off = pk*7 % 97 seconds) bucket into 5 s windows; append-mode
-    emits exactly the windows whose end <= max event time (zero-delay
-    watermark), the tail window stays pending.  Tile counts reuse the
-    gen_tiles grid arithmetic so an EngineConfig change can't split the
-    engine from the oracle."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import IMAGES_META_PK_SQL
-
-    t, step = CFG.tile_size, CFG.tile_size - CFG.overlap_px
-    nx = f"(1 + FLOOR((greatest(w - {t}, 0) + {step - 1}) / {step}))"
-    ny = f"(1 + FLOOR((greatest(h - {t}, 0) + {step - 1}) / {step}))"
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + f""",
-evts AS (
-  SELECT (pk * 7) % 97 AS off, w, h, {nx} * {ny} AS n_tiles
-  FROM images_meta_pk
-)
-SELECT CAST((off // 5) * 5 AS BIGINT) AS win_off_s,
-  count(*)                            AS images,
-  CAST(sum(CAST(w AS BIGINT) * h) AS BIGINT) AS pixels,
-  CAST(sum(n_tiles) AS BIGINT)        AS tiles
-FROM evts
-WHERE (off // 5) * 5 + 5 <= (SELECT max(off) FROM evts)
-GROUP BY 1"""
     )
 
 

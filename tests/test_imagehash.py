@@ -1,11 +1,9 @@
-"""pHash kernel + Hamming near-dup: determinism, invariance, pigeonhole
-completeness vs a brute-force reference, null/exact-dup handling."""
+"""pHash kernel and the phash64 operator: determinism, invariance,
+kernel/operator agreement, quarantine, and re-encode robustness."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
-from pyspark.sql import functions as F
 
 from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import imagehash as IH
 from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec
@@ -39,57 +37,6 @@ def test_phash_robust_to_resize_sensitive_to_content():
     b = render_rgb(12, 400, 300)
     d_other = bin((h ^ IH.phash_kernel(b)) & ((1 << 64) - 1)).count("1")
     assert d_other > 10  # different scene
-
-
-def _brute(pairs_input, max_h):
-    out = set()
-    items = [(i, h) for i, h in pairs_input if h is not None]
-    for i in range(len(items)):
-        for j in range(i + 1, len(items)):
-            (ia, ha), (ib, hb) = items[i], items[j]
-            d = bin((ha ^ hb) & ((1 << 64) - 1)).count("1")
-            if d <= max_h:
-                lo, hi = sorted((ia, ib))
-                out.add((lo, hi, d))
-    return out
-
-
-def test_hamming_near_dup_matches_brute_force(spark):
-    rng = np.random.RandomState(42)
-    rows = []
-    base = [int(rng.randint(-(2 ** 62), 2 ** 62)) for _ in range(30)]
-    k = 0
-    for b in base:
-        rows.append((f"id_{k:03d}", b)); k += 1
-        # planted neighbours at distances 0..4 (4 must NOT match)
-        for d in (0, 1, 3, 4):
-            m = 0
-            for bit in range(d):
-                m |= 1 << (bit * 17 + 2)
-            rows.append((f"id_{k:03d}", b ^ m)); k += 1
-    rows.append(("id_null", None))
-    df = spark.createDataFrame(rows, "image_id string, phash long")
-    got = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in IH.hamming_near_dup(df, max_hamming=3).collect()
-    }
-    want = _brute(rows, 3)
-    assert got == want
-    assert any(d == 0 for _, _, d in got)  # exact-dup path exercised
-    assert all(d <= 3 for _, _, d in got)
-
-
-def test_band_specs_cover_all_bits():
-    for mh in (0, 1, 3, 7, 63):
-        specs = IH._band_specs(mh)
-        assert len(specs) == mh + 1
-        assert sum(w for _, w in specs) == IH.HASH_BITS
-        shift = 0
-        for s, w in specs:
-            assert s == shift
-            shift += w
-    with pytest.raises(ValueError):
-        IH._band_specs(64)
 
 
 def test_phash64_operator_matches_kernel(spark):
@@ -145,10 +92,9 @@ def test_phash64_quarantine_same_batch_keeps_exact_hashes(spark):
 
 
 def test_lossy_reencode_found_as_near_dup(spark):
-    """End-to-end purpose of the pair: the SAME scene re-encoded lossily
-    (JPEG q95) hashes within a few bits of its PNG original, and
-    phash64 |> hamming_near_dup surfaces exactly those pairs; distinct
-    scenes stay apart."""
+    """The SAME scene re-encoded lossily (JPEG q95) hashes within a few
+    bits of its PNG original through phash64, and distinct scenes stay
+    apart: the pairs within 6 bits are exactly the re-encode pairs."""
     rows = []
     for pk in (21, 22, 23):
         a = render_rgb(pk, 320, 240)
@@ -157,56 +103,12 @@ def test_lossy_reencode_found_as_near_dup(spark):
     df = spark.createDataFrame(
         rows, "image_id string, bytes binary, w int, h int, fmt string"
     )
-    hashes = IH.phash64(df)
+    hashes = sorted((r.image_id, r.phash) for r in IH.phash64(df).collect())
+    assert len(hashes) == 6
     pairs = {
-        (r.id_a, r.id_b)
-        for r in IH.hamming_near_dup(hashes, max_hamming=6).collect()
+        (ia, ib)
+        for i, (ia, ha) in enumerate(hashes)
+        for ib, hb in hashes[i + 1:]
+        if bin((ha ^ hb) & ((1 << 64) - 1)).count("1") <= 6
     }
     assert pairs == {(f"jpg_{pk}", f"png_{pk}") for pk in (21, 22, 23)}
-
-
-def test_pigeonhole_banding_property():
-    """Pure-python pigeonhole property behind hamming_near_dup's
-    completeness: for ANY two hashes within max_hamming, at least one
-    of the max_hamming+1 bands is bit-identical (so the band equi-join
-    cannot miss a pair)."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    @settings(max_examples=300, deadline=None)
-    @given(
-        st.integers(min_value=0, max_value=(1 << 64) - 1),
-        st.integers(min_value=0, max_value=63),
-        st.lists(st.integers(min_value=0, max_value=63), max_size=7),
-        st.integers(min_value=0, max_value=7),
-    )
-    def check(h, first_bit, more_bits, max_h):
-        flips = ({first_bit} | set(more_bits))
-        flips = set(list(flips)[: max_h]) if max_h else set()
-        g = h
-        for b in flips:
-            g ^= 1 << b
-        d = bin(h ^ g).count("1")
-        assert d <= max_h or not flips
-        specs = IH._band_specs(max(max_h, d, 0) if max_h else 0)
-        if d <= len(specs) - 1:
-            agree = any(
-                (h >> s) & ((1 << w) - 1) == (g >> s) & ((1 << w) - 1)
-                for s, w in specs
-            )
-            assert agree, (hex(h), hex(g), d, specs)
-
-    check()
-
-
-def test_hamming_near_dup_zero_distance_single_band(spark):
-    """max_hamming=0 degenerates to exact-dup pairs through the single
-    64-bit band (regression: the full-width band mask used to overflow
-    LongType)."""
-    rows = [("a", 5), ("b", 5), ("c", -7), ("d", -7), ("e", 9)]
-    df = spark.createDataFrame(rows, "image_id string, phash long")
-    got = {
-        (r.id_a, r.id_b, r.hamming)
-        for r in IH.hamming_near_dup(df, max_hamming=0).collect()
-    }
-    assert got == {("a", "b", 0), ("c", "d", 0)}

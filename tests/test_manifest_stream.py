@@ -101,64 +101,6 @@ def test_resume_mid_grid_after_partial_run(spark, tmp):
     assert out.count() == gen_tiles(imgs, with_geo=False).count()
 
 
-def _images_with_payload(spark, phash_col):
-    return images_meta(spark, SF).withColumns(
-        {
-            "bytes": F.lit(b""),
-            "fmt": F.lit("raw"),
-            "caption": F.lit("c"),
-            "phash": phash_col.cast("long"),
-            "crs": F.lit("SYNTH:METRIC"),
-        }
-    )
-
-
-def test_stream_dedup_images_first_arrival_wins(spark, tmp):
-    """Uniques must NEVER drop, across multiple microbatches (regression:
-    content-derived event times made later batches 'late' and silently
-    discarded first arrivals)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.streaming.stream import stream_dedup_images
-
-    # phash collides in groups of ~4 -> dedup must keep one per group;
-    # 24 files / maxFilesPerTrigger=8 -> at least 3 microbatches
-    imgs = _images_with_payload(spark, F.xxhash64("image_id") % 500)
-    src, out, cp = f"{tmp}/src", f"{tmp}/out", f"{tmp}/cp"
-    imgs.repartition(24).write.parquet(src)
-    q = stream_dedup_images(spark, src, out, cp)
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
-    n_distinct = imgs.select("phash").distinct().count()
-    assert got.count() == n_distinct
-    assert got.select("phash").distinct().count() == n_distinct
-
-
-def test_stream_ingest_stats_windowed_agg(spark, tmp):
-    """No data is late-dropped: emitted windows partition the ingested rows;
-    the only incompleteness is the tail window awaiting the next trigger."""
-    import time as _time
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.streaming.stream import stream_ingest_stats
-
-    imgs = _images_with_payload(spark, F.xxhash64("image_id"))
-    src, out, cp = f"{tmp}/src", f"{tmp}/out", f"{tmp}/cp"
-    imgs.repartition(24).write.parquet(src)
-    q = stream_ingest_stats(spark, src, out, cp, window="2 seconds")
-    q.awaitTermination(120)
-    # a second pass (new data arrives) advances the watermark and flushes
-    # the previous run's tail windows
-    imgs.limit(50).repartition(2).write.mode("append").parquet(src)
-    _time.sleep(3)
-    q2 = stream_ingest_stats(spark, src, out, cp, window="2 seconds")
-    q2.awaitTermination(120)
-    rows = spark.read.parquet(out).collect()
-    assert len(rows) >= 1
-    span = {(r["win_start"], r["win_end"]) for r in rows}
-    assert len(span) == len(rows)  # one emission per closed window
-    total = sum(r["images"] for r in rows)
-    # run-1 rows fully flushed by run 2; only run-2's tail may be pending
-    assert imgs.count() <= total <= imgs.count() + 50
-
-
 def test_stream_tiles_matches_batch(spark, tmp):
     imgs = images_meta(spark, SF).withColumns(
         {
@@ -179,35 +121,6 @@ def test_stream_tiles_matches_batch(spark, tmp):
     assert (
         got.select("tile_id").exceptAll(exp.select("tile_id")).count() == 0
     )
-
-
-def test_stream_image_completion_stateful(spark, tmp):
-    """applyInPandasWithState accumulator: an image emits complete=true
-    exactly when its full tile grid has arrived, across microbatches."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators.grid import gen_tiles
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.streaming.stream import stream_image_completion
-
-    imgs = images_meta(spark, SF).filter(F.col("image_id") < "img_00000040")
-    tiles = gen_tiles(imgs, with_geo=False).select(
-        "image_id", "tile_id", "tiy", "tix", "w", "h"
-    )
-    src, out, cp = f"{tmp}/tiles", f"{tmp}/done", f"{tmp}/cp"
-    # write in two halves -> tiles of one image can straddle files/batches
-    tiles.filter(F.col("tix") % 2 == 0).write.parquet(src)
-    tiles.filter(F.col("tix") % 2 == 1).write.mode("append").parquet(src)
-    q = stream_image_completion(spark, src, out, cp)
-    # must TERMINATE, not just drain: under ProcessingTimeTimeout Spark
-    # schedules another batch unconditionally and availableNow never stops
-    # (the stream.py NoTimeout rationale) — a bare awaitTermination(120)
-    # used to mask exactly that
-    assert q.awaitTermination(120), "availableNow completion never terminated"
-    got = spark.read.parquet(out)
-    done = {r["image_id"]: r["n_tiles"] for r in got.filter("complete").collect()}
-    exp = {
-        r["image_id"]: r["n"]
-        for r in tiles.groupBy("image_id").agg(F.count("*").alias("n")).collect()
-    }
-    assert done == exp
 
 
 def test_resume_records_zero_output_units(spark, tmp):

@@ -171,11 +171,3 @@ def weighted_bce(scores: DataFrame) -> DataFrame:
         F.col("y") * F.log(p) + (1.0 - F.col("y")) * F.log(1.0 - p)
     )
     return scores.agg(F.avg(term).alias("weighted_bce"))
-
-
-def prediction_threshold(prob: DataFrame, col: str = "prob") -> DataFrame:
-    """M7: np.round(predict) == 0.5 threshold, x255 on write
-    (/root/reference/test.py:241-248) as a pure column expr."""
-    return prob.withColumn(
-        "mask_value", F.when(F.col(col) > 0.5, 255.0).otherwise(0.0)
-    )

@@ -1,34 +1,12 @@
-"""Perceptual-hash image dedup: DCT pHash from pixels + Hamming near-dup.
+"""Perceptual hash of image pixels: the input table's ``phash`` column.
 
 The north-star input table carries a ``phash:int64`` column per image
-(BASELINE.json input_hint); the reference pipeline itself never dedups
-its ortho corpus — at 10^12 images, near-duplicate scenes (re-flights,
-overlapping strips, format re-encodes) are certain, and training on
-them skews the model.  Two operators close that gap:
-
-* :func:`phash64` computes the column from decoded pixels — the classic
-  DCT perceptual hash (gray -> 32x32 resize -> 2D DCT-II -> 8x8
-  low-frequency block -> median threshold -> 64 bits), the same
-  construction as the public imagehash library's ``phash``.  A re-encode
-  (PNG -> JPEG) or mild noise perturbs few bits; unrelated images differ
-  in ~32.
-
-* :func:`hamming_near_dup` finds all pairs within ``max_hamming`` bits
-  at corpus scale via the pigeonhole multi-index (Manku et al., WWW'07,
-  the SimHash dedup paper): split 64 bits into ``max_hamming + 1``
-  bands — any pair at distance <= max_hamming agrees exactly on at
-  least one band — equi-join per band, then verify with
-  ``bit_count(a ^ b)``.  All JVM-side (shift/mask/xor/bit_count inside
-  whole-stage codegen); no Python in the join path.
-
-Scale design (10^12 rows): banding runs over DISTINCT hashes, not rows —
-exact duplicates (the overwhelmingly common case in web corpora) never
-enter the quadratic-risk self-join; they rejoin as hash-equality groups
-afterwards.  Shuffle is O(distinct_hashes * bands) for the candidate
-join plus two hash-equi-joins to re-attach ids.  Skewed bands (e.g. the
-all-zero band of flat images) are bounded by distinct-hash collapse and
-split further by AQE skew-join; candidate verification is a single
-codegen'd filter, so a hot band costs compare throughput, not memory.
+(BASELINE.json input_hint).  :func:`phash64` computes it from decoded
+pixels — the classic DCT perceptual hash (gray -> 32x32 resize -> 2D
+DCT-II -> 8x8 low-frequency block -> median threshold -> 64 bits), the
+same construction as the public imagehash library's ``phash``.  A
+re-encode (PNG -> JPEG) or mild noise perturbs few bits; unrelated images
+differ in ~32.
 """
 
 from __future__ import annotations
@@ -38,12 +16,9 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ._policy import ROW_ERRORS, check_on_error, guarded_rows, rows_frame
+from ._policy import check_on_error, guarded_rows, rows_frame
 from ..sources import codec
-
-HASH_BITS = 64
 
 
 # ------------------------------------------------------------- pure kernel
@@ -120,99 +95,3 @@ def phash64(
             yield rows_frame(rows, ["image_id", hash_col], on_error)
 
     return images.mapInPandas(run, schema=schema)
-
-
-def _band_specs(max_hamming: int) -> list[tuple[int, int]]:
-    """(shift, width) of each pigeonhole band: ``max_hamming + 1`` bands
-    covering all 64 bits as evenly as possible."""
-    n_bands = max_hamming + 1
-    if not 1 <= n_bands <= HASH_BITS:
-        raise ValueError(f"max_hamming {max_hamming} out of range")
-    base, extra = divmod(HASH_BITS, n_bands)
-    specs, shift = [], 0
-    for b in range(n_bands):
-        width = base + (1 if b < extra else 0)
-        specs.append((shift, width))
-        shift += width
-    return specs
-
-
-def hamming_near_dup(
-    df: DataFrame,
-    id_col: str = "image_id",
-    hash_col: str = "phash",
-    max_hamming: int = 3,
-) -> DataFrame:
-    """All pairs of rows whose hashes differ in <= ``max_hamming`` bits:
-    (id_a, id_b, hamming) with ``id_a < id_b``, one row per pair.
-
-    Pigeonhole-complete: with ``max_hamming + 1`` disjoint bands, any
-    pair at distance <= max_hamming matches exactly on at least one
-    band, so the band equi-join misses nothing (Manku et al., WWW'07).
-    Runs over DISTINCT hashes; identical-hash groups (hamming 0) rejoin
-    as plain hash-equality pairs — see the module docstring for the
-    shuffle budget.  NULL hashes are ignored.  ``id_col`` must be unique
-    per row (it is the dedup key)."""
-    specs = _band_specs(max_hamming)
-    P = df.select(
-        F.col(id_col).alias("_id"), F.col(hash_col).alias("_h")
-    ).filter(F.col("_h").isNotNull())
-
-    def band_val(shift: int, width: int):
-        v = F.shiftrightunsigned(F.col("_h"), shift)
-        if width >= HASH_BITS:  # max_hamming=0: the single band IS the hash
-            return v
-        return v.bitwiseAND(F.lit((1 << width) - 1))
-
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                band_val(shift, width).alias("val"),
-            )
-            for b, (shift, width) in enumerate(specs)
-        ]
-    )
-    D = (
-        P.select("_h").distinct()
-        .select("_h", F.explode(bands).alias("bv"))
-        .select("_h", F.col("bv.band").alias("band"), F.col("bv.val").alias("val"))
-    )
-    cand = (
-        D.alias("a")
-        .join(
-            D.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a._h") < F.col("b._h")),
-        )
-        .select(F.col("a._h").alias("h_a"), F.col("b._h").alias("h_b"))
-        .distinct()
-        .withColumn(
-            "hamming",
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).cast("int"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-    near = (
-        cand.join(P.select(F.col("_id").alias("ia"), F.col("_h").alias("h_a")), "h_a")
-        .join(P.select(F.col("_id").alias("ib"), F.col("_h").alias("h_b")), "h_b")
-        .select(
-            F.least("ia", "ib").alias("id_a"),
-            F.greatest("ia", "ib").alias("id_b"),
-            "hamming",
-        )
-    )
-    eq = (
-        P.alias("a")
-        .join(
-            P.alias("b"),
-            (F.col("a._h") == F.col("b._h")) & (F.col("a._id") < F.col("b._id")),
-        )
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("b._id").alias("id_b"),
-            F.lit(0).cast("int").alias("hamming"),
-        )
-    )
-    return near.unionByName(eq)

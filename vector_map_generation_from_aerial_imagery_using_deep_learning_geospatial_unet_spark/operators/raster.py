@@ -699,22 +699,6 @@ def skeleton_paths(
     return skel_images.mapInPandas(run, schema=schema)
 
 
-def mask_clean_stage(
-    images: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """Fused M7+P1 (threshold -> 3x3 open + area filter) in ONE Arrow hop —
-    result-identical to ``threshold_mask | erosion_stage`` without the
-    intermediate plane crossing the pipe."""
-    return _map_pixels(
-        images,
-        lambda a: km.erosion_clean(
-            (a >= 128).astype(np.uint8) * 255,
-            cfg.erosion_filter,
-            cfg.min_object_area_px,
-        ).astype(np.uint8),
-    )
-
-
 def cc_label_stage(images: DataFrame, connectivity: int = 1) -> DataFrame:
     """Connected-component instance labels (ndi.label semantics)."""
     return _map_pixels(images, lambda a: km.label(a, connectivity).astype(np.int32))
