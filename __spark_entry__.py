@@ -1,25 +1,46 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
 ``entry(spark)`` — flagship pipeline smoke at sf0.001.
-``queries()`` / ``oracle_sql()`` — per-operator correctness pairs; every
-SQL-checkable query derives its geo inputs with pure arithmetic from the
-pre-registered ``DRIVER_TABLES``, so the DuckDB oracle
-computes the identical result analytically.  See SURVEY.md §2 for the
-operator inventory these cover.
+``queries()`` / ``oracle_sql()`` — per-operator correctness pairs, both
+read from the one ``GATES`` table; every SQL-checkable query derives its
+geo inputs with pure arithmetic from the pre-registered ``DRIVER_TABLES``,
+so the DuckDB oracle computes the identical result analytically.  See
+SURVEY.md §2 for the operator inventory these cover.
+
+Every function that runs in a Python worker is a closure nested in the
+function that calls ``mapInPandas``: cloudpickle ships a nested closure by
+value, but a module-level function of this file by reference, which a
+worker could not import (spark-submit does not ship this file).
 """
 
 from __future__ import annotations
 
 import os
+import shutil
+import struct
+import tempfile
 from collections.abc import Callable
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+import numpy as np
+import pandas as pd
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark as vm
+from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.functions import kernels_morph as KM
 from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.functions.cellindex import WORLD_GRID
-from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import grid, joins
-from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import derived
+from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import (
+    cc_global, datagen as DG, grid, imagehash as IH, joins, multimodal as MM, pyramid, raster, reproject as RP,
+)
+from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.plans import pipeline
+from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import (
+    codec, codec_tiff, derived, images as IMG,
+)
+from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import (
+    IMAGES_META_PK_SQL, bars_sql, dem16_sums_ctes, dumbbell_fg_sql, rects_sql, sparse_sql,
+)
+from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.streaming.stream import stream_tiles
 
 CFG = vm.DEFAULT_CONFIG
 
@@ -30,10 +51,140 @@ DRIVER_TABLES = ("part", "customer", "events")
 # Frozen oracle expectations, read from the checkout this module lives in.
 FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures")
 
+_TILE_COLUMNS = ("image_id", "tiy", "tix", "tile_id", "off_x", "off_y", "tw", "th")
+_WINDOW_SUM_SCHEMA = "image_id string, wx0 int, wy0 int, ww int, wh int, sum_v bigint"
+
 
 def _register_views(spark: SparkSession, sf_dir: str) -> None:
     for t in DRIVER_TABLES:
         spark.read.parquet(f"{sf_dir}/{t}.parquet").createOrReplaceTempView(t)
+
+
+# --------------------------------------------------------------------------- #
+# shared builder steps
+# --------------------------------------------------------------------------- #
+
+def _pk() -> Column:
+    """An image's partkey, read back from its ``img_<pk>`` id."""
+    return F.substring("image_id", 5, 18).cast("long")
+
+
+def _meta_pk(
+    spark: SparkSession, sf_dir: str, cap: int | None = None, spread: bool = False
+) -> DataFrame:
+    """``images_meta`` plus ``pk``, kept to ``pk <= cap``; ``spread``
+    hash-spreads the rows over 2x parallelism ahead of a Python stage."""
+    meta = derived.images_meta(spark, sf_dir).withColumn("pk", _pk())
+    if cap is not None:
+        meta = meta.filter(F.col("pk") <= cap)
+    if spread:
+        meta = meta.repartition(spark.sparkContext.defaultParallelism * 2, "image_id")
+    return meta
+
+
+def _pk_window(meta: DataFrame) -> DataFrame:
+    """Adds each image's pk-derived half-size pixel window
+    ``(wx0, wy0, ww, wh)`` — the window of the geotiff_window,
+    window_chips and box_chips gates and of their one oracle."""
+    w, h = F.col("w"), F.col("h")
+    return meta.select(
+        "*",
+        ((F.col("pk") * 13) % (w - F.floor(w / 2))).cast("int").alias("wx0"),
+        ((F.col("pk") * 17) % (h - F.floor(h / 2))).cast("int").alias("wy0"),
+        F.floor(w / 2).cast("int").alias("ww"),
+        F.floor(h / 2).cast("int").alias("wh"),
+    )
+
+
+def _chip_sums(chips: DataFrame) -> DataFrame:
+    """Per-chip pixel sum of the DECODED chip bytes an operator emitted."""
+
+    def sums(batches):
+        for pdf in batches:
+            rows = [
+                (
+                    r.image_id, int(r.wx0), int(r.wy0), int(r.ww), int(r.wh),
+                    int(
+                        codec.decode(bytes(r.bytes), r.fmt, int(r.ww), int(r.wh))
+                        .sum(dtype=np.int64)
+                    ),
+                )
+                for r in pdf.itertuples(index=False)
+            ]
+            yield pd.DataFrame(
+                rows, columns=["image_id", "wx0", "wy0", "ww", "wh", "sum_v"]
+            )
+
+    return chips.mapInPandas(sums, schema=_WINDOW_SUM_SCHEMA)
+
+
+def _diagonal_tile_features(
+    spark: SparkSession, sf_dir: str, encode: Callable, fmt: str
+) -> DataFrame:
+    """decode_features over the diagonal tiles of the first 8 rgb renders,
+    each 200^2 tile transcoded by ``encode`` to a ``fmt`` payload."""
+    imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="rgb", limit=8)
+    t, step = CFG.tile_size, CFG.tile_size - CFG.overlap_px
+
+    def transcode(batches):
+        # fused decode -> diagonal tile windows -> encode: one image
+        # decode per row, and only the sampled tiles are ever encoded
+        # (slice_tiles would png-encode the FULL grid first)
+        for pdf in batches:
+            rows = []
+            for r in pdf.itertuples(index=False):
+                arr = codec.decode(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
+                nx = 1 + max(int(r.w) - t + step - 1, 0) // step
+                ny = 1 + max(int(r.h) - t + step - 1, 0) // step
+                for i in range(min(nx, ny)):
+                    ox, oy = i * step, i * step
+                    tile = arr[oy : oy + t, ox : ox + t]
+                    rows.append(
+                        (
+                            f"{r.image_id}_{i + 1}_{i + 1}",
+                            encode(np.ascontiguousarray(tile)),
+                            tile.shape[1], tile.shape[0], fmt,
+                        )
+                    )
+            yield pd.DataFrame(
+                rows, columns=["image_id", "bytes", "w", "h", "fmt"]
+            )
+
+    tiles = imgs.mapInPandas(
+        transcode, schema="image_id string, bytes binary, w int, h int, fmt string"
+    )
+    return MM.decode_features(tiles, resize_to=64)
+
+
+def _quarantine_pixel_sums(imgs: DataFrame, hostile: bytes) -> DataFrame:
+    """``pixel_sums(on_error='quarantine')`` with every 4th image's
+    payload (pk % 4 == 0) replaced by ``hostile``; ``ok`` = decoded."""
+    corrupted = imgs.withColumn(
+        "bytes", F.when(_pk() % 4 == 0, F.lit(hostile)).otherwise(F.col("bytes"))
+    )
+    out = MM.pixel_sums(corrupted, on_error="quarantine")
+    return out.select(
+        "image_id", "n_px", "sum_r", "sum_g", "sum_b",
+        F.col("error").isNull().alias("ok"),
+    )
+
+
+def _strip_zones(spark: SparkSession) -> DataFrame:
+    """The zonal gates' 200 world-rectangle zones ``(zone_id, minx, miny,
+    maxx, maxy)``: 50 image-grid columns x 4 pixel-strip bands of 500 px
+    (50 m), the edges 0.3 cells inside exact pixel boundaries."""
+    cell = CFG.cell_size_m
+    c, s = F.col("c"), F.col("s")
+    return spark.range(200).select(
+        F.floor(F.col("id") / 4).cast("int").alias("c"),
+        (F.col("id") % 4).cast("int").alias("s"),
+    ).select(
+        F.concat(F.lit("z_"), c.cast("string"), F.lit("_"), s.cast("string")).alias("zone_id"),
+        (c * 210.0 + s * 500 * cell + 0.3 * cell).alias("minx"),
+        F.lit(0.0).alias("miny"),
+        (c * 210.0 + (s + 1) * 500 * cell - 0.3 * cell).alias("maxx"),
+        F.lit(10500.0 - 0.3 * cell).alias("maxy"),
+    )
 
 
 # --------------------------------------------------------------------------- #
@@ -51,18 +202,14 @@ def q_tile_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_gen_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O2/O3/O8 full tile enumeration: offsets, border clamp, tile ids."""
     imgs = derived.images_meta(spark, sf_dir)
-    return grid.gen_tiles(imgs, CFG, with_geo=False).select(
-        "image_id", "tiy", "tix", "tile_id", "off_x", "off_y", "tw", "th"
-    )
+    return grid.gen_tiles(imgs, CFG, with_geo=False).select(*_TILE_COLUMNS)
 
 
 def q_gen_tiles_overlap20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O10 training path: overlap = int(200*10/100) = 20 px (io.py:100-106)."""
     imgs = derived.images_meta(spark, sf_dir)
     ov = CFG.overlap_px_from_percent()
-    return grid.gen_tiles(imgs, CFG, overlap=ov, with_geo=False).select(
-        "image_id", "tiy", "tix", "tile_id", "off_x", "off_y", "tw", "th"
-    )
+    return grid.gen_tiles(imgs, CFG, overlap=ov, with_geo=False).select(*_TILE_COLUMNS)
 
 
 def q_image_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,16 +238,9 @@ def q_reproject_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
         extent = (e0, n0, e0 + w*0.1, n0 + h*0.1);  crs = EPSG:326zz/327zz
 
     Output bounds are nanodegrees (rint(deg*1e9), ~0.1 mm) so the value
-    hash is integer-stable.  Oracle: the frozen expectations parquet."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import reproject as RP
-
-    meta = derived.images_meta(spark, sf_dir).withColumn(
-        "pk", F.substring("image_id", 5, 18).cast("long")
-    )
-    meta = meta.repartition(spark.sparkContext.defaultParallelism * 2, "image_id")
+    hash is integer-stable.  Oracle: the frozen expectations parquet — no
+    Spark machinery shared with this query."""
+    meta = _meta_pk(spark, sf_dir, spread=True)
 
     def synth(batches):
         for pdf in batches:
@@ -227,9 +367,6 @@ def q_pipeline_polygons(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap-stitch -> threshold -> 3x3 open -> CC label -> polygonize ->
     simplify -> shoelace area.  The oracle computes the same answer
     analytically from the blob parameters."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.plans import pipeline
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="mask", limit=PIPE_CAP)
     polys = pipeline.mask_to_polygons(imgs, CFG, separation="cc", tiled=True)
     return polys.select(
@@ -256,9 +393,6 @@ def q_pipeline_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Free-form masks (where inter-blob peak suppression makes the marker set
     non-analytic) stay covered by the numpy oracles in pytest and the
     dumbbell split gate (``watershed_split``)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.plans import pipeline
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="mask_sparse", limit=100)
     polys = pipeline.mask_to_polygons(imgs, CFG, separation="watershed", tiled=True)
     return polys.select("image_id", "area_m2")
@@ -267,17 +401,11 @@ def q_pipeline_watershed(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dice_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M8 global Dice/Jaccard between the thresholded mask and the opened
     mask (blobs survive the 3x3 open intact -> analytic pixel sums)."""
-    import numpy as np
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.functions import kernels_morph as _KM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import raster
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="mask", limit=PIPE_CAP)
     # pred is a pure function of truth -> fused self-comparison: one decode
     # per row, no join, no persist (a persist here would pin the byte
     # column in executor storage for the rest of the session)
-    kernel = lambda a: _KM.erosion_clean(
+    kernel = lambda a: KM.erosion_clean(
         (a >= 128).astype(np.uint8) * 255,
         CFG.erosion_filter,
         CFG.min_object_area_px,
@@ -293,9 +421,6 @@ def _skeleton_px_counts(sk: DataFrame) -> DataFrame:
     """Shared tail of both skeletonize gates: per-image nonzero-pixel
     count of the thinned plane (one helper so the rows-only and the
     oracle-gated query can never drift apart)."""
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec
 
     def count(batches):
         for pdf in batches:
@@ -314,9 +439,6 @@ def q_skeletonize(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL form, so the oracle is the frozen single-process expectations
     table (tools/build_skeleton_fixture.py); the axis-aligned twin
     (q_skeletonize_bars) additionally closes analytically."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import raster
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="mask", limit=60)
     return _skeleton_px_counts(raster.skeletonize_stage(imgs, CFG))
 
@@ -327,17 +449,12 @@ def q_skeletonize_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dilation grows both dims by 4 — difference invariant; property
     verified over 100 fixture images).  The free-form mask variant stays
     rows-only (Q:skeletonize)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import raster
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="bars", limit=60)
     return _skeleton_px_counts(raster.skeletonize_stage(imgs, CFG))
 
 
 def q_pyramid_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import pyramid as P
-
-    return P.pyramid_meta(derived.images_meta(spark, sf_dir), levels=5).select(
+    return pyramid.pyramid_meta(derived.images_meta(spark, sf_dir), levels=5).select(
         "image_id", "level", "lw", "lh", "lscale"
     )
 
@@ -347,20 +464,16 @@ def q_pyramid_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     /root/reference/src/bf_gridding.py:447-503): every pyramid level's dims
     re-enter gen_tiles, so the level->grid chain is one composed lazy plan —
     level 0 reproduces the base grid, deeper levels shrink to 1 tile."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import pyramid as P
-
-    lv = P.pyramid_meta(derived.images_meta(spark, sf_dir), levels=3).select(
+    lv = pyramid.pyramid_meta(derived.images_meta(spark, sf_dir), levels=3).select(
         "image_id", "level", F.col("lw").alias("w"), F.col("lh").alias("h")
     )
     return grid.gen_tiles(lv, CFG, with_geo=False).select(
-        "image_id", "level", "tiy", "tix", "tile_id", "off_x", "off_y", "tw", "th"
+        "image_id", "level", *_TILE_COLUMNS[1:]
     )
 
 
 def q_multires_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import pyramid as P
-
-    return P.multires_meta(derived.images_meta(spark, sf_dir), CFG).select(
+    return pyramid.multires_meta(derived.images_meta(spark, sf_dir), CFG).select(
         "image_id", "res_idx", "resolution", "rw", "rh"
     )
 
@@ -370,9 +483,6 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel means / n_px / nonzero_frac close analytically from render_rgb;
     thumb_mean joins from the single-process expectations fixture
     (tools/build_multimodal_fixture.py)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="rgb", limit=100)
     return MM.decode_features(imgs, resize_to=64)
 
@@ -381,48 +491,14 @@ def q_multimodal_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real-JPEG multimodal path, exact-gated (round-3) against the
     single-process expectations fixture (tools/build_multimodal_fixture.py;
     lossy DCT pixels have no closed SQL form — the PSNR>=40 contract is
-    additionally pinned in tests/test_jpeg.py): slice a diagonal tile
-    sample, transcode each 200^2 tile to baseline JFIF with the pure-numpy
-    codec, run decode->resize->feature extraction — the web-data jpeg shape
-    of a training pipeline at tile granularity."""
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec, images as IMG
-
-    imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="rgb", limit=8)
-    t, step = CFG.tile_size, CFG.tile_size - CFG.overlap_px
-
-    import numpy as np
-
-    def transcode(batches):
-        # fused decode -> diagonal tile windows -> jpeg encode: one image
-        # decode per row, and only the sampled tiles are ever encoded
-        # (slice_tiles would png-encode the FULL grid first)
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = codec.decode(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
-                nx = 1 + max(int(r.w) - t + step - 1, 0) // step
-                ny = 1 + max(int(r.h) - t + step - 1, 0) // step
-                for i in range(min(nx, ny)):
-                    ox, oy = i * step, i * step
-                    tile = arr[oy : oy + t, ox : ox + t]
-                    rows.append(
-                        (
-                            f"{r.image_id}_{i + 1}_{i + 1}",
-                            codec.encode(np.ascontiguousarray(tile), "jpeg"),
-                            tile.shape[1], tile.shape[0], "jpeg",
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "w", "h", "fmt"]
-            )
-
-    jpeg_tiles = imgs.mapInPandas(
-        transcode, schema="image_id string, bytes binary, w int, h int, fmt string"
+    additionally pinned in tests/test_jpeg.py, and no Spark machinery is
+    shared, so a distributed-plumbing bug cannot cancel out): slice a
+    diagonal tile sample, transcode each 200^2 tile to baseline JFIF with
+    the pure-numpy codec, run decode->resize->feature extraction — the
+    web-data jpeg shape of a training pipeline at tile granularity."""
+    return _diagonal_tile_features(
+        spark, sf_dir, partial(codec.encode, fmt="jpeg"), "jpeg"
     )
-    return MM.decode_features(jpeg_tiles, resize_to=64)
 
 
 def q_multimodal_tiff_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -432,45 +508,8 @@ def q_multimodal_tiff_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     strip reassembly, JPEGTables-free standalone segments AND the lossy
     payload through decode -> resize -> features.  Oracle: frozen
     single-process expectations (tools/build_multimodal_fixture.py)."""
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec, codec_tiff, images as IMG
-
-    imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="rgb", limit=8)
-    t, step = CFG.tile_size, CFG.tile_size - CFG.overlap_px
-
-    import numpy as np
-
-    def transcode(batches):
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                arr = codec.decode(bytes(r.bytes), r.fmt, int(r.w), int(r.h))
-                nx = 1 + max(int(r.w) - t + step - 1, 0) // step
-                ny = 1 + max(int(r.h) - t + step - 1, 0) // step
-                for i in range(min(nx, ny)):
-                    ox, oy = i * step, i * step
-                    tile = arr[oy : oy + t, ox : ox + t]
-                    rows.append(
-                        (
-                            f"{r.image_id}_{i + 1}_{i + 1}",
-                            codec_tiff.encode_tiff(
-                                np.ascontiguousarray(tile),
-                                compression="jpeg",
-                                rows_per_strip=64,
-                            ),
-                            tile.shape[1], tile.shape[0], "tif",
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["image_id", "bytes", "w", "h", "fmt"]
-            )
-
-    tiles = imgs.mapInPandas(
-        transcode, schema="image_id string, bytes binary, w int, h int, fmt string"
-    )
-    return MM.decode_features(tiles, resize_to=64)
+    encode = partial(codec_tiff.encode_tiff, compression="jpeg", rows_per_strip=64)
+    return _diagonal_tile_features(spark, sf_dir, encode, "tif")
 
 
 def q_cc_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -479,9 +518,6 @@ def q_cc_distributed(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalence join -> iterative min-id propagation -> exact per-region
     pixel counts, never materializing an image.  Oracle: each synthetic
     blob is one region of exactly rw*rh pixels."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import cc_global, raster
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="mask", limit=120)
     tiles = raster.slice_tiles(imgs, CFG)
     return cc_global.distributed_cc_areas(tiles, CFG)
@@ -492,9 +528,6 @@ def q_multimodal_pixel_sums(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus — every decoded byte enters the oracle, so codec framing /
     unfilter / channel-order bugs cannot hide (closed-form twin from the
     separable gradient + rect overwrites of render_rgb)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="rgb", limit=80)
     return MM.pixel_sums(imgs)
 
@@ -507,9 +540,6 @@ def q_multimodal_png16(spark: SparkSession, sf_dir: str) -> DataFrame:
     paths of sources/codec.py.  Oracle: closed-form sum + row/column-
     weighted moments — position-sensitive, so a pass scattered to the
     wrong rows preserves sum_elev but breaks sum_wy/sum_wx."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="dem16", limit=60)
     return MM.elev_stats(imgs)
 
@@ -520,9 +550,6 @@ def q_multimodal_tiff(spark: SparkSession, sf_dir: str) -> DataFrame:
     DEFLATE + horizontal-predictor codec (sources/codec_tiff.py).
     Lossless, so the same exact closed-form per-image channel-sum oracle
     as ``multimodal_pixel_sums`` holds bit-for-bit."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="tif", kind="rgb", limit=60)
     return MM.pixel_sums(imgs)
 
@@ -539,14 +566,6 @@ def q_multimodal_tiff_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     a good row or a task.  Companion to multimodal_quarantine (PNG
     path); reference analogue /root/reference/src/io.py:41-63 where one
     unreadable file aborts the ingest run."""
-    import struct
-
-    import numpy as np
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_tiff
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     base = codec_tiff.encode_tiff(
         np.zeros((4, 4, 3), np.uint8), compression="none"
     )
@@ -557,19 +576,8 @@ def q_multimodal_tiff_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         e = ifd + 2 + 12 * i
         if struct.unpack("<H", mut[e : e + 2])[0] == 258:
             mut[e + 2 : e + 4] = struct.pack("<H", 5)  # SHORT -> RATIONAL
-    hostile = bytes(mut)
-
     imgs = IMG.images_table(spark, sf_dir, fmt="tif", kind="rgb", limit=60)
-    pk = F.substring("image_id", 5, 18).cast("long")
-    corrupted = imgs.withColumn(
-        "bytes",
-        F.when(pk % 4 == 0, F.lit(hostile)).otherwise(F.col("bytes")),
-    )
-    out = MM.pixel_sums(corrupted, on_error="quarantine")
-    return out.select(
-        "image_id", "n_px", "sum_r", "sum_g", "sum_b",
-        F.col("error").isNull().alias("ok"),
-    )
+    return _quarantine_pixel_sums(imgs, bytes(mut))
 
 
 def q_geotiff_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -581,23 +589,16 @@ def q_geotiff_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
     bf_gridding.py:304-332), whereas ``image_extents`` trusts catalog
     columns.  Oracle: the same pure-arithmetic extents, plus crs_ok
     asserting the citation string survived the tag round-trip."""
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_tiff, images
-
-    meta = derived.images_meta(spark, sf_dir).withColumn(
-        "pk", F.substring("image_id", 5, 18).cast("long")
-    ).filter(F.col("pk") <= 80)
-    meta = meta.repartition(spark.sparkContext.defaultParallelism * 2, "image_id")
+    meta = _meta_pk(spark, sf_dir, cap=80, spread=True)
 
     def roundtrip(batches):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                arr = images.render_mask(int(r.pk), int(r.w), int(r.h))
+                arr = IMG.render_mask(int(r.pk), int(r.w), int(r.h))
                 blob = codec_tiff.encode_tiff(
                     arr,
-                    geo=(float(r.ulx), float(r.uly), 0.1, -0.1, images.CRS_TOKEN),
+                    geo=(float(r.ulx), float(r.uly), 0.1, -0.1, IMG.CRS_TOKEN),
                     level=1,
                 )
                 g = codec_tiff.geotiff_geodata(blob)
@@ -608,7 +609,7 @@ def q_geotiff_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
                         g["uly"] + g["h"] * g["sy"],
                         g["ulx"] + g["w"] * g["sx"],
                         g["uly"],
-                        g["crs"] == images.CRS_TOKEN,
+                        g["crs"] == IMG.CRS_TOKEN,
                     )
                 )
             yield pd.DataFrame(
@@ -638,29 +639,19 @@ def q_geotiff_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs one range-request's worth of tiles instead.  Oracle: masks are
     disjoint 255-rects (one per quadrant), so the window sum is exact
     rect-overlap arithmetic: 255 * sum(|rect ∩ window|)."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec_tiff, images
-
-    meta = derived.images_meta(spark, sf_dir).withColumn(
-        "pk", F.substring("image_id", 5, 18).cast("long")
-    ).filter(F.col("pk") <= 60)
-    meta = meta.repartition(spark.sparkContext.defaultParallelism * 2, "image_id")
+    meta = _pk_window(_meta_pk(spark, sf_dir, cap=60, spread=True))
 
     def run(batches):
         for pdf in batches:
             rows = []
             for r in pdf.itertuples(index=False):
-                pk, w, h = int(r.pk), int(r.w), int(r.h)
                 blob = codec_tiff.encode_tiff(
-                    images.render_mask(pk, w, h),
+                    IMG.render_mask(int(r.pk), int(r.w), int(r.h)),
                     compression="deflate",
                     tiling=(16, 16),
-                    geo=(float(r.ulx), float(r.uly), 0.1, -0.1, images.CRS_TOKEN),
+                    geo=(float(r.ulx), float(r.uly), 0.1, -0.1, IMG.CRS_TOKEN),
                 )
-                ww, wh = w // 2, h // 2
-                wx0, wy0 = (pk * 13) % (w - ww), (pk * 17) % (h - wh)
+                wx0, wy0, ww, wh = int(r.wx0), int(r.wy0), int(r.ww), int(r.wh)
                 win = codec_tiff.decode_tiff_window(blob, wx0, wy0, ww, wh)
                 rows.append(
                     (r.image_id, wx0, wy0, ww, wh, int(win.sum(dtype=np.int64)))
@@ -669,12 +660,7 @@ def q_geotiff_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                 rows, columns=["image_id", "wx0", "wy0", "ww", "wh", "sum_v"]
             )
 
-    return meta.mapInPandas(
-        run,
-        schema=(
-            "image_id string, wx0 int, wy0 int, ww int, wh int, sum_v bigint"
-        ),
-    )
+    return meta.mapInPandas(run, schema=_WINDOW_SUM_SCHEMA)
 
 
 def q_window_chips(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -690,48 +676,11 @@ def q_window_chips(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sums are computed from the DECODED CHIP BYTES the operator
     emitted, so the join/groupBy plumbing and chip re-encode are inside
     the gate."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import raster
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="tif", kind="mask", limit=40)
-    meta = derived.images_meta(spark, sf_dir).withColumn(
-        "pk", F.substring("image_id", 5, 18).cast("long")
-    ).filter(F.col("pk") <= 40)
-    wins = meta.select(
-        "image_id",
-        ((F.col("pk") * 13) % (F.col("w") - F.floor(F.col("w") / 2)))
-        .cast("int").alias("wx0"),
-        ((F.col("pk") * 17) % (F.col("h") - F.floor(F.col("h") / 2)))
-        .cast("int").alias("wy0"),
-        F.floor(F.col("w") / 2).cast("int").alias("ww"),
-        F.floor(F.col("h") / 2).cast("int").alias("wh"),
+    wins = _pk_window(_meta_pk(spark, sf_dir, cap=40)).select(
+        "image_id", "wx0", "wy0", "ww", "wh"
     )
-    chips = raster.read_windows(imgs, wins, tile_fmt="png")
-
-    def sums(batches):
-        for pdf in batches:
-            rows = [
-                (
-                    r.image_id, int(r.wx0), int(r.wy0), int(r.ww), int(r.wh),
-                    int(
-                        codec.decode(bytes(r.bytes), r.fmt, int(r.ww), int(r.wh))
-                        .sum(dtype=np.int64)
-                    ),
-                )
-                for r in pdf.itertuples(index=False)
-            ]
-            yield pd.DataFrame(
-                rows, columns=["image_id", "wx0", "wy0", "ww", "wh", "sum_v"]
-            )
-
-    return chips.mapInPandas(
-        sums,
-        schema="image_id string, wx0 int, wy0 int, ww int, wh int, sum_v bigint",
-    )
+    return _chip_sums(raster.read_windows(imgs, wins, tile_fmt="png"))
 
 
 def q_box_chips(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -745,20 +694,9 @@ def q_box_chips(spark: SparkSession, sf_dir: str) -> DataFrame:
     coordinates with a 0.3-cell interior margin, so the outward snap
     must recover exactly the same integer windows and the same
     closed-form rect-overlap oracle applies (limit 30)."""
-    import numpy as np
-    import pandas as pd
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import raster
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import codec
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="tif", kind="mask", limit=30)
-    meta = derived.images_meta(spark, sf_dir).withColumn(
-        "pk", F.substring("image_id", 5, 18).cast("long")
-    ).filter(F.col("pk") <= 30)
-    wx0 = (F.col("pk") * 13) % (F.col("w") - F.floor(F.col("w") / 2))
-    wy0 = (F.col("pk") * 17) % (F.col("h") - F.floor(F.col("h") / 2))
-    ww, wh = F.floor(F.col("w") / 2), F.floor(F.col("h") / 2)
+    meta = _pk_window(_meta_pk(spark, sf_dir, cap=30))
+    wx0, wy0, ww, wh = (F.col(c) for c in ("wx0", "wy0", "ww", "wh"))
     cell = CFG.cell_size_m
     boxes = meta.select(
         F.concat(F.lit("box_"), "image_id").alias("box_id"),
@@ -767,28 +705,7 @@ def q_box_chips(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("uly") - (wy0 + wh) * cell + 0.3 * cell).alias("miny"),
         (F.col("uly") - wy0 * cell - 0.3 * cell).alias("maxy"),
     )
-    chips = raster.read_boxes(imgs, boxes, CFG)
-
-    def sums(batches):
-        for pdf in batches:
-            rows = [
-                (
-                    r.image_id, int(r.wx0), int(r.wy0), int(r.ww), int(r.wh),
-                    int(
-                        codec.decode(bytes(r.bytes), r.fmt, int(r.ww), int(r.wh))
-                        .sum(dtype=np.int64)
-                    ),
-                )
-                for r in pdf.itertuples(index=False)
-            ]
-            yield pd.DataFrame(
-                rows, columns=["image_id", "wx0", "wy0", "ww", "wh", "sum_v"]
-            )
-
-    return chips.mapInPandas(
-        sums,
-        schema="image_id string, wx0 int, wy0 int, ww int, wh int, sum_v bigint",
-    )
+    return _chip_sums(raster.read_boxes(imgs, boxes, CFG))
 
 
 def q_multimodal_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -805,22 +722,8 @@ def q_multimodal_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     every raster GDAL can parse (/root/reference/src/io.py:41-63) and a
     single unreadable file aborts the run — the engine upgrades that to
     an accounted-for dead-letter row."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import multimodal as MM
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="rgb", limit=80)
-    pk = F.substring("image_id", 5, 18).cast("long")
-    corrupted = imgs.withColumn(
-        "bytes",
-        F.when(
-            pk % 4 == 0, F.lit(b"\x89PNG\r\n\x1a\nhostile-bytes")
-        ).otherwise(F.col("bytes")),
-    )
-    out = MM.pixel_sums(corrupted, on_error="quarantine")
-    return out.select(
-        "image_id", "n_px", "sum_r", "sum_g", "sum_b",
-        F.col("error").isNull().alias("ok"),
-    )
+    return _quarantine_pixel_sums(imgs, b"\x89PNG\r\n\x1a\nhostile-bytes")
 
 
 def q_training_tensors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -831,9 +734,6 @@ def q_training_tensors(spark: SparkSession, sf_dir: str) -> DataFrame:
     (255->1 remap, M4) and the EDT weight plane (M5) is the same integer
     onion-ring arithmetic as ``edt_weight_hist``, with every weight
     float32-rounded exactly as the kernel emits it."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import datagen as DG
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="rgb", limit=50)
     labels = IMG.images_table(
         spark, sf_dir, fmt="png", kind="mask",
@@ -855,9 +755,6 @@ def q_watershed_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     count and total foreground area are closed-form, the seam itself is not
     (flat-bridge EDT ties) — so the gate checks counts + areas, the
     analytically-determined part of the watershed output."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import raster
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="dumbbell", limit=80)
     labels = raster.postprocess_stage(imgs, CFG, separation="watershed")
     return raster.label_stats(labels)
@@ -866,9 +763,6 @@ def q_watershed_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_edt_weight_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M4+M5 exact gate: integer histogram of the EDT distance-weight plane
     over native-resolution masks; closed-form "onion ring" oracle."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import datagen as DG
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     labels = IMG.images_table(spark, sf_dir, fmt="png", kind="mask", limit=50)
     return DG.edt_weight_hist(labels)
 
@@ -880,11 +774,9 @@ def q_stream_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     accumulates the full grid — proving the batch operator composes
     unchanged into the incremental path (streaming/stream.py
     stream_tiles, checkpointed so a restart resumes, the streaming twin
-    of the manifest-based batch resume)."""
-    import tempfile
-
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.streaming.stream import stream_tiles
-
+    of the manifest-based batch resume).  The sink is read back into
+    executor storage (an eager local checkpoint), so its temp
+    directory is deleted before the frame is returned."""
     meta = derived.images_meta(spark, sf_dir).select(
         "image_id",
         F.lit(None).cast("binary").alias("bytes"),
@@ -896,13 +788,13 @@ def q_stream_tiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("EPSG:32643").alias("crs"),
     )
     tmp = tempfile.mkdtemp(prefix="stream_tiles_gate_")
-    src, out, cp = f"{tmp}/src", f"{tmp}/out", f"{tmp}/cp"
-    meta.repartition(8).write.parquet(src)
-    q = stream_tiles(spark, src, out, cp, CFG)
-    q.awaitTermination()
-    return spark.read.parquet(out).select(
-        "image_id", "tiy", "tix", "tile_id", "off_x", "off_y", "tw", "th"
-    )
+    try:
+        src, out, cp = f"{tmp}/src", f"{tmp}/out", f"{tmp}/cp"
+        meta.repartition(8).write.parquet(src)
+        stream_tiles(spark, src, out, cp, CFG).awaitTermination()
+        return spark.read.parquet(out).select(*_TILE_COLUMNS).localCheckpoint(eager=True)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 _PHASH_PK_CAP = 60  # matches tools/build_phash_fixture.py
@@ -916,9 +808,6 @@ def q_phash_compute(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tools/build_phash_fixture.py) — the skeleton/reproject fixture
     pattern; kernel-level correctness is pinned by
     tests/test_imagehash.py."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import imagehash as IH
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(
         spark, sf_dir, fmt="png", kind="rgb", limit=_PHASH_PK_CAP
     )
@@ -937,28 +826,10 @@ def q_zonal_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     box_chips margin trick), so the -projwin snap recovers integer
     windows and the oracle closes in pure integer rect-overlap
     arithmetic (mask rects are disjoint)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import raster
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(
         spark, sf_dir, fmt="png", kind="mask", limit=_ZONAL_PK_CAP
     )
-    cell = CFG.cell_size_m
-    zones = spark.range(200).select(
-        F.floor(F.col("id") / 4).cast("int").alias("c"),
-        (F.col("id") % 4).cast("int").alias("s"),
-    )
-    zones = zones.select(
-        F.concat(
-            F.lit("z_"), F.col("c").cast("string"),
-            F.lit("_"), F.col("s").cast("string"),
-        ).alias("zone_id"),
-        (F.col("c") * 210.0 + F.col("s") * 500 * cell + 0.3 * cell).alias("minx"),
-        F.lit(0.0).alias("miny"),
-        (F.col("c") * 210.0 + (F.col("s") + 1) * 500 * cell - 0.3 * cell).alias("maxx"),
-        F.lit(10500.0 - 0.3 * cell).alias("maxy"),
-    )
-    return raster.zonal_stats(imgs, zones, CFG)
+    return raster.zonal_stats(imgs, _strip_zones(spark), CFG)
 
 
 def q_zonal_stats_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -970,27 +841,13 @@ def q_zonal_stats_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
     the snapped window exactly, so the integer rect-overlap oracle
     applies verbatim — while the query still exercises the general
     polygon machinery (pip_grid over every window pixel)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import raster
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(
         spark, sf_dir, fmt="png", kind="mask", limit=_ZONAL_PK_CAP
     )
-    cell = CFG.cell_size_m
-    zones = spark.range(200).select(
-        F.floor(F.col("id") / 4).cast("int").alias("c"),
-        (F.col("id") % 4).cast("int").alias("s"),
-    )
-    minx = F.col("c") * 210.0 + F.col("s") * 500 * cell + 0.3 * cell
-    maxx = F.col("c") * 210.0 + (F.col("s") + 1) * 500 * cell - 0.3 * cell
-    miny, maxy = F.lit(0.0), F.lit(10500.0 - 0.3 * cell)
-    zones = zones.select(
-        F.concat(
-            F.lit("z_"), F.col("c").cast("string"),
-            F.lit("_"), F.col("s").cast("string"),
-        ).alias("zone_id"),
-        F.array(minx, maxx, maxx, minx).alias("xs"),
-        F.array(miny, miny, maxy, maxy).alias("ys"),
+    zones = _strip_zones(spark).select(
+        "zone_id",
+        F.array("minx", "maxx", "maxx", "minx").alias("xs"),
+        F.array("miny", "miny", "maxy", "maxy").alias("ys"),
     )
     return raster.zonal_stats_poly(imgs, zones, CFG)
 
@@ -1003,9 +860,6 @@ def q_skeleton_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     count = bw - bh (diff >= 4 by construction), and the collinear
     merge leaves exactly the 2 endpoints per path — all closed-form in
     SQL over the same bar formulas."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import raster
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources import images as IMG
-
     imgs = IMG.images_table(spark, sf_dir, fmt="png", kind="bars", limit=60)
     paths = raster.skeleton_paths(raster.skeletonize_stage(imgs, CFG), CFG)
     return paths.groupBy("image_id").agg(
@@ -1017,113 +871,65 @@ def q_skeleton_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Ordered for the driver's budget-bound correctness sweep: gates that have
-# never appeared in a driver CORRECTNESS artifact run FIRST (the r1-r4 sweeps
-# truncated at ~50 queries, always dropping the tail), then the cheap
-# long-evidenced gates, with the most expensive already-evidenced pipelines
-# last so a truncated sweep loses only redundant evidence.
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # --- never driver-sampled before round 5: run first ------------------- #
-    "reproject_extents": q_reproject_extents,
-    "mosaic_extent_wgs84": q_mosaic_extent_wgs84,
-    "multimodal_png16": q_multimodal_png16,
-    "phash_compute": q_phash_compute,
-    "zonal_stats": q_zonal_stats,
-    "zonal_stats_poly": q_zonal_stats_poly,
-    "skeleton_paths": q_skeleton_paths,
-    "stream_tiles": q_stream_tiles,
-    "multimodal_tiff_quarantine": q_multimodal_tiff_quarantine,
-    # --- previously driver-evidenced, cheap metadata gates ---------------- #
-    "tile_counts": q_tile_counts,
-    "gen_tiles": q_gen_tiles,
-    "gen_tiles_overlap20": q_gen_tiles_overlap20,
-    "image_extents": q_image_extents,
-    "mosaic_extent": q_mosaic_extent,
-    "pyramid_meta": q_pyramid_meta,
-    "pyramid_tiles": q_pyramid_tiles,
-    "multires_meta": q_multires_meta,
-    "multimodal_features": q_multimodal_features,
-    "multimodal_jpeg": q_multimodal_jpeg,
-    "multimodal_pixel_sums": q_multimodal_pixel_sums,
-    "multimodal_tiff": q_multimodal_tiff,
-    "multimodal_tiff_jpeg": q_multimodal_tiff_jpeg,
-    "multimodal_quarantine": q_multimodal_quarantine,
-    "geotiff_extents": q_geotiff_extents,
-    "geotiff_window": q_geotiff_window,
-    "window_chips": q_window_chips,
-    "box_chips": q_box_chips,
-    # --- previously driver-evidenced, expensive raster/join pipelines ----- #
-    "bbox_join": q_bbox_join,
-    "point_tile_assign": q_point_tile_assign,
-    "pip_join": q_pip_join,
-    "knn_join": q_knn_join,
-    "training_tensors": q_training_tensors,
-    "edt_weight_hist": q_edt_weight_hist,
-    "skeletonize": q_skeletonize,
-    "skeletonize_bars": q_skeletonize_bars,
-    "dice_jaccard": q_dice_jaccard,
-    "cc_distributed": q_cc_distributed,
-    "watershed_split": q_watershed_split,
-    "pipeline_polygons": q_pipeline_polygons,
-    "pipeline_watershed": q_pipeline_watershed,
-}
-
-
-def _wrap(fn: Callable[[SparkSession, str], DataFrame]):
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        _register_views(spark, sf_dir)
-        return fn(spark, sf_dir)
-
-    return run
-
-
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {k: _wrap(v) for k, v in QUERIES.items()}
-
-
 # --------------------------------------------------------------------------- #
 # oracles (DuckDB SQL over the same pre-registered parquet views)
 # --------------------------------------------------------------------------- #
 
-def oracle_sql() -> dict[str, str]:
-    gt = grid.gen_tiles_sql(CFG.tile_size, CFG.overlap_px)
-    gt20 = grid.gen_tiles_sql(CFG.tile_size, CFG.overlap_px_from_percent())
-    return {
-        "tile_counts": derived.with_ctes(
-            derived.IMAGES_META_SQL,
-            # constants derived from CFG like the other tile oracles, so an
-            # EngineConfig change can't silently split engine from oracle
-            body=f"""
-SELECT image_id, w, h,
-  CAST(1 + FLOOR((greatest(w - {CFG.tile_size}, 0) + {CFG.tile_size - CFG.overlap_px - 1}) / {CFG.tile_size - CFG.overlap_px}) AS INT) AS nx,
-  CAST(1 + FLOOR((greatest(h - {CFG.tile_size}, 0) + {CFG.tile_size - CFG.overlap_px - 1}) / {CFG.tile_size - CFG.overlap_px}) AS INT) AS ny,
-  CAST(1 + FLOOR((greatest(w - {CFG.tile_size}, 0) + {CFG.tile_size - CFG.overlap_px - 1}) / {CFG.tile_size - CFG.overlap_px}) AS INT)
-    * CAST(1 + FLOOR((greatest(h - {CFG.tile_size}, 0) + {CFG.tile_size - CFG.overlap_px - 1}) / {CFG.tile_size - CFG.overlap_px}) AS INT) AS n_tiles
-FROM images_meta""",
-        ),
-        "gen_tiles": derived.with_ctes(
-            derived.IMAGES_META_SQL,
-            gt,
-            body="SELECT image_id, tiy, tix, tile_id, off_x, off_y, tw, th FROM tiles",
-        ),
-        "gen_tiles_overlap20": derived.with_ctes(
-            derived.IMAGES_META_SQL,
-            gt20,
-            body="SELECT image_id, tiy, tix, tile_id, off_x, off_y, tw, th FROM tiles",
-        ),
-        "image_extents": derived.with_ctes(
-            derived.IMAGES_META_SQL,
-            body="""
+def _fixture_sql(name: str, columns: str) -> str:
+    """SELECT ``columns`` from the frozen expectations parquet ``name``."""
+    return f"""
+SELECT {columns}
+FROM read_parquet('{FIXTURES}/{name}')"""
+
+
+def _capped_rects(cap: int) -> tuple[str, str]:
+    """CTEs ``imgs`` (images_meta_pk with pk <= cap) and its ``rects``."""
+    return (
+        f"\nimgs AS (SELECT * FROM images_meta_pk WHERE pk <= {cap})",
+        rects_sql("imgs"),
+    )
+
+
+def _tiles_sql(overlap: int) -> str:
+    """gen_tiles' closed-form grid of every image at ``overlap`` px."""
+    return derived.with_ctes(
+        derived.IMAGES_META_SQL,
+        grid.gen_tiles_sql(CFG.tile_size, overlap),
+        body=f"SELECT {', '.join(_TILE_COLUMNS)} FROM tiles",
+    )
+
+
+def _tile_counts_sql() -> str:
+    # constants derived from CFG like the other tile oracles, so an
+    # EngineConfig change can't silently split engine from oracle
+    t, s = CFG.tile_size, CFG.tile_size - CFG.overlap_px
+    return derived.with_ctes(
+        derived.IMAGES_META_SQL,
+        f"""
+counts AS (
+  SELECT image_id, w, h,
+    CAST(1 + FLOOR((greatest(w - {t}, 0) + {s - 1}) / {s}) AS INT) AS nx,
+    CAST(1 + FLOOR((greatest(h - {t}, 0) + {s - 1}) / {s}) AS INT) AS ny
+  FROM images_meta
+)""",
+        body="SELECT image_id, w, h, nx, ny, nx * ny AS n_tiles FROM counts",
+    )
+
+
+_IMAGE_EXTENTS_SQL = derived.with_ctes(
+    derived.IMAGES_META_SQL,
+    body="""
 SELECT image_id,
   ulx              AS minx,
   uly + h * (-1e-1) AS miny,
   ulx + w * 1e-1    AS maxx,
   uly              AS maxy
 FROM images_meta""",
-        ),
-        "mosaic_extent": derived.with_ctes(
-            derived.IMAGES_META_SQL,
-            body="""
+)
+
+_MOSAIC_EXTENT_SQL = derived.with_ctes(
+    derived.IMAGES_META_SQL,
+    body="""
 SELECT
   min(ulx)              AS ulx,
   max(uly)              AS uly,
@@ -1132,69 +938,20 @@ SELECT
   CAST(round((max(ulx + w * 1e-1) - min(ulx)) / 1e-1) AS BIGINT)    AS xsize,
   CAST(round((max(uly) - min(uly + h * (-1e-1))) / 1e-1) AS BIGINT) AS ysize
 FROM images_meta""",
-        ),
-        "pip_join": _PIP_SQL,
-        "pipeline_polygons": _pipeline_polygons_sql(),
-        "pipeline_watershed": _pipeline_watershed_sql(),
-        "dice_jaccard": _dice_jaccard_sql(),
-        "training_tensors": _training_tensors_sql(),
-        "pyramid_meta": derived.with_ctes(
-            derived.IMAGES_META_SQL,
-            _pyramid_sql(5),
-            body="SELECT image_id, level, lw, lh, lscale FROM pyramid",
-        ),
-        "pyramid_tiles": derived.with_ctes(
-            derived.IMAGES_META_SQL,
-            _pyramid_sql(3),
-            "lvl_meta AS (SELECT image_id, level, lw AS w, lh AS h FROM pyramid)",
-            grid.gen_tiles_sql(CFG.tile_size, CFG.overlap_px, src="lvl_meta"),
-            body="SELECT image_id, level, tiy, tix, tile_id, off_x, off_y, tw, th FROM tiles",
-        ),
-        "multires_meta": derived.with_ctes(
-            derived.IMAGES_META_SQL,
-            _multires_sql(),
-            body="SELECT image_id, res_idx, resolution, rw, rh FROM multires",
-        ),
-        "edt_weight_hist": _edt_weight_hist_sql(),
-        "watershed_split": _watershed_split_sql(),
-        "skeletonize_bars": _skeletonize_bars_sql(),
-        "skeletonize": _skeletonize_sql(),
-        "multimodal_pixel_sums": _multimodal_pixel_sums_sql(),
-        "multimodal_png16": _multimodal_png16_sql(),
-        "multimodal_quarantine": _multimodal_quarantine_sql(),
-        "multimodal_tiff": _multimodal_tiff_sql(),
-        "multimodal_tiff_quarantine": _multimodal_tiff_quarantine_sql(),
-        "multimodal_tiff_jpeg": _multimodal_tiff_jpeg_sql(),
-        "geotiff_extents": _geotiff_extents_sql(),
-        "geotiff_window": _geotiff_window_sql(),
-        "window_chips": _geotiff_window_sql(limit=40),
-        "box_chips": _geotiff_window_sql(limit=30),
-        "multimodal_features": _multimodal_features_sql(),
-        "multimodal_jpeg": _multimodal_jpeg_sql(),
-        "cc_distributed": _cc_distributed_sql(),
-        "reproject_extents": _reproject_extents_sql(),
-        "mosaic_extent_wgs84": f"""
-SELECT min(lon_min_nd) AS lon_min_nd, min(lat_min_nd) AS lat_min_nd,
-       max(lon_max_nd) AS lon_max_nd, max(lat_max_nd) AS lat_max_nd,
-       count(*) AS n_images, count(DISTINCT epsg) AS n_zones
-FROM read_parquet('{_REPROJECT_FIXTURE}')""",
-        "phash_compute": _phash_compute_sql(),
-        "zonal_stats": _zonal_stats_sql(),
-        # margin-aligned rect 4-gons: center-inside set == snapped window,
-        # so the polygon path shares the rect path's integer oracle
-        "zonal_stats_poly": _zonal_stats_sql(),
-        "skeleton_paths": _skeleton_paths_sql(),
-        # the streamed grid must equal the batch grid bit-for-bit, so the
-        # streaming gate reuses gen_tiles' exact closed-form oracle
-        "stream_tiles": derived.with_ctes(
-            derived.IMAGES_META_SQL,
-            gt,
-            body="SELECT image_id, tiy, tix, tile_id, off_x, off_y, tw, th FROM tiles",
-        ),
-        "knn_join": derived.with_ctes(
-            derived.POINTS_META_SQL,
-            derived.FOOTPRINTS_META_SQL,
-            body="""
+)
+
+_PYRAMID_TILES_SQL = derived.with_ctes(
+    derived.IMAGES_META_SQL,
+    pyramid.pyramid_meta_sql(3),
+    "lvl_meta AS (SELECT image_id, level, lw AS w, lh AS h FROM pyramid)",
+    grid.gen_tiles_sql(CFG.tile_size, CFG.overlap_px, src="lvl_meta"),
+    body="SELECT image_id, level, tiy, tix, tile_id, off_x, off_y, tw, th FROM tiles",
+)
+
+_KNN_SQL = derived.with_ctes(
+    derived.POINTS_META_SQL,
+    derived.FOOTPRINTS_META_SQL,
+    body="""
 , cand AS (
   SELECT p.pt_id, f.fp_id,
     row_number() OVER (
@@ -1204,43 +961,42 @@ FROM read_parquet('{_REPROJECT_FIXTURE}')""",
   FROM points_meta p CROSS JOIN footprints_meta f
 )
 SELECT pt_id, fp_id, CAST(rank AS INT) AS rank FROM cand WHERE rank <= 5""",
-        ),
-        "bbox_join": derived.with_ctes(
-            derived.IMAGES_META_SQL,
-            gt,
-            grid.tiles_geo_sql(),
-            derived.FOOTPRINTS_META_SQL,
-            derived.FOOTPRINTS_ENV_SQL,
-            body="""
+)
+
+_BBOX_SQL = derived.with_ctes(
+    derived.IMAGES_META_SQL,
+    grid.gen_tiles_sql(CFG.tile_size, CFG.overlap_px),
+    grid.tiles_geo_sql(),
+    derived.FOOTPRINTS_META_SQL,
+    derived.FOOTPRINTS_ENV_SQL,
+    body="""
 SELECT t.tile_id, f.fp_id
 FROM tiles_geo t, footprints_env f
 WHERE t.tminx < f.maxx AND t.tmaxx > f.minx
   AND t.tminy < f.maxy AND t.tmaxy > f.miny""",
-        ),
-        "point_tile_assign": derived.with_ctes(
-            derived.IMAGES_META_SQL,
-            gt,
-            grid.tiles_geo_sql(),
-            derived.POINTS_META_SQL,
-            body="""
+)
+
+_POINT_TILE_SQL = derived.with_ctes(
+    derived.IMAGES_META_SQL,
+    grid.gen_tiles_sql(CFG.tile_size, CFG.overlap_px),
+    grid.tiles_geo_sql(),
+    derived.POINTS_META_SQL,
+    body="""
 SELECT p.pt_id, t.tile_id
 FROM points_meta p, tiles_geo t
 WHERE p.px > t.tminx AND p.px < t.tmaxx
   AND p.py > t.tminy AND p.py < t.tmaxy""",
-        ),
-    }
+)
 
-
-def _pyramid_sql(levels: int) -> str:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators.pyramid import pyramid_meta_sql
-
-    return pyramid_meta_sql(levels)
-
-
-def _multires_sql() -> str:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators.pyramid import multires_meta_sql
-
-    return multires_meta_sql()
+_PIP_SQL = derived.with_ctes(
+    derived.POINTS_META_SQL,
+    derived.FOOTPRINTS_META_SQL,
+    body="""
+SELECT p.pt_id, f.fp_id
+FROM points_meta p, footprints_meta f
+WHERE abs( (p.px - f.cx) * cos(radians(f.theta_deg)) + (p.py - f.cy) * sin(radians(f.theta_deg))) <= f.a
+  AND abs(-(p.px - f.cx) * sin(radians(f.theta_deg)) + (p.py - f.cy) * cos(radians(f.theta_deg))) <= f.b""",
+)
 
 
 def _pipeline_polygons_sql() -> str:
@@ -1248,17 +1004,7 @@ def _pipeline_polygons_sql() -> str:
     non-overlapping >=4x4 rectangles >=2 px apart, so after the 3x3 open and
     CC labeling each survives verbatim; labels are assigned in raster-scan
     order of first pixel (y0, then x0)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import (
-        IMAGES_META_PK_SQL,
-        rects_sql,
-    )
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + ","
-        + rects_sql()
-        + f"""
+    return derived.with_ctes(IMAGES_META_PK_SQL, rects_sql(), body=f"""\
 SELECT image_id,
   CAST(row_number() OVER (PARTITION BY image_id ORDER BY y0, x0) AS INT) AS poly_id,
   CAST(row_number() OVER (PARTITION BY image_id ORDER BY y0, x0) AS INT) AS value,
@@ -1269,8 +1015,7 @@ SELECT image_id,
   uly + (y0 + rh) * (-1e-1)       AS miny,
   uly + y0 * (-1e-1)              AS maxy
 FROM rects
-WHERE pk <= {PIPE_CAP}"""
-    )
+WHERE pk <= {PIPE_CAP}""")
 
 
 def _pipeline_watershed_sql() -> str:
@@ -1278,51 +1023,18 @@ def _pipeline_watershed_sql() -> str:
     every rect is one watershed region of exactly rw*rh px (>= 76 px
     Chebyshev separation guarantees one surviving ridge-plateau marker per
     rect; see sparse_params)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import (
-        IMAGES_META_PK_SQL,
-        sparse_sql,
-    )
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + ","
-        + sparse_sql()
-        + """
+    return derived.with_ctes(IMAGES_META_PK_SQL, sparse_sql(), body="""\
 SELECT image_id, round(rw * rh * 1e-2, 2) AS area_m2
-FROM sparse WHERE pk <= 100"""
-    )
+FROM sparse WHERE pk <= 100""")
 
 
-def _training_tensors_sql() -> str:
-    """Closed-form twin of q_training_tensors: 200x200 labels make the
-    resize the identity, so y_sum = sum(label plane) + sum(weight plane) =
-    sum(rw*rh) + onion-ring weights (float32-rounded 10/d + 1, bg d=-99)
-    — the same integer EDT arithmetic _edt_weight_hist_sql pins per-ring."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import (
-        IMAGES_META_PK_SQL,
-        rects_sql,
-    )
-
-    t = CFG.tile_size
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + f""",
-meta_t AS (
-  SELECT image_id, pk, {t} AS w, {t} AS h, ulx, uly
-  FROM images_meta_pk WHERE pk <= 50
-),"""
-        + rects_sql(src="meta_t")
-        + f""",
-label AS (
-  SELECT image_id, CAST(sum(rw * rh) AS BIGINT) AS label_px
-  FROM rects GROUP BY image_id
-),
+# EDT onion rings of isolated rect blobs: the d-th ring's EDT is exactly d,
+# so its pixel count is inner(d) - inner(d+1)
+_RING_CTES = """
 rings AS (
   SELECT image_id, rw, rh,
     unnest(generate_series(1, (least(rw, rh) + 1) // 2)) AS d
-  FROM rects
+  FROM rects{where}
 ),
 fg AS (
   SELECT image_id, CAST(d AS INT) AS d,
@@ -1331,12 +1043,36 @@ fg AS (
       - greatest(rw - 2*d, 0) * greatest(rh - 2*d, 0)
     ) AS BIGINT) AS n_px
   FROM rings GROUP BY image_id, d
-),
+)"""
+
+
+def _training_tensors_sql() -> str:
+    """Closed-form twin of q_training_tensors: 200x200 labels make the
+    resize the identity, so y_sum = sum(label plane) + sum(weight plane) =
+    sum(rw*rh) + onion-ring weights (float32-rounded 10/d + 1, bg d=-99)
+    — the same integer EDT arithmetic _edt_weight_hist_sql pins per-ring."""
+    t = CFG.tile_size
+    return derived.with_ctes(
+        IMAGES_META_PK_SQL,
+        f"""
+meta_t AS (
+  SELECT image_id, pk, {t} AS w, {t} AS h, ulx, uly
+  FROM images_meta_pk WHERE pk <= 50
+)""",
+        rects_sql(src="meta_t"),
+        """
+label AS (
+  SELECT image_id, CAST(sum(rw * rh) AS BIGINT) AS label_px
+  FROM rects GROUP BY image_id
+)""",
+        _RING_CTES.format(where=""),
+        """
 wsum AS (
   SELECT image_id,
     sum(n_px * CAST(CAST(10.0 / d + 1.0 AS REAL) AS DOUBLE)) AS w_fg
   FROM fg GROUP BY image_id
-)
+)""",
+        body=f"""\
 SELECT l.image_id,
   CAST({t * t * 3} AS INT) AS x_len,
   CAST({t * t * 2} AS INT) AS y_len,
@@ -1344,51 +1080,33 @@ SELECT l.image_id,
         + ({t * t} - l.label_px)
           * CAST(CAST(10.0 / -99.0 + 1.0 AS REAL) AS DOUBLE),
         2) AS y_sum
-FROM label l JOIN wsum w USING (image_id)"""
+FROM label l JOIN wsum w USING (image_id)""",
     )
 
 
-def _watershed_split_sql() -> str:
-    """Closed-form twin of q_watershed_split: n_regions = 2 by construction
-    (see dumbbell_params bounds), fg_px = 2*s^2 + bh*blen."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import (
+def _edt_weight_hist_sql() -> str:
+    """Closed-form twin of q_edt_weight_hist: per-ring pixel counts of the
+    isolated rect blobs (_RING_CTES); background is d = -99 with weight
+    10/(-99)+1."""
+    return derived.with_ctes(
         IMAGES_META_PK_SQL,
-        dumbbell_fg_sql,
-    )
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + ","
-        + dumbbell_fg_sql()
-        + """
-SELECT image_id, CAST(2 AS INT) AS n_regions, CAST(fg_px AS BIGINT) AS fg_px,
-       round(fg_px * 1e-2, 2) AS area_m2
-FROM dumbbell WHERE pk <= 80"""
-    )
-
-
-def _cc_distributed_sql() -> str:
-    """Closed-form twin of q_cc_distributed: every synthetic blob is one
-    4-connected region of exactly rw*rh pixels (blobs are >=2 px apart)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import (
-        IMAGES_META_PK_SQL,
-        rects_sql,
-    )
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + ","
-        + rects_sql()
-        + """
-SELECT image_id, CAST(rw * rh AS BIGINT) AS region_px
-FROM rects WHERE pk <= 120"""
+        rects_sql(),
+        _RING_CTES.format(where=" WHERE pk <= 50"),
+        """
+bg AS (
+  SELECT i.image_id, CAST(-99 AS INT) AS d,
+    CAST(i.w * i.h - coalesce(sum(r.rw * r.rh), 0) AS BIGINT) AS n_px
+  FROM images_meta_pk i LEFT JOIN rects r ON r.image_id = i.image_id
+  WHERE i.pk <= 50
+  GROUP BY i.image_id, i.w, i.h
+),
+hist AS (SELECT * FROM fg WHERE n_px > 0 UNION ALL SELECT * FROM bg)""",
+        body="SELECT image_id, d, n_px, 10.0 / d + 1.0 AS weight FROM hist",
     )
 
 
-def _rgb_sums_ctes(limit: int) -> str:
-    """Shared WITH-chain deriving render_rgb's closed-form channel sums.
+def _rgb_sums_sql(limit: int, columns: str, join: str = "") -> str:
+    """render_rgb's closed-form channel sums over the first ``limit`` images.
 
     render_rgb is base[y][x] = 40 + (y*7+pk)%97 + (x*13+pk)%89 per channel
     (+17 g, +31 b; no uint8 wrap — max 255), with blob rects overwritten to
@@ -1397,19 +1115,13 @@ def _rgb_sums_ctes(limit: int) -> str:
       sum_g = 57wh + w*Syy + h*Sxx + 153A - B
       sum_b = 71wh + w*Syy + h*Sxx + 129A - B
     with Syy/Sxx the axis mod-sequence sums, A = blob px, B = the blobs'
-    base-gradient sum minus its 40A constant.  Ends with CTEs
-    ``imgs/rowsums/colsums/blob`` for the caller's SELECT."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import (
+    base-gradient sum minus its 40A constant (``_RGB_SUM``).  ``columns``
+    is the SELECT list over ``imgs i`` joined to ``rowsums rs``,
+    ``colsums cs`` and ``blob bl``, plus ``join``."""
+    return derived.with_ctes(
         IMAGES_META_PK_SQL,
-        rects_sql,
-    )
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + ","
-        + rects_sql()
-        + f""",
+        rects_sql(),
+        f"""
 imgs AS (SELECT image_id, pk, w, h FROM images_meta_pk WHERE pk <= {limit}),
 ys AS (
   SELECT image_id, pk, unnest(generate_series(0, h - 1)) AS y FROM imgs
@@ -1452,141 +1164,52 @@ blob AS (
   JOIN rect_colsums rx ON rx.image_id = r.image_id AND rx.j = r.j
   WHERE r.pk <= {limit}
   GROUP BY r.image_id
-)"""
-    )
-
-
-def _multimodal_tiff_sql() -> str:
-    """Closed-form twin of q_multimodal_tiff — identical arithmetic to
-    _multimodal_pixel_sums_sql (lossless codec => same sums), limit 60."""
-    return (
-        _rgb_sums_ctes(60)
-        + """
+)""",
+        body=f"""\
 SELECT i.image_id,
-  CAST(i.w * i.h AS BIGINT) AS n_px,
-  40 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 180 * bl.a - bl.b AS sum_r,
-  57 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 153 * bl.a - bl.b AS sum_g,
-  71 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 129 * bl.a - bl.b AS sum_b
+{columns}
 FROM imgs i
 JOIN rowsums rs USING (image_id)
 JOIN colsums cs USING (image_id)
-JOIN blob bl USING (image_id)"""
+JOIN blob bl USING (image_id){join}""",
     )
 
 
-def _multimodal_tiff_quarantine_sql() -> str:
-    """Twin of q_multimodal_tiff_quarantine: _multimodal_tiff_sql's
-    closed-form sums for intact rows (pk % 4 != 0), NULL features +
-    ok=false for the forged-IFD ones."""
-    return (
-        _rgb_sums_ctes(60)
-        + """
-SELECT i.image_id,
-  CASE WHEN i.pk % 4 = 0 THEN NULL
-       ELSE CAST(i.w * i.h AS BIGINT) END AS n_px,
-  CASE WHEN i.pk % 4 = 0 THEN NULL
-       ELSE 40 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 180 * bl.a - bl.b
-       END AS sum_r,
-  CASE WHEN i.pk % 4 = 0 THEN NULL
-       ELSE 57 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 153 * bl.a - bl.b
-       END AS sum_g,
-  CASE WHEN i.pk % 4 = 0 THEN NULL
-       ELSE 71 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 129 * bl.a - bl.b
-       END AS sum_b,
-  (i.pk % 4 <> 0) AS ok
-FROM imgs i
-JOIN rowsums rs USING (image_id)
-JOIN colsums cs USING (image_id)
-JOIN blob bl USING (image_id)"""
+_RGB_SUM = {
+    c: f"{base} * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + {blob} * bl.a - bl.b"
+    for c, base, blob in (("r", 40, 180), ("g", 57, 153), ("b", 71, 129))
+}
+
+
+def _pixel_sums_sql(limit: int, quarantine: bool = False) -> str:
+    """Closed-form twin of MM.pixel_sums over the first ``limit`` rgb
+    renders (any lossless codec gives the same sums).  ``quarantine``:
+    the twin of _quarantine_pixel_sums — the corruption rule is pure
+    arithmetic on pk, so intact rows (pk % 4 != 0) keep their sums and
+    the corrupted ones read NULL features and ok = false."""
+    cols = {"n_px": "CAST(i.w * i.h AS BIGINT)"}
+    cols.update({f"sum_{c}": e for c, e in _RGB_SUM.items()})
+    if quarantine:
+        cols = {k: f"CASE WHEN i.pk % 4 = 0 THEN NULL ELSE {e} END" for k, e in cols.items()}
+        cols["ok"] = "(i.pk % 4 <> 0)"
+    return _rgb_sums_sql(limit, ",\n".join(f"  {e} AS {k}" for k, e in cols.items()))
+
+
+def _multimodal_features_sql() -> str:
+    """Twin of q_multimodal_features: five of six columns are closed-form
+    (channel means = the analytic sums of _rgb_sums_sql divided by n_px in
+    the same IEEE double op numpy performs; nonzero_frac = 1.0 because every
+    render_rgb byte is >= 40); thumb_mean — the 64x64 bilinear-resize mean,
+    which has no SQL form — joins from the single-process expectations
+    fixture built by tools/build_multimodal_fixture.py."""
+    means = "".join(
+        f"  CAST({e} AS DOUBLE) / (i.w * i.h) AS mean_{c},\n" for c, e in _RGB_SUM.items()
     )
-
-
-def _geotiff_extents_sql() -> str:
-    """Twin of q_geotiff_extents: the image_extents bbox arithmetic
-    (float64 ulx + w * 1e-1 exactly matches the Python-side computation
-    from the decoded GeoTIFF tags — the doubles round-trip bit-exactly
-    through the tag encoding), restricted to pk <= 80, crs_ok constant
-    true when the ASCII citation survives."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import (
-        IMAGES_META_PK_SQL,
-    )
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + """
-SELECT image_id,
-  ulx               AS minx,
-  uly + h * (-1e-1) AS miny,
-  ulx + w * 1e-1    AS maxx,
-  uly               AS maxy,
-  TRUE              AS crs_ok
-FROM images_meta_pk WHERE pk <= 80"""
-    )
-
-
-def _geotiff_window_sql(limit: int = 60) -> str:
-    """Twin of q_geotiff_window (limit 60) and q_window_chips (limit 40):
-    the pk-derived window is pure integer arithmetic, the mask's rects
-    are disjoint (one per quadrant), so the windowed pixel sum is 255 *
-    sum over rects of the clamped per-axis overlap product.  LEFT JOIN
-    keeps windows that miss every rect (sum_v = 0)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import (
-        IMAGES_META_PK_SQL,
-        rects_sql,
-    )
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + f""",
-imgs AS (SELECT * FROM images_meta_pk WHERE pk <= {limit}),"""
-        + rects_sql("imgs")
-        + """,
-win AS (
-  SELECT image_id,
-    CAST((pk * 13) % (w - w // 2) AS INT) AS wx0,
-    CAST((pk * 17) % (h - h // 2) AS INT) AS wy0,
-    CAST(w // 2 AS INT) AS ww,
-    CAST(h // 2 AS INT) AS wh
-  FROM imgs
-)
-SELECT v.image_id, v.wx0, v.wy0, v.ww, v.wh,
-  CAST(255 * COALESCE(SUM(
-    GREATEST(0, LEAST(r.x0 + r.rw, v.wx0 + v.ww) - GREATEST(r.x0, v.wx0)) *
-    GREATEST(0, LEAST(r.y0 + r.rh, v.wy0 + v.wh) - GREATEST(r.y0, v.wy0))
-  ), 0) AS BIGINT) AS sum_v
-FROM win v LEFT JOIN rects r USING (image_id)
-GROUP BY v.image_id, v.wx0, v.wy0, v.ww, v.wh"""
-    )
-
-
-def _multimodal_quarantine_sql() -> str:
-    """Twin of q_multimodal_quarantine: same closed-form sums as
-    _multimodal_pixel_sums_sql for intact rows (pk % 4 != 0), NULL
-    features + ok=false for the corrupted ones — the corruption rule is
-    pure arithmetic on pk, so the quarantine split is fully
-    oracle-checkable."""
-    return (
-        _rgb_sums_ctes(80)
-        + """
-SELECT i.image_id,
-  CASE WHEN i.pk % 4 = 0 THEN NULL
-       ELSE CAST(i.w * i.h AS BIGINT) END AS n_px,
-  CASE WHEN i.pk % 4 = 0 THEN NULL
-       ELSE 40 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 180 * bl.a - bl.b
-       END AS sum_r,
-  CASE WHEN i.pk % 4 = 0 THEN NULL
-       ELSE 57 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 153 * bl.a - bl.b
-       END AS sum_g,
-  CASE WHEN i.pk % 4 = 0 THEN NULL
-       ELSE 71 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 129 * bl.a - bl.b
-       END AS sum_b,
-  (i.pk % 4 <> 0) AS ok
-FROM imgs i
-JOIN rowsums rs USING (image_id)
-JOIN colsums cs USING (image_id)
-JOIN blob bl USING (image_id)"""
+    return _rgb_sums_sql(
+        100,
+        f"  CAST(i.w * i.h AS BIGINT) AS n_px,\n{means}"
+        "  t.thumb_mean,\n  CAST(1.0 AS DOUBLE) AS nonzero_frac",
+        join=f"\nJOIN read_parquet('{FIXTURES}/multimodal_thumb_sf0_01.parquet') t USING (image_id)",
     )
 
 
@@ -1595,8 +1218,6 @@ def _multimodal_png16_sql() -> str:
     separable 16-bit gradient, so sum and both axis-weighted moments are
     pure arithmetic over the mod-sequence sums.  ``//`` keeps the
     triangular numbers BIGINT (DuckDB ``/`` is float division)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import dem16_sums_ctes
-
     return (
         dem16_sums_ctes(60)
         + """
@@ -1616,52 +1237,62 @@ JOIN colsums cs USING (image_id)"""
     )
 
 
-def _multimodal_pixel_sums_sql() -> str:
-    """Closed-form twin of q_multimodal_pixel_sums (see _rgb_sums_ctes)."""
-    return (
-        _rgb_sums_ctes(80)
-        + """
-SELECT i.image_id,
-  CAST(i.w * i.h AS BIGINT) AS n_px,
-  40 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 180 * bl.a - bl.b AS sum_r,
-  57 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 153 * bl.a - bl.b AS sum_g,
-  71 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 129 * bl.a - bl.b AS sum_b
-FROM imgs i
-JOIN rowsums rs USING (image_id)
-JOIN colsums cs USING (image_id)
-JOIN blob bl USING (image_id)"""
-    )
+def _watershed_split_sql() -> str:
+    """Closed-form twin of q_watershed_split: n_regions = 2 by construction
+    (see dumbbell_params bounds), fg_px = 2*s^2 + bh*blen."""
+    return derived.with_ctes(IMAGES_META_PK_SQL, dumbbell_fg_sql(), body="""\
+SELECT image_id, CAST(2 AS INT) AS n_regions, CAST(fg_px AS BIGINT) AS fg_px,
+       round(fg_px * 1e-2, 2) AS area_m2
+FROM dumbbell WHERE pk <= 80""")
 
 
-_MM_THUMB_FIXTURE = f"{FIXTURES}/multimodal_thumb_sf0_01.parquet"
-_MM_JPEG_FIXTURE = f"{FIXTURES}/multimodal_jpeg_sf0_01.parquet"
-_MM_TIFF_JPEG_FIXTURE = f"{FIXTURES}/multimodal_tiff_jpeg_sf0_01.parquet"
-_REPROJECT_FIXTURE = f"{FIXTURES}/reproject_extents_sf0_01.parquet"
+def _cc_distributed_sql() -> str:
+    """Closed-form twin of q_cc_distributed: every synthetic blob is one
+    4-connected region of exactly rw*rh pixels (blobs are >=2 px apart)."""
+    return derived.with_ctes(IMAGES_META_PK_SQL, rects_sql(), body="""\
+SELECT image_id, CAST(rw * rh AS BIGINT) AS region_px
+FROM rects WHERE pk <= 120""")
 
 
-_SKELETON_FIXTURE = f"{FIXTURES}/skeleton_sf0_01.parquet"
+def _geotiff_extents_sql() -> str:
+    """Twin of q_geotiff_extents: the image_extents bbox arithmetic
+    (float64 ulx + w * 1e-1 exactly matches the Python-side computation
+    from the decoded GeoTIFF tags — the doubles round-trip bit-exactly
+    through the tag encoding), restricted to pk <= 80, crs_ok constant
+    true when the ASCII citation survives."""
+    return derived.with_ctes(IMAGES_META_PK_SQL, body="""\
+SELECT image_id,
+  ulx               AS minx,
+  uly + h * (-1e-1) AS miny,
+  ulx + w * 1e-1    AS maxx,
+  uly               AS maxy,
+  TRUE              AS crs_ok
+FROM images_meta_pk WHERE pk <= 80""")
 
 
-def _skeletonize_sql() -> str:
-    """Twin of q_skeletonize: frozen expectations from a single-process
-    run of the same render -> dilate -> Zhang-Suen -> count chain
-    (tools/build_skeleton_fixture.py) — retires round 3's last
-    rows-only driver query."""
-    return f"""
-SELECT image_id, skeleton_px
-FROM read_parquet('{_SKELETON_FIXTURE}')"""
-
-
-_PHASH_FIXTURE = f"{FIXTURES}/phash_sf0_01.parquet"
-
-
-def _phash_compute_sql() -> str:
-    """Twin of q_phash_compute: frozen expectations from a single-process
-    run of the same pure-numpy pHash kernel over the same deterministic
-    renders (tools/build_phash_fixture.py)."""
-    return f"""
-SELECT image_id, phash
-FROM read_parquet('{_PHASH_FIXTURE}')"""
+def _geotiff_window_sql(limit: int) -> str:
+    """Twin of q_geotiff_window (limit 60), q_window_chips (limit 40) and
+    q_box_chips (limit 30): the pk-derived window is pure integer
+    arithmetic, the mask's rects are disjoint (one per quadrant), so the
+    windowed pixel sum is 255 * sum over rects of the clamped per-axis
+    overlap product.  LEFT JOIN keeps windows that miss every rect
+    (sum_v = 0)."""
+    return derived.with_ctes(IMAGES_META_PK_SQL, *_capped_rects(limit), """
+win AS (
+  SELECT image_id,
+    CAST((pk * 13) % (w - w // 2) AS INT) AS wx0,
+    CAST((pk * 17) % (h - h // 2) AS INT) AS wy0,
+    CAST(w // 2 AS INT) AS ww,
+    CAST(h // 2 AS INT) AS wh
+  FROM imgs
+)""", body="""\
+SELECT v.image_id, v.wx0, v.wy0, v.ww, v.wh,
+  CAST(255 * COALESCE(SUM(
+    GREATEST(0, LEAST(r.x0 + r.rw, v.wx0 + v.ww) - GREATEST(r.x0, v.wx0)) *
+    GREATEST(0, LEAST(r.y0 + r.rh, v.wy0 + v.wh) - GREATEST(r.y0, v.wy0))
+  ), 0) AS BIGINT) AS sum_v
+FROM win v LEFT JOIN rects r USING (image_id)
+GROUP BY v.image_id, v.wx0, v.wy0, v.ww, v.wh""")
 
 
 def _zonal_stats_sql() -> str:
@@ -1671,18 +1302,7 @@ def _zonal_stats_sql() -> str:
     [s*500, least(w, s*500+500)) over the full height, so fg_px is the
     disjoint-rect x-overlap times rect height and sum_val is 255x that
     (mask value 255 inside rects, 0 outside)."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import (
-        IMAGES_META_PK_SQL,
-        rects_sql,
-    )
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + f""",
-imgs AS (SELECT * FROM images_meta_pk WHERE pk <= {_ZONAL_PK_CAP}),"""
-        + rects_sql("imgs")
-        + """,
+    return derived.with_ctes(IMAGES_META_PK_SQL, *_capped_rects(_ZONAL_PK_CAP), """
 zones AS (
   SELECT c.g AS c, s.g AS s
   FROM (SELECT unnest(generate_series(0, 49)) AS g) c,
@@ -1702,111 +1322,30 @@ wfg AS (
          ), 0) AS fg
   FROM pairs p LEFT JOIN rects r USING (image_id)
   GROUP BY p.c, p.s, p.image_id, p.h, p.wx0, p.wx1
-)
+)""", body="""\
 SELECT concat('z_', CAST(c AS VARCHAR), '_', CAST(s AS VARCHAR)) AS zone_id,
        CAST(count(*) AS BIGINT)        AS n_images,
        CAST(SUM(ww * h) AS BIGINT)     AS n_px,
        CAST(SUM(fg) AS BIGINT)         AS fg_px,
        CAST(SUM(fg) * 255 AS BIGINT)   AS sum_val
-FROM wfg GROUP BY c, s"""
-    )
-
-
-def _reproject_extents_sql() -> str:
-    """Twin of q_reproject_extents: the nanodegree WGS84 bounds frozen
-    by the single-process fixture run (tools/build_reproject_fixture.py)
-    — no Spark machinery shared with the gated query; the transverse-
-    Mercator series itself is independently pinned by
-    tests/test_geodesy.py (Newton inversion + meridian constant)."""
-    return f"""
-SELECT image_id, epsg, lon_min_nd, lat_min_nd, lon_max_nd, lat_max_nd
-FROM read_parquet('{_REPROJECT_FIXTURE}')"""
-
-
-def _multimodal_features_sql() -> str:
-    """Twin of q_multimodal_features: five of six columns are closed-form
-    (channel means = the analytic sums of _rgb_sums_ctes divided by n_px in
-    the same IEEE double op numpy performs; nonzero_frac = 1.0 because every
-    render_rgb byte is >= 40); thumb_mean — the 64x64 bilinear-resize mean,
-    which has no SQL form — joins from the single-process expectations
-    fixture built by tools/build_multimodal_fixture.py."""
-    return (
-        _rgb_sums_ctes(100)
-        + f"""
-SELECT i.image_id,
-  CAST(i.w * i.h AS BIGINT) AS n_px,
-  CAST(40 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 180 * bl.a - bl.b AS DOUBLE)
-    / (i.w * i.h) AS mean_r,
-  CAST(57 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 153 * bl.a - bl.b AS DOUBLE)
-    / (i.w * i.h) AS mean_g,
-  CAST(71 * i.w * i.h + i.w * rs.syy + i.h * cs.sxx + 129 * bl.a - bl.b AS DOUBLE)
-    / (i.w * i.h) AS mean_b,
-  t.thumb_mean,
-  CAST(1.0 AS DOUBLE) AS nonzero_frac
-FROM imgs i
-JOIN rowsums rs USING (image_id)
-JOIN colsums cs USING (image_id)
-JOIN blob bl USING (image_id)
-JOIN read_parquet('{_MM_THUMB_FIXTURE}') t USING (image_id)"""
-    )
-
-
-def _multimodal_jpeg_sql() -> str:
-    """Twin of q_multimodal_jpeg: lossy DCT pixels have no SQL form, so the
-    oracle is the complete expectations table from a single-process run of
-    the same transcode -> decode -> resize -> feature chain
-    (tools/build_multimodal_fixture.py) — no Spark machinery shared, so a
-    distributed-plumbing bug cannot cancel out."""
-    return f"""
-SELECT image_id, n_px, mean_r, mean_g, mean_b, thumb_mean, nonzero_frac
-FROM read_parquet('{_MM_JPEG_FIXTURE}')"""
-
-
-def _multimodal_tiff_jpeg_sql() -> str:
-    """Twin of q_multimodal_tiff_jpeg: frozen single-process expectations
-    for the JPEG-in-TIFF transcode chain (same posture as
-    _multimodal_jpeg_sql — lossy pixels have no SQL form)."""
-    return f"""
-SELECT image_id, n_px, mean_r, mean_g, mean_b, thumb_mean, nonzero_frac
-FROM read_parquet('{_MM_TIFF_JPEG_FIXTURE}')"""
+FROM wfg GROUP BY c, s""")
 
 
 def _skeletonize_bars_sql() -> str:
     """Closed-form twin of q_skeletonize_bars: per-image sum of
     max(abs(bw - bh), 1) over the deterministic bar fixtures."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import (
-        IMAGES_META_PK_SQL,
-        bars_sql,
-    )
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + ","
-        + bars_sql()
-        + """
+    return derived.with_ctes(IMAGES_META_PK_SQL, bars_sql(), body="""\
 SELECT image_id,
   CAST(sum(greatest(abs(bw - bh), 1)) AS BIGINT) AS skeleton_px
 FROM bars WHERE pk <= 60
-GROUP BY image_id"""
-    )
+GROUP BY image_id""")
 
 
 def _skeleton_paths_sql() -> str:
     """Closed-form twin of q_skeleton_paths: each bar contributes one
     straight run of bw - bh pixels whose collinear merge keeps exactly
     its two endpoints."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import (
-        IMAGES_META_PK_SQL,
-        bars_sql,
-    )
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + ","
-        + bars_sql()
-        + """
+    return derived.with_ctes(IMAGES_META_PK_SQL, bars_sql(), body="""\
 SELECT image_id,
   COUNT(*) AS n_paths,
   CAST(SUM(bw - bh) AS BIGINT) AS sum_px,
@@ -1814,78 +1353,111 @@ SELECT image_id,
   CAST(MIN(bw - bh) AS BIGINT) AS min_px,
   CAST(2*COUNT(*) AS BIGINT) AS sum_vertices
 FROM bars WHERE pk <= 60
-GROUP BY image_id"""
-    )
-
-
-def _edt_weight_hist_sql() -> str:
-    """Closed-form twin of q_edt_weight_hist: for isolated rect blobs the
-    EDT of the d-th onion ring is exactly d, so per-ring pixel counts are
-    inner(d) - inner(d+1); background is d = -99 with weight 10/(-99)+1."""
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import (
-        IMAGES_META_PK_SQL,
-        rects_sql,
-    )
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + ","
-        + rects_sql()
-        + """,
-rings AS (
-  SELECT image_id, rw, rh,
-    unnest(generate_series(1, (least(rw, rh) + 1) // 2)) AS d
-  FROM rects WHERE pk <= 50
-),
-fg AS (
-  SELECT image_id, CAST(d AS INT) AS d,
-    CAST(sum(
-      greatest(rw - 2*(d-1), 0) * greatest(rh - 2*(d-1), 0)
-      - greatest(rw - 2*d, 0) * greatest(rh - 2*d, 0)
-    ) AS BIGINT) AS n_px
-  FROM rings GROUP BY image_id, d
-),
-bg AS (
-  SELECT i.image_id, CAST(-99 AS INT) AS d,
-    CAST(i.w * i.h - coalesce(sum(r.rw * r.rh), 0) AS BIGINT) AS n_px
-  FROM images_meta_pk i LEFT JOIN rects r ON r.image_id = i.image_id
-  WHERE i.pk <= 50
-  GROUP BY i.image_id, i.w, i.h
-),
-hist AS (SELECT * FROM fg WHERE n_px > 0 UNION ALL SELECT * FROM bg)
-SELECT image_id, d, n_px, 10.0 / d + 1.0 AS weight FROM hist"""
-    )
+GROUP BY image_id""")
 
 
 def _dice_jaccard_sql() -> str:
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.sources.images import (
-        IMAGES_META_PK_SQL,
-        rects_sql,
-    )
-
-    return (
-        "WITH "
-        + IMAGES_META_PK_SQL
-        + ","
-        + rects_sql()
-        + f""",
-s AS (SELECT CAST(sum(rw * rh) AS DOUBLE) AS fg FROM rects WHERE pk <= {PIPE_CAP})
+    return derived.with_ctes(IMAGES_META_PK_SQL, rects_sql(), f"""
+s AS (SELECT CAST(sum(rw * rh) AS DOUBLE) AS fg FROM rects WHERE pk <= {PIPE_CAP})""",
+                   body="""\
 SELECT 2e0 * fg / (fg + fg + 1e0) AS dice,
        fg / (fg + fg - fg + 1e0)  AS jaccard
-FROM s"""
-    )
+FROM s""")
 
 
-_PIP_SQL = derived.with_ctes(
-    derived.POINTS_META_SQL,
-    derived.FOOTPRINTS_META_SQL,
-    body="""
-SELECT p.pt_id, f.fp_id
-FROM points_meta p, footprints_meta f
-WHERE abs( (p.px - f.cx) * cos(radians(f.theta_deg)) + (p.py - f.cy) * sin(radians(f.theta_deg))) <= f.a
-  AND abs(-(p.px - f.cx) * sin(radians(f.theta_deg)) + (p.py - f.cy) * cos(radians(f.theta_deg))) <= f.b""",
-)
+_REPROJECT_FIXTURE = "reproject_extents_sf0_01.parquet"
+_MM_FIXTURE_COLUMNS = "image_id, n_px, mean_r, mean_g, mean_b, thumb_mean, nonzero_frac"
+
+
+# --------------------------------------------------------------------------- #
+# the gate table: name -> (Spark builder, DuckDB oracle SQL)
+# --------------------------------------------------------------------------- #
+
+# Ordered for the driver's budget-bound correctness sweep: gates that have
+# never appeared in a driver CORRECTNESS artifact run FIRST (the r1-r4 sweeps
+# truncated at ~50 queries, always dropping the tail), then the cheap
+# long-evidenced gates, with the most expensive already-evidenced pipelines
+# last so a truncated sweep loses only redundant evidence.
+GATES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str]] = {
+    # --- never driver-sampled before round 5: run first ------------------- #
+    "reproject_extents": (q_reproject_extents, _fixture_sql(
+        _REPROJECT_FIXTURE, "image_id, epsg, lon_min_nd, lat_min_nd, lon_max_nd, lat_max_nd")),
+    "mosaic_extent_wgs84": (q_mosaic_extent_wgs84, _fixture_sql(
+        _REPROJECT_FIXTURE,
+        "min(lon_min_nd) AS lon_min_nd, min(lat_min_nd) AS lat_min_nd,\n"
+        "       max(lon_max_nd) AS lon_max_nd, max(lat_max_nd) AS lat_max_nd,\n"
+        "       count(*) AS n_images, count(DISTINCT epsg) AS n_zones")),
+    "multimodal_png16": (q_multimodal_png16, _multimodal_png16_sql()),
+    "phash_compute": (q_phash_compute, _fixture_sql("phash_sf0_01.parquet", "image_id, phash")),
+    "zonal_stats": (q_zonal_stats, _zonal_stats_sql()),
+    # margin-aligned rect 4-gons: center-inside set == snapped window,
+    # so the polygon path shares the rect path's integer oracle
+    "zonal_stats_poly": (q_zonal_stats_poly, _zonal_stats_sql()),
+    "skeleton_paths": (q_skeleton_paths, _skeleton_paths_sql()),
+    # the streamed grid must equal the batch grid bit-for-bit, so the
+    # streaming gate reuses gen_tiles' exact closed-form oracle
+    "stream_tiles": (q_stream_tiles, _tiles_sql(CFG.overlap_px)),
+    "multimodal_tiff_quarantine": (q_multimodal_tiff_quarantine, _pixel_sums_sql(60, quarantine=True)),
+    # --- previously driver-evidenced, cheap metadata gates ---------------- #
+    "tile_counts": (q_tile_counts, _tile_counts_sql()),
+    "gen_tiles": (q_gen_tiles, _tiles_sql(CFG.overlap_px)),
+    "gen_tiles_overlap20": (q_gen_tiles_overlap20, _tiles_sql(CFG.overlap_px_from_percent())),
+    "image_extents": (q_image_extents, _IMAGE_EXTENTS_SQL),
+    "mosaic_extent": (q_mosaic_extent, _MOSAIC_EXTENT_SQL),
+    "pyramid_meta": (q_pyramid_meta, derived.with_ctes(
+        derived.IMAGES_META_SQL, pyramid.pyramid_meta_sql(5),
+        body="SELECT image_id, level, lw, lh, lscale FROM pyramid")),
+    "pyramid_tiles": (q_pyramid_tiles, _PYRAMID_TILES_SQL),
+    "multires_meta": (q_multires_meta, derived.with_ctes(
+        derived.IMAGES_META_SQL, pyramid.multires_meta_sql(),
+        body="SELECT image_id, res_idx, resolution, rw, rh FROM multires")),
+    "multimodal_features": (q_multimodal_features, _multimodal_features_sql()),
+    "multimodal_jpeg": (q_multimodal_jpeg, _fixture_sql(
+        "multimodal_jpeg_sf0_01.parquet", _MM_FIXTURE_COLUMNS)),
+    "multimodal_pixel_sums": (q_multimodal_pixel_sums, _pixel_sums_sql(80)),
+    "multimodal_tiff": (q_multimodal_tiff, _pixel_sums_sql(60)),
+    "multimodal_tiff_jpeg": (q_multimodal_tiff_jpeg, _fixture_sql(
+        "multimodal_tiff_jpeg_sf0_01.parquet", _MM_FIXTURE_COLUMNS)),
+    "multimodal_quarantine": (q_multimodal_quarantine, _pixel_sums_sql(80, quarantine=True)),
+    "geotiff_extents": (q_geotiff_extents, _geotiff_extents_sql()),
+    "geotiff_window": (q_geotiff_window, _geotiff_window_sql(60)),
+    "window_chips": (q_window_chips, _geotiff_window_sql(40)),
+    "box_chips": (q_box_chips, _geotiff_window_sql(30)),
+    # --- previously driver-evidenced, expensive raster/join pipelines ----- #
+    "bbox_join": (q_bbox_join, _BBOX_SQL),
+    "point_tile_assign": (q_point_tile_assign, _POINT_TILE_SQL),
+    "pip_join": (q_pip_join, _PIP_SQL),
+    "knn_join": (q_knn_join, _KNN_SQL),
+    "training_tensors": (q_training_tensors, _training_tensors_sql()),
+    "edt_weight_hist": (q_edt_weight_hist, _edt_weight_hist_sql()),
+    "skeletonize": (q_skeletonize, _fixture_sql("skeleton_sf0_01.parquet", "image_id, skeleton_px")),
+    "skeletonize_bars": (q_skeletonize_bars, _skeletonize_bars_sql()),
+    "dice_jaccard": (q_dice_jaccard, _dice_jaccard_sql()),
+    "cc_distributed": (q_cc_distributed, _cc_distributed_sql()),
+    "watershed_split": (q_watershed_split, _watershed_split_sql()),
+    "pipeline_polygons": (q_pipeline_polygons, _pipeline_polygons_sql()),
+    "pipeline_watershed": (q_pipeline_watershed, _pipeline_watershed_sql()),
+}
+
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    name: builder for name, (builder, _) in GATES.items()
+}
+
+
+def _wrap(fn: Callable[[SparkSession, str], DataFrame]):
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        _register_views(spark, sf_dir)
+        return fn(spark, sf_dir)
+
+    return run
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {k: _wrap(v) for k, v in QUERIES.items()}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {name: sql for name, (_, sql) in GATES.items()}
 
 
 # --------------------------------------------------------------------------- #

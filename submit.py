@@ -70,7 +70,7 @@ def main(argv=None) -> int:
 
     import vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark as vm
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.config import EngineConfig
-    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import pyramid, raster, sinks
+    from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import pyramid, raster
     from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.streaming import manifest as MF
 
     # spark-submit owns master/executors; only engine policy confs are set

@@ -123,6 +123,19 @@ def test_stream_tiles_matches_batch(spark, tmp):
     )
 
 
+def test_stream_tiles_gate_leaves_no_temp_dir(spark, tmp_path, monkeypatch):
+    """The stream_tiles gate deletes its temp directory (source, sink
+    and checkpoint) before returning, and its frame still reads the
+    full batch grid once collected."""
+    import __spark_entry__ as E
+    from conftest import SF_SMALL
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    rows = E.q_stream_tiles(spark, SF_SMALL).collect()
+    assert list(tmp_path.glob("stream_tiles_gate_*")) == []
+    assert len(rows) == gen_tiles(images_meta(spark, SF_SMALL), with_geo=False).count()
+
+
 def test_resume_records_zero_output_units(spark, tmp):
     """A unit whose stage output is empty still gets a manifest entry and
     is NOT re-run on resume (regression: empty units were pending forever)."""

@@ -246,8 +246,6 @@ def box_windows(
     images_meta: DataFrame,
     boxes: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    grid=None,
-    broadcast: str | None = None,
 ) -> DataFrame:
     """World-coordinate chip requests -> per-image pixel windows.
 
@@ -255,7 +253,7 @@ def box_windows(
     coordinates; each box is matched to every image footprint it
     strictly overlaps (cell-index equi-join via
     :func:`joins.bbox_range_join` — no cartesian at any corpus scale,
-    ``broadcast='right'`` when the box list is small) and the world
+    on ``WORLD_GRID``) and the world
     intersection is mapped through the north-up geotransform to a
     clamped pixel window: the ``-projwin`` / ReadRaster(geo) access the
     reference performs per scene inside GDAL (createTile's window copy,
@@ -273,8 +271,7 @@ def box_windows(
         images_meta.select("image_id", "w", "h", "ulx", "uly"), cfg
     )
     pairs = joins.bbox_range_join(
-        ext, boxes, grid or WORLD_GRID, lprefix="i_", rprefix="b_",
-        broadcast=broadcast,
+        ext, boxes, WORLD_GRID, lprefix="i_", rprefix="b_"
     )
     ix0 = F.greatest("i_minx", "b_minx")
     ix1 = F.least("i_maxx", "b_maxx")
@@ -310,18 +307,15 @@ def read_boxes(
     images: DataFrame,
     boxes: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    grid=None,
     tile_fmt: str = "png",
     on_error: str = "fail",
-    broadcast: str | None = None,
 ) -> DataFrame:
     """:func:`box_windows` |> :func:`read_windows`: chips for a table of
     world-coordinate boxes, straight off the raster corpus.  Re-join the
     result to ``box_windows(...)`` on (image_id, wx0, wy0, ww, wh) when
     the box_id mapping is needed downstream."""
     wins = box_windows(
-        images.select("image_id", "w", "h", "ulx", "uly"), boxes, cfg, grid,
-        broadcast,
+        images.select("image_id", "w", "h", "ulx", "uly"), boxes, cfg
     ).select("image_id", "wx0", "wy0", "ww", "wh")
     return read_windows(images, wins, tile_fmt=tile_fmt, on_error=on_error)
 
@@ -330,9 +324,7 @@ def zonal_stats(
     images: DataFrame,
     zones: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    grid=None,
     on_error: str = "fail",
-    broadcast: str | None = None,
 ) -> DataFrame:
     """Zonal statistics: per-zone pixel aggregates over the raster corpus
     — the classic raster x vector analysis (GDAL's gdal_rasterize +
@@ -355,79 +347,17 @@ def zonal_stats(
     is a plain map-side-combinable groupBy.  At 10^12 images the shuffle
     is O(zone-image pairs), not pixels.  ``on_error``: 'fail' | 'skip'
     (an undecodable image drops its windows)."""
-    _check_on_error(on_error, allowed=("fail", "skip"))
-    wins = box_windows(
-        images.select("image_id", "w", "h", "ulx", "uly"),
-        zones.select(
-            F.col("zone_id").alias("box_id"), "minx", "miny", "maxx", "maxy"
-        ),
-        cfg,
-        grid,
-        broadcast,
+    envelopes = zones.select(
+        F.col("zone_id").alias("box_id"), "minx", "miny", "maxx", "maxy"
     )
-    grouped = wins.groupBy("image_id").agg(
-        F.collect_list(F.struct("box_id", "wx0", "wy0", "ww", "wh")).alias("wins")
-    )
-    n = int(images.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    src = _spread(
-        images.select("image_id", "bytes", "fmt", "w", "h"), "image_id", n=n
-    ).hint("merge").join(grouped, "image_id")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                try:
-                    full = codec.decode(
-                        bytes(r.bytes), r.fmt, int(r.w), int(r.h)
-                    )
-                except _ROW_ERRORS:
-                    if on_error == "fail":
-                        raise
-                    continue
-                plane = full[:, :, 0] if full.ndim == 3 else full
-                for d in r.wins:
-                    x0, y0, ww, wh = (
-                        int(d["wx0"]), int(d["wy0"]), int(d["ww"]), int(d["wh"])
-                    )
-                    if (
-                        x0 < 0 or y0 < 0 or ww <= 0 or wh <= 0
-                        or y0 + wh > plane.shape[0] or x0 + ww > plane.shape[1]
-                    ):
-                        if on_error == "fail":
-                            raise ValueError("window outside raster bounds")
-                        continue
-                    win = plane[y0 : y0 + wh, x0 : x0 + ww]
-                    rows.append(
-                        (
-                            d["box_id"],
-                            ww * wh,
-                            int((win > 0).sum(dtype=np.int64)),
-                            int(win.sum(dtype=np.int64)),
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=["zone_id", "n_px", "fg_px", "sum_val"]
-            )
-
-    per_window = src.mapInPandas(
-        run, schema="zone_id string, n_px long, fg_px long, sum_val long"
-    )
-    return per_window.groupBy("zone_id").agg(
-        F.count("*").cast("long").alias("n_images"),
-        F.sum("n_px").alias("n_px"),
-        F.sum("fg_px").alias("fg_px"),
-        F.sum("sum_val").alias("sum_val"),
-    )
+    return _zonal(images, envelopes, cfg, on_error, polygons=False)
 
 
 def zonal_stats_poly(
     images: DataFrame,
     zones: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    grid=None,
     on_error: str = "fail",
-    broadcast: str | None = None,
 ) -> DataFrame:
     """Polygon-zone twin of :func:`zonal_stats`: zones are simple
     polygons ``(zone_id, xs array<double>, ys array<double>)`` in world
@@ -442,11 +372,7 @@ def zonal_stats_poly(
     masks by per-pixel-center PIP before reducing, so still only 4 ints
     per (image, zone) window leave Python.  Same output schema
     (``n_px`` now counts center-inside pixels)."""
-    _check_on_error(on_error, allowed=("fail", "skip"))
-    from ..functions.kernels_vector import pip_grid
-
-    cell = cfg.cell_size_m
-    zmeta = zones.select(
+    envelopes = zones.select(
         F.col("zone_id").alias("box_id"),
         F.array_min("xs").alias("minx"),
         F.array_min("ys").alias("miny"),
@@ -455,24 +381,43 @@ def zonal_stats_poly(
         "xs",
         "ys",
     )
+    return _zonal(images, envelopes, cfg, on_error, polygons=True)
+
+
+def _zonal(
+    images: DataFrame,
+    zones: DataFrame,
+    cfg: EngineConfig,
+    on_error: str,
+    polygons: bool,
+) -> DataFrame:
+    """Shared body of :func:`zonal_stats` and :func:`zonal_stats_poly`.
+    ``zones`` carries ``(box_id, minx, miny, maxx, maxy)``, plus the
+    vertex rings ``xs``/``ys`` when ``polygons``: each window is then
+    masked to the pixels whose center lies inside its ring, and a
+    window with no such pixel emits no row."""
+    _check_on_error(on_error, allowed=("fail", "skip"))
+    ring = ("xs", "ys") if polygons else ()
     wins = box_windows(
         images.select("image_id", "w", "h", "ulx", "uly"),
-        zmeta.select("box_id", "minx", "miny", "maxx", "maxy"),
+        zones.select("box_id", "minx", "miny", "maxx", "maxy"),
         cfg,
-        grid,
-        broadcast,
-    ).join(zmeta.select("box_id", "xs", "ys"), "box_id")
+    )
+    if polygons:
+        wins = wins.join(zones.select("box_id", *ring), "box_id")
     grouped = wins.groupBy("image_id").agg(
         F.collect_list(
-            F.struct("box_id", "wx0", "wy0", "ww", "wh", "xs", "ys")
+            F.struct("box_id", "wx0", "wy0", "ww", "wh", *ring)
         ).alias("wins")
     )
     n = int(images.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    geo = ("ulx", "uly") if polygons else ()
     src = _spread(
-        images.select("image_id", "bytes", "fmt", "w", "h", "ulx", "uly"),
+        images.select("image_id", "bytes", "fmt", "w", "h", *geo),
         "image_id",
         n=n,
     ).hint("merge").join(grouped, "image_id")
+    cell = cfg.cell_size_m
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -487,7 +432,6 @@ def zonal_stats_poly(
                         raise
                     continue
                 plane = full[:, :, 0] if full.ndim == 3 else full
-                ulx, uly = float(r.ulx), float(r.uly)
                 for d in r.wins:
                     x0, y0, ww, wh = (
                         int(d["wx0"]), int(d["wy0"]), int(d["ww"]), int(d["wh"])
@@ -499,18 +443,20 @@ def zonal_stats_poly(
                         if on_error == "fail":
                             raise ValueError("window outside raster bounds")
                         continue
-                    px = ulx + (x0 + np.arange(ww) + 0.5) * cell
-                    py = uly - (y0 + np.arange(wh) + 0.5) * cell
-                    mask = pip_grid(d["xs"], d["ys"], px, py)
-                    if not mask.any():
-                        continue
-                    win = plane[y0 : y0 + wh, x0 : x0 + ww]
+                    vals, n_px = plane[y0 : y0 + wh, x0 : x0 + ww], ww * wh
+                    if polygons:
+                        px = float(r.ulx) + (x0 + np.arange(ww) + 0.5) * cell
+                        py = float(r.uly) - (y0 + np.arange(wh) + 0.5) * cell
+                        mask = kv.pip_grid(d["xs"], d["ys"], px, py)
+                        if not mask.any():
+                            continue
+                        vals, n_px = vals[mask], int(mask.sum(dtype=np.int64))
                     rows.append(
                         (
                             d["box_id"],
-                            int(mask.sum(dtype=np.int64)),
-                            int(((win > 0) & mask).sum(dtype=np.int64)),
-                            int(win[mask].sum(dtype=np.int64)),
+                            n_px,
+                            int((vals > 0).sum(dtype=np.int64)),
+                            int(vals.sum(dtype=np.int64)),
                         )
                     )
             yield pd.DataFrame(
