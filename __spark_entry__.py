@@ -28,7 +28,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 import vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark as vm
-from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.functions import kernels_morph as KM
+from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.functions import geodesy as GEO, kernels_morph as KM
 from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.functions.cellindex import WORLD_GRID
 from vector_map_generation_from_aerial_imagery_using_deep_learning_geospatial_unet_spark.operators import (
     cc_global, datagen as DG, grid, imagehash as IH, joins, multimodal as MM, pyramid, raster, reproject as RP,
@@ -255,7 +255,7 @@ def q_reproject_extents(spark: SparkSession, sf_dir: str) -> DataFrame:
                 6500000.0 + (pk % 89) * 10000.0,
                 500000.0 + (pk % 89) * 40000.0,
             )
-            epsg = np.where(south, 32700 + zone, 32600 + zone)
+            epsg = GEO.zone_to_epsg(zone, south)
             yield pd.DataFrame({
                 "image_id": pdf["image_id"].values,
                 "minx": e0,
@@ -410,7 +410,7 @@ def q_dice_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         CFG.erosion_filter,
         CFG.min_object_area_px,
     )
-    return raster.dice_jaccard_self(imgs, kernel, CFG)
+    return raster.dice_jaccard_self(imgs, kernel)
 
 
 # ---------------------------------------------------------------------- #

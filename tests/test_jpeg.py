@@ -69,7 +69,8 @@ def test_codec_dispatch_jpeg():
 def test_rejects_lossless_and_garbage():
     """Only baseline (SOF0) decodes: progressive and lossless frames are
     capability gaps (NotImplementedError naming the SOF marker), garbage
-    is malformed (ValueError)."""
+    and a DC huffman table with a category above 11 are malformed
+    (ValueError)."""
     img = ortho(32, 32)
     enc = bytearray(J.encode_jpeg(img))
     sof = enc.find(b"\xff\xc0")
@@ -81,6 +82,14 @@ def test_rejects_lossless_and_garbage():
         J.decode_jpeg(bytes(enc))
     with pytest.raises(ValueError):
         J.decode_jpeg(b"\x00\x01\x02")
+    noise = np.random.RandomState(7).randint(0, 256, size=(64, 64), dtype=np.uint8)
+    enc = bytearray(J.encode_jpeg(noise))
+    dht = enc.find(b"\xff\xc4")
+    assert enc[dht + 4] == 0x00  # class 0 (DC), table 0
+    n = sum(enc[dht + 5 : dht + 21])
+    enc[dht + 21 : dht + 21 + n] = bytes([40]) * n
+    with pytest.raises(ValueError, match="above 11"):
+        J.decode_jpeg(bytes(enc))
 
 
 def test_quant_quality_monotone():

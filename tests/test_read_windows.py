@@ -72,6 +72,8 @@ def test_out_of_bounds_window_fail_and_skip(spark):
 
 
 def test_undecodable_image_skip_keeps_others(spark):
+    """Both chip readers: read_windows on pixel windows, read_boxes on one
+    world box inside each image's footprint."""
     imgs = IMG.images_table(spark, SF, fmt="png", kind="mask", limit=6)
     pk = F.substring("image_id", 5, 18).cast("long")
     corrupted = imgs.withColumn(
@@ -80,17 +82,26 @@ def test_undecodable_image_skip_keeps_others(spark):
             F.col("bytes")
         ),
     )
+    boxes = imgs.select(
+        F.col("image_id").alias("box_id"),
+        (F.col("ulx") + 0.15).alias("minx"), (F.col("uly") - 0.35).alias("miny"),
+        (F.col("ulx") + 0.35).alias("maxx"), (F.col("uly") - 0.15).alias("maxy"),
+    )
     wins = _windows_df(spark, imgs)
-    with pytest.raises(Exception):
-        raster.read_windows(corrupted, wins).collect()
-    kept = raster.read_windows(corrupted, wins, on_error="skip")
-    ids = {r["image_id"] for r in kept.collect()}
-    expected = {
-        r["image_id"]
-        for r in imgs.collect()
-        if int(r["image_id"][4:]) % 3 != 0
-    }
-    assert ids == expected and expected
+    for read in (
+        lambda df, on_error="fail": raster.read_windows(df, wins, on_error=on_error),
+        lambda df, on_error="fail": raster.read_boxes(df, boxes, on_error=on_error),
+    ):
+        with pytest.raises(Exception):
+            read(corrupted).collect()
+        kept = read(corrupted, on_error="skip")
+        ids = {r["image_id"] for r in kept.collect()}
+        expected = {
+            r["image_id"]
+            for r in imgs.collect()
+            if int(r["image_id"][4:]) % 3 != 0
+        }
+        assert ids == expected and expected
 
 
 def test_float_dem_chips_roundtrip_tif(spark):

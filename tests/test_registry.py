@@ -2,9 +2,11 @@
 name the same gates, and every committed fixture is read by some gate or
 oracle — deleting a gate cannot leave orphaned oracle SQL or fixtures
 behind.  The driver tables are declared once too, and the oracles read
-the fixtures of the checkout they run from.  Spark-free (builds no
+the fixtures of the checkout they run from.  Every keyword default of a
+public operator is set by some call in the repo.  Spark-free (builds no
 session, runs no query)."""
 
+import ast
 import importlib.util
 import inspect
 import re
@@ -79,3 +81,59 @@ def test_compare_oracle_rejects_unknown_gate_before_spark(monkeypatch, capsys):
         tool.main()
     assert exit_.value.code != 0
     assert "no_such_gate: FAIL" in capsys.readouterr().out
+
+
+def _operator_keyword_defaults() -> dict[tuple[str, str], dict[str, int | None]]:
+    """(module, function) -> {parameter: positional index, or None when
+    keyword-only} for every defaulted parameter of a public function in a
+    public ``operators/`` module."""
+    out = {}
+    for path in sorted((Path(vm.__file__).parent / "operators").glob("[!_]*.py")):
+        for fn in ast.parse(path.read_text()).body:
+            if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                continue
+            a = fn.args
+            pos = a.posonlyargs + a.args
+            first = len(pos) - len(a.defaults)
+            params = {arg.arg: i for i, arg in enumerate(pos) if i >= first}
+            for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+                if d is not None:
+                    params[arg.arg] = None
+            if params:
+                out[(path.stem, fn.name)] = params
+    return out
+
+
+def test_every_operator_keyword_default_has_a_caller():
+    """A keyword default that no call in the repo (package, tests, tools,
+    perfbench, entry points) passes by name or by position is a constant
+    behind an option: make it a constant, or give it a caller.  Calls are
+    matched on the function's name; ``*args``/``**kwargs`` count as
+    setting everything."""
+    defaults = _operator_keyword_defaults()
+    passed = {key: set() for key in defaults}
+    for path in REPO.rglob("*.py"):
+        if any(part.startswith(".") for part in path.relative_to(REPO).parts):
+            continue
+        for call in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(call, ast.Call):
+                continue
+            f = call.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+            n_pos = len(call.args)
+            if any(isinstance(x, ast.Starred) for x in call.args):
+                n_pos = float("inf")
+            names = {k.arg for k in call.keywords}
+            for (mod, fn), params in defaults.items():
+                if fn == name:
+                    passed[(mod, fn)].update(
+                        p for p, i in params.items()
+                        if p in names or None in names or (i is not None and i < n_pos)
+                    )
+    unset = [
+        f"{mod}.{name}({p})"
+        for (mod, name), params in sorted(defaults.items())
+        for p in params
+        if p not in passed[(mod, name)]
+    ]
+    assert not unset, f"{len(unset)} keyword defaults no call sets: {', '.join(unset)}"

@@ -91,22 +91,30 @@ def test_zonal_matches_numpy_cross_image(spark):
 
 
 def test_zonal_on_error_skip_drops_bad_image(spark):
+    """Both zone kinds: the rect path, and the rect as a 4-gon through
+    zonal_stats_poly (every pixel center lies inside it)."""
     specs = [("good", 3, 60, 50, 0.0, 50.0)]
     imgs, arrays = _mk_images(spark, specs)
     bad = spark.createDataFrame(
         [("bad", b"junk", 60, 50, "png", 0.0, 50.0)], imgs.schema
     )
     zones = [("z", 0.0, 0.0, 100.0, 100.0)]
-    zdf = _zones_df(spark, zones)
-    with pytest.raises(Exception):
-        raster.zonal_stats(imgs.union(bad), zdf).collect()
-    got = {
-        r.zone_id: (r.n_images, r.n_px, r.fg_px, r.sum_val)
-        for r in raster.zonal_stats(
-            imgs.union(bad), zdf, on_error="skip"
-        ).collect()
-    }
-    assert got == _expected(arrays, zones)
+    rects = _zones_df(spark, zones)
+    polys = spark.createDataFrame(
+        [(z, [x0, x1, x1, x0], [y0, y0, y1, y1]) for z, x0, y0, x1, y1 in zones],
+        "zone_id string, xs array<double>, ys array<double>",
+    )
+    for zonal in (
+        lambda df, on_error="fail": raster.zonal_stats(df, rects, on_error=on_error),
+        lambda df, on_error="fail": raster.zonal_stats_poly(df, polys, on_error=on_error),
+    ):
+        with pytest.raises(Exception):
+            zonal(imgs.union(bad)).collect()
+        got = {
+            r.zone_id: (r.n_images, r.n_px, r.fg_px, r.sum_val)
+            for r in zonal(imgs.union(bad), on_error="skip").collect()
+        }
+        assert got == _expected(arrays, zones)
 
 
 # ------------------------------------------------------ polygon zones

@@ -234,19 +234,24 @@ def utm_zone_from_lon(lon_deg: np.ndarray) -> np.ndarray:
     return np.clip(z, 1, 60)
 
 
+def is_utm_epsg(epsg: np.ndarray) -> np.ndarray:
+    """Mask of the EPSG codes in the two UTM/WGS84 ranges, 32601-32660
+    (north) and 32701-32760 (south)."""
+    e = np.asarray(epsg, dtype=np.int64)
+    return ((e >= 32601) & (e <= 32660)) | ((e >= 32701) & (e <= 32760))
+
+
 def epsg_to_zone(epsg: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """EPSG 326xx/327xx integer codes -> (zone, south).  Raises
     ValueError on anything outside the two UTM/WGS84 ranges — the
     caller's on_error policy decides whether that kills the job or
     quarantines the row."""
     e = np.asarray(epsg, dtype=np.int64)
-    north = (e >= 32601) & (e <= 32660)
-    southm = (e >= 32701) & (e <= 32760)
-    if not bool(np.all(north | southm)):
-        bad = e[~(north | southm)]
-        raise ValueError(f"unsupported CRS (want EPSG:326xx/327xx): {bad[:4]}")
-    zone = np.where(southm, e - 32700, e - 32600)
-    return zone, southm
+    ok = is_utm_epsg(e)
+    if not bool(ok.all()):
+        raise ValueError(f"unsupported CRS (want EPSG:326xx/327xx): {e[~ok][:4]}")
+    south = e >= 32700
+    return np.where(south, e - 32700, e - 32600), south
 
 
 def zone_to_epsg(zone: np.ndarray, south: np.ndarray) -> np.ndarray:

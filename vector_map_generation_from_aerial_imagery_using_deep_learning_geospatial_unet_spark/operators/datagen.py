@@ -52,13 +52,14 @@ def epoch_shuffle(df: DataFrame, seed: int) -> DataFrame:
     return df.orderBy(F.rand(seed))
 
 
-def train_val_split(df: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG, seed: int = 42):
+def train_val_split(df: DataFrame, seed: int = 42):
     """M6: validation_split=0.15 (config.py:21)."""
-    return df.randomSplit([1.0 - cfg.validation_split, cfg.validation_split], seed)
+    v = DEFAULT_CONFIG.validation_split
+    return df.randomSplit([1.0 - v, v], seed)
 
 
 def training_tensors(
-    paired: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG, with_weights: bool = True
+    paired: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """M1+M3+M4+M5: per-row training tensors.
 
@@ -90,11 +91,9 @@ def training_tensors(
                 lab[lab == 255] = 1  # M4 (dataGenerator.py:76)
                 lab = resize_bilinear(lab, t, t).astype(np.float32)
 
-                planes = [lab]
-                if with_weights:
-                    edt = km.distance_transform_edt(lab)
-                    edt[edt == 0] = -99  # M5 verbatim (dataGenerator.py:99-103)
-                    planes.append((10.0 / edt + 1.0).astype(np.float32))
+                edt = km.distance_transform_edt(lab)
+                edt[edt == 0] = -99  # M5 verbatim (dataGenerator.py:99-103)
+                weight = (10.0 / edt + 1.0).astype(np.float32)
                 # numpy arrays, not python lists: Arrow serializes an
                 # ndarray column element zero-copy-ish; .tolist() would
                 # materialize 120k Python floats per row
@@ -102,7 +101,7 @@ def training_tensors(
                     (
                         r.image_id,
                         img.ravel(),
-                        np.stack(planes, axis=-1).ravel(),
+                        np.stack([lab, weight], axis=-1).ravel(),
                         t,
                     )
                 )

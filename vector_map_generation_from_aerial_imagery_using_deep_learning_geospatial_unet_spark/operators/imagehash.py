@@ -37,12 +37,12 @@ def _dct_matrix(n: int) -> np.ndarray:
 _D32 = _dct_matrix(32)
 
 
-def phash_kernel(arr: np.ndarray, block: int = 8) -> int:
+def phash_kernel(arr: np.ndarray) -> int:
     """64-bit DCT perceptual hash of a (h, w[, c]) uint8 array.
 
     gray = integer-weight luma (299/587/114); resize = bilinear to 32x32
-    (functions/kernels_resample.py); DCT-II 2-D; top-left ``block`` x
-    ``block`` coefficients; bit k (row-major, bit 63 = coefficient
+    (functions/kernels_resample.py); DCT-II 2-D; top-left 8x8
+    coefficients; bit k (row-major, bit 63 = coefficient
     [0,0]) set iff the coefficient exceeds the median of all 64 — the
     imagehash-library convention.  Returns a SIGNED int64 (matches the
     input_hint column type).  Pure numpy: the Spark operator, the
@@ -56,7 +56,7 @@ def phash_kernel(arr: np.ndarray, block: int = 8) -> int:
     else:
         gray = arr.astype(np.float64)
     small = resize_bilinear(gray, 32, 32)
-    coef = (_D32 @ small @ _D32.T)[:block, :block]
+    coef = (_D32 @ small @ _D32.T)[:8, :8]
     flat = coef.reshape(-1)
     med = float(np.median(flat))
     bits = flat > med
@@ -69,15 +69,13 @@ def phash_kernel(arr: np.ndarray, block: int = 8) -> int:
 # --------------------------------------------------------------- operators
 
 
-def phash64(
-    images: DataFrame, hash_col: str = "phash", on_error: str = "fail"
-) -> DataFrame:
+def phash64(images: DataFrame, on_error: str = "fail") -> DataFrame:
     """Compute the input_hint ``phash`` column from decoded pixels:
-    (image_id, <hash_col> long).  Arrow-batched ``mapInPandas`` — one
+    (image_id, phash long).  Arrow-batched ``mapInPandas`` — one
     decode + one 32x32 DCT per image, no pixel ever reaches the driver.
     ``on_error``: see operators/_policy.py."""
     check_on_error(on_error)
-    schema = f"image_id string, {hash_col} long"
+    schema = "image_id string, phash long"
     if on_error == "quarantine":
         schema += ", error string"
 
@@ -92,6 +90,6 @@ def phash64(
             # quarantine: a single None row would otherwise coerce the
             # whole batch to float64 and round away low bits of good
             # rows' 64-bit hashes.
-            yield rows_frame(rows, ["image_id", hash_col], on_error)
+            yield rows_frame(rows, ["image_id", "phash"], on_error)
 
     return images.mapInPandas(run, schema=schema)

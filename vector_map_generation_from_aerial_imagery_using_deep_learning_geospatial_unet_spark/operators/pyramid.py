@@ -112,10 +112,9 @@ def multires_meta(images: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> Data
     )
 
 
-def multires_meta_sql(cfg: EngineConfig = DEFAULT_CONFIG) -> str:
-    # cell size threaded through so the twin tracks any EngineConfig, not
-    # just the default 0.1 m
-    cs = repr(cfg.cell_size_m)
+def multires_meta_sql() -> str:
+    """DuckDB twin of :func:`multires_meta` at the default cell size."""
+    cs = repr(DEFAULT_CONFIG.cell_size_m)
     return f"""
 res AS (
   SELECT im.*, r.res_idx, r.res_idx * 1e-1 AS resolution
@@ -130,10 +129,10 @@ multires AS (
 )"""
 
 
-def multires_resample(images: DataFrame, cfg: EngineConfig = DEFAULT_CONFIG) -> DataFrame:
+def multires_resample(images: DataFrame) -> DataFrame:
     """Pixel path for the ladder: NEAREST warp per resolution (one decode per
     image, resample per rung)."""
-    meta = multires_meta(images, cfg)
+    meta = multires_meta(images)
     schema = (
         "image_id string, resolution double, bytes binary, rw int, rh int, fmt string"
     )

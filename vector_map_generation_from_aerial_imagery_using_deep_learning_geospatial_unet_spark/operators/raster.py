@@ -35,8 +35,6 @@ TILE_SCHEMA = (
 def slice_tiles(
     images: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    overlap: int | None = None,
-    tile_fmt: str = "png",
     on_error: str = "fail",
 ) -> DataFrame:
     """O2/O3 pixel path: decode each image once, emit one row per tile with
@@ -49,8 +47,9 @@ def slice_tiles(
     shipping the exploded rows to Python would copy each image's ``bytes``
     into the Arrow batch once **per tile** (~40x amplification at the default
     grid) — here each image crosses the JVM->Python pipe exactly once and the
-    windows are sliced as numpy views.  Tile payloads are re-encoded at zlib
-    level 1: lossless, and this is an intermediate hop, not a durable sink.
+    windows are sliced as numpy views.  Tile payloads are re-encoded as png
+    at zlib level 1: lossless, and this is an intermediate hop, not a
+    durable sink.
 
     ``on_error='skip'`` drops images whose payload fails to decode
     (ValueError/NotImplementedError per the codec contract,
@@ -61,8 +60,7 @@ def slice_tiles(
     """
     _check_on_error(on_error, allowed=("fail", "skip"))
     t = cfg.tile_size
-    ov = cfg.overlap_px if overlap is None else overlap
-    step = t - ov
+    step = cfg.step_px
 
     # one image is ~minutes of downstream pixel work: spread rows across
     # 2x parallelism partitions or a narrow input (one parquet file, a
@@ -81,11 +79,11 @@ def slice_tiles(
 
         def encode_tile(win: np.ndarray) -> bytes:
             if not win.size or (win != win[0, 0]).any():
-                return codec.encode(win, tile_fmt, level=1)
+                return codec.encode(win, "png", level=1)
             key = (win.shape, win.dtype.str, win[0, 0].tobytes())
             blob = constant.get(key)
             if blob is None:
-                blob = constant[key] = codec.encode(win, tile_fmt, level=1)
+                blob = constant[key] = codec.encode(win, "png", level=1)
             return blob
 
         for pdf in batches:
@@ -135,7 +133,7 @@ def slice_tiles(
                 cols["h"].extend([h] * n_tiles)
                 cols["ulx"].extend([float(r.ulx)] * n_tiles)
                 cols["uly"].extend([float(r.uly)] * n_tiles)
-                cols["fmt"].extend([tile_fmt] * n_tiles)
+                cols["fmt"].extend(["png"] * n_tiles)
             yield pd.DataFrame(cols)
 
     return src.mapInPandas(run, schema=TILE_SCHEMA)
@@ -307,7 +305,6 @@ def read_boxes(
     images: DataFrame,
     boxes: DataFrame,
     cfg: EngineConfig = DEFAULT_CONFIG,
-    tile_fmt: str = "png",
     on_error: str = "fail",
 ) -> DataFrame:
     """:func:`box_windows` |> :func:`read_windows`: chips for a table of
@@ -317,7 +314,7 @@ def read_boxes(
     wins = box_windows(
         images.select("image_id", "w", "h", "ulx", "uly"), boxes, cfg
     ).select("image_id", "wx0", "wy0", "ww", "wh")
-    return read_windows(images, wins, tile_fmt=tile_fmt, on_error=on_error)
+    return read_windows(images, wins, on_error=on_error)
 
 
 def zonal_stats(
@@ -519,12 +516,7 @@ def _stitch_canvas(
     return canvas, w, h
 
 
-def stitch_tiles(
-    tiles: DataFrame,
-    out_fmt: str = "png",
-    level: int = 1,
-    nodata: float | None = None,
-) -> DataFrame:
+def stitch_tiles(tiles: DataFrame, nodata: float | None = None) -> DataFrame:
     """S5 mosaic as the exact inverse of O2: place tile (tiy, tix) at
     (off_y, off_x); later tiles in (tiy, tix) order win on overlap — the
     gdal.BuildVRT later-file-wins rule with tileImage's y-then-x emission
@@ -533,16 +525,16 @@ def stitch_tiles(
     default None deviates (unconditional overwrite) and is result-identical
     for same-image grids — see :func:`_stitch_canvas`.
 
-    Default zlib level 1 (lossless): the stitched plane usually feeds the
-    next pixel stage, not a durable sink — pass level=6 when persisting."""
+    The canvas is re-encoded as png at zlib level 1 (lossless): the
+    stitched plane feeds the next pixel stage, not a durable sink."""
 
     def assemble(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         canvas, w, h = _stitch_canvas(pdf, nodata=nodata)
         return pd.DataFrame(
             {
                 "image_id": [key[0]],
-                "bytes": [codec.encode(canvas, out_fmt, level)],
-                "w": [w], "h": [h], "fmt": [out_fmt],
+                "bytes": [codec.encode(canvas, "png", level=1)],
+                "w": [w], "h": [h], "fmt": ["png"],
                 "ulx": [float(pdf["ulx"].iloc[0])],
                 "uly": [float(pdf["uly"].iloc[0])],
             }
@@ -555,14 +547,17 @@ def stitch_tiles(
     )
 
 
-def threshold_mask(images: DataFrame, thresh: float = 0.5) -> DataFrame:
-    """M7: probability/grey plane -> {0, 255} mask (np.round at 0.5, x255;
+def threshold_mask(images: DataFrame) -> DataFrame:
+    """M7: grey plane -> {0, 255} mask (np.round at 0.5, x255;
     /root/reference/test.py:241-248).  Uint8 inputs are mapped >=128 -> 255."""
+    return _map_pixels(images, _binarize)
+
+
+def _binarize(a: np.ndarray) -> np.ndarray:
+    """The M7 threshold: >= 128 -> 255, else 0, as uint8."""
     # compare-then-multiply, not np.where: where() materializes an int64
     # intermediate (~8x the bytes) — measured ~7x slower on large planes
-    return _map_pixels(
-        images, lambda a: (a >= 255 * thresh + 0.5).astype(np.uint8) * 255
-    )
+    return (a >= 128).astype(np.uint8) * 255
 
 
 def erosion_stage(
@@ -684,8 +679,9 @@ def _mask_to_labels(
     arr: np.ndarray, cfg: EngineConfig, separation: str
 ) -> np.ndarray:
     """M7+P1+(P3|CC) kernel chain on one decoded plane."""
-    t = (arr >= 128).astype(np.uint8) * 255
-    cleaned = km.erosion_clean(t, cfg.erosion_filter, cfg.min_object_area_px)
+    cleaned = km.erosion_clean(
+        _binarize(arr), cfg.erosion_filter, cfg.min_object_area_px
+    )
     if separation == "watershed":
         return km.watershed_segmentation(
             cleaned,
@@ -853,14 +849,12 @@ def label_stats(labels: DataFrame) -> DataFrame:
     )
 
 
-def dice_jaccard_self(
-    images: DataFrame, kernel, cfg: EngineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """M8 when prediction is a pure function of the truth image (the common
-    evaluate-my-own-transform case): decode each row ONCE, apply ``kernel``
-    in-process, emit the three partial sums — no second table, no join, no
-    caching of the byte column.  Same output as
-    ``dice_jaccard(kernel_stage(imgs), imgs)``."""
+def dice_jaccard_self(images: DataFrame, kernel) -> DataFrame:
+    """M8 global Dice/Jaccard (src/metric.py:31-51) when prediction is a
+    pure function of the truth image (the evaluate-my-own-transform case):
+    decode each row ONCE, apply ``kernel`` in-process, emit the three
+    partial sums — no second table, no join, no caching of the byte
+    column — then one global partial+final aggregation in Catalyst."""
 
     def sums(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -887,33 +881,3 @@ def dice_jaccard_self(
         ),
     )
 
-
-def dice_jaccard(pred: DataFrame, truth: DataFrame) -> DataFrame:
-    """M8 global Dice/Jaccard (src/metric.py:31-51): per-image pixel sums in
-    a UDF, global partial+final aggregation in Catalyst."""
-    def sums(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                a = (_decode_any(r.bytes, r.fmt, r.w, r.h) != 0).astype(np.float64)
-                b = (_decode_any(r.t_bytes, r.t_fmt, r.w, r.h) != 0).astype(np.float64)
-                rows.append((float((a * b).sum()), float(a.sum()), float(b.sum())))
-            yield pd.DataFrame(rows, columns=["xy", "x", "y"])
-
-    joined = pred.select("image_id", "bytes", "fmt", "w", "h").join(
-        truth.select(
-            "image_id",
-            F.col("bytes").alias("t_bytes"),
-            F.col("fmt").alias("t_fmt"),
-        ),
-        "image_id",
-    )
-    s = joined.mapInPandas(sums, schema="xy double, x double, y double").agg(
-        F.sum("xy").alias("sxy"), F.sum("x").alias("sx"), F.sum("y").alias("sy")
-    )
-    return s.select(
-        (2.0 * F.col("sxy") / (F.col("sx") + F.col("sy") + 1.0)).alias("dice"),
-        (F.col("sxy") / (F.col("sx") + F.col("sy") - F.col("sxy") + 1.0)).alias(
-            "jaccard"
-        ),
-    )

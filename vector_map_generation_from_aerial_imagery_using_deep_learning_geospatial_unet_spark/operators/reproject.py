@@ -35,7 +35,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -51,15 +51,7 @@ def _utm_epsg(crs: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     """CRS strings -> (epsg, ok) where ok also requires a UTM/WGS84 code
     (EPSG:326xx/327xx); never raises (see ``geodesy.parse_epsg``)."""
     epsg, ok = GEO.parse_epsg(crs)
-    north = (epsg >= 32601) & (epsg <= 32660)
-    south = (epsg >= 32701) & (epsg <= 32760)
-    return epsg, ok & (north | south)
-
-
-def _zone_south(epsg: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    south = epsg >= 32700
-    zone = np.where(south, epsg - 32700, epsg - 32600)
-    return zone, south
+    return epsg, ok & GEO.is_utm_epsg(epsg)
 
 
 _LL_STRUCT = StructType([
@@ -104,7 +96,7 @@ def points_to_wgs84(
         if not bool(ok.all()):
             bad = cs.astype(object).values[~ok][:4]
             raise ValueError(f"unsupported CRS (want EPSG:326xx/327xx): {bad}")
-        zone, south = _zone_south(epsg)
+        zone, south = GEO.epsg_to_zone(epsg)
         lat, lon = GEO.utm_inverse(
             xs.values.astype(np.float64), ys.values.astype(np.float64),
             zone, south,
@@ -115,19 +107,13 @@ def points_to_wgs84(
     return df.withColumn("lon", ll["lon"]).withColumn("lat", ll["lat"])
 
 
-def points_to_utm(
-    df: DataFrame,
-    dst_epsg: int,
-    lon: str = "lon",
-    lat: str = "lat",
-) -> DataFrame:
-    """Add ``easting``/``northing`` columns projecting WGS84 lon/lat
-    into one target UTM zone (EPSG:326xx/327xx int)."""
+def points_to_utm(df: DataFrame, dst_epsg: int) -> DataFrame:
+    """Add ``easting``/``northing`` columns projecting the WGS84
+    ``lon``/``lat`` columns into one target UTM zone (EPSG:326xx/327xx
+    int; any other code raises ValueError)."""
     from pyspark.sql.functions import pandas_udf
 
-    zone_s, south_s = _zone_south(np.array([int(dst_epsg)], dtype=np.int64))
-    if not (1 <= int(zone_s[0]) <= 60):
-        raise ValueError(f"unsupported target CRS: EPSG:{dst_epsg}")
+    zone_s, south_s = GEO.epsg_to_zone([int(dst_epsg)])
     zone_i, south_i = int(zone_s[0]), bool(south_s[0])
 
     @pandas_udf(_EN_STRUCT)
@@ -140,7 +126,7 @@ def points_to_utm(
         )
         return pd.DataFrame({"easting": e, "northing": nn})
 
-    en = fwd(F.col(lon), F.col(lat))
+    en = fwd(F.col("lon"), F.col("lat"))
     return (
         df.withColumn("easting", en["easting"])
         .withColumn("northing", en["northing"])
@@ -161,19 +147,12 @@ def rezone_points(
 
 
 def extents_to_wgs84(
-    df: DataFrame,
-    id_col: str = "image_id",
-    minx: str = "minx",
-    miny: str = "miny",
-    maxx: str = "maxx",
-    maxy: str = "maxy",
-    crs: str = "crs",
-    densify: int = 16,
-    on_error: str = "fail",
+    df: DataFrame, densify: int = 16, on_error: str = "fail"
 ) -> DataFrame:
-    """Projected per-image extents -> WGS84 lon/lat bounds.
+    """Projected per-image extents ``(image_id, minx, miny, maxx, maxy,
+    crs)`` -> WGS84 lon/lat bounds.
 
-    Returns ``(id_col, epsg int, lon_min, lat_min, lon_max, lat_max)``
+    Returns ``(image_id, epsg int, lon_min, lat_min, lon_max, lat_max)``
     (+ ``error string`` under quarantine).  The border ring is densified
     ``densify`` samples per edge before inversion — see module
     docstring for why corners alone are wrong.
@@ -183,9 +162,8 @@ def extents_to_wgs84(
         raise ValueError("densify must be >= 1")
     dens = int(densify)
 
-    out_cols = [id_col, "epsg", "lon_min", "lat_min", "lon_max", "lat_max"]
     schema = (
-        f"{id_col} string, epsg int, lon_min double, lat_min double, "
+        "image_id string, epsg int, lon_min double, lat_min double, "
         "lon_max double, lat_max double"
     )
     if on_error == "quarantine":
@@ -196,17 +174,17 @@ def extents_to_wgs84(
             n = len(pdf)
             if n == 0:
                 continue
-            epsg, ok = _utm_epsg(pdf[crs])
+            epsg, ok = _utm_epsg(pdf["crs"])
             if on_error == "fail" and not bool(ok.all()):
-                bad = pdf[crs].astype(object).values[~ok][:4]
+                bad = pdf["crs"].astype(object).values[~ok][:4]
                 raise ValueError(
                     f"unsupported CRS (want EPSG:326xx/327xx): {bad}"
                 )
 
-            x0 = pdf[minx].values.astype(np.float64)
-            y0 = pdf[miny].values.astype(np.float64)
-            x1 = pdf[maxx].values.astype(np.float64)
-            y1 = pdf[maxy].values.astype(np.float64)
+            x0 = pdf["minx"].values.astype(np.float64)
+            y0 = pdf["miny"].values.astype(np.float64)
+            x1 = pdf["maxx"].values.astype(np.float64)
+            y1 = pdf["maxy"].values.astype(np.float64)
 
             # densified border ring: (n, 4*(dens+1)) sample points
             t = np.linspace(0.0, 1.0, dens + 1)          # (dens+1,)
@@ -220,7 +198,7 @@ def extents_to_wgs84(
                 [y0[:, None] * ones, y1[:, None] * ones, ey, ey], axis=1
             )
 
-            zone, south = _zone_south(np.where(ok, epsg, 32601))
+            zone, south = GEO.epsg_to_zone(np.where(ok, epsg, 32601))
             p = px.shape[1]
             lat, lon = GEO.utm_inverse(
                 px.ravel(), py.ravel(),
@@ -230,7 +208,7 @@ def extents_to_wgs84(
             lon = lon.reshape(n, p)
 
             out = pd.DataFrame({
-                id_col: pdf[id_col].values,
+                "image_id": pdf["image_id"].values,
                 "epsg": epsg.astype(np.int32),
                 "lon_min": lon.min(axis=1),
                 "lat_min": lat.min(axis=1),
@@ -243,10 +221,10 @@ def extents_to_wgs84(
                 err = np.where(
                     ok, None,
                     "ValueError: unsupported CRS "
-                    + pdf[crs].astype(str).values,
+                    + pdf["crs"].astype(str).values,
                 )
                 out = pd.DataFrame({
-                    id_col: out[id_col],
+                    "image_id": out["image_id"],
                     "epsg": pd.Series(np.where(ok, epsg, None), dtype=object),
                     "lon_min": out["lon_min"].where(ok, None),
                     "lat_min": out["lat_min"].where(ok, None),

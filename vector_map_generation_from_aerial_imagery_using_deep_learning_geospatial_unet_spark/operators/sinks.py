@@ -15,25 +15,25 @@ from pyspark.sql import functions as F
 from ..functions import shapefile as shp
 
 
-def write_tile_index(tiles: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S7: persist the tile index (one row per tile footprint), partitioned
-    by image so per-image lookups prune files."""
+def write_tile_index(tiles: DataFrame, path: str) -> None:
+    """S7: persist (overwrite) the tile index (one row per tile footprint),
+    partitioned by image so per-image lookups prune files."""
     (
         tiles.select(
             "image_id", "tile_id", "tiy", "tix", "off_x", "off_y", "tw", "th",
             "tminx", "tminy", "tmaxx", "tmaxy",
         )
-        .write.mode(mode)
+        .write.mode("overwrite")
         .partitionBy("image_id")
         .parquet(path)
     )
 
 
-def write_tile_index_csv(tiles: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S7 CSV variant: envelopes only (copyTileIndexToCSV)."""
+def write_tile_index_csv(tiles: DataFrame, path: str) -> None:
+    """S7 CSV variant (overwrite): envelopes only (copyTileIndexToCSV)."""
     (
         tiles.select("tile_id", "tminx", "tminy", "tmaxx", "tmaxy")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .option("header", True)
         .csv(path)
     )
@@ -73,11 +73,6 @@ def polygons_to_geojson(polygons: DataFrame) -> DataFrame:
     )
 
 
-def write_polygons(polygons: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """S8: vector sink — parquet with ring arrays + attributes."""
-    polygons.write.mode(mode).parquet(path)
-
-
 def write_shapefile(polygons: DataFrame, path_base: str) -> int:
     """S8 literal-format sink: the reference's polygon shapefile with
     ``{id, value, Area}`` attributes (fiona schema
@@ -87,7 +82,8 @@ def write_shapefile(polygons: DataFrame, path_base: str) -> int:
     rows stream through the driver via ``toLocalIterator`` — partition at a
     time, never the whole DataFrame — and this sink is for FINAL small
     vector products (the reference's own use).  The distributed vector sink
-    is :func:`write_polygons` (parquet).  Returns the feature count."""
+    is the parquet output of ``streaming.manifest.run_resumable``.  Returns
+    the feature count."""
     has_holes = "holes" in polygons.columns
     cols = ["poly_id", "value", "area_m2", "ring"] + (
         ["holes"] if has_holes else []
@@ -105,23 +101,17 @@ def write_shapefile(polygons: DataFrame, path_base: str) -> int:
     return shp.write_polygon_shapefile(path_base, records())
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str = "image_id",
-    buckets: int = 64,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed catalog sink: co-locates rows by hash(key) at WRITE time, so
-    every later equi-join or groupBy between tables bucketed on the same
-    (key, buckets) runs with ZERO exchanges — the bucketing half of the
+def write_bucketed(df: DataFrame, table: str, buckets: int = 64) -> None:
+    """Bucketed catalog sink (overwrite): co-locates rows by hash(image_id)
+    at WRITE time, so every later equi-join or groupBy between tables
+    bucketed on the same (image_id, buckets) runs with ZERO exchanges — the bucketing half of the
     §4.2 partitioning policy (tiles x labels, tiles x predictions, any
     repeated per-image join in a training pipeline).  Plan-tested:
     tests/test_sinks.py asserts the bucket join is shuffle-free."""
     (
-        df.write.mode(mode)
-        .bucketBy(buckets, key)
-        .sortBy(key)
+        df.write.mode("overwrite")
+        .bucketBy(buckets, "image_id")
+        .sortBy("image_id")
         .format("parquet")
         .saveAsTable(table)
     )
@@ -131,7 +121,6 @@ def write_geotiff_dir(
     images: DataFrame,
     out_dir: str,
     compression: str = "deflate",
-    jpeg_quality: int = 95,
 ) -> int:
     """S2 output parity: one georeferenced ``.tif`` per image row — the
     reference's prediction/mask raster output (``write_tif``,
@@ -146,8 +135,8 @@ def write_geotiff_dir(
     ``(ulx, uly, crs)``; pixels are transcoded from whatever ``fmt``
     they arrive in to GeoTIFF at the engine's 0.1 m cell size
     (config.py cell_size_m, reference config.py:13).  ``compression``:
-    deflate (default, lossless — mask/label parity) or ``jpeg`` (+
-    ``jpeg_quality``) for orthophoto-sized RGB output.  Returns the
+    deflate (default, lossless — mask/label parity) or ``jpeg`` (quality
+    95) for orthophoto-sized RGB output.  Returns the
     number of files written.
     """
     import os
@@ -170,7 +159,6 @@ def write_geotiff_dir(
                     compression=compression,
                     geo=(float(r.ulx), float(r.uly), sx, -sx, str(r.crs)),
                     level=6,  # durable sink keeps the high level (BENCH #10)
-                    jpeg_quality=jpeg_quality,
                 )
                 tmp = os.path.join(out_dir, f".{r.image_id}.tif.tmp")
                 with open(tmp, "wb") as f:

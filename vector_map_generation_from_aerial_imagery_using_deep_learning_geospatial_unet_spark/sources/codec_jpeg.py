@@ -489,6 +489,10 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 counts = list(body[i + 1 : i + 17])
                 n = sum(counts)
                 symbols = list(body[i + 17 : i + 17 + n])
+                if tc == 0 and any(s > 11 for s in symbols):
+                    # T.81: 8-bit baseline DC differences have categories
+                    # 0-11; a larger one would build an unbounded predictor
+                    raise ValueError("jpeg DC huffman symbol above 11")
                 htables[(tc, th)] = _build_decode_map(counts, symbols)
                 i += 17 + n
         elif marker == 0xC0:  # SOF0 baseline
